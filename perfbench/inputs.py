@@ -41,6 +41,7 @@ DOCS = {
     "vocab": 3_000,
     "dup_clusters": 150,
     "dup_cluster_size": (2, 4),
+    "near_miss_pairs": 200,
     "embeddings": 800,
     "dim": 64,
     "emb_dup_pairs": 40,
@@ -206,9 +207,12 @@ def curate_docs(seed: int, data_root: str) -> tuple[str, dict]:
 
     Each cluster has one base document; its copies are either exact
     copies or the base with one word appended (5-shingle Jaccard
-    > 0.9 between any two members, above the 0.8 verify threshold).  Unrelated documents
-    draw words independently from a 3k-word vocabulary, so their
-    shingle overlap is ~0."""
+    > 0.9 between any two members, above the 0.8 verify threshold).
+    Each near-miss pair shares the leading 70-80% of its words (Jaccard
+    ~0.55-0.72): under the threshold, but often inside the LSH's
+    candidate band, so verification has candidates to reject.
+    Unrelated documents draw words independently from a 3k-word
+    vocabulary, so their shingle overlap is ~0."""
     rng = np.random.default_rng([seed, 3])
     s = DOCS
     vocab = np.array([f"w{i:04d}" for i in range(s["vocab"])])
@@ -231,6 +235,12 @@ def curate_docs(seed: int, data_root: str) -> tuple[str, dict]:
             else:
                 texts[m] = base + " " + vocab[rng.integers(0, s["vocab"])]
         clusters.append(np.sort(members))
+    for _ in range(s["near_miss_pairs"]):
+        a, b = slots[pos], slots[pos + 1]
+        pos += 2
+        words = texts[a].split(" ")
+        keep = len(words) - int(np.ceil(rng.uniform(0.2, 0.3) * len(words)))
+        texts[b] = " ".join(words[:keep] + list(vocab[rng.integers(0, s["vocab"], len(words) - keep)]))
     langs = np.array(["en", "de", "fr", "zh"])[rng.integers(0, 4, n)]
     docs = {
         "doc_id": np.arange(n, dtype=np.int64),

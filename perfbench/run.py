@@ -11,8 +11,9 @@ heap.  A run:
    under ``.perfbench/data``; not timed);
 2. brackets everything below with the capacity probes of ``bench.py``
    at pool width k;
-3. sets up the session ``SETUPS`` times (start a SparkContext on the
-   one gateway JVM, then warm up), reporting the median as ``setup_s``;
+3. sets up the session ``SETUPS`` times (start a SparkContext, then
+   warm up).  The first also launches the gateway JVM; the median of
+   the others, each a restart on that JVM, is ``setup_s``;
 4. runs the workload's steps in passes for ``--seconds``: the first
    pass is ``cold_pass_s``, the median of the others ``warm_pass_s``.
    After every step, outside its timer, its output is checked against
@@ -34,6 +35,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -97,19 +99,24 @@ def _probe_task(seed: int) -> float:
     return float(a[0])
 
 
-def capacity_probe(k: int) -> dict:
-    """bench.py's capacity probe with a pool of width k: k identical
-    GIL-releasing numpy tasks on k threads, against one alone."""
+PROBE_REPEATS = 3
+
+
+def _timed(fn) -> float:
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
+
+
+def _capacity_probe(k: int) -> dict:
     from concurrent.futures import ThreadPoolExecutor
 
-    _probe_task(0)  # first call pays page faults and numpy start-up
-    t0 = time.perf_counter()
-    _probe_task(0)
-    single = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    with ThreadPoolExecutor(max_workers=k) as ex:
-        list(ex.map(_probe_task, range(k)))
-    par = time.perf_counter() - t0
+    def pool():
+        with ThreadPoolExecutor(max_workers=k) as ex:
+            list(ex.map(_probe_task, range(k)))
+
+    single = statistics.median(_timed(lambda: _probe_task(0)) for _ in range(PROBE_REPEATS))
+    par = statistics.median(_timed(pool) for _ in range(PROBE_REPEATS))
     return {
         "single_core_probe_sec": round(single_core_probe(), 4),
         "single_task_sec": round(single, 4),
@@ -118,13 +125,30 @@ def capacity_probe(k: int) -> dict:
     }
 
 
+def capacity_probe(k: int) -> dict:
+    """bench.py's capacity probe with a pool of width k: k identical
+    GIL-releasing numpy tasks on k threads, against one alone; each
+    time is the median of ``PROBE_REPEATS``, which also drops the first
+    call's numpy start-up.  It runs in a fresh interpreter, so the
+    probes before and after a run see the same allocator state: in the
+    benchmark's own process the run's large heap made the same numpy
+    tasks up to twice as fast afterwards."""
+    code = (
+        f"import json, sys; sys.path.insert(0, {ROOT!r}); "
+        f"from perfbench.run import _capacity_probe; print(json.dumps(_capacity_probe({k})))"
+    )
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True, check=True)
+    return json.loads(out.stdout)
+
+
 def host_ok(before: dict, after: dict, k: int) -> bool:
-    """In band when both probes see at least 60% of the k cores and the
-    single-core probe moved by less than 30% across the run."""
-    drift = after["single_core_probe_sec"] / before["single_core_probe_sec"]
-    return (
-        min(before["effective_parallelism"], after["effective_parallelism"]) >= 0.6 * k
-        and 1 / 1.3 < drift < 1.3
+    """In band when neither the single-core probe nor the k-wide pool
+    time moved by 30% or more across the run.  bench.py reads the pool
+    time, not effective_parallelism, as the capacity signal: ambient
+    load slows the single task more than the pool, so the ratio is
+    confounded by load."""
+    return all(
+        1 / 1.3 < after[key] / before[key] < 1.3 for key in ("single_core_probe_sec", f"par{k}_sec")
     )
 
 
@@ -218,11 +242,16 @@ def run_step(ctx, step, workload: str, tracer) -> dict:
     e0, t0 = time.time(), time.perf_counter()
     try:
         out = step.call(ctx)
+        got = []
         for df in out.sinks:
-            if out.collect:
-                out.rows = df.collect()
+            if out.collect == "pandas":
+                got.append(df.toPandas())
+            elif out.collect == "rows":
+                got.append(df.collect())
             else:
                 df.write.format("noop").mode("overwrite").save()
+        if got:
+            out.rows = got[0] if len(got) == 1 else got
     except Exception:
         traceback.print_exc(file=sys.stderr)
         error = True
@@ -263,7 +292,7 @@ def _median(xs):
 
 def layer_metrics(warm: list[list[dict]], setups: list[dict], scratch: dict) -> dict:
     """Per-layer medians over warm passes of each layer's per-pass sums;
-    the ``session`` layer's over the set-ups."""
+    the ``session`` layer's over the given set-ups (the restarts)."""
     out = {}
     for layer in LAYERS:
         if layer == "session":
@@ -302,6 +331,7 @@ def run(
     the last-line object, the annotation object and every step record."""
     from perfbench import inputs, workloads
 
+    t_run = time.perf_counter()
     k = usable_cores(cores)
     tmp = tempfile.mkdtemp(prefix=f"run-{os.getpid()}-", dir=os.path.join(WORK, "tmp"))
     try:
@@ -359,11 +389,11 @@ def run(
         attempted = sum(len(p) for p in passes)
         failed = sum(r["error"] for p in passes for r in p)
         if trace:
-            values = layer_metrics(passes[1:], setup_recs, ctx.scratch)
+            values = layer_metrics(passes[1:], setup_recs[1:], ctx.scratch)
             units = {f"{l}.{m}": u for l in LAYERS for m, u in LAYER_METRICS.items()} | EXTRA_METRICS
         else:
             values = {
-                "setup_s": _median([s["wall_s"] for s in setup_recs]),
+                "setup_s": _median([s["wall_s"] for s in setup_recs[1:]]),
                 "cold_pass_s": pass_s[0],
                 "warm_pass_s": _median(pass_s[1:]),
                 "driver_peak_rss_mb": rss_py + rss_jvm,
@@ -391,9 +421,11 @@ def run(
             "setup_s": [round(s["wall_s"], 4) for s in setup_recs],
             "cold_pass_s": round(pass_s[0], 4),
             "warm_pass_s": quartiles(pass_s[1:]),
+            "step_cold_s": {s.name: round(passes[0][i]["wall_s"], 4) for i, s in enumerate(steps)},
             "step_wall_s": {
                 s.name: round(_median([p[i]["wall_s"] for p in passes[1:]]), 4) for i, s in enumerate(steps)
             },
+            "run_s": round(time.perf_counter() - t_run, 2),
         }
         return result, annotations, passes
     finally:

@@ -33,7 +33,8 @@ TINY = {
     "FIXTURE": {"lineitem_rows": 20_000, "orders": 5_000, "parts": 2_000, "suppliers": 100,
                 "events_rows": 5_000, "users": 200},
     "SCALE": {"rows": 40_000, "fe_a_levels": 100, "fe_b_levels": 2_000, "files": 4},
-    "DOCS": {"docs": 600, "dup_clusters": 40, "embeddings": 300, "emb_dup_pairs": 10, "knn_queries": 4},
+    "DOCS": {"docs": 600, "dup_clusters": 40, "near_miss_pairs": 40, "embeddings": 300, "emb_dup_pairs": 10,
+             "knn_queries": 4},
 }
 
 

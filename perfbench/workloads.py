@@ -2,14 +2,17 @@
 ``hdfe_spark`` followed by a sink, and each step's correctness check.
 
 A step's ``call`` returns an :class:`Out`.  Its ``df`` (if any) is the
-sink query, or a list of them: inside the step timer the runner writes
-each to Spark's ``noop`` sink, which computes every column of every
-row, or, for small outputs marked ``collect``, collects it into
-``rows`` so the check needs no second run.  ``value`` holds
-whatever the layer already returned to the driver (numpy slopes, a
-collected pair list).  ``check`` runs after the timer and returns True
-when the output matches a local numpy/pandas computation over the same
-generated arrays.
+sink query, or a list of them.  Inside the step timer the runner sinks
+each one as the step's ``collect`` says: ``"pandas"`` (``toPandas``
+over Arrow) or ``"rows"`` (``collect``) brings every row to the driver,
+so the check needs no second Spark run; ``None`` writes it to Spark's
+``noop`` sink, which computes every column of every row, and the check
+re-runs it filtered to sampled keys (the panel_scale outputs, which
+are too large to collect).  ``value`` holds whatever the layer already
+returned to the driver (numpy slopes, a collected pair list).
+``check`` runs after the timer and returns True when the output
+matches a local numpy/pandas computation over the same generated
+arrays.
 """
 
 from __future__ import annotations
@@ -27,8 +30,8 @@ from perfbench import inputs
 class Out:
     df: Any = None  # a sink DataFrame, or a list of them
     value: Any = None
-    collect: bool = False  # sink by collecting ``df`` into ``rows``
-    rows: Any = None
+    collect: str | None = None  # "pandas", "rows" or None (noop sink)
+    rows: Any = None  # what the sink collected: one result per ``df``, or the only one
 
     @property
     def sinks(self) -> list:
@@ -85,10 +88,42 @@ def _close(a, b, rtol=1e-6, atol=1e-9) -> bool:
     return bool(np.allclose(np.asarray(a, float), np.asarray(b, float), rtol=rtol, atol=atol))
 
 
-def _rows(df, key: str, keys) -> list:
+def _sampled(df, key: str, keys):
+    """Re-run a noop-sunk output for the sampled ``keys`` only."""
     from pyspark.sql import functions as F
 
-    return df.filter(F.col(key).isin([int(k) for k in keys])).collect()
+    return df.filter(F.col(key).isin([int(k) for k in keys])).toPandas()
+
+
+def _same(a, b) -> bool:
+    """Exact equality, NaN matching NaN (copied values, e.g. lags)."""
+    return bool(np.array_equal(np.asarray(a, float), np.asarray(b, float), equal_nan=True))
+
+
+def _same_ids(a, b) -> bool:
+    """The same multiset of ids."""
+    return bool(np.array_equal(np.sort(np.asarray(a)), np.sort(np.asarray(b))))
+
+
+def _transform_matches(got, frame, key: str, col: str) -> bool:
+    """``got`` has one row per row of ``frame`` (the rows of whole
+    groups), with the group mean and count of ``col`` broadcast back."""
+    g = frame.groupby(key)[col]
+    return (
+        _same_ids(got[key], frame[key])
+        and _close(got["mean_" + col], got[key].map(g.mean()))
+        and _same(got["count_" + col], got[key].map(g.count()))
+    )
+
+
+def _lags_match(got, frame, ent: str, order: str, col: str, lags, row_id: str) -> bool:
+    """``got`` has the rows of ``frame`` (whole entities), and each lag
+    column equals pandas' shift within the entity."""
+    want = frame.sort_values([ent, order]).set_index(row_id)
+    have = got.set_index(row_id).reindex(want.index)
+    return _same_ids(got[row_id], frame[row_id]) and all(
+        _same(have[f"{col}_lag_{lag}"], want.groupby(ent)[col].shift(lag)) for lag in lags
+    )
 
 
 def _se(res) -> np.ndarray:
@@ -178,7 +213,7 @@ def _grouped_agg(ctx):
 
     keys = ["l_returnflag", "l_linestatus"]
     values = {"l_quantity": ["mean", "count"], "l_discount": ["mean"]}
-    return Out(df=grouped_agg(ctx.table("lineitem"), keys, values), collect=True)
+    return Out(df=grouped_agg(ctx.table("lineitem"), keys, values), collect="rows")
 
 
 def _grouped_agg_check(ctx, out):
@@ -205,19 +240,11 @@ def _events_frame(ctx):
 def _grouped_transform(ctx):
     from hdfe_spark.operators.groupby import grouped_transform
 
-    return Out(df=grouped_transform(ctx.table("events"), "user_id", {"value": ["mean", "count"]}))
+    return Out(df=grouped_transform(ctx.table("events"), "user_id", {"value": ["mean", "count"]}), collect="pandas")
 
 
 def _grouped_transform_check(ctx, out):
-    ev = _events_frame(ctx)
-    users = ctx.sample(ev["user_id"].to_numpy())
-    got = _rows(out.df, "user_id", users)
-    g = ev[ev["user_id"].isin(users)].groupby("user_id")["value"]
-    mean, cnt = g.mean(), g.count()
-    return len(got) == int(cnt.sum()) and all(
-        _close(r["mean_value"], mean[r["user_id"]]) and r["count_value"] == cnt[r["user_id"]]
-        for r in got
-    )
+    return _transform_matches(out.rows, _events_frame(ctx), "user_id", "value")
 
 
 def _span(pdf):
@@ -237,7 +264,7 @@ def _groupby_apply(ctx):
 
     li = ctx.table("lineitem").select("l_suppkey", "l_quantity")
     schema = "l_suppkey long, span_qty double, n_rows long"
-    return Out(df=Groupby(li, "l_suppkey").apply(_span, schema=schema), collect=True)
+    return Out(df=Groupby(li, "l_suppkey").apply(_span, schema=schema), collect="rows")
 
 
 def _groupby_apply_check(ctx, out):
@@ -259,30 +286,14 @@ def _groupby_apply_check(ctx, out):
 def _demean_step(ctx):
     from hdfe_spark.operators.groupby import demean
 
-    return Out(df=demean(ctx.table("events"), "user_id", "value"))
+    return Out(df=demean(ctx.table("events"), "user_id", "value"), collect="pandas")
 
 
 def _demean_check(ctx, out):
-    ev = _events_frame(ctx)
-    users = ctx.sample(ev["user_id"].to_numpy())
-    sub = ev[ev["user_id"].isin(users)]
-    want = dict(zip(sub["event_id"], sub["value"] - sub.groupby("user_id")["value"].transform("mean")))
-    got = _rows(out.df, "user_id", users)
-    return len(got) == len(want) and all(_close(r["value_dm"], want[r["event_id"]]) for r in got)
-
-
-def _lags_check_frame(out_df, frame, ent, order, col, lags, keys) -> bool:
-    sub = frame[frame[ent].isin(keys)].sort_values([ent, order])
-    got = {r["__id"]: r for r in _rows(out_df, ent, keys)}
-    if len(got) != len(sub):
-        return False
-    for lag in lags:
-        want = sub.groupby(ent)[col].shift(lag)
-        for rid, w in zip(sub["__id"], want):
-            v = got[rid][f"{col}_lag_{lag}"]
-            if (v is None) != bool(np.isnan(w)) or (v is not None and v != w):
-                return False
-    return True
+    ev = _events_frame(ctx).set_index("event_id")
+    want = ev["value"] - ev.groupby("user_id")["value"].transform("mean")
+    got = out.rows.set_index("event_id")["value_dm"]
+    return _same_ids(got.index, want.index) and _close(got.reindex(want.index), want)
 
 
 def _make_lags_events(ctx):
@@ -292,56 +303,47 @@ def _make_lags_events(ctx):
         ctx.table("events"), n_lags_back=2, n_lags_forward=1,
         outcomes="value", groupby="user_id", order_by="ts",
     )
-    return Out(df=out)
+    return Out(df=out, collect="pandas")
 
 
 def _make_lags_events_check(ctx, out):
-    ev = _events_frame(ctx).rename(columns={"event_id": "__id"})
-    df = out.df.withColumnRenamed("event_id", "__id")
-    keys = ctx.sample(ev["user_id"].to_numpy())
-    return _lags_check_frame(df, ev, "user_id", "ts", "value", (-1, 1, 2), keys)
+    return _lags_match(out.rows, _events_frame(ctx), "user_id", "ts", "value", (-1, 1, 2), "event_id")
 
 
 def _factorize(ctx):
     from hdfe_spark.operators.encoding import factorize
 
-    return Out(df=factorize(ctx.table("part"), "p_brand"))
+    return Out(df=factorize(ctx.table("part"), "p_brand"), collect="pandas")
 
 
 def _factorize_check(ctx, out):
     p = ctx.data["part"]
-    levels = {v: i for i, v in enumerate(np.unique(p["p_brand"]))}
-    keys = ctx.sample(p["p_partkey"])
-    got = _rows(out.df, "p_partkey", keys)
-    return len(got) == len(keys) and all(
-        r["p_brand_code"] == levels[p["p_brand"][r["p_partkey"]]] for r in got
-    )
+    _, codes = np.unique(p["p_brand"], return_inverse=True)
+    got = out.rows.sort_values("p_partkey")
+    return _same(got["p_partkey"], p["p_partkey"]) and _same(got["p_brand_code"], codes)
 
 
-def _dummy_sums_match(out_df, names, want) -> bool:
-    from pyspark.sql import functions as F
-
-    row = out_df.agg(*[F.sum(F.col(c).cast("long")).alias(c) for c in names]).collect()[0]
-    return sorted(int(row[c]) for c in names) == sorted(want)
+def _dummy_sums_match(frame, names, want) -> bool:
+    return sorted(int(frame[c].astype("int64").sum()) for c in names) == sorted(want)
 
 
 def _make_dummies(ctx):
     from hdfe_spark.operators.encoding import make_dummies
 
     df, names = make_dummies(ctx.table("orders"), "o_orderstatus", drop_col=False)
-    return Out(df=df, value=names)
+    return Out(df=df, value=names, collect="pandas")
 
 
 def _make_dummies_check(ctx, out):
     _, counts = np.unique(ctx.data["orders"]["o_orderstatus"], return_counts=True)
-    return len(out.value) == len(counts) and _dummy_sums_match(out.df, out.value, counts)
+    return len(out.value) == len(counts) and _dummy_sums_match(out.rows, out.value, counts)
 
 
 def _get_all_dummies(ctx):
     from hdfe_spark.operators.encoding import get_all_dummies
 
     df, names = get_all_dummies(ctx.table("orders"), ["o_orderstatus", "o_orderpriority"])
-    return Out(df=df, value=names)
+    return Out(df=df, value=names, collect="pandas")
 
 
 def _get_all_dummies_check(ctx, out):
@@ -349,7 +351,7 @@ def _get_all_dummies_check(ctx, out):
     _, c1 = np.unique(o["o_orderstatus"], return_counts=True)
     _, c2 = np.unique(o["o_orderpriority"], return_counts=True)
     want = list(c1) + list(c2[:-1])  # first column all levels, later drop-last
-    return len(out.value) == len(want) and _dummy_sums_match(out.df, out.value, want)
+    return len(out.value) == len(want) and _dummy_sums_match(out.rows, out.value, want)
 
 
 def _gram(ctx):
@@ -386,28 +388,28 @@ def _est_within(ctx):
     from hdfe_spark.operators.estimate import estimate
 
     res = estimate(ctx.table("lineitem"), _LI_Y, _LI_X, categorical_controls=["l_suppkey"], get_residual=True)
-    return Out(df=[res.residuals, res.fixed_effects["l_suppkey"]], value=res.slopes)
+    return Out(df=[res.residuals, res.fixed_effects["l_suppkey"]], value=res.slopes, collect="pandas")
+
+
+def _line_key(t) -> np.ndarray:
+    """(l_orderkey, l_linenumber), the unique row key, as one integer."""
+    return np.asarray(t["l_orderkey"]) * 8 + np.asarray(t["l_linenumber"])
 
 
 def _est_within_check(ctx, out):
     o = ctx.fixture_oracle
-    resid, fe = out.df
+    resid, fe = out.rows
     li = ctx.data["lineitem"]
-    orders = ctx.sample(li["l_orderkey"])
-    idx = np.nonzero(np.isin(li["l_orderkey"], orders))[0]
-    want = {(li["l_orderkey"][i], li["l_linenumber"][i]): o["resid_within"][i] for i in idx}
-    got = _rows(resid, "l_orderkey", orders)
-    supp = ctx.sample(ctx.li["supp"])
-    got_fe = _rows(fe, "l_suppkey", supp)
+    want = dict(zip(_line_key(li), o["resid_within"]))
+    got = dict(zip(_line_key(resid), resid["resid_l_extendedprice"]))
+    fe = fe.sort_values("l_suppkey")
     return (
         _close(out.value[:, 0], o["b_within"])
-        and len(got) == len(want)
-        and all(
-            _close(r["resid_l_extendedprice"], want[(r["l_orderkey"], r["l_linenumber"])], atol=1e-6)
-            for r in got
-        )
-        and len(got_fe) == len(supp)
-        and all(_close(r["fe_l_extendedprice"], o["fe_within"][r["l_suppkey"]], atol=1e-6) for r in got_fe)
+        and len(resid) == len(want)
+        and got.keys() == want.keys()
+        and _close([got[k] for k in want], list(want.values()), atol=1e-6)
+        and _same(fe["l_suppkey"], np.unique(ctx.li["supp"]))
+        and _close(fe["fe_l_extendedprice"], o["fe_within"][fe["l_suppkey"]], atol=1e-6)
     )
 
 
@@ -481,12 +483,11 @@ def _sc_residuals(ctx):
 
 def _sc_residuals_check(ctx, out):
     o = ctx.scale_oracle
-    rows = ctx.sample(ctx.data["lineitem"]["id"], k=32)
-    got = _rows(out.df, "id", rows)
+    got = _sampled(out.df, "id", ctx.sample(ctx.data["lineitem"]["id"], k=32))
     return (
         _planted(out.value)
-        and len(got) == len(rows)
-        and all(_close(r["resid_y"], o["resid_within"][r["id"]], rtol=1e-6, atol=1e-6) for r in got)
+        and len(got) == 32
+        and _close(got["resid_y"], o["resid_within"][got["id"]], rtol=1e-6, atol=1e-6)
     )
 
 
@@ -500,9 +501,9 @@ def _sc_lags(ctx):
 def _sc_lags_check(ctx, out):
     import pandas as pd
 
-    p = pd.DataFrame(ctx.data["lineitem"]).rename(columns={"id": "__id"})
+    p = pd.DataFrame(ctx.data["lineitem"])
     keys = ctx.sample(p["fe_b"].to_numpy())
-    return _lags_check_frame(out.df.withColumnRenamed("id", "__id"), p, "fe_b", "t", "y", (-1, 1), keys)
+    return _lags_match(_sampled(out.df, "fe_b", keys), p[p["fe_b"].isin(keys)], "fe_b", "t", "y", (-1, 1), "id")
 
 
 def _sc_transform(ctx):
@@ -512,15 +513,11 @@ def _sc_transform(ctx):
 
 
 def _sc_transform_check(ctx, out):
-    p = ctx.data["lineitem"]
-    keys = ctx.sample(p["fe_a"])
-    na = inputs.SCALE["fe_a_levels"]
-    mean = _group_mean(p["y"], p["fe_a"], na)
-    cnt = np.bincount(p["fe_a"], minlength=na)
-    got = _rows(out.df, "fe_a", keys)
-    return len(got) == int(cnt[keys].sum()) and all(
-        _close(r["mean_y"], mean[r["fe_a"]]) and r["count_y"] == cnt[r["fe_a"]] for r in got
-    )
+    import pandas as pd
+
+    p = pd.DataFrame(ctx.data["lineitem"])
+    keys = ctx.sample(p["fe_a"].to_numpy())
+    return _transform_matches(_sampled(out.df, "fe_a", keys), p[p["fe_a"].isin(keys)], "fe_a", "y")
 
 
 PANEL_SCALE = [
@@ -565,7 +562,7 @@ def _doc_step(fn):
     every output column but the passed-through text."""
 
     def call(ctx):
-        return Out(df=fn(ctx.table("documents")).drop("text"), collect=True)
+        return Out(df=fn(ctx.table("documents")).drop("text"), collect="rows")
 
     return call
 
@@ -641,7 +638,7 @@ def _minhash_verify(ctx):
     docs = ctx.table("documents")
     cand = minhash_candidate_pairs(docs, num_hashes=128, bands=16, shingle_k=5)
     ver = ngram_jaccard_pairs(docs, cand, "text", "doc_id", shingle_k=5).filter(F.col("jaccard") >= 0.8)
-    return Out(df=ver.select("id_a", "id_b"), collect=True, value=cand)
+    return Out(df=ver.select("id_a", "id_b"), collect="rows", value=cand)
 
 
 def _minhash_verify_check(ctx, out):
