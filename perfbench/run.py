@@ -11,14 +11,20 @@ heap.  A run:
    under ``.perfbench/data``; not timed);
 2. brackets everything below with the capacity probes of ``bench.py``
    at pool width k;
-3. sets up the session ``SETUPS`` times (start a SparkContext, then
-   warm up).  The first also launches the gateway JVM; the median of
-   the others, each a restart on that JVM, is ``setup_s``;
+3. sets up the session (start a SparkContext, then warm up), which
+   also launches the gateway JVM;
 4. runs the workload's steps in passes for ``--seconds``: the first
    pass is ``cold_pass_s``, the median of the others ``warm_pass_s``.
-   After every step, outside its timer, its output is checked against
-   numpy/pandas over the same generated arrays and the Spark caches
-   are cleared, so every pass repeats the same work.
+   ``driver_peak_rss_mb`` is the peak RSS of the Python driver plus
+   the JVM inside the step timers: the peaks are reset before each
+   step and read right after it.  After every step, outside its timer,
+   its output is checked against numpy/pandas over the same generated
+   arrays and the Spark caches are cleared, so every pass repeats the
+   same work;
+5. restarts the session ``SETUPS`` times on the launched JVM; the
+   median restart (stop excluded) is ``setup_s``.  The restarts come
+   after the passes, so the passes run on the heap the launch left and
+   the restarts' garbage is not in the steps' RSS.
 
 With ``--trace 0`` the last stdout line carries the end-to-end metrics;
 with ``--trace 1`` every step is tagged with a job group and Spark's
@@ -44,10 +50,12 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench")
 
-# Host profile defaults; BENCHMARK.json's command pins both explicitly.
+# Host profile: k of local[k] (capped at the usable cores) and the
+# driver heap, well under a 16 GiB host's RAM.  BENCHMARK.json's
+# workload descriptions repeat both.
 CORES = 4
 DRIVER_MEM = "3g"
-SETUPS = 3
+SETUPS = 5
 MIN_WARM = 1
 
 LAYERS = (
@@ -152,22 +160,28 @@ def host_ok(before: dict, after: dict, k: int) -> bool:
     )
 
 
-def vm_hwm_kb(pid: int | str = "self") -> int:
+def vm_hwm_mb(pid: int | str = "self") -> float:
     with open(f"/proc/{pid}/status") as f:
         for line in f:
             if line.startswith("VmHWM:"):
-                return int(line.split()[1])
-    return 0
+                return int(line.split()[1]) / 1024
+    return 0.0
+
+
+def reset_hwm(pid: int | str = "self") -> None:
+    """Set the process's VmHWM back to its current RSS."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
 
 
 # ---------------------------------------------------------- session
 
 
-def configure_env(tmp: str, k: int, driver_mem: str) -> dict:
+def configure_env(tmp: str, k: int) -> dict:
     """Pin the host profile and keep every file the run writes inside
     ``tmp``.  Must run before the first SparkContext starts."""
     os.environ["SPARK_GRAFT_CPUS"] = str(k)
-    os.environ["SPARK_DRIVER_MEM"] = driver_mem
+    os.environ["SPARK_DRIVER_MEM"] = DRIVER_MEM
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "local")
     os.environ["TMPDIR"] = tmp
     # glibc's per-thread malloc arenas made the JVM's native peak RSS
@@ -175,21 +189,50 @@ def configure_env(tmp: str, k: int, driver_mem: str) -> dict:
     os.environ["MALLOC_ARENA_MAX"] = "2"
     tempfile.tempdir = tmp
     return {
-        # A fixed young generation keeps G1 from sizing the heap by
-        # measured pause times, which made the peak RSS follow host load.
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xmn512m",
+        # A fixed heap (initial = max) and young generation keep G1 from
+        # sizing the heap by measured pause times, which made the JVM's
+        # peak RSS follow host load (1.3-1.7 GB across runs of one input).
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM} -Xmn512m",
         "spark.local.dir": os.path.join(tmp, "local"),
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
     }
 
 
-def warm_up(table) -> None:
-    """One scan of the workload's first table.  Python-worker spawn and
-    the JIT of the workload's own plans are left to the cold pass."""
+def warm_up(table):
+    """One scan of the workload's first table; returns the query.
+    Python-worker spawn and the JIT of the workload's own plans are
+    left to the cold pass."""
     from pyspark.sql import functions as F
 
-    table.agg(F.count(F.lit(1))).collect()
+    df = table.agg(F.count(F.lit(1)))
+    df.collect()
+    return df
+
+
+def set_up(workload: str, conf: dict, root: str, table: str, trace: bool):
+    """Start a SparkContext and warm it up.  Returns the session, its
+    tracer (None untraced) and the set-up's record."""
+    from hdfe_spark.session import get_spark
+    from hdfe_spark.sources.tables import load_table
+    from perfbench.spark_status import Tracer, plan_seconds
+
+    group = f"bench:{workload}:setup"
+    e0, t0 = time.time(), time.perf_counter()
+    spark = get_spark(app_name=f"perfbench-{workload}", extra_conf=conf)
+    start = time.perf_counter() - t0
+    tracer = Tracer(spark) if trace else None
+    if tracer is not None:
+        tracer.begin(group)
+    df = warm_up(load_table(spark, table, root))
+    wall = time.perf_counter() - t0
+    rec = {"wall_s": wall, "start_s": start, "warmup_s": wall - start, "read_s": 0.0}
+    if tracer is not None:
+        rec.update(tracer.read(group, e0, e0 + wall))
+        rec["plan_s"] = plan_seconds(df)
+        tracer.skip()
+    log(f"setup {start:.2f}s + {wall - start:.2f}s")
+    return spark, tracer, rec
 
 
 def clear_caches(spark) -> None:
@@ -230,14 +273,18 @@ def log(msg: str) -> None:
     print(f"# {msg}", file=sys.stderr, flush=True)
 
 
-def run_step(ctx, step, workload: str, tracer) -> dict:
-    """Time one call plus its sink; then, outside the timer, read the
-    trace (if any), check the output and clear the caches."""
+def run_step(ctx, step, workload: str, tracer, jvm_pid: int) -> dict:
+    """Time one call plus its sink, with the driver's and the JVM's
+    peak RSS reset before it and read after it; then, outside the
+    timer, read the trace (if any), check the output and clear the
+    caches."""
     from perfbench.spark_status import plan_seconds
 
     group = f"bench:{workload}:{step.name}"
     if tracer is not None:
         tracer.begin(group)
+    reset_hwm()
+    reset_hwm(jvm_pid)
     out, error = None, False
     e0, t0 = time.time(), time.perf_counter()
     try:
@@ -256,7 +303,10 @@ def run_step(ctx, step, workload: str, tracer) -> dict:
         traceback.print_exc(file=sys.stderr)
         error = True
     wall = time.perf_counter() - t0
-    rec = {"step": step.name, "layer": step.layer, "wall_s": wall}
+    rec = {
+        "step": step.name, "layer": step.layer, "wall_s": wall,
+        "rss_py_mb": vm_hwm_mb(), "rss_jvm_mb": vm_hwm_mb(jvm_pid),
+    }
     r0 = time.perf_counter()
     if tracer is not None:
         rec.update(tracer.read(group, e0, e0 + wall))
@@ -282,8 +332,8 @@ def run_step(ctx, step, workload: str, tracer) -> dict:
     return rec
 
 
-def run_pass(ctx, steps, workload, tracer) -> list[dict]:
-    return [run_step(ctx, s, workload, tracer) for s in steps]
+def run_pass(ctx, steps, workload, tracer, jvm_pid) -> list[dict]:
+    return [run_step(ctx, s, workload, tracer, jvm_pid) for s in steps]
 
 
 def _median(xs):
@@ -318,53 +368,27 @@ def quartiles(xs: list[float]) -> dict:
 
 
 def run(
-    workload: str,
-    seed: int,
-    seconds: float,
-    trace: bool,
-    data_root: str,
-    setups: int = SETUPS,
-    cores: int = CORES,
-    driver_mem: str = DRIVER_MEM,
+    workload: str, seed: int, seconds: float, trace: bool, data_root: str, setups: int = SETUPS
 ) -> tuple[dict, dict, list]:
     """One benchmark run.  Returns ``(result, annotations, passes)``:
     the last-line object, the annotation object and every step record."""
     from perfbench import inputs, workloads
 
     t_run = time.perf_counter()
-    k = usable_cores(cores)
+    k = usable_cores(CORES)
     tmp = tempfile.mkdtemp(prefix=f"run-{os.getpid()}-", dir=os.path.join(WORK, "tmp"))
     try:
-        conf = configure_env(tmp, k, driver_mem)
+        conf = configure_env(tmp, k)
         probe_before = capacity_probe(k)
         t0 = time.perf_counter()
         root, data = inputs.GENERATORS[workload](seed, data_root)
         log(f"inputs {time.perf_counter() - t0:.2f}s")
         steps = workloads.WORKLOADS[workload]
+        first_table = steps[0].name.removeprefix("scan_")
 
-        from hdfe_spark.session import get_spark
-        from perfbench.spark_status import Tracer
-
-        setup_recs, spark, tracer, ctx = [], None, None, None
-        for _ in range(setups):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            e0 = time.time()
-            spark = get_spark(app_name=f"perfbench-{workload}", extra_conf=conf)
-            start = time.perf_counter() - t0
-            tracer = Tracer(spark) if trace else None
-            if tracer is not None:
-                tracer.begin(f"bench:{workload}:setup")
-            ctx = workloads.Ctx(spark, seed, root, data, trace)
-            warm_up(ctx.table(steps[0].name.removeprefix("scan_")))
-            wall = time.perf_counter() - t0
-            rec = {"wall_s": wall, "start_s": start, "warmup_s": wall - start, "read_s": 0.0}
-            if tracer is not None:
-                rec.update(tracer.read(f"bench:{workload}:setup", e0, e0 + wall))
-                tracer.skip()
-            setup_recs.append(rec)
-            log(f"setup {start:.2f}s + {wall - start:.2f}s")
+        spark, tracer, launch = set_up(workload, conf, root, first_table, trace)
+        ctx = workloads.Ctx(spark, seed, root, data, trace)
+        jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
 
         # Cold pass, then warm passes until --seconds have passed and at
         # least MIN_WARM warm passes ran.
@@ -372,15 +396,20 @@ def run(
         t_start = time.perf_counter()
         while len(passes) < 1 + MIN_WARM or time.perf_counter() - t_start < seconds:
             t0 = time.perf_counter()
-            passes.append(run_pass(ctx, steps, workload, tracer))
+            passes.append(run_pass(ctx, steps, workload, tracer, jvm_pid))
             p = passes[-1]
             log(
                 f"pass {len(passes) - 1}: {sum(r['wall_s'] for r in p):.2f}s steps, "
                 f"{sum(r['check_s'] for r in p):.2f}s checks, {time.perf_counter() - t0:.2f}s total"
             )
+        rss_py = max(r["rss_py_mb"] for p in passes for r in p)
+        rss_jvm = max(r["rss_jvm_mb"] for p in passes for r in p)
 
-        rss_py = vm_hwm_kb() / 1024
-        rss_jvm = vm_hwm_kb(spark._jvm.java.lang.ProcessHandle.current().pid()) / 1024
+        restarts = []
+        for _ in range(setups):
+            spark.stop()
+            spark, _, rec = set_up(workload, conf, root, first_table, trace)
+            restarts.append(rec)
         spark.stop()
         stop_gateway()
         probe_after = capacity_probe(k)
@@ -389,11 +418,11 @@ def run(
         attempted = sum(len(p) for p in passes)
         failed = sum(r["error"] for p in passes for r in p)
         if trace:
-            values = layer_metrics(passes[1:], setup_recs[1:], ctx.scratch)
+            values = layer_metrics(passes[1:], restarts, ctx.scratch)
             units = {f"{l}.{m}": u for l in LAYERS for m, u in LAYER_METRICS.items()} | EXTRA_METRICS
         else:
             values = {
-                "setup_s": _median([s["wall_s"] for s in setup_recs[1:]]),
+                "setup_s": _median([s["wall_s"] for s in restarts]),
                 "cold_pass_s": pass_s[0],
                 "warm_pass_s": _median(pass_s[1:]),
                 "driver_peak_rss_mb": rss_py + rss_jvm,
@@ -412,13 +441,14 @@ def run(
             "host": {
                 "local_k": k,
                 "nproc": len(os.sched_getaffinity(0)),
-                "driver_heap": driver_mem,
+                "driver_heap": DRIVER_MEM,
                 "probes": [probe_before, probe_after],
                 "host_ok": host_ok(probe_before, probe_after, k),
             },
             "fail_frac": failed / attempted,
             "peak_rss_mb": {"python": round(rss_py, 1), "jvm": round(rss_jvm, 1)},
-            "setup_s": [round(s["wall_s"], 4) for s in setup_recs],
+            "launch_s": round(launch["wall_s"], 4),
+            "setup_s": quartiles([s["wall_s"] for s in restarts]),
             "cold_pass_s": round(pass_s[0], 4),
             "warm_pass_s": quartiles(pass_s[1:]),
             "step_cold_s": {s.name: round(passes[0][i]["wall_s"], 4) for i, s in enumerate(steps)},
@@ -438,18 +468,13 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cores", type=int, default=CORES, help="k of local[k], capped at the usable cores")
-    ap.add_argument("--driver-mem", default=DRIVER_MEM, help="driver heap, passed as SPARK_DRIVER_MEM")
     args = ap.parse_args(argv)
     if not os.path.isfile(os.path.join(ROOT, "hdfe_spark", "__init__.py")):
         print(f"hdfe_spark not found under {ROOT}: run from a repository checkout", file=sys.stderr)
         return 2
     sys.path.insert(0, ROOT)
     os.makedirs(os.path.join(WORK, "tmp"), exist_ok=True)
-    result, annotations, _ = run(
-        args.workload, args.seed, args.seconds, bool(args.trace), os.path.join(WORK, "data"),
-        cores=args.cores, driver_mem=args.driver_mem,
-    )
+    result, annotations, _ = run(args.workload, args.seed, args.seconds, bool(args.trace), os.path.join(WORK, "data"))
     print(json.dumps({"annotations": annotations}))
     print(json.dumps(result))
     return 0

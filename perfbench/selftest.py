@@ -12,7 +12,8 @@ Shrinks every generated input, then runs each workload once traced
   union of its job spans reconciles to the step's wall time within 10%
   (plus 20 ms for Spark's millisecond timestamps);
 - the layers the workloads are built around report work: estimate and
-  groupby jobs on panel_fixture, Python-UDF time in groupby and dedup.
+  groupby jobs on panel_fixture, Python-UDF time in groupby and dedup,
+  and the set-up's warm-up query reports its planning time.
 
 Exits 0 when all hold, 1 otherwise.
 """
@@ -89,7 +90,9 @@ def main() -> int:
             errors += [f"{workload}: {e}" for e in _check_reconcile(passes)]
             m = {k: v["value"] for k, v in result["metrics"].items()}
             needs = {
-                "panel_fixture": ("estimate.jobs", "groupby.jobs", "groupby.py_s", "sources.tables.input_bytes"),
+                "panel_fixture": (
+                    "estimate.jobs", "groupby.jobs", "groupby.py_s", "sources.tables.input_bytes", "session.plan_s",
+                ),
                 "panel_scale": ("estimate.jobs", "lags.stages", "estimate.exec_cpu_s"),
                 "curate_docs": ("dedup.py_s", "text.exec_cpu_s", "dedup.verify_yield"),
             }[workload]

@@ -643,7 +643,9 @@ def _minhash_verify(ctx):
 
 def _minhash_verify_check(ctx, out):
     pairs = {(r["id_a"], r["id_b"]) for r in out.rows}
-    if ctx.trace:  # the candidate count costs a re-run of the LSH join
+    # the candidate count costs a re-run of the LSH join, and it is the
+    # same in every pass: count once
+    if ctx.trace and "verify_yield" not in ctx.scratch:
         n_cand = out.value.count()
         ctx.scratch["verify_yield"] = len(pairs) / n_cand if n_cand else 0.0
     return pairs == _planted_pairs(ctx)
