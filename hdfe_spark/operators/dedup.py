@@ -31,6 +31,7 @@ Scale design:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -51,8 +52,10 @@ from pyspark.sql import functions as F
 # operators a single composed pipeline registers before its first
 # action (review r16: eviction before the lazy consumer executes
 # would silently revert the fusion), while still bounding a long
-# session's cache growth.
+# session's cache growth. One lock guards the registry: a release on
+# one thread must not empty it under another thread's eviction loop.
 _SCOPED_PERSISTS: list = []
+_SCOPED_LOCK = threading.Lock()
 
 
 def _scoped_persist_cap() -> int:
@@ -65,24 +68,30 @@ def _query_scoped_persist(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _SCOPED_PERSISTS.append(out)
-    while len(_SCOPED_PERSISTS) > _scoped_persist_cap():
-        old = _SCOPED_PERSISTS.pop(0)
+    cap = _scoped_persist_cap()
+    with _SCOPED_LOCK:
+        _SCOPED_PERSISTS.append(out)
+        n_evict = max(0, len(_SCOPED_PERSISTS) - cap)
+        evicted = _SCOPED_PERSISTS[:n_evict]
+        del _SCOPED_PERSISTS[:n_evict]
+    _unpersist_all(evicted)
+    return out
+
+
+def _unpersist_all(handles: list) -> None:
+    for old in handles:
         try:
             old.unpersist(False)
         except Exception:
             pass
-    return out
 
 
 def release_query_caches() -> None:
     """Unpersist every outstanding query-scoped signature cache."""
-    while _SCOPED_PERSISTS:
-        old = _SCOPED_PERSISTS.pop()
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass
+    with _SCOPED_LOCK:
+        handles = _SCOPED_PERSISTS[::-1]
+        _SCOPED_PERSISTS.clear()
+    _unpersist_all(handles)
 
 
 # ------------------------------------------------------------- exact
@@ -209,8 +218,6 @@ def ngram_jaccard_pairs(
     # to string sets up to 2^-64 collisions). Repartition first: the
     # fixture tables are single parquet files → a single task would
     # otherwise serialize all per-doc hashing on one core.
-    import os
-
     from hdfe_spark.functions.hashing import make_jaccard_udf, make_kgram_set_udf
 
     from hdfe_spark.session import py_stage_partitions
@@ -228,9 +235,8 @@ def ngram_jaccard_pairs(
     # shingle pass (the UDF sits above the reusable exchange), so the
     # corpus is hashed twice per call. One query-scoped persisted pass
     # feeds both sides; hashes are identical, so every jaccard is
-    # bit-identical. ``HDFE_NGRAM_FUSED=0`` restores the unfused plan.
-    if os.environ.get("HDFE_NGRAM_FUSED", "1") != "0":
-        sets = _query_scoped_persist(sets)
+    # bit-identical.
+    sets = _query_scoped_persist(sets)
     jac = make_jaccard_udf()
     out = (
         pairs.join(sets.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")), on="id_a")
@@ -255,80 +261,70 @@ def minhash_dedup(
     min-id rule — one pass, no iterative connected components; good
     enough for dedup where any representative may survive.)
 
-    Plan (optimization r15, guide §1.2/§4): the unfused chain Arrow-
-    hashes the corpus FOUR times (band digests for each self-join side,
-    shingle sets for each verify side — the UDFs sit above their
+    Plan (optimization r15, guide §1.2/§4): composing
+    :func:`minhash_candidate_pairs` with :func:`ngram_jaccard_pairs`
+    Arrow-hashes the corpus FOUR times (band digests for each self-join
+    side, shingle sets for each verify side — the UDFs sit above their
     exchanges, so exchange reuse cannot deduplicate them) and scans the
-    text five times. The fused path computes one compact signature
-    table (id, band digests, shingle set) in a single Arrow pass,
-    persists it for the duration of the query, and runs the LSH
-    self-join + exact-Jaccard verify off it — identical band digests
-    and shingle hashes, so the surviving set is bit-identical.
-    ``HDFE_MINHASH_FUSED=0`` restores the unfused chain."""
-    import os
-
-    if os.environ.get("HDFE_MINHASH_FUSED", "1") != "0":
-        from hdfe_spark.functions.hashing import (
-            make_jaccard_udf,
-            make_minhash_bands_and_set_udf,
-        )
-        from hdfe_spark.session import py_stage_partitions
-
-        par = py_stage_partitions(df.sparkSession)
-        fused = make_minhash_bands_and_set_udf(num_hashes, bands, shingle_k)
-        sig = _query_scoped_persist(
-            df.select(id_col, text_col)
-            .repartition(par, F.col(id_col))
-            .select(F.col(id_col), fused(F.col(text_col)).alias("__s"))
-            .select(
-                F.col(id_col),
-                F.col("__s.bands").alias("__bands"),
-                F.col("__s.shingles").alias("__sh"),
-            )
-        )
-        banded = sig.select(
-            F.col(id_col),
-            F.posexplode("__bands").alias("band", "band_hash"),
-        )
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.band") == F.col("b.band"),
-                    F.col("a.band_hash") == F.col("b.band_hash"),
-                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-                ],
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        jac = make_jaccard_udf()
-        losers = (
-            cand.join(
-                sig.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")),
-                on="id_a",
-            )
-            .join(
-                sig.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")),
-                on="id_b",
-            )
-            .withColumn("jaccard", jac(F.col("__sh_a"), F.col("__sh_b")))
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-        return df.join(losers, on=id_col, how="left_anti")
-
-    cand = minhash_candidate_pairs(df, text_col, id_col, num_hashes, bands, shingle_k)
-    verified = ngram_jaccard_pairs(df, cand, text_col, id_col, shingle_k).filter(
-        F.col("jaccard") >= jaccard_threshold
+    text five times. This plan computes one compact signature table
+    (id, band digests, shingle set) in a single Arrow pass, persists it
+    for the duration of the query, and runs the LSH self-join +
+    exact-Jaccard verify off it — identical band digests and shingle
+    hashes, so the surviving set is bit-identical to the composition."""
+    from hdfe_spark.functions.hashing import (
+        make_jaccard_udf,
+        make_minhash_bands_and_set_udf,
     )
-    losers = verified.select(F.col("id_b").alias(id_col)).distinct()
+    from hdfe_spark.session import py_stage_partitions
+
+    par = py_stage_partitions(df.sparkSession)
+    fused = make_minhash_bands_and_set_udf(num_hashes, bands, shingle_k)
+    sig = _query_scoped_persist(
+        df.select(id_col, text_col)
+        .repartition(par, F.col(id_col))
+        .select(F.col(id_col), fused(F.col(text_col)).alias("__s"))
+        .select(
+            F.col(id_col),
+            F.col("__s.bands").alias("__bands"),
+            F.col("__s.shingles").alias("__sh"),
+        )
+    )
+    banded = sig.select(
+        F.col(id_col),
+        F.posexplode("__bands").alias("band", "band_hash"),
+    )
+    a = banded.alias("a")
+    b = banded.alias("b")
+    cand = (
+        a.join(
+            b,
+            on=[
+                F.col("a.band") == F.col("b.band"),
+                F.col("a.band_hash") == F.col("b.band_hash"),
+                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+            ],
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    jac = make_jaccard_udf()
+    losers = (
+        cand.join(
+            sig.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")),
+            on="id_a",
+        )
+        .join(
+            sig.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")),
+            on="id_b",
+        )
+        .withColumn("jaccard", jac(F.col("__sh_a"), F.col("__sh_b")))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
     return df.join(losers, on=id_col, how="left_anti")
 
 
@@ -573,15 +569,12 @@ def embedding_neardup_pairs(
     7 planes); low thresholds degenerate toward brute force — inherent
     to hyperplane LSH, use ``embedding_neardup_exact`` below ~0.5.
     """
-    import os
-
     import numpy as np
 
     from hdfe_spark.operators.similarity import (
         _planes,
         _vec_dim,
         make_multi_bucket_udf,
-        make_pair_cosine_udf,
     )
     from hdfe_spark.session import py_stage_partitions
 
@@ -593,71 +586,6 @@ def embedding_neardup_pairs(
     )
     buckets = make_multi_bucket_udf(planes)
 
-    if os.environ.get("HDFE_EMB_LSH_PAIRS", "0") == "1":
-        # Optimization r15 candidate, MEASURED AND REJECTED as the
-        # default (kept opt-in for re-measurement): restructure per
-        # guide §8 — shuffle (id, tbl, bucket) only, dedupe candidate
-        # pairs before any vector moves, then attach vectors and
-        # verify with one per-pair cosine pass. Alternating A/B at
-        # sf0.1: OLD (grouped GEMM) med 1.16 s vs NEW 3.66 s — 3×
-        # worse, because every candidate PAIR row carries TWO full
-        # vectors into the verify stage (a vector in k candidate pairs
-        # is duplicated k times) while the grouped-GEMM path ships
-        # each vector exactly n_tables times and verifies a whole
-        # bucket in one GEMM. The §8 "move big rows once" framing
-        # undercounts the verify payload whenever pairs-per-vector can
-        # exceed n_tables, which holds at any near-dup-rich scale.
-        # Outputs are declared-surface identical either way
-        # (tools/equiv_r15b.py: rounded query + recall cert bitwise
-        # equal at sf0.001/0.01/0.1; raw cosines agree to 1e-12).
-        par = py_stage_partitions(df.sparkSession)
-        base = _query_scoped_persist(
-            df.select(F.col(id_col), F.col(vec_col))
-            .repartition(par, F.col(id_col))
-        )
-        banded_ids = base.select(
-            F.col(id_col),
-            F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bucket"),
-        )
-        a = banded_ids.alias("a")
-        b = banded_ids.alias("b")
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.tbl") == F.col("b.tbl"),
-                    F.col("a.bucket") == F.col("b.bucket"),
-                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-                ],
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        pcos = make_pair_cosine_udf()
-        return (
-            cand.join(
-                base.select(
-                    F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
-                ),
-                on="id_a",
-            )
-            .join(
-                base.select(
-                    F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")
-                ),
-                on="id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                pcos(F.col("__va"), F.col("__vb")).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
     # ONE Arrow pass computes every table's bucket; posexplode to
     # (table, bucket) rows carrying the vector; then FAISS-style
     # within-bucket verification: ``applyInPandas`` over (tbl, bucket)
@@ -668,8 +596,13 @@ def embedding_neardup_pairs(
     # collapsed by a final level-sized groupBy. Skew note: one
     # pathological bucket = one big GEMM task; bound it by raising
     # ``n_planes`` (bucket sizes shrink 2× per plane).
-    import pandas as pd
-
+    #
+    # The pair-join alternative (shuffle only (id, tbl, bucket), dedupe
+    # candidate pairs, then attach both vectors and verify per pair)
+    # was measured 3× slower at sf0.1 in optimization r15 (1.16 s vs
+    # 3.66 s): every candidate pair row carries two full vectors, so a
+    # vector in k pairs moves k times, while this plan moves each
+    # vector exactly n_tables times and verifies a bucket in one GEMM.
     par = py_stage_partitions(df.sparkSession)
     banded = df.select(F.col(id_col), F.col(vec_col)).repartition(
         par, F.col(id_col)
@@ -814,58 +747,42 @@ def containment_pairs(
     handles the hot keys, and the shuffle moves (doc, shingle)
     pairs, never text.
     """
-    import os
-
     from hdfe_spark.operators.text import shingles
 
-    if os.environ.get("HDFE_HOF_HOIST", "1") != "0":
-        # Hoist lower() behind a projection boundary (optimization
-        # r16, guide §1.2): the char-shingle transform lambda
-        # substr's its text argument per element, and a lambda
-        # re-evaluates any captured outer EXPRESSION per element —
-        # the inline form re-lowercased the FULL text once per
-        # shingle, O(len^2) per document. substr on the hoisted
-        # attribute is O(k). The empty-set filter runs BEFORE the
-        # projection as the equivalent length(text) >= k (shingles()
-        # yields [] iff the text is shorter than k; NULL text fails
-        # both forms) — a size(__s) > 0 post-filter gets
-        # predicate-pushed below the hoist with the full inline
-        # expression substituted back in, re-paying the O(len^2)
-        # pass per row. Values identical (same expressions modulo
-        # the hoist), certified by the brute-force all-pairs oracle.
-        low = df.filter(F.length(F.col(text_col)) >= shingle_k).select(
-            F.col(id_col), F.lower(F.col(text_col)).alias("__low")
-        )
-        sh = low.select(
-            F.col(id_col),
-            F.array_distinct(
-                shingles(F.col("__low"), shingle_k)
-            ).alias("__s"),
-        )
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.array_distinct(
-                shingles(F.lower(F.col(text_col)), shingle_k)
-            ).alias("__s"),
-        ).filter(F.size("__s") > 0)
+    # Hoist lower() behind a projection boundary (optimization r16,
+    # guide §1.2): the char-shingle transform lambda substr's its text
+    # argument per element, and a lambda re-evaluates any captured
+    # outer EXPRESSION per element — the inline form re-lowercased the
+    # FULL text once per shingle, O(len^2) per document. substr on the
+    # hoisted attribute is O(k). The empty-set filter runs on the
+    # LOWERED text, below the shingle projection, as the equivalent
+    # length(lower(text)) >= k: shingles() yields [] iff its input is
+    # shorter than k, and lower() can change the length ('İ' lowers
+    # to two code points), so the raw length would drop documents
+    # whose lowered text has k or more characters. A size(__s) > 0
+    # post-filter would instead get predicate-pushed below the hoist
+    # with the full inline expression substituted back in, re-paying
+    # the O(len^2) pass per row.
+    low = df.select(
+        F.col(id_col), F.lower(F.col(text_col)).alias("__low")
+    ).filter(F.length("__low") >= shingle_k)
+    sh = low.select(
+        F.col(id_col),
+        F.array_distinct(shingles(F.col("__low"), shingle_k)).alias("__s"),
+    )
     sizes = sh.select(F.col(id_col), F.size("__s").alias("__size"))
-    if os.environ.get("HDFE_HOF_HOIST", "1") != "0":
-        # explode_outer, not explode: InferFiltersFromGenerate adds a
-        # size(__s) > 0 filter below a plain explode, and predicate
-        # pushdown substitutes the FULL inline shingle expression back
-        # into it below the hoist projection — re-paying the O(len^2)
-        # pass per row. explode_outer infers no filter; the pre-filter
-        # above guarantees __s is non-empty, and the isNotNull guard
-        # on the generator OUTPUT (which cannot push below the
-        # generator) drops the NULL rows explode_outer would emit if
-        # that invariant ever broke — exactly the rows explode never
-        # emits. Values identical.
-        ex = sh.select(F.col(id_col), F.explode_outer("__s").alias("__g")).filter(
-            F.col("__g").isNotNull()
-        )
-    else:
-        ex = sh.select(F.col(id_col), F.explode("__s").alias("__g"))
+    # explode_outer, not explode: InferFiltersFromGenerate adds a
+    # size(__s) > 0 filter below a plain explode, and predicate
+    # pushdown substitutes the FULL inline shingle expression back
+    # into it below the hoist projection — re-paying the O(len^2)
+    # pass per row. explode_outer infers no filter; the pre-filter
+    # above guarantees __s is non-empty, and the isNotNull guard on
+    # the generator OUTPUT (which cannot push below the generator)
+    # drops the NULL rows explode_outer would emit if that invariant
+    # ever broke — exactly the rows explode never emits.
+    ex = sh.select(F.col(id_col), F.explode_outer("__s").alias("__g")).filter(
+        F.col("__g").isNotNull()
+    )
     a = ex.select(F.col(id_col).alias("id_a"), "__g")
     b = ex.select(F.col(id_col).alias("id_b"), "__g")
     common = (

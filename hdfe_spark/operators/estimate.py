@@ -234,11 +234,8 @@ def _append_residuals(
     return df.select("*", *exprs)
 
 
-def _sum_sq(df: DataFrame, cols: list[str], dump: str | None = None) -> np.ndarray:
-    agg = df.agg(*[F.sum(F.col(c) * F.col(c)).alias(c) for c in cols])
-    if dump:
-        _maybe_dump_plan(agg, dump)
-    row = agg.collect()[0]
+def _sum_sq(df: DataFrame, cols: list[str]) -> np.ndarray:
+    row = df.agg(*[F.sum(F.col(c) * F.col(c)).alias(c) for c in cols]).collect()[0]
     return np.array([float(row[c]) if row[c] is not None else 0.0 for c in cols])
 
 
@@ -270,7 +267,6 @@ def _cluster_meat(
                     ).alias(f"__m_{rc}_{i}_{j}")
                 )
     row_df = grouped.agg(*m_exprs)
-    _maybe_dump_plan(row_df, "planA_cluster_scores_" + "-".join(keys))
     row = row_df.collect()[0]
     out = {}
     for rc in resid_cols:
@@ -316,7 +312,6 @@ def _hc1_meat(
     df: DataFrame,
     resid_cols: list[str],
     x_cols: list[str],
-    dump: str | None = None,
 ) -> dict[str, np.ndarray]:
     """White/HC1 sandwich 'meat' ``Σᵢ eᵢ² xᵢxᵢ'`` for every outcome in
     ONE fused aggregation — k(k+1)/2 upper-triangle sums per outcome,
@@ -335,10 +330,7 @@ def _hc1_meat(
                         f"__m_{rc}_{i}_{j}"
                     )
                 )
-    agg = df.agg(*exprs)
-    if dump:
-        _maybe_dump_plan(agg, dump)
-    row = agg.collect()[0]
+    row = df.agg(*exprs).collect()[0]
     out = {}
     for rc in resid_cols:
         M = np.zeros((k, k))
@@ -561,7 +553,6 @@ def _pooled_cluster_onepass(df, y_col, x_cols, cluster_key, check_rank, tol):
             ],
         )
     )
-    _maybe_dump_plan(row, "planA_cluster_onepass")
     row = row.collect()[0]
 
     if any(int(row[f"__bad_{i}"] or 0) for i in range(k + 1)):
@@ -637,7 +628,6 @@ def _pooled_cluster2_onepass(df, y_col, x_cols, key_a, key_b, check_rank, tol):
         F.approx_count_distinct(F.struct(key_a, key_b)).alias("__pairs"),
         F.count(F.lit(1)).alias("__rows"),
     )
-    _maybe_dump_plan(probe, "planA_cluster2_pairgate")
     prow = probe.collect()[0]
     n_rows = int(prow["__rows"] or 0)
     if n_rows == 0 or int(prow["__pairs"] or 0) > ratio_max * n_rows:
@@ -669,7 +659,6 @@ def _pooled_cluster2_onepass(df, y_col, x_cols, key_a, key_b, check_rank, tol):
                 ],
             )
         )
-        _maybe_dump_plan(row_ab, "planA_cluster2_onepass_ab")
         row_ab = row_ab.collect()[0]
         if any(int(row_ab[f"__bad_{i}"] or 0) for i in range(k + 1)):
             return None
@@ -679,12 +668,10 @@ def _pooled_cluster2_onepass(df, y_col, x_cols, key_a, key_b, check_rank, tol):
             *[F.sum(f"__xx_{j}_{l}").alias(f"__xx_{j}_{l}") for j, l in P],
             *[F.sum(f"__xy_{i}").alias(f"__xy_{i}") for i in range(k)],
         ]
-        dims = []
-        for nm, key in (("a", key_a), ("b", key_b)):
-            r = pair.groupBy(key).agg(*roll).agg(*_tensor_agg_exprs(k))
-            if nm == "a":
-                _maybe_dump_plan(r, "planA_cluster2_onepass_dim")
-            dims.append(r)
+        dims = [
+            pair.groupBy(key).agg(*roll).agg(*_tensor_agg_exprs(k))
+            for key in (key_a, key_b)
+        ]
         # The two dimension roll-ups are independent jobs over the
         # (already materialized) pair table — submit both at once so
         # the second back-fills the first's task tail (guide §2.6).
@@ -771,7 +758,6 @@ def _pooled_hc1_onepass(df, y_col, x_cols, check_rank, tol):
         *[(xv[i] * yv).alias(f"__xy_{i}") for i in range(k)],
     )
     row = per_row.agg(*_tensor_agg_exprs(k, extra=bad_flags))
-    _maybe_dump_plan(row, "planA_hc1_onepass")
     row = row.collect()[0]
     if any(int(row[f"__bad_{i}"] or 0) for i in range(k + 1)):
         return None
@@ -827,7 +813,6 @@ def _pooled_homosked_onepass(df, y_cols, x_cols, check_rank, tol):
         *bad_flags,
         *[F.sum(cv[i] * cv[j]).alias(f"__g_{i}_{j}") for i, j in pairs],
     )
-    _maybe_dump_plan(row, "planA_pooled_onepass")
     row = row.collect()[0]
     if any(int(row[f"__bad_{i}"] or 0) for i in range(k + m)):
         return None
@@ -876,7 +861,6 @@ def _plan_pooled(
         and len(y_cols) == 1
         and len(x_cols) <= _CLUSTER_FAST_MAX_K
         and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
-        and _os_env.environ.get("HDFE_CLUSTER_FAST", "1") != "0"
     ):
         res = _pooled_cluster_onepass(
             df, y_cols[0], list(x_cols), cluster[0], check_rank, tol
@@ -892,7 +876,6 @@ def _plan_pooled(
         and len(y_cols) == 1
         and len(x_cols) <= _CLUSTER_FAST_MAX_K
         and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
-        and _os_env.environ.get("HDFE_CLUSTER2_FAST", "1") != "0"
     ):
         res = _pooled_cluster2_onepass(
             df, y_cols[0], list(x_cols), cluster[0], cluster[1],
@@ -906,7 +889,6 @@ def _plan_pooled(
         and not get_residual
         and len(set(list(x_cols) + list(y_cols)))
         == len(x_cols) + len(y_cols)
-        and _os_env.environ.get("HDFE_POOLED_FAST", "1") != "0"
     ):
         # One-pass pooled SE paths (r16, guide §1.2): HC1 via the
         # per-row tensor identity, homoskedastic via closed-form RSS.
@@ -958,15 +940,11 @@ def _plan_pooled(
             meat = _cluster_meat_multiway(with_resid, cluster, resid_cols, x_cols)
             res.V = [G_inv @ meat[rc] @ G_inv for rc in resid_cols]
         elif robust:
-            meat = _hc1_meat(
-                with_resid, resid_cols, x_cols, dump="planA_hc1_meat_scan"
-            )
+            meat = _hc1_meat(with_resid, resid_cols, x_cols)
             hc1 = n / max(n - len(x_cols), 1)
             res.V = [G_inv @ meat[rc] @ G_inv * hc1 for rc in resid_cols]
         else:
-            rss = _sum_sq(
-                with_resid, resid_cols, dump="planA_pooled_rss_scan"
-            )
+            rss = _sum_sq(with_resid, resid_cols)
             res.V = _homoskedastic_V(G_inv, rss, n, len(x_cols))
         res.v_coef_names = list(x_cols)
     return res
@@ -980,24 +958,6 @@ def _plan_pooled(
 _WITHIN_FAST_MAX_COLS = int(
     _os_env.environ.get("HDFE_WITHIN_FAST_MAX_COLS", 16)
 )
-
-
-def _maybe_dump_plan(df: DataFrame, name: str) -> None:
-    """When ``HDFE_EXPLAIN_DIR`` is set, write this internal frame's
-    formatted physical plan there — the optimization-round evidence
-    hook for computations that collect eagerly inside ``estimate``
-    (their plans never appear in a declared query's output plan)."""
-    d = _os_env.environ.get("HDFE_EXPLAIN_DIR")
-    if not d:
-        return
-    try:
-        s = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        with open(_os_env.path.join(d, name + ".txt"), "w") as f:
-            f.write(s)
-    except Exception:
-        pass
 
 
 def _spread_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -1020,8 +980,6 @@ def _spread_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     for itself. Only applied to shuffle-free plans (anything already
     exchanged is already wide; probing ``.rdd`` there would eagerly
     execute upstream stages under AQE)."""
-    if _os_env.environ.get("HDFE_SPREAD_KEYS", "1") == "0":
-        return df
     try:
         lp = df._jdf.queryExecution().logical().toString()
     except Exception:
@@ -1102,7 +1060,6 @@ def _within_moments_gram(work, fe1, x_all, y_cols):
         ],
         *[F.sum(f"__p_{i}_{i}").alias(f"__ss_{i}") for i in range(k)],
     )
-    _maybe_dump_plan(row, "planB_within_moments")
     row = row.collect()[0]
     if any(int(row[f"__bad_{i}"] or 0) for i in range(k)):
         return None
@@ -1188,7 +1145,6 @@ def _plan_within(
         and cluster is None
         and len(set(x_all + y_cols)) == len(x_all) + len(y_cols)
         and len(x_all) + len(y_cols) <= _WITHIN_FAST_MAX_COLS
-        and _os_env.environ.get("HDFE_WITHIN_FAST", "1") != "0"
     ):
         # Moment fast path (optimization round 15, guide §2.3
         # "aggregate before you shuffle"): the demeaned Gram is a sum
@@ -1395,13 +1351,11 @@ def _unpersist_checkpoint(ckpt_df) -> None:
 # (off-diagonal). Those sufficient statistics are LEVEL-sized, so when
 # they fit on the driver the whole iteration runs in numpy — zero
 # full-data sweeps. Gates (env-overridable):
-import os as _os_mod
-
 _AP_DRIVER_LEVELS_MAX = int(
-    _os_mod.environ.get("HDFE_AP_DRIVER_LEVELS_MAX", 20_000_000)
+    _os_env.environ.get("HDFE_AP_DRIVER_LEVELS_MAX", 20_000_000)
 )  # Σ levels across FEs
 _AP_DRIVER_NNZ_MAX = int(
-    _os_mod.environ.get("HDFE_AP_DRIVER_NNZ_MAX", 20_000_000)
+    _os_env.environ.get("HDFE_AP_DRIVER_NNZ_MAX", 20_000_000)
 )  # Σ distinct FE combinations (collect + pairwise-coupling bound).
 # Measured on a 20M-row / 800k-level×20-level panel (14.7M cells): the
 # driver solve (cells collect 18s + GS 13s + demean 4s = 39s) beats
@@ -1425,11 +1379,7 @@ def _fe_adjust_driver(cells, cc, dmv, ap_tol, scale, max_iter):
     joint key). Returns ``{fe: pandas(level, __adj_<d>...)}`` —
     broadcast-join these and subtract.
     """
-    import os as _os
-
     import pandas as pd
-
-    _dbg = bool(_os.environ.get("HDFE_DEBUG_AP"))
 
     w_cell = cells["__w"].to_numpy(np.float64)
     codes: dict = {}
@@ -1512,8 +1462,6 @@ def _fe_adjust_driver(cells, cc, dmv, ap_tol, scale, max_iter):
                 prev1 = prev2 = None
             else:
                 prev2, prev1 = prev1, cur
-        if _dbg:
-            print(f"[ap] driver GS {d}: {it + 1} sweeps", flush=True)
         for fe in cc:
             out[fe][f"__adj_{d}"] = a[fe]
     return out
@@ -1533,10 +1481,6 @@ def _ap_sweeps_distributed(
     older is unpersisted as the loop advances. Without this,
     ``ap_max_iter`` copies of the working set pin executor storage and
     evict/poison every later job in the session."""
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("HDFE_DEBUG_AP"))
 
     def wavg(d):
         if weight is None:
@@ -1546,7 +1490,6 @@ def _ap_sweeps_distributed(
     live_ckpts: list = []
     prev_means: list = []
     for _sweep in range(ap_max_iter):
-        _t_sweep = _time.perf_counter()
         stats = []
         cur_means = []
         for fe in cc:
@@ -1616,12 +1559,6 @@ def _ap_sweeps_distributed(
         for m in prev_means:
             m.unpersist(False)
         prev_means = cur_means
-        if _dbg:
-            print(
-                f"[ap] sweep {_sweep}: {_time.perf_counter() - _t_sweep:.2f}s "
-                f"worst={max(map(float, worsts)) if worsts else None:.3g}",
-                flush=True,
-            )
         if worsts and max(map(float, worsts)) < ap_tol * scale:
             break
 
@@ -1709,12 +1646,6 @@ def _plan_alternating(
     # relative convergence scale.
     from itertools import combinations
 
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("HDFE_DEBUG_AP"))
-    _t0 = _time.perf_counter()
-
     fe_pairs = list(combinations(cc, 2))
 
     # ONE full-data pass builds the weighted cell table: per-cell
@@ -1795,7 +1726,6 @@ def _plan_alternating(
             for fe in cc
         ],
     )
-    _maybe_dump_plan(cells_df, "planC_cells")
     gate = gate.collect()[0]
     n_rows = int(gate["__n"] or 0)
     n_cells = int(gate["__cells"])
@@ -1844,11 +1774,6 @@ def _plan_alternating(
         or [1.0]
     ) or 1.0
 
-    if _dbg:
-        print(f"[ap] gate+cells: {_time.perf_counter() - _t0:.2f}s "
-              f"nnz~{approx_nnz} cells={n_cells} levels~{approx_levels}",
-              flush=True)
-        _t0 = _time.perf_counter()
     adj_cols = {d: f"__adj_{d}" for d in dmv}
     finish = None
     cw = None
@@ -1877,17 +1802,10 @@ def _plan_alternating(
         ).toPandas()
         cells_df.unpersist(False)
         cells_df = None
-        if _dbg:
-            print(f"[ap] cells collect: {_time.perf_counter() - _t0:.2f}s "
-                  f"({len(cells_pdf)} cells)", flush=True)
-            _t0 = _time.perf_counter()
         adjs = _fe_adjust_driver(
             cells_pdf, cc, dmv, ap_tol, scale, max(1000, ap_max_iter)
         )
         levels = {fe: len(adjs[fe]) for fe in cc}
-        if _dbg:
-            print(f"[ap] driver solve: {_time.perf_counter() - _t0:.2f}s", flush=True)
-            _t0 = _time.perf_counter()
         if fast_gram:
             wv = cells_pdf["__w"].to_numpy(np.float64)
             S = [
@@ -1927,12 +1845,6 @@ def _plan_alternating(
                     break
             if ok:
                 fast = (G_full, int(round(float(wv.sum()))))
-            if _dbg:
-                print(
-                    f"[ap] driver gram: "
-                    f"{_time.perf_counter() - _t0:.2f}s", flush=True
-                )
-                _t0 = _time.perf_counter()
         if fast is None:
             for i, fe in enumerate(cc):
                 adf = adjs[fe].rename(
@@ -2012,9 +1924,6 @@ def _plan_alternating(
         Xty = G_full[:k_x, k_x:]
     else:
         G_dm, Xty, n = gram_matrix(sw, dm_x, dm_y)
-        if _dbg:
-            print(f"[ap] demean+gram: {_time.perf_counter() - _t0:.2f}s",
-                  flush=True)
     # gram materialized everything upstream; intermediate sweep
     # checkpoints/means are dead. (`cw`/`cells_df` stay alive — the
     # variance path below re-scans `sw`, whose plan references them —
@@ -2400,11 +2309,7 @@ def fit_stats(
         # any decline (or the cancellation guard) falls back to the
         # exact window path unchanged.
         fast = None
-        if (
-            len(set(cols)) == len(cols)
-            and len(cols) <= _WITHIN_FAST_MAX_COLS
-            and _os_env.environ.get("HDFE_WITHIN_FAST", "1") != "0"
-        ):
+        if len(set(cols)) == len(cols) and len(cols) <= _WITHIN_FAST_MAX_COLS:
             fast = _within_moments_gram(df, fe, x_cols, [y])
         if fast is not None:
             _, _, n, M, n_groups, m_loss = fast

@@ -149,12 +149,15 @@ _ORDER_FREE_FNS = frozenset(
 )
 
 
-def _transform_via_join(
-    df: DataFrame, keys: list[str], items: list[tuple[str, list[str]]]
+def _join_group_aggs(
+    df: DataFrame, keys: list[str], aggs: dict[str, Column]
 ) -> DataFrame:
-    """groupBy + join-back plan for :func:`grouped_transform`.
+    """Append the group aggregates ``{name: expr}`` to every row of
+    ``df``: ``groupBy(keys).agg(...)`` joined back on null-safe key
+    equality. The group-side keys are renamed and dropped so the result
+    keeps exactly ``df``'s key columns.
 
-    Why (optimization r15, guide §2.4): the window plan shuffles and
+    Why (optimization r15, guide §2.4): a window plan shuffles and
     sorts EVERY ROW by the keys. This plan aggregates first (map-side
     partials, the exchange carries one row per group) and joins the
     group statistics back; with AQE the join side is the level-sized
@@ -167,18 +170,10 @@ def _transform_via_join(
     NULL keys: the window treats all-NULL keys as one group, so the
     join uses null-safe equality to match.
     """
-    aggs = [
-        _NAMED_FNS[fn](F.col(col)).alias(f"{fn}_{col}")
-        for col, fns in items
-        for fn in fns
-    ]
-    grp = df.groupBy(*keys).agg(*aggs)
-    # null-safe equi-join on the keys; rename the group-side keys so
-    # the joined frame keeps exactly the base table's key columns.
-    gsel = [F.col(k).alias(f"__gk_{k}") for k in keys] + [
-        F.col(f"{fn}_{col}") for col, fns in items for fn in fns
-    ]
-    grp = grp.select(*gsel)
+    grp = df.groupBy(*keys).agg(*[e.alias(n) for n, e in aggs.items()])
+    grp = grp.select(
+        *[F.col(k).alias(f"__gk_{k}") for k in keys], *[F.col(n) for n in aggs]
+    )
     cond = None
     for k in keys:
         c = F.col(k).eqNullSafe(F.col(f"__gk_{k}"))
@@ -201,13 +196,11 @@ def grouped_transform(
     Plan (optimization r15): for order-free aggregate fns this compiles
     to ``groupBy().agg()`` + a null-safe join back — the base table is
     not shuffled when AQE broadcasts the level-sized aggregate (see
-    :func:`_transform_via_join`). Order-dependent fns (first/last), or
-    ``HDFE_TRANSFORM_JOIN=0``, keep the window-aggregate plan (a single
+    :func:`_join_group_aggs`). Order-dependent fns (first/last) and
+    output-name collisions keep the window-aggregate plan (a single
     full-data shuffle on ``keys``). Appended column names follow the
     same ``{fn}_{col}`` contract as :func:`grouped_agg`.
     """
-    import os
-
     keys = _as_list(keys)
     if isinstance(values, dict):
         items = [(c, _as_list(fns)) for c, fns in values.items()]
@@ -225,12 +218,18 @@ def grouped_transform(
     collides = any(
         f"{fn}_{col}" in existing for col, fns in items for fn in fns
     )
-    if (
-        os.environ.get("HDFE_TRANSFORM_JOIN", "1") != "0"
-        and not collides
-        and all(fn in _ORDER_FREE_FNS for _, fns in items for fn in fns)
+    if not collides and all(
+        fn in _ORDER_FREE_FNS for _, fns in items for fn in fns
     ):
-        return _transform_via_join(df, keys, items)
+        return _join_group_aggs(
+            df,
+            keys,
+            {
+                f"{fn}_{col}": _NAMED_FNS[fn](F.col(col))
+                for col, fns in items
+                for fn in fns
+            },
+        )
     w = Window.partitionBy(*keys)
     out = df
     for col, fns in items:
@@ -254,37 +253,14 @@ def demean(
     Plan (optimization r15, guide §2.4): group means via
     ``groupBy().agg()`` (map-side partials, level-sized exchange)
     joined back null-safely — AQE broadcasts the aggregate when groups
-    ≪ rows, so the base table is never shuffled; the old single
-    full-data window shuffle+sort is kept behind ``HDFE_TRANSFORM_JOIN=0``.
+    ≪ rows, so the base table is never shuffled.
     """
-    import os
-
     keys = _as_list(keys)
     cols = _as_list(cols)
-    if os.environ.get("HDFE_TRANSFORM_JOIN", "1") != "0":
-        grp = df.groupBy(*keys).agg(
-            *[F.avg(F.col(c)).alias(f"__gm_{c}") for c in cols]
-        )
-        grp = grp.select(
-            *[F.col(k).alias(f"__gk_{k}") for k in keys],
-            *[F.col(f"__gm_{c}") for c in cols],
-        )
-        cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"__gk_{k}"))
-            cond = c if cond is None else (cond & c)
-        out = df.join(grp, on=cond, how="left").select(
-            *df.columns,
-            *[
-                (F.col(c) - F.col(f"__gm_{c}")).alias(f"{c}{suffix}")
-                for c in cols
-            ],
-        )
-        return out
-    w = Window.partitionBy(*keys)
-    return df.select(
-        "*",
-        *[(F.col(c) - F.avg(F.col(c)).over(w)).alias(f"{c}{suffix}") for c in cols],
+    out = _join_group_aggs(df, keys, {f"__gm_{c}": F.avg(F.col(c)) for c in cols})
+    return out.select(
+        *df.columns,
+        *[(F.col(c) - F.col(f"__gm_{c}")).alias(f"{c}{suffix}") for c in cols],
     )
 
 

@@ -45,6 +45,19 @@ from pyspark.sql import functions as F
 from hdfe_spark.operators.text import tokens
 
 
+def _shingles(t, k: int):
+    """Word ``k``-shingles of the token array ``t``: an empty array when
+    ``t`` has fewer than ``k`` tokens."""
+    n = F.size(t)
+    return F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(1), n - F.lit(k - 1)),
+            lambda i: F.array_join(F.slice(t, i, k), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def shingle_array(text_col, k: int = 5):
     """All consecutive word ``k``-shingles of ``text_col`` as an
     array<string> (space-joined, lowercased whitespace tokens), in
@@ -59,22 +72,19 @@ def shingle_array(text_col, k: int = 5):
     the sf0.1 shingle stage). Prefer ``word_shingle_frame``, which
     hoists the token array behind a projection boundary so it
     evaluates once per row; this form is kept for callers that need
-    a pure Column (and as the ``HDFE_HOF_HOIST=0`` fallback)."""
-    t = tokens(text_col)
-    n = F.size(t)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.array_join(F.slice(t, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    a pure Column."""
+    return _shingles(tokens(text_col), k)
 
 
 def word_shingle_frame(
-    df: DataFrame, id_col, text_col, k: int = 5, out_col: str = "sh"
+    df: DataFrame,
+    id_col,
+    text_col,
+    k: int = 5,
+    out_col: str = "sh",
+    id_out: str = "id",
 ) -> DataFrame:
-    """(id, ``out_col``: array<string> of word k-shingles) with the
+    """(``id_out``, ``out_col``: array<string> of word k-shingles) with the
     token array HOISTED behind a projection boundary, so ``tokens()``
     runs once per row instead of once per transform element (the
     ``shingle_array`` hazard above). CollapseProject keeps the
@@ -83,16 +93,8 @@ def word_shingle_frame(
     (same expression tree modulo the hoist) — pinned in
     tests/test_opt_r16b.py and certified by the setsim_join /
     dup_ngram_spans brute-force oracles."""
-    tk = df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__t"))
-    n = F.size("__t")
-    sh = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.array_join(F.slice(F.col("__t"), i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return tk.select("id", sh.alias(out_col))
+    tk = df.select(F.col(id_col).alias(id_out), tokens(F.col(text_col)).alias("__t"))
+    return tk.select(id_out, _shingles(F.col("__t"), k).alias(out_col))
 
 
 def setsim_join(
@@ -128,33 +130,19 @@ def setsim_join(
     per-document sort+slice (hash agg on id), prefix self-join
     (equi-join on shingle), pair distinct, two id-keyed verify joins.
     """
-    import os
-
-    sid = F.col(id_col)
-    if os.environ.get("HDFE_HOF_HOIST", "1") != "0":
-        # Hoisted token array (see word_shingle_frame): tokens() runs
-        # once per row, not once per shingle. Same values. The
-        # explode is explode_outer + isNotNull-on-output because
-        # InferFiltersFromGenerate's size(sh) > 0 filter under a
-        # plain explode gets predicate-pushed below the hoist with
-        # the full inline expression substituted back in (see
-        # containment_pairs); explode_outer's extra NULL-tok rows for
-        # empty arrays are exactly the rows the guard drops, so
-        # values are identical.
-        base = word_shingle_frame(df, id_col, text_col, shingle_k, "sh")
-        toks = (
-            base.select("id", F.explode_outer("sh").alias("tok"))
-            .filter(F.col("tok").isNotNull())
-            .distinct()
-        )
-    else:
-        base = df.select(
-            sid.alias("id"), shingle_array(F.col(text_col), shingle_k).alias("sh")
-        )
-        toks = (
-            base.select("id", F.explode("sh").alias("tok"))
-            .distinct()
-        )
+    # Hoisted token array (see word_shingle_frame): tokens() runs once
+    # per row, not once per shingle. The explode is explode_outer +
+    # isNotNull-on-output because InferFiltersFromGenerate's
+    # size(sh) > 0 filter under a plain explode gets predicate-pushed
+    # below the hoist with the full inline expression substituted back
+    # in (see containment_pairs); explode_outer's extra NULL-tok rows
+    # for empty arrays are exactly the rows the guard drops.
+    base = word_shingle_frame(df, id_col, text_col, shingle_k, "sh")
+    toks = (
+        base.select("id", F.explode_outer("sh").alias("tok"))
+        .filter(F.col("tok").isNotNull())
+        .distinct()
+    )
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
 
     # Each document's set, sorted ascending by (df, tok): the single
@@ -175,11 +163,10 @@ def setsim_join(
     # exchanges below its final aggregation, but the per-document
     # collect_list + array_sort re-executes per consumer — a
     # query-scoped persist runs it once. Values unchanged (same
-    # lineage); ``HDFE_SETSIM_FUSED=0`` restores the unfused plan.
-    if os.environ.get("HDFE_SETSIM_FUSED", "1") != "0":
-        from hdfe_spark.operators.dedup import _query_scoped_persist
+    # lineage).
+    from hdfe_spark.operators.dedup import _query_scoped_persist
 
-        ordered = _query_scoped_persist(ordered)
+    ordered = _query_scoped_persist(ordered)
     p = (F.col("n") - F.ceil(F.lit(tau) * F.col("n") - F.lit(1e-9)) + F.lit(1)).cast("int")
     prefixes = ordered.select(
         "id", F.explode(F.slice("set", F.lit(1), p)).alias("tok")

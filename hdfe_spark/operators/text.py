@@ -712,48 +712,22 @@ def dup_ngram_spans(
     64-bit collisions are ~n²/2⁶⁵ and each costs one false dup mark,
     a curation-acceptable error the docstring contract makes explicit.
     """
-    import os
+    from hdfe_spark.operators.dedup import _query_scoped_persist
+    from hdfe_spark.operators.setjoin import word_shingle_frame
 
-    if os.environ.get("HDFE_HOF_HOIST", "1") != "0":
-        # Hoist the token array behind a projection boundary
-        # (optimization r16, guide §1.2): a transform lambda
-        # re-evaluates any captured outer EXPRESSION per element, so
-        # the inline form re-tokenizes the full text once per k-gram
-        # (measured 25 s -> ~2 s on the declared sf0.1 query). Same
-        # expression tree modulo the hoist — values identical,
-        # certified by the brute-force oracle.
-        tk = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        nh = F.size("__toks")
-        grams_expr = F.when(
-            nh >= k,
-            F.transform(
-                F.sequence(F.lit(1), nh - F.lit(k - 1)),
-                lambda i: F.array_join(F.slice("__toks", i, k), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        g = tk.select(F.col(id_col), grams_expr.alias("__grams"))
-    else:
-        t = tokens(F.col(text_col))
-        n = F.size(t)
-        grams_expr = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(k - 1)),
-                lambda i: F.array_join(F.slice(t, i, k), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        g = df.select(F.col(id_col), grams_expr.alias("__grams"))
-    if os.environ.get("HDFE_DUPSPANS_FUSED", "1") != "0":
-        # Query-scoped persist (optimization r16, guide §1.2): `g`
-        # feeds THREE consumers (`per`, and `ex` on both sides of the
-        # dup join), so the shingling transform re-evaluates per
-        # consumer — the dominant cost after the hoist (measured
-        # ~3 s/eval at sf0.1). One persisted evaluation; values
-        # unchanged (same lineage); bench clears caches between
-        # queries so nothing leaks across the timed region.
-        from hdfe_spark.operators.dedup import _query_scoped_persist
-
-        g = _query_scoped_persist(g)
+    # Hoisted token array (optimization r16, guide §1.2): a transform
+    # lambda re-evaluates any captured outer EXPRESSION per element, so
+    # the inline form re-tokenized the full text once per k-gram
+    # (measured 25 s -> ~2 s on the declared sf0.1 query).
+    g = word_shingle_frame(df, id_col, text_col, k, "__grams", id_out=id_col)
+    # Query-scoped persist (optimization r16, guide §1.2): `g` feeds
+    # THREE consumers (`per`, and `ex` on both sides of the dup join),
+    # so the shingling transform re-evaluates per consumer — the
+    # dominant cost after the hoist (measured ~3 s/eval at sf0.1). One
+    # persisted evaluation; values unchanged (same lineage); bench
+    # clears caches between queries so nothing leaks across the timed
+    # region.
+    g = _query_scoped_persist(g)
     ex = g.select(id_col, F.explode("__grams").alias("__gram"))
 
     dup = (

@@ -1,20 +1,27 @@
-"""Round-15 optimization guards: Plan-B moment fast path and the
-keyed scan-spread for Plan C's cell pass.
+"""Round-15 optimization guards: Plan-B moment fast path, the
+one-way cluster one-pass sandwich, and the keyed scan-spread for Plan
+C's cell pass.
 
 The optimizations must be *invisible* in results: every test here
-pins new-path output against the pre-existing path's output on the
-same data.
+pins the optimized output against an independent numpy reference
+(``ols_reference``) or against the exact path that a data gate (NULL
+input, ``get_residual=True``, an already-exchanged input) selects on
+the same data.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import ols_reference as ref
 from hdfe_spark.operators import estimate as E
+
+_SCHEMA = "id long, g long, h long, x1 double, x2 double, y double"
 
 
 @pytest.fixture()
-def panel(spark):
+def panel_pdf():
     rows = []
     rng = np.random.RandomState(7)
     for i in range(400):
@@ -24,18 +31,22 @@ def panel(spark):
         x2 = float(rng.randint(0, 50)) / 3.0
         y = 2.0 * x1 - 1.5 * x2 + g * 0.5 + h * 2.0 + float(rng.randint(0, 10)) / 11.0
         rows.append((i, g, h, x1, x2, y))
+    return pd.DataFrame(rows, columns=["id", "g", "h", "x1", "x2", "y"])
+
+
+@pytest.fixture()
+def panel(spark, panel_pdf):
     return spark.createDataFrame(
-        rows, "id long, g long, h long, x1 double, x2 double, y double"
+        list(panel_pdf.itertuples(index=False, name=None)), _SCHEMA
     )
 
 
-def test_within_fast_parity_with_window_path(panel, monkeypatch):
-    """Slopes from the moment fast path == window-demean slopes."""
+def test_within_fast_parity_with_window_path(panel, panel_pdf):
+    """Slopes from the moment fast path == numpy within-OLS slopes."""
     fast = E.estimate(panel, "y", ["x1", "x2"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = E.estimate(panel, "y", ["x1", "x2"], categorical_controls=["g"])
-    assert np.allclose(fast.slopes, slow.slopes, rtol=1e-9, atol=1e-12)
-    assert fast.n == slow.n
+    b, _, _ = ref.within_fit(panel_pdf, "g", ["x1", "x2"], "y")
+    assert np.allclose(fast.slopes[:, 0], b, rtol=1e-9, atol=1e-12)
+    assert fast.n == len(panel_pdf)
 
 
 def test_within_fast_triggers_on_clean_data(panel):
@@ -59,26 +70,42 @@ def test_within_fast_declines_nulls_and_nans(panel, spark):
     assert E._within_moments_gram(with_nan, "g", ["x1", "x2"], ["y"]) is None
 
 
-def test_within_fast_null_input_same_answer_as_before(panel, monkeypatch):
+def test_within_fast_null_input_same_answer_as_before(
+    panel, panel_pdf, monkeypatch
+):
     """End-to-end on null-containing input: estimate() must produce
-    exactly the pre-optimization answer (it falls back internally)."""
+    exactly the window-path answer (it falls back internally). The
+    window path is also reached through the width gate; its NULL
+    semantics (per-column group means, pairwise-complete Gram sums,
+    n = all rows) are replicated in numpy."""
     with_null = panel.withColumn(
         "x1", F.when(F.col("id") % 37 == 0, F.lit(None)).otherwise(F.col("x1"))
     )
     a = E.estimate(with_null, "y", ["x1", "x2"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_WITHIN_FAST_MAX_COLS", 0)
     b = E.estimate(with_null, "y", ["x1", "x2"], categorical_controls=["g"])
     assert np.allclose(a.slopes, b.slopes, rtol=0, atol=0)  # identical path
-    assert a.n == b.n
+    assert a.n == b.n == len(panel_pdf)
+
+    pdf = panel_pdf.copy()
+    pdf.loc[pdf["id"] % 37 == 0, "x1"] = np.nan
+    P = ref.demeaned(pdf, "g", ["x1", "x2"]).to_numpy()
+    y = pdf["y"].to_numpy()
+    G = np.array([[np.nansum(P[:, i] * P[:, j]) for j in range(2)] for i in range(2)])
+    Xty = np.array([np.nansum(P[:, i] * y) for i in range(2)])
+    assert np.allclose(a.slopes[:, 0], np.linalg.solve(G, Xty), rtol=1e-9)
 
 
-def test_within_fast_multi_fe_dummy_parity(panel, monkeypatch):
+def test_within_fast_multi_fe_dummy_parity(panel, panel_pdf):
     """cc=[g, h] with within_if_fe=True appends drop-last dummies for
-    h; the moment fast path must reproduce the window-path slopes."""
+    h; the moment fast path must reproduce the numpy within-OLS of y on
+    (x1, x2, h dummies) with g absorbed."""
     fast = E.estimate(panel, "y", ["x1", "x2"], categorical_controls=["g", "h"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = E.estimate(panel, "y", ["x1", "x2"], categorical_controls=["g", "h"])
-    assert np.allclose(fast.slopes, slow.slopes, rtol=1e-9, atol=1e-12)
+    pdf = pd.concat([panel_pdf, ref.drop_last_dummies(panel_pdf, "h")], axis=1)
+    x_all = ["x1", "x2"] + [c for c in pdf.columns if c.startswith("h_is_")]
+    b, _, _ = ref.within_fit(pdf, "g", x_all, "y")
+    assert fast.x_cols == x_all
+    assert np.allclose(fast.slopes[:, 0], b, rtol=1e-9, atol=1e-12)
 
 
 def test_within_fast_cancellation_guard_falls_back():
@@ -197,19 +224,18 @@ def test_within_fast_ill_conditioned_falls_back(spark):
     assert E._within_moments_gram(df, "g", ["x1", "x2"], ["y"]) is None
 
 
-def test_cluster_onepass_parity(panel, monkeypatch):
-    """One-pass cluster sandwich == two-pass scores path (b and V)."""
+def test_cluster_onepass_parity(panel, panel_pdf):
+    """One-pass cluster sandwich == numpy OLS + one-way cluster
+    sandwich (b and V)."""
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, cluster="g"
     )
-    monkeypatch.setenv("HDFE_CLUSTER_FAST", "0")
-    slow = E.estimate(
-        panel, "y", ["x1", "x2"], estimate_variance=True, cluster="g"
-    )
-    assert np.allclose(fast.b, slow.b, rtol=1e-9)
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
-    assert fast.n == slow.n
-    assert fast.v_coef_names == slow.v_coef_names
+    X = panel_pdf[["x1", "x2"]].to_numpy()
+    b, e = ref.ols(X, panel_pdf["y"].to_numpy())
+    assert np.allclose(fast.b[:, 0], b, rtol=1e-9)
+    assert np.allclose(fast.V[0], ref.cluster_V(X, e, panel_pdf, ["g"]), rtol=1e-7)
+    assert fast.n == len(panel_pdf)
+    assert fast.v_coef_names == ["x1", "x2"]
 
 
 def test_cluster_onepass_declines_nulls(panel):
@@ -222,34 +248,36 @@ def test_cluster_onepass_declines_nulls(panel):
     )
 
 
-def test_cluster_onepass_null_input_same_answer(panel, monkeypatch):
-    """Null-containing input → internal fallback → identical output."""
+def test_cluster_onepass_null_input_same_answer(panel):
+    """Null-containing input → internal fallback → identical output to
+    the two-pass scores path (which ``get_residual=True`` selects)."""
     with_null = panel.withColumn(
         "x2", F.when(F.col("id") % 41 == 0, F.lit(None)).otherwise(F.col("x2"))
     )
     a = E.estimate(
         with_null, "y", ["x1", "x2"], estimate_variance=True, cluster="g"
     )
-    monkeypatch.setenv("HDFE_CLUSTER_FAST", "0")
     b = E.estimate(
-        with_null, "y", ["x1", "x2"], estimate_variance=True, cluster="g"
+        with_null, "y", ["x1", "x2"], estimate_variance=True, cluster="g",
+        get_residual=True,
     )
     assert np.allclose(a.b, b.b, rtol=0, atol=0)
     assert np.allclose(a.V[0], b.V[0], rtol=0, atol=0)
 
 
-def test_plan_c_parity_after_spread(spark, sf_dir, monkeypatch):
-    """ols_2fe-shaped Plan C: keyed spread on/off → same slopes."""
+def test_plan_c_parity_after_spread(spark, sf_dir):
+    """ols_2fe-shaped Plan C: a bare scan (spread applies) and an
+    already-exchanged input (spread is a no-op) → same slopes."""
     from hdfe_spark.sources.tables import load_table
 
     li = load_table(spark, "lineitem", sf_dir)
-    a = E.estimate(
-        li, "l_extendedprice", ["l_quantity", "l_discount"],
-        categorical_controls=["l_suppkey", "l_partkey"], within_if_fe=False,
-    )
-    monkeypatch.setenv("HDFE_SPREAD_KEYS", "0")
-    b = E.estimate(
-        li, "l_extendedprice", ["l_quantity", "l_discount"],
-        categorical_controls=["l_suppkey", "l_partkey"], within_if_fe=False,
+    exchanged = li.repartition(3)
+    assert E._spread_by_keys(exchanged, ["l_suppkey", "l_partkey"]) is exchanged
+    a, b = (
+        E.estimate(
+            frame, "l_extendedprice", ["l_quantity", "l_discount"],
+            categorical_controls=["l_suppkey", "l_partkey"], within_if_fe=False,
+        )
+        for frame in (li, exchanged)
     )
     assert np.allclose(a.slopes, b.slopes, rtol=1e-9, atol=1e-12)

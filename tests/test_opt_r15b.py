@@ -2,9 +2,13 @@
 the round): grouped_transform/demean via agg + null-safe join-back,
 and the fused one-pass minhash_dedup signature table.
 
-Contract under test: every new plan computes EXACTLY what the old plan
-computed (the declared-query surface must not drift), including NULL
-keys, NaN values, and empty/None documents.
+Contract under test: every plan computes EXACTLY what an independent
+reference computes on the same data (the declared-query surface must
+not drift), including NULL keys, NaN values, and empty/None documents:
+pandas ``groupby().transform`` with Spark's aggregate semantics for
+grouped_transform/demean, and the public
+``minhash_candidate_pairs`` + ``ngram_jaccard_pairs`` composition for
+minhash_dedup.
 """
 
 import math
@@ -15,21 +19,53 @@ import pytest
 from pyspark.sql import functions as F
 
 
+_KEYED_ROWS = [
+    # (key, value) with a NULL key group and NaN values mixed in
+    ("a", 1.0), ("a", 2.0), ("a", None), ("b", 5.0),
+    (None, 7.0), (None, 9.0), ("c", float("nan")), ("c", 3.0),
+]
+
+
 @pytest.fixture(scope="module")
 def keyed(spark):
-    rows = [
-        # (key, value) with a NULL key group and NaN values mixed in
-        ("a", 1.0), ("a", 2.0), ("a", None), ("b", 5.0),
-        (None, 7.0), (None, 9.0), ("c", float("nan")), ("c", 3.0),
-    ]
-    return spark.createDataFrame(rows, "k string, v double")
+    return spark.createDataFrame(_KEYED_ROWS, "k string, v double")
+
+
+def _pandas(rows, cols):
+    # object dtype keeps NULL (None) apart from NaN, as Spark does
+    return pd.DataFrame({c: pd.Series(v, dtype=object) for c, v in zip(cols, zip(*rows))})
+
+
+# Spark's aggregate semantics over one group's values: NULLs are
+# skipped, NaN propagates, an all-NULL group sums to NULL.
+def _sql_count(s):
+    return sum(v is not None for v in s)
+
+
+def _sql_sum(s):
+    vals = [v for v in s if v is not None]
+    return sum(vals) if vals else None
+
+
+def _sql_mean(s):
+    vals = [v for v in s if v is not None]
+    return sum(vals) / len(vals) if vals else None
+
+
+def _transform(pdf, keys, col, fn):
+    """pandas ``groupby(keys).transform`` with NULL keys as a group."""
+    return pdf.groupby(keys, dropna=False)[col].transform(fn).astype(object)
+
+
+def _sorted(rows):
+    return sorted(
+        [tuple(r) for r in rows],
+        key=lambda t: tuple((x is None, str(x)) for x in t),
+    )
 
 
 def _sorted_rows(df):
-    return sorted(
-        [tuple(r) for r in df.collect()],
-        key=lambda t: tuple((x is None, str(x)) for x in t),
-    )
+    return _sorted(df.collect())
 
 
 def _same_rows(a, b):
@@ -43,22 +79,19 @@ def _same_rows(a, b):
                 assert va == vb
 
 
-def test_transform_join_parity_null_keys_and_nans(keyed, monkeypatch):
-    """Join path == window path bit-for-bit, including the NULL-key
-    group (null-safe equality) and NaN propagation into the mean."""
+def test_transform_join_parity_null_keys_and_nans(keyed):
+    """Join plan == pandas groupby().transform bit-for-bit, including
+    the NULL-key group (null-safe equality) and NaN propagation into
+    the mean."""
     from hdfe_spark.operators.groupby import grouped_transform
 
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old = _sorted_rows(grouped_transform(keyed, "k", {"v": ["mean", "count", "sum"]}))
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
     new_df = grouped_transform(keyed, "k", {"v": ["mean", "count", "sum"]})
-    new = _sorted_rows(new_df)
-    _same_rows(old, new)
-    # schema (names and order) identical too
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    assert new_df.columns == grouped_transform(
-        keyed, "k", {"v": ["mean", "count", "sum"]}
-    ).columns
+    pdf = _pandas(_KEYED_ROWS, ["k", "v"])
+    for name, fn in (("mean", _sql_mean), ("count", _sql_count), ("sum", _sql_sum)):
+        pdf[f"{name}_v"] = _transform(pdf, "k", "v", fn)
+    _same_rows(_sorted(pdf.itertuples(index=False, name=None)), _sorted_rows(new_df))
+    # schema (names and order): input columns, then {fn}_{col}
+    assert new_df.columns == ["k", "v", "mean_v", "count_v", "sum_v"]
 
 
 def test_transform_order_dependent_fns_keep_window_path(keyed):
@@ -71,29 +104,32 @@ def test_transform_order_dependent_fns_keep_window_path(keyed):
     assert "Window" in explain_string(out, "simple")
 
 
-def test_demean_join_parity(keyed, monkeypatch):
+def _demean_reference(rows, cols, keys):
+    pdf = _pandas(rows, cols)
+    mean = _transform(pdf, keys, "v", _sql_mean)
+    pdf["v_dm"] = pd.Series(
+        [None if v is None or m is None else v - m for v, m in zip(pdf["v"], mean)],
+        dtype=object,
+    )
+    return _sorted(pdf.itertuples(index=False, name=None))
+
+
+def test_demean_join_parity(keyed):
     from hdfe_spark.operators.groupby import demean
 
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old_df = demean(keyed, "k", "v")
-    old = _sorted_rows(old_df)
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
     new_df = demean(keyed, "k", "v")
-    _same_rows(old, _sorted_rows(new_df))
-    assert new_df.columns == old_df.columns
+    _same_rows(_demean_reference(_KEYED_ROWS, ["k", "v"], "k"), _sorted_rows(new_df))
+    assert new_df.columns == ["k", "v", "v_dm"]
 
 
-def test_demean_multikey_parity(spark, monkeypatch):
+def test_demean_multikey_parity(spark):
     from hdfe_spark.operators.groupby import demean
 
     rows = [("a", 1, 2.0), ("a", 1, 4.0), ("a", 2, 6.0), (None, 1, 8.0),
             (None, 1, 10.0), ("b", None, 12.0)]
     df = spark.createDataFrame(rows, "k1 string, k2 int, v double")
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old = _sorted_rows(demean(df, ["k1", "k2"], "v"))
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
     new = _sorted_rows(demean(df, ["k1", "k2"], "v"))
-    _same_rows(old, new)
+    _same_rows(_demean_reference(rows, ["k1", "k2", "v"], ["k1", "k2"]), new)
 
 
 def test_fused_bands_and_set_kernel_bit_identical():
@@ -156,29 +192,37 @@ def test_fused_bands_and_set_kernel_bit_identical():
 
 
 def test_minhash_dedup_fused_parity(spark, sf_dir):
-    """Fused one-pass minhash_dedup == unfused chain, bit-for-bit, on
-    the sf fixture corpus."""
-    import os
-
-    from hdfe_spark.operators.dedup import minhash_dedup
+    """Fused one-pass minhash_dedup == the public composition
+    minhash_candidate_pairs + ngram_jaccard_pairs (drop every verified
+    pair's larger id), bit-for-bit, on the sf fixture corpus."""
+    from hdfe_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        minhash_dedup,
+        ngram_jaccard_pairs,
+    )
     from hdfe_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    os.environ["HDFE_MINHASH_FUSED"] = "0"
     try:
+        cand = minhash_candidate_pairs(docs, num_hashes=128, bands=16)
+        losers = (
+            ngram_jaccard_pairs(docs, cand)
+            .filter(F.col("jaccard") >= 0.8)
+            .select(F.col("id_b").alias("doc_id"))
+            .distinct()
+        )
         old = _sorted_rows(
-            minhash_dedup(docs, num_hashes=128, bands=16, jaccard_threshold=0.8)
+            docs.join(losers, on="doc_id", how="left_anti")
             .select("doc_id", "lang", "source")
         )
-        os.environ["HDFE_MINHASH_FUSED"] = "1"
         new = _sorted_rows(
             minhash_dedup(docs, num_hashes=128, bands=16, jaccard_threshold=0.8)
             .select("doc_id", "lang", "source")
         )
     finally:
-        os.environ.pop("HDFE_MINHASH_FUSED", None)
         spark.catalog.clearCache()
     assert old == new
+    assert len(old) < docs.count()  # the corpus has near-dups to drop
 
 
 def test_minhash_dedup_fused_single_arrow_hash_pass(spark, sf_dir):

@@ -1,19 +1,27 @@
 """Round-16 optimization guards.
 
 Every optimization must be invisible in results: each test pins the
-new path's output against the exact pre-optimization path on the same
-data (the test_opt_r15* contract).
+optimized output against an independent numpy reference
+(``ols_reference``: closed-form OLS, LSDV, the homoskedastic / HC1 /
+CGM sandwiches), a brute-force Python reference, or the exact path a
+data gate selects on the same data (the test_opt_r15* contract).
 """
 
+import sys
+import threading
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import ols_reference as ref
+import set_reference
 from hdfe_spark.operators import estimate as E
 
 
 @pytest.fixture()
-def panel(spark):
+def panel_pdf():
     rows = []
     rng = np.random.RandomState(11)
     for i in range(400):
@@ -23,9 +31,20 @@ def panel(spark):
         x2 = float(rng.randint(0, 50)) / 3.0
         y = 2.0 * x1 - 1.5 * x2 + g * 0.5 + h * 2.0 + float(rng.randint(0, 10)) / 11.0
         rows.append((i, g, h, x1, x2, y))
+    return pd.DataFrame(rows, columns=["id", "g", "h", "x1", "x2", "y"])
+
+
+@pytest.fixture()
+def panel(spark, panel_pdf):
     return spark.createDataFrame(
-        rows, "id long, g long, h long, x1 double, x2 double, y double"
+        list(panel_pdf.itertuples(index=False, name=None)),
+        "id long, g long, h long, x1 double, x2 double, y double",
     )
+
+
+def _frame(spark, rows, schema):
+    cols = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(rows, schema), pd.DataFrame(rows, columns=cols)
 
 
 # ------------------------------------------------ se_cluster2 pair gate
@@ -52,36 +71,34 @@ def test_cluster2_pair_gate_passes_low_cardinality_keys(panel):
     assert res.n == 400
 
 
-def test_cluster2_gate_ratio_env_override(panel, monkeypatch):
+def test_cluster2_gate_ratio_env_override(panel, panel_pdf, monkeypatch):
     """Forcing the ratio to 1.1 re-enables one-pass on row-identity
-    keys, and its values still match the exact path (the r15 parity
-    contract is independent of the gate)."""
+    keys, and its values still match numpy OLS + the CGM sandwich (the
+    r15 parity contract is independent of the gate)."""
     monkeypatch.setenv("HDFE_CLUSTER2_PAIR_RATIO", "1.1")
+    assert E._pooled_cluster2_onepass(
+        panel, "y", ["x1", "x2"], "id", "g", False, 1e-9
+    ) is not None
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["id", "g"],
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
-    slow = E.estimate(
-        panel, "y", ["x1", "x2"], estimate_variance=True,
-        cluster=["id", "g"],
-    )
-    assert np.allclose(fast.b, slow.b, rtol=1e-9)
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
+    X = panel_pdf[["x1", "x2"]].to_numpy()
+    b, e = ref.ols(X, panel_pdf["y"].to_numpy())
+    assert np.allclose(fast.b[:, 0], b, rtol=1e-9)
+    assert np.allclose(fast.V[0], ref.cluster_V(X, e, panel_pdf, ["id", "g"]), rtol=1e-7)
 
 
-def test_cluster2_gated_exact_path_same_answer(panel, monkeypatch):
+def test_cluster2_gated_exact_path_same_answer(panel):
     """With the gate declining (row-identity keys), the default call
-    must equal the kill-switched exact path bit-for-bit (both run the
-    same four-pass plan)."""
-    a = E.estimate(
-        panel, "y", ["x1", "x2"], estimate_variance=True,
-        cluster=["id", "g"],
-    )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
-    b = E.estimate(
-        panel, "y", ["x1", "x2"], estimate_variance=True,
-        cluster=["id", "g"],
+    must equal the exact four-pass path that ``get_residual=True``
+    selects, bit-for-bit (both run the same plan)."""
+    a, b = (
+        E.estimate(
+            panel, "y", ["x1", "x2"], estimate_variance=True,
+            cluster=["id", "g"], get_residual=gate,
+        )
+        for gate in (False, True)
     )
     assert np.allclose(a.b, b.b, rtol=0, atol=0)
     assert np.allclose(a.V[0], b.V[0], rtol=0, atol=0)
@@ -90,28 +107,25 @@ def test_cluster2_gated_exact_path_same_answer(panel, monkeypatch):
 # ------------------------------- Plan B variance via the moment fast path
 
 
-def test_within_variance_moment_parity(panel, monkeypatch):
-    """Homoskedastic-SE within regression: moment fast path == window
-    path (b, V, n, names) — small-FE branch (13 levels → full FE
-    covariance block)."""
+def test_within_variance_moment_parity(panel, panel_pdf):
+    """Homoskedastic-SE within regression: moment fast path == numpy
+    LSDV fit (b, V, n, names) — small-FE branch (13 levels → full FE
+    covariance block, levels first)."""
     fast = E.estimate(
         panel, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = E.estimate(
-        panel, "y", ["x1", "x2"], categorical_controls=["g"],
-        estimate_variance=True,
-    )
-    assert np.allclose(fast.slopes, slow.slopes, rtol=1e-9)
-    assert fast.n == slow.n
-    assert fast.v_coef_names == slow.v_coef_names
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-6)
+    b, _, _ = ref.within_fit(panel_pdf, "g", ["x1", "x2"], "y")
+    assert np.allclose(fast.slopes[:, 0], b, rtol=1e-9)
+    assert fast.n == len(panel_pdf)
+    assert fast.v_coef_names == [f"g={v}" for v in range(13)] + ["x1", "x2"]
+    V = ref.lsdv_V(panel_pdf, "g", ["x1", "x2"], "y")
+    assert np.allclose(fast.V[0], V, rtol=1e-6)
 
 
-def test_within_variance_moment_parity_many_levels(spark, monkeypatch):
-    """> 2000 FE levels → the slopes-only V branch; moment path must
-    match the window path there too."""
+def test_within_variance_moment_parity_many_levels(spark):
+    """> 2000 FE levels → the slopes-only V branch; the moment path
+    must match numpy within-OLS there too (dof absorbs every level)."""
     rows = []
     rng = np.random.RandomState(3)
     for i in range(4400):
@@ -119,22 +133,20 @@ def test_within_variance_moment_parity_many_levels(spark, monkeypatch):
         x1 = float(rng.randint(0, 100)) / 7.0
         y = 1.5 * x1 + (g % 7) * 0.25 + float(rng.randint(0, 10)) / 13.0
         rows.append((g, x1, y))
-    df = spark.createDataFrame(rows, "g long, x1 double, y double")
+    df, pdf = _frame(spark, rows, "g long, x1 double, y double")
     fast = E.estimate(
         df, "y", ["x1"], categorical_controls=["g"], estimate_variance=True
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = E.estimate(
-        df, "y", ["x1"], categorical_controls=["g"], estimate_variance=True
-    )
-    assert np.allclose(fast.slopes, slow.slopes, rtol=1e-9)
-    assert fast.v_coef_names == slow.v_coef_names == ["x1"]
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-6)
+    b, e, Xd = ref.within_fit(pdf, "g", ["x1"], "y")
+    assert np.allclose(fast.slopes[:, 0], b, rtol=1e-9)
+    assert fast.v_coef_names == ["x1"]
+    V = ref.homosked_V(Xd, e, n_absorbed=2200)
+    assert np.allclose(fast.V[0], V, rtol=1e-6)
 
 
 def test_within_variance_null_fallback_same_answer(panel, monkeypatch):
     """NULL x → moment pass declines internally → window path → output
-    identical to the kill-switched call."""
+    identical to the window path that the width gate selects."""
     with_null = panel.withColumn(
         "x1", F.when(F.col("id") % 37 == 0, F.lit(None)).otherwise(F.col("x1"))
     )
@@ -142,7 +154,7 @@ def test_within_variance_null_fallback_same_answer(panel, monkeypatch):
         with_null, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_WITHIN_FAST_MAX_COLS", 0)
     b = E.estimate(
         with_null, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
@@ -151,21 +163,19 @@ def test_within_variance_null_fallback_same_answer(panel, monkeypatch):
     assert np.allclose(a.V[0], b.V[0], rtol=0, atol=0)
 
 
-def test_within_variance_perfect_fit_guard(spark, monkeypatch):
+def test_within_variance_perfect_fit_guard(spark):
     """R² = 1 (y exactly linear in x within groups) trips the RSS
-    cancellation guard; the exact residual scan must take over and the
-    two paths still agree."""
+    cancellation guard; the exact residual scan must take over and
+    agree with numpy LSDV (V ≈ 0 up to rounding)."""
     rows = [(i % 9, float(i % 31), 3.0 * (i % 31) + (i % 9) * 2.0) for i in range(300)]
-    df = spark.createDataFrame(rows, "g long, x double, y double")
+    df, pdf = _frame(spark, rows, "g long, x double, y double")
     fast = E.estimate(
         df, "y", ["x"], categorical_controls=["g"], estimate_variance=True
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = E.estimate(
-        df, "y", ["x"], categorical_controls=["g"], estimate_variance=True
-    )
-    assert np.allclose(fast.slopes, slow.slopes, rtol=1e-9)
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-6, atol=1e-18)
+    b, _, _ = ref.within_fit(pdf, "g", ["x"], "y")
+    assert np.allclose(fast.slopes[:, 0], b, rtol=1e-9)
+    V = ref.lsdv_V(pdf, "g", ["x"], "y")
+    assert np.allclose(fast.V[0], V, rtol=1e-6, atol=1e-18)
 
 
 def test_rss_from_moments_guard():
@@ -202,24 +212,42 @@ def test_residuals_schema_no_dm_leak_rank_repair(panel, monkeypatch):
 # ----------------------------------------------- fit_stats moment path
 
 
-def test_fit_stats_moment_parity(panel, monkeypatch):
+def _fit_stats_reference(pdf, fe, x, y):
+    """numpy within fit panel: RSS, TSS, R², adjusted R², F on
+    (k, n − G − k) dof with G absorbed levels (NULL is a level)."""
+    b, e, _ = ref.within_fit(pdf, fe, x, y)
+    yd = ref.demeaned(pdf, fe, [y])[y].to_numpy()
+    n, k, G = len(pdf), len(x), pdf[fe].nunique(dropna=False)
+    rss, tss = float(e @ e), float(yd @ yd)
+    df2 = n - G - k
+    return {
+        "n": n, "n_groups": G, "b": b, "rss": rss, "tss": tss,
+        "r2": 1 - rss / tss,
+        "adj_r2": 1 - (rss / df2) / (tss / (n - G)),
+        "f_stat": ((tss - rss) / k) / (rss / df2),
+    }
+
+
+def test_fit_stats_moment_parity(panel, panel_pdf):
     from hdfe_spark.operators.estimate import fit_stats
 
     fast = fit_stats(panel, "y", ["x1", "x2"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = fit_stats(panel, "y", ["x1", "x2"], categorical_controls=["g"])
-    assert fast["n"] == slow["n"]
-    assert fast["n_groups"] == slow["n_groups"]
+    want = _fit_stats_reference(panel_pdf, "g", ["x1", "x2"], "y")
+    assert fast["n"] == want["n"]
+    assert fast["n_groups"] == want["n_groups"]
     for key in ("r2", "adj_r2", "f_stat", "rss", "tss"):
-        assert np.isclose(fast[key], slow[key], rtol=1e-7), key
-    assert np.allclose(fast["b"], slow["b"], rtol=1e-9)
+        assert np.isclose(fast[key], want[key], rtol=1e-7), key
+    assert np.allclose(fast["b"], want["b"], rtol=1e-9)
 
 
 def test_fit_stats_near_perfect_fit_guard(spark, monkeypatch):
     """Review r16 (CONFIRMED finding): near R²=1 with large absorbed
     group means, the moment M's loss-amplified error would corrupt the
-    closed-form RSS — the guard must route to the window path so both
-    calls agree."""
+    closed-form RSS — the guard must route to the window path, so the
+    default call agrees with the window path that the width gate
+    selects. (The window RSS itself carries ~1e-9 absolute cancellation
+    error here, so an independently rounded numpy RSS cannot pin it to
+    1e-6.)"""
     from hdfe_spark.operators.estimate import fit_stats
 
     rows = []
@@ -231,87 +259,87 @@ def test_fit_stats_near_perfect_fit_guard(spark, monkeypatch):
         rows.append((g, x, y))
     df = spark.createDataFrame(rows, "g long, x double, y double")
     fast = fit_stats(df, "y", ["x"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_WITHIN_FAST_MAX_COLS", 0)
     slow = fit_stats(df, "y", ["x"], categorical_controls=["g"])
     assert np.isclose(fast["rss"], slow["rss"], rtol=1e-6)
     assert np.isclose(fast["f_stat"], slow["f_stat"], rtol=1e-6)
 
 
-def test_fit_stats_moment_null_fe_level(spark, monkeypatch):
-    """A NULL FE level is its own absorbed group on both paths."""
+def test_fit_stats_moment_null_fe_level(spark):
+    """A NULL FE level is its own absorbed group (numpy reference
+    groups with dropna=False)."""
     from hdfe_spark.operators.estimate import fit_stats
 
     rows = [
         (None if i % 5 == 0 else i % 4, float(i % 11), 2.0 * (i % 11) + (i % 4))
         for i in range(200)
     ]
-    df = spark.createDataFrame(rows, "g int, x double, y double")
+    df, pdf = _frame(spark, rows, "g int, x double, y double")
     fast = fit_stats(df, "y", ["x"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
-    slow = fit_stats(df, "y", ["x"], categorical_controls=["g"])
-    assert fast["n_groups"] == slow["n_groups"] == 5
-    assert np.isclose(fast["r2"], slow["r2"], rtol=1e-7)
+    want = _fit_stats_reference(pdf, "g", ["x"], "y")
+    assert fast["n_groups"] == want["n_groups"] == 5
+    assert np.isclose(fast["r2"], want["r2"], rtol=1e-7)
 
 
 # ------------------------------------------------ pooled one-pass SEs
 
 
-def test_pooled_homosked_onepass_parity(panel, monkeypatch):
+def _pooled_reference(pdf, x, robust):
+    X = pdf[x].to_numpy()
+    b, e = ref.ols(X, pdf["y"].to_numpy())
+    return b, (ref.hc1_V(X, e) if robust else ref.homosked_V(X, e))
+
+
+def test_pooled_homosked_onepass_parity(panel, panel_pdf):
     fast = E.estimate(panel, "y", ["x1", "x2"], estimate_variance=True)
-    monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-    slow = E.estimate(panel, "y", ["x1", "x2"], estimate_variance=True)
-    assert np.allclose(fast.b, slow.b, rtol=1e-9)
-    assert fast.n == slow.n
-    assert fast.v_coef_names == slow.v_coef_names
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
+    b, V = _pooled_reference(panel_pdf, ["x1", "x2"], robust=False)
+    assert np.allclose(fast.b[:, 0], b, rtol=1e-9)
+    assert fast.n == len(panel_pdf)
+    assert fast.v_coef_names == ["x1", "x2"]
+    assert np.allclose(fast.V[0], V, rtol=1e-7)
 
 
-def test_pooled_hc1_onepass_parity(panel, monkeypatch):
+def test_pooled_hc1_onepass_parity(panel, panel_pdf):
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, robust=True
     )
-    monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-    slow = E.estimate(
-        panel, "y", ["x1", "x2"], estimate_variance=True, robust=True
-    )
-    assert np.allclose(fast.b, slow.b, rtol=1e-9)
-    assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
+    b, V = _pooled_reference(panel_pdf, ["x1", "x2"], robust=True)
+    assert np.allclose(fast.b[:, 0], b, rtol=1e-9)
+    assert np.allclose(fast.V[0], V, rtol=1e-7)
 
 
-def test_pooled_onepass_null_fallback(panel, monkeypatch):
-    """NULL anywhere → internal decline → exact path → identical.
-    (NaN also declines, but the exact path itself propagates NaN into
-    the Gram and raises — pre-existing behavior on both sides, not
-    testable as a value.)"""
+def test_pooled_onepass_null_fallback(panel):
+    """NULL anywhere → internal decline → exact path → identical to
+    the exact path that ``get_residual=True`` selects. (NaN also
+    declines, but the exact path itself propagates NaN into the Gram
+    and raises — pre-existing behavior, not testable as a value.)"""
     bad = panel.withColumn(
         "x2",
         F.when(F.col("id") == 11, F.lit(None)).otherwise(F.col("x2")),
     )
     for extra in ({"robust": True}, {}):
         a = E.estimate(bad, "y", ["x1", "x2"], estimate_variance=True, **extra)
-        monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-        b = E.estimate(bad, "y", ["x1", "x2"], estimate_variance=True, **extra)
-        monkeypatch.delenv("HDFE_POOLED_FAST")
+        b = E.estimate(
+            bad, "y", ["x1", "x2"], estimate_variance=True,
+            get_residual=True, **extra,
+        )
         assert np.allclose(a.b, b.b, rtol=0, atol=0)
         assert np.allclose(a.V[0], b.V[0], rtol=0, atol=0)
 
 
-def test_pooled_onepass_rank_repair_parity(panel, monkeypatch):
+def test_pooled_onepass_rank_repair_parity(panel, panel_pdf):
+    """The later collinear regressor (x3 = 2·x1) is dropped; b and V on
+    the surviving block match numpy on (x1, x2)."""
     coll = panel.withColumn("x3", F.col("x1") * 2.0)
-    for extra in ({"robust": True}, {}):
+    for robust in (True, False):
         fast = E.estimate(
             coll, "y", ["x1", "x2", "x3"], check_rank=True,
-            estimate_variance=True, **extra,
+            estimate_variance=True, robust=robust,
         )
-        monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-        slow = E.estimate(
-            coll, "y", ["x1", "x2", "x3"], check_rank=True,
-            estimate_variance=True, **extra,
-        )
-        monkeypatch.delenv("HDFE_POOLED_FAST")
-        assert fast.v_coef_names == slow.v_coef_names
-        assert np.allclose(fast.b, slow.b, rtol=1e-9)
-        assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
+        b, V = _pooled_reference(panel_pdf, ["x1", "x2"], robust)
+        assert fast.v_coef_names == ["x1", "x2"]
+        assert np.allclose(fast.b[:, 0], b, rtol=1e-9)
+        assert np.allclose(fast.V[0], V, rtol=1e-7)
 
 
 def test_pooled_onepass_triggers_on_clean_data(panel):
@@ -353,23 +381,19 @@ def test_spread_by_keys_still_skips_real_aggregates(spark):
 # -------------------------------------- grouped_transform collision
 
 
-def test_grouped_transform_collision_keeps_window_semantics(spark, monkeypatch):
+def test_grouped_transform_collision_keeps_window_semantics(spark):
     from hdfe_spark.operators.groupby import grouped_transform
 
-    df = spark.createDataFrame(
-        [(1, 2.0, -1.0), (1, 4.0, -1.0), (2, 10.0, -1.0)],
-        "k int, v double, mean_v double",
-    )
+    rows = [(1, 2.0, -1.0), (1, 4.0, -1.0), (2, 10.0, -1.0)]
+    df, pdf = _frame(spark, rows, "k int, v double, mean_v double")
     out = grouped_transform(df, "k", ["v"])
-    # withColumn semantics: exactly one mean_v column, holding the
-    # group mean (the pre-existing column is replaced, not duplicated)
-    assert out.columns.count("mean_v") == 1
-    got = {(r["k"], r["v"]): r["mean_v"] for r in out.collect()}
-    assert got[(1, 2.0)] == 3.0 and got[(2, 10.0)] == 10.0
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    ref = grouped_transform(df, "k", ["v"])
+    # withColumn semantics: exactly one mean_v column, in place,
+    # holding the group mean (the pre-existing column is replaced, not
+    # duplicated)
+    assert out.columns == ["k", "v", "mean_v"]
+    pdf["mean_v"] = pdf.groupby("k")["v"].transform("mean")
     assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, ref.collect())
+        pdf.itertuples(index=False, name=None)
     )
 
 
@@ -410,7 +434,64 @@ def test_query_scoped_persist_bounded_and_releasable(spark, monkeypatch):
     assert not D._SCOPED_PERSISTS
 
 
-def test_setsim_fused_values_identical(spark, monkeypatch):
+class _FakeFrame:
+    """Stands in for a DataFrame: the registry only calls these two."""
+
+    def persist(self, level):
+        return self
+
+    def unpersist(self, blocking):
+        pass
+
+
+def test_query_scoped_persist_thread_safe(monkeypatch):
+    """Registrations and releases interleaved across more threads than
+    cores, with a tiny switch interval: no exception from the eviction
+    loop, and the registry never exceeds the cap."""
+    from hdfe_spark.operators import dedup as D
+
+    D.release_query_caches()
+    monkeypatch.setenv("HDFE_SCOPED_PERSIST_CAP", "3")
+    errors, sizes = [], []
+    start = threading.Barrier(8)
+
+    def register():
+        try:
+            start.wait()
+            for _ in range(2000):
+                D._query_scoped_persist(_FakeFrame())
+                sizes.append(len(D._SCOPED_PERSISTS))
+        except Exception as exc:  # noqa: BLE001 — the test's subject
+            errors.append(exc)
+
+    def release():
+        try:
+            start.wait()
+            for _ in range(2000):
+                D.release_query_caches()
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=register) for _ in range(6)]
+    threads += [threading.Thread(target=release) for _ in range(2)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    D.release_query_caches()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert len(sizes) == 6 * 2000 and max(sizes) <= 3
+
+
+def test_setsim_fused_values_identical(spark):
+    """The fused (persisted ordered-set) plan == brute-force all-pairs
+    word-shingle Jaccard."""
     from hdfe_spark.operators.setjoin import setsim_join
 
     rows = [
@@ -421,14 +502,14 @@ def test_setsim_fused_values_identical(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     fused = setsim_join(df, tau=0.5).collect()
-    monkeypatch.setenv("HDFE_SETSIM_FUSED", "0")
-    plain = setsim_join(df, tau=0.5).collect()
     key = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in fused)
-    assert key == sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in plain)
+    assert key == set_reference.setsim_pairs(rows, 5, 0.5)
     assert key  # non-empty: the near-dup pairs were found
 
 
-def test_ngram_fused_values_identical(spark, sf_dir, monkeypatch):
+def test_ngram_fused_values_identical(spark, sf_dir):
+    """The fused (persisted shingle-set) plan == brute-force Jaccard of
+    the two documents' lowercased UTF-8 byte 5-gram sets."""
     from hdfe_spark.operators.dedup import ngram_jaccard_pairs
     from hdfe_spark.sources.tables import load_table
 
@@ -439,8 +520,13 @@ def test_ngram_fused_values_identical(spark, sf_dir, monkeypatch):
         .join(docs.select(F.col("doc_id").alias("id_b")), on="id_b")
     )
     fused = ngram_jaccard_pairs(docs, pairs, "text", "doc_id", 5).collect()
-    monkeypatch.setenv("HDFE_NGRAM_FUSED", "0")
-    plain = ngram_jaccard_pairs(docs, pairs, "text", "doc_id", 5).collect()
-    assert sorted(
-        [(r["id_a"], r["id_b"], r["jaccard"]) for r in fused]
-    ) == sorted([(r["id_a"], r["id_b"], r["jaccard"]) for r in plain])
+    text = {r["doc_id"]: r["text"] for r in docs.select("doc_id", "text").collect()}
+    want = sorted(
+        (a, a + 1, set_reference.jaccard(
+            set_reference.byte_grams(text[a], 5),
+            set_reference.byte_grams(text[a + 1], 5),
+        ))
+        for a in text
+        if a + 1 in text
+    )
+    assert sorted([(r["id_a"], r["id_b"], r["jaccard"]) for r in fused]) == want

@@ -58,17 +58,6 @@ def test_demean_agg_join_plan(li):
     assert "Window" not in explain_string(out, "simple")
 
 
-def test_demean_window_fallback_single_shuffle(li, monkeypatch):
-    """The HDFE_TRANSFORM_JOIN=0 kill-switch restores the one-shuffle
-    window plan."""
-    from hdfe_spark.operators.groupby import demean
-
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    out = demean(li, "l_suppkey", "l_quantity")
-    assert_plan(out, n_exchanges=1, n_python_stages=0)
-    assert "Window" in explain_string(out, "simple")
-
-
 def test_lags_single_window_pass(spark, sf_dir):
     from hdfe_spark.operators.lags import make_lags
     from hdfe_spark.sources.tables import load_table
