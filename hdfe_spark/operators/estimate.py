@@ -11,7 +11,16 @@ Plans (picked exactly like the reference's dispatch,
   from a one-pass distributed Gram ``(X'X, X'y)``; k×k solve on the
   driver. Replaces the reference's driver-sized ``np.linalg.lstsq``
   (``hdfe/hdfe.py:66-71``) with a single aggregation over any data
-  size. Multi-outcome y handled in the same pass.
+  size. Multi-outcome y handled in the same pass. With
+  ``estimate_variance`` the SE rides the same single pass:
+  ``_pooled_sandwich_onepass`` for the sandwich family (HC1,
+  one-way and two-way cluster — one moment-tensor aggregation whose
+  first level is per row, ``groupBy(c)`` or a ``groupBy(a, b)`` pair
+  table) and ``_pooled_homosked_onepass`` (closed-form RSS). The
+  sandwich pass declines to the exact path (Gram, then a residual
+  scan) for three reasons: NULL/NaN in (x, y), a cancellation-guard
+  trip, or — two-way only — the pair gate (pairs/rows above
+  ``HDFE_CLUSTER2_PAIR_RATIO``).
 - **Plan B ("within")** — 1 FE (or ``within_if_fe=True``): the
   Frisch–Waugh–Lovell rewrite (``hdfe/hdfe.py:73-120``). FEs #2+
   become drop-last dummy columns appended to x; x is demeaned within
@@ -39,18 +48,25 @@ fan-in). Only k×k / (levels×k) matrices reach the driver.
 Variance (``hdfe/hdfe.py:147-181``):
 
 - homoskedastic ``V = σ̂²(X'X)⁻¹``, dof ``n - k_total``
-  (``hdfe/hdfe.py:176-179``); for the within plan, ``(X'X)⁻¹`` of the
+  (``hdfe/hdfe.py:176-179``); the RSS is closed-form from the moment
+  pass where one ran (``_rss_from_moments``, guarded — a trip runs the
+  exact residual scan); for the within plan, ``(X'X)⁻¹`` of the
   full design ``[D₁|x]`` is computed blockwise via the Schur
   complement (the Schur complement of the dummy block is exactly the
   demeaned Gram), so no ``levels×levels`` dense inverse is formed
   unless FE-coefficient covariances are explicitly requested with a
   small level count.
-- cluster-robust (Liang–Zeger sandwich, ``hdfe/hdfe.py:159-175``):
-  per-cluster scores ``u_g = X_g'e_g`` via one grouped aggregation,
-  then the meat ``Σ u_g u_g'`` reduced DISTRIBUTED in a second
-  aggregation — only k(k+1)/2 doubles per outcome reach the driver,
-  never an n_clusters-sized matrix. ``cluster=[a, b]`` gives the
-  two-way CGM variance ``M_a + M_b − M_{a∩b}`` (three such passes).
+- cluster-robust (Liang–Zeger sandwich, ``hdfe/hdfe.py:159-175``)
+  and White/HC1 (each row its own cluster). Pooled, one pass: the
+  meat ``Σ u_g u_g'`` is a polynomial in per-cluster moment blocks
+  and b, assembled on the driver from moment tensors
+  (``_pooled_sandwich_onepass``; two-way CGM ``M_a + M_b − M_{a∩b}``
+  from one pair table). Exact path — every plan's fallback and the
+  within / alternating plans — is ``_exact_V``: per-cluster scores
+  ``u_g = X_g'e_g`` via one grouped aggregation, then the meat
+  reduced DISTRIBUTED in a second aggregation (three such passes for
+  two-way) — only k(k+1)/2 doubles per outcome reach the driver,
+  never an n_clusters-sized matrix.
 
 Note: the reference's Plan-A ``estimate_variance=True`` path is broken
 (``x.A`` on ndarray, ``hdfe/hdfe.py:155`` — SURVEY.md §4); this engine
@@ -234,9 +250,44 @@ def _append_residuals(
     return df.select("*", *exprs)
 
 
-def _sum_sq(df: DataFrame, cols: list[str]) -> np.ndarray:
-    row = df.agg(*[F.sum(F.col(c) * F.col(c)).alias(c) for c in cols]).collect()[0]
+def _sum_sq(
+    df: DataFrame, cols: list[str], weight: str | None = None
+) -> np.ndarray:
+    """``Σ c²`` per column in one aggregation (``Σ w·c²`` when a
+    ``weight`` column is given)."""
+
+    def sq(c):
+        e = F.col(c) * F.col(c)
+        return e if weight is None else F.col(weight) * e
+
+    row = df.agg(*[F.sum(sq(c)).alias(c) for c in cols]).collect()[0]
     return np.array([float(row[c]) if row[c] is not None else 0.0 for c in cols])
+
+
+def _sym_from_row(row, k: int, prefix: str) -> np.ndarray:
+    """Symmetric k×k ndarray from the upper-triangle aggregate columns
+    ``{prefix}{i}_{j}`` (i ≤ j) of a collected row; NULL reads as 0."""
+    M = np.zeros((k, k))
+    for i in range(k):
+        for j in range(i, k):
+            v = row[f"{prefix}{i}_{j}"]
+            M[i, j] = M[j, i] = 0.0 if v is None else float(v)
+    return M
+
+
+def _rank_repair(G, Xty, check_rank: bool, tol: float, *aligned):
+    """Rank repair on the driver-side Gram (reference
+    ``hdfe/multicollinearity.py:75-108``): with ``check_rank``, drop
+    the columns the QR scan flags as collinear (earlier columns are
+    kept). Returns ``(G, Xty, *aligned)`` cut to the kept columns —
+    each ``aligned`` list (names, indices; None passes through) is
+    indexed like G's columns."""
+    if check_rank:
+        ci, ki = find_collinear_cols_gram(G, tol=tol)
+        if ci:
+            G, Xty = G[np.ix_(ki, ki)], Xty[ki, :]
+            aligned = [None if a is None else [a[i] for i in ki] for a in aligned]
+    return (G, Xty, *aligned)
 
 
 def _cluster_meat(
@@ -266,17 +317,8 @@ def _cluster_meat(
                         * F.coalesce(F.col(f"__u_{rc}__{x_cols[j]}"), F.lit(0.0))
                     ).alias(f"__m_{rc}_{i}_{j}")
                 )
-    row_df = grouped.agg(*m_exprs)
-    row = row_df.collect()[0]
-    out = {}
-    for rc in resid_cols:
-        M = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                v = row[f"__m_{rc}_{i}_{j}"]
-                M[i, j] = M[j, i] = 0.0 if v is None else float(v)
-        out[rc] = M
-    return out
+    row = grouped.agg(*m_exprs).collect()[0]
+    return {rc: _sym_from_row(row, k, f"__m_{rc}_") for rc in resid_cols}
 
 
 def _cluster_meat_multiway(
@@ -331,14 +373,33 @@ def _hc1_meat(
                     )
                 )
     row = df.agg(*exprs).collect()[0]
-    out = {}
-    for rc in resid_cols:
-        M = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                M[i, j] = M[j, i] = float(row[f"__m_{rc}_{i}_{j}"] or 0.0)
-        out[rc] = M
-    return out
+    return {rc: _sym_from_row(row, k, f"__m_{rc}_") for rc in resid_cols}
+
+
+def _exact_V(
+    frame: DataFrame,
+    resid_cols: list[str],
+    score_cols: list[str],
+    G_inv: np.ndarray,
+    n: int,
+    k_total: int,
+    cluster: list[str] | None,
+    robust: bool,
+) -> list[np.ndarray]:
+    """Variance from a residual scan over ``frame`` — the exact tail
+    every plan shares: cluster-robust (one- or two-way meat of the
+    ``score_cols`` scores), White/HC1 (``n/(n − k_total)`` factor),
+    or homoskedastic (``Σe²/(n − k_total)``). ``G_inv`` is the
+    (demeaned) Gram pseudo-inverse; ``k_total`` counts absorbed
+    parameters too. One V per residual column."""
+    if cluster is not None:
+        meat = _cluster_meat_multiway(frame, cluster, resid_cols, score_cols)
+        return [G_inv @ meat[rc] @ G_inv for rc in resid_cols]
+    if robust:
+        meat = _hc1_meat(frame, resid_cols, score_cols)
+        hc1 = n / max(n - k_total, 1)
+        return [G_inv @ meat[rc] @ G_inv * hc1 for rc in resid_cols]
+    return _homoskedastic_V(G_inv, _sum_sq(frame, resid_cols), n, k_total)
 
 
 def estimate(
@@ -452,14 +513,9 @@ def _tensors_from_row(row, k: int):
         return 0.0 if v is None else float(v)
 
     n = int(row["__n"] or 0)
-    G = np.zeros((k, k))
-    for j, l in P:
-        G[j, l] = G[l, j] = _f(f"__g_{j}_{l}")
+    G = _sym_from_row(row, k, "__g_")
     Xty = np.array([[_f(f"__t_{i}")] for i in range(k)])
-    A = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            A[i, j] = A[j, i] = _f(f"__a_{i}_{j}")
+    A = _sym_from_row(row, k, "__a_")
     B = np.zeros((k, k, k))  # B[i, j, l] = Σ_g Xy_i · XX_jl
     for i in range(k):
         for j, l in P:
@@ -512,281 +568,143 @@ def _meat_from_tensors(A, B, C, bv):
     return meat
 
 
-def _pooled_cluster_onepass(df, y_col, x_cols, cluster_key, check_rank, tol):
-    """One-way cluster-robust pooled OLS in ONE full-data pass.
+def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
+    """Sandwich-variance pooled OLS — HC1, one-way or two-way
+    cluster-robust — with ONE full-data pass (guide §1.2 "fewer
+    passes"; the exact path scans once for the Gram, then once per
+    meat grouping at the fitted b).
 
-    The sandwich meat ``Σ_g u_g u_g'`` with ``u_g = X_g'y − X_g'X_g b``
-    is a polynomial in the per-cluster moment blocks ``(X_g'X_g,
-    X_g'y)`` and the global ``b`` — so ONE groupBy(cluster) moment
-    aggregation followed by ONE cluster-table reduction of the moment
-    *products* delivers G, X'y, n AND the three meat tensors
-    (A = ΣXy⊗Xy, B = ΣXy⊗XX, C = ΣXX⊗XX); b and the meat then
-    assemble on the driver. Replaces the two full-data passes (Gram,
-    then per-cluster scores at the fitted b) with one (guide §1.2:
-    fewer passes; at 100 TB this halves the scan bytes of every
-    clustered-SE call).
+    The meat ``Σ_g u_g u_g'`` with ``u_g = X_g'y − X_g'X_g b`` is a
+    polynomial in the per-cluster moment blocks ``(X_g'X_g, X_g'y)``
+    and the global ``b``: a first-level table of those blocks, reduced
+    once more to the moment *products*, delivers G, X'y, n AND the
+    meat tensors (A = ΣXy⊗Xy, B = ΣXy⊗XX, C = ΣXX⊗XX); b and the meat
+    then assemble on the driver. The first level is
 
-    Returns None — caller falls back to the two-pass path, preserving
-    the exact pre-optimization behavior — when any (x, y) column
-    carries NULL/NaN (the two-pass path's row-wise residual NULL
-    semantics are not reproduced by per-entry moment sums) or when the
-    expanded meat fails the cancellation guard (< ~8 safe digits
-    against the positive parts of the expansion).
+    - ``cluster=[]`` (HC1): every row its own cluster — the per-row
+      products aggregate directly, no groupBy; V carries the HC1
+      factor ``n/(n − k)``;
+    - ``cluster=[c]``: ``groupBy(c)``;
+    - ``cluster=[a, b]`` (Cameron–Gelbach–Miller): one persisted
+      ``groupBy(a, b)`` pair table. Each dimension's blocks are
+      additive roll-ups of the pair blocks (``X_a'X_a =
+      Σ_b X_ab'X_ab``), so the pair reduction and two roll-up
+      reductions — all over the pair table, never the data — give
+      the three meats, and ``M = M_a + M_b − M_ab``.
+
+    Returns None — the caller runs the exact scan path — for three
+    reasons:
+
+    - NULL/NaN in any (x, y) column: per-entry moment sums do not
+      reproduce the exact path's row-wise residual NULL semantics;
+    - guard: a meat fails the `_meat_from_tensors` cancellation
+      guards (< ~8 safe digits against the positive parts of the
+      expansion; in the two-way case each of the three meats is a
+      Σuu' and is checked — only their combination may be non-PSD);
+    - pair gate (two-way only): the pair table reduces nothing when
+      pairs ≈ rows (measured +0.6–1.5 s warm at sf0.1 on near-
+      row-identity keys), so a key-only probe (approx_count_distinct
+      + count, column-pruned at the scan) keeps the one pass only
+      when pairs/rows ≤ ``HDFE_CLUSTER2_PAIR_RATIO`` (default 0.5).
     """
     k = len(x_cols)
     P = [(j, l) for j in range(k) for l in range(j, k)]
     xv = [F.col(c).cast("double") for c in x_cols]
     yv = F.col(y_col).cast("double")
+    # Per-row moment products, named by the `_tensor_agg_exprs` contract.
+    prods = {
+        **{f"__xx_{j}_{l}": xv[j] * xv[l] for j, l in P},
+        **{f"__xy_{i}": xv[i] * yv for i in range(k)},
+    }
     bad_flags = _null_nan_flags(df, list(x_cols) + [y_col])
+    rolled_bad = [F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k + 1)]
 
-    g1 = df.groupBy(cluster_key).agg(
-        F.count(F.lit(1)).alias("__w"),
-        *[F.sum(xv[j] * xv[l]).alias(f"__xx_{j}_{l}") for j, l in P],
-        *[F.sum(xv[i] * yv).alias(f"__xy_{i}") for i in range(k)],
-        *bad_flags,
-    )
-    row = g1.agg(
-        *_tensor_agg_exprs(
-            k,
-            extra=[
-                F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k + 1)
-            ],
-        )
-    )
-    row = row.collect()[0]
-
-    if any(int(row[f"__bad_{i}"] or 0) for i in range(k + 1)):
-        return None
-    n, G, Xty, A, B, C = _tensors_from_row(row, k)
-
-    idx = list(range(k))
-    x_used = list(x_cols)
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G, tol=tol)
-        if ci:
-            idx = ki
-            x_used = [x_cols[i] for i in ki]
-            G = G[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
-    A = A[np.ix_(idx, idx)]
-    B = B[np.ix_(idx, idx, idx)]
-    C = C[np.ix_(idx, idx, idx, idx)]
-
-    b = _solve(G, Xty)
-    meat = _meat_from_tensors(A, B, C, b[:, 0])
-    if meat is None:
-        return None
-    G_inv = np.linalg.pinv(G)
-    res = EstimateResult(
-        b=b, coef_names=list(x_used), x_cols=list(x_used),
-        plan="pooled", n=n,
-    )
-    res.V = [G_inv @ meat @ G_inv]
-    res.v_coef_names = list(x_used)
-    return res
-
-
-def _pooled_cluster2_onepass(df, y_col, x_cols, key_a, key_b, check_rank, tol):
-    """Two-way (Cameron–Gelbach–Miller) cluster-robust pooled OLS with
-    ONE full-data pass (optimization r15, guide §1.2 "fewer passes").
-
-    The exact path costs FOUR full-data scans: the Gram pass, then a
-    per-cluster score aggregation at the fitted b for each of the three
-    CGM groupings (a, b, a∩b). But every per-dimension moment block is
-    an ADDITIVE roll-up of the pair-level blocks — ``X_a'X_a =
-    Σ_b X_{ab}'X_{ab}`` — so one ``groupBy(a, b)`` moment pass,
-    persisted (|a×b| rows × k(k+3)/2+1 doubles — the cluster table,
-    never the data), supports all three meat computations: a pair-level
-    tensor reduction and two re-aggregation reductions, each over the
-    pair table only. b solves from the same pass's global moments; the
-    three meats assemble on the driver; ``M = M_a + M_b − M_ab``.
-
-    Returns None — caller falls back to the exact four-pass path — when
-    any (x, y) column carries NULL/NaN (row-wise residual NULL
-    semantics are not reproduced by per-entry moment sums) or when ANY
-    of the three meats fails the cancellation guard (each is a Σuu' in
-    exact arithmetic, so the one-way guards apply per grouping; only
-    the CGM *combination* may be legitimately non-PSD).
-
-    Pair-cardinality gate (optimization r16, guide §1.2 applied
-    honestly): the one-pass plan only wins when rows ≫ |a×b| pairs —
-    when the pair table is near row-identity (the local fixture:
-    591k pairs / 600k rows) the groupBy(a, b) reduces nothing, so
-    materializing the pair table is pure overhead and the exact
-    four-pass path is faster (measured +0.6–1.5 s warm at sf0.1).
-    A cheap key-only probe (ONE aggregation over the two projected
-    key columns — approx_count_distinct + count, deterministic HLL,
-    column-pruned at the scan so it reads a few % of the bytes a
-    full pass would) decides: one-pass only when
-    pairs/rows ≤ ``HDFE_CLUSTER2_PAIR_RATIO`` (default 0.5).
-    """
-    from pyspark import StorageLevel
-
-    k = len(x_cols)
-    ratio_max = float(_os_env.environ.get("HDFE_CLUSTER2_PAIR_RATIO", "0.5"))
-    probe = df.select(key_a, key_b).agg(
-        F.approx_count_distinct(F.struct(key_a, key_b)).alias("__pairs"),
-        F.count(F.lit(1)).alias("__rows"),
-    )
-    prow = probe.collect()[0]
-    n_rows = int(prow["__rows"] or 0)
-    if n_rows == 0 or int(prow["__pairs"] or 0) > ratio_max * n_rows:
-        return None
-    P = [(j, l) for j in range(k) for l in range(j, k)]
-    xv = [F.col(c).cast("double") for c in x_cols]
-    yv = F.col(y_col).cast("double")
-    bad_flags = _null_nan_flags(df, list(x_cols) + [y_col])
-
-    need = list(dict.fromkeys([key_a, key_b, *x_cols, y_col]))
-    pair = (
-        _spread_by_keys(df.select(*need), [key_a, key_b])
-        .groupBy(key_a, key_b)
-        .agg(
+    def _blocks(grouped):
+        return grouped.agg(
             F.count(F.lit(1)).alias("__w"),
-            *[F.sum(xv[j] * xv[l]).alias(f"__xx_{j}_{l}") for j, l in P],
-            *[F.sum(xv[i] * yv).alias(f"__xy_{i}") for i in range(k)],
+            *[F.sum(e).alias(a) for a, e in prods.items()],
             *bad_flags,
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        row_ab = pair.agg(
-            *_tensor_agg_exprs(
-                k,
-                extra=[
-                    F.max(f"__bad_{i}").alias(f"__bad_{i}")
-                    for i in range(k + 1)
-                ],
-            )
-        )
-        row_ab = row_ab.collect()[0]
-        if any(int(row_ab[f"__bad_{i}"] or 0) for i in range(k + 1)):
-            return None
 
-        roll = [
-            F.sum("__w").alias("__w"),
-            *[F.sum(f"__xx_{j}_{l}").alias(f"__xx_{j}_{l}") for j, l in P],
-            *[F.sum(f"__xy_{i}").alias(f"__xy_{i}") for i in range(k)],
-        ]
-        dims = [
-            pair.groupBy(key).agg(*roll).agg(*_tensor_agg_exprs(k))
-            for key in (key_a, key_b)
-        ]
-        # The two dimension roll-ups are independent jobs over the
-        # (already materialized) pair table — submit both at once so
-        # the second back-fills the first's task tail (guide §2.6).
+    def _has_bad(row):
+        return any(int(row[f"__bad_{i}"] or 0) for i in range(k + 1))
+
+    if not cluster:
+        # The raw columns ride along for the NULL/NaN flags; Catalyst
+        # collapses the projection into the aggregate — one fused pass.
+        per_row = df.select(
+            *[F.col(c) for c in dict.fromkeys(list(x_cols) + [y_col])],
+            F.lit(1.0).alias("__w"),
+            *[e.alias(a) for a, e in prods.items()],
+        )
+        rows = [per_row.agg(*_tensor_agg_exprs(k, extra=bad_flags)).collect()[0]]
+    elif len(cluster) == 1:
+        g1 = _blocks(df.groupBy(cluster[0]))
+        rows = [g1.agg(*_tensor_agg_exprs(k, extra=rolled_bad)).collect()[0]]
+    else:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            dim_rows = list(pool.map(lambda d: d.collect()[0], dims))
-    finally:
-        pair.unpersist(False)
+        from pyspark import StorageLevel
 
-    n, G, Xty, A_ab, B_ab, C_ab = _tensors_from_row(row_ab, k)
-    _, _, _, A_a, B_a, C_a = _tensors_from_row(dim_rows[0], k)
-    _, _, _, A_b, B_b, C_b = _tensors_from_row(dim_rows[1], k)
+        key_a, key_b = cluster
+        ratio_max = float(_os_env.environ.get("HDFE_CLUSTER2_PAIR_RATIO", "0.5"))
+        prow = df.select(key_a, key_b).agg(
+            F.approx_count_distinct(F.struct(key_a, key_b)).alias("__pairs"),
+            F.count(F.lit(1)).alias("__rows"),
+        ).collect()[0]
+        n_rows = int(prow["__rows"] or 0)
+        if n_rows == 0 or int(prow["__pairs"] or 0) > ratio_max * n_rows:
+            return None
+        need = list(dict.fromkeys([key_a, key_b, *x_cols, y_col]))
+        pair = _blocks(
+            _spread_by_keys(df.select(*need), cluster).groupBy(key_a, key_b)
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            rows = [pair.agg(*_tensor_agg_exprs(k, extra=rolled_bad)).collect()[0]]
+            if not _has_bad(rows[0]):
+                roll = [F.sum(a).alias(a) for a in ("__w", *prods)]
+                dims = [
+                    pair.groupBy(key).agg(*roll).agg(*_tensor_agg_exprs(k))
+                    for key in cluster
+                ]
+                # The two roll-ups are independent jobs over the
+                # materialized pair table — submit both at once so the
+                # second back-fills the first's task tail (guide §2.6).
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    rows += pool.map(lambda d: d.collect()[0], dims)
+        finally:
+            pair.unpersist(False)
 
-    idx = list(range(k))
-    x_used = list(x_cols)
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G, tol=tol)
-        if ci:
-            idx = ki
-            x_used = [x_cols[i] for i in ki]
-            G = G[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
-
-    def _sub(A, B, C):
-        return (
+    if _has_bad(rows[0]):
+        return None
+    tensors = [_tensors_from_row(row, k) for row in rows]
+    n, G, Xty = tensors[0][:3]
+    G, Xty, x_used, idx = _rank_repair(
+        G, Xty, check_rank, tol, list(x_cols), list(range(k))
+    )
+    b = _solve(G, Xty)
+    meats = []
+    for _, _, _, A, B, C in tensors:
+        meat = _meat_from_tensors(
             A[np.ix_(idx, idx)],
             B[np.ix_(idx, idx, idx)],
             C[np.ix_(idx, idx, idx, idx)],
+            b[:, 0],
         )
-
-    b = _solve(G, Xty)
-    bv = b[:, 0]
-    meats = []
-    for A, B, C in (
-        _sub(A_a, B_a, C_a),
-        _sub(A_b, B_b, C_b),
-        _sub(A_ab, B_ab, C_ab),
-    ):
-        m = _meat_from_tensors(A, B, C, bv)
-        if m is None:
+        if meat is None:
             return None
-        meats.append(m)
-    meat = meats[0] + meats[1] - meats[2]
+        meats.append(meat)
+    # Two-way rows are (a∩b, a, b): M = M_a + M_b − M_ab.
+    meat = meats[0] if len(meats) == 1 else meats[1] + meats[2] - meats[0]
     G_inv = np.linalg.pinv(G)
+    V = G_inv @ meat @ G_inv
+    if not cluster:
+        V = V * (n / max(n - len(x_used), 1))
     res = EstimateResult(
         b=b, coef_names=list(x_used), x_cols=list(x_used),
         plan="pooled", n=n,
     )
-    res.V = [G_inv @ meat @ G_inv]
-    res.v_coef_names = list(x_used)
-    return res
-
-
-def _pooled_hc1_onepass(df, y_col, x_cols, check_rank, tol):
-    """White/HC1-robust pooled OLS in ONE full-data pass
-    (optimization r16, guide §1.2 "fewer passes").
-
-    The exact path scans twice: the Gram pass, then (at the fitted b)
-    the ``Σ eᵢ² xᵢxᵢ'`` meat pass. But HC1 is the one-way cluster
-    sandwich with every row its own cluster, so the
-    ``_pooled_cluster_onepass`` tensor identity applies with the
-    first-level groupBy removed entirely: the per-row moment products
-    (Xy⊗Xy, Xy⊗XX, XX⊗XX upper triangles) aggregate directly in one
-    fused pass, and ``meat = A − Bb − (Bb)' + b'Cb`` assembles on the
-    driver. Returns None — caller falls back to the exact two-pass
-    path — on NULL/NaN anywhere in (x, y), or when the expanded meat
-    fails the `_meat_from_tensors` cancellation guards."""
-    k = len(x_cols)
-    P = [(j, l) for j in range(k) for l in range(j, k)]
-    xv = [F.col(c).cast("double") for c in x_cols]
-    yv = F.col(y_col).cast("double")
-    bad_flags = _null_nan_flags(df, list(x_cols) + [y_col])
-    # Per-row moment-product columns under the SAME naming contract as
-    # the cluster paths' first-level aggregation, so the second-level
-    # machinery (`_tensor_agg_exprs` / `_tensors_from_row`) is reused
-    # verbatim instead of re-implemented (review r16). Catalyst
-    # collapses the projection into the aggregate — one fused pass.
-    need = list(dict.fromkeys(list(x_cols) + [y_col]))
-    per_row = df.select(
-        *[F.col(c) for c in need],
-        F.lit(1.0).alias("__w"),
-        *[(xv[j] * xv[l]).alias(f"__xx_{j}_{l}") for j, l in P],
-        *[(xv[i] * yv).alias(f"__xy_{i}") for i in range(k)],
-    )
-    row = per_row.agg(*_tensor_agg_exprs(k, extra=bad_flags))
-    row = row.collect()[0]
-    if any(int(row[f"__bad_{i}"] or 0) for i in range(k + 1)):
-        return None
-    n, G, Xty, A, B, C = _tensors_from_row(row, k)
-
-    idx = list(range(k))
-    x_used = list(x_cols)
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G, tol=tol)
-        if ci:
-            idx = ki
-            x_used = [x_cols[i] for i in ki]
-            G = G[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
-    A = A[np.ix_(idx, idx)]
-    B = B[np.ix_(idx, idx, idx)]
-    C = C[np.ix_(idx, idx, idx, idx)]
-
-    b = _solve(G, Xty)
-    meat = _meat_from_tensors(A, B, C, b[:, 0])
-    if meat is None:
-        return None
-    G_inv = np.linalg.pinv(G)
-    hc1 = n / max(n - len(x_used), 1)
-    res = EstimateResult(
-        b=b, coef_names=list(x_used), x_cols=list(x_used),
-        plan="pooled", n=n,
-    )
-    res.V = [G_inv @ meat @ G_inv * hc1]
+    res.V = [V]
     res.v_coef_names = list(x_used)
     return res
 
@@ -817,21 +735,11 @@ def _pooled_homosked_onepass(df, y_cols, x_cols, check_rank, tol):
     if any(int(row[f"__bad_{i}"] or 0) for i in range(k + m)):
         return None
     n = int(row["__n"] or 0)
-    M = np.zeros((k + m, k + m))
-    for i, j in pairs:
-        v = row[f"__g_{i}_{j}"]
-        M[i, j] = M[j, i] = 0.0 if v is None else float(v)
-    G = M[:k, :k]
-    Xty = M[:k, k:]
+    M = _sym_from_row(row, k + m, "__g_")
     yy_diag = [float(M[k + t, k + t]) for t in range(m)]
-
-    x_used = list(x_cols)
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G, tol=tol)
-        if ci:
-            x_used = [x_cols[i] for i in ki]
-            G = G[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
+    G, Xty, x_used = _rank_repair(
+        M[:k, :k], M[:k, k:], check_rank, tol, list(x_cols)
+    )
     b = _solve(G, Xty)
     rss = _rss_from_moments(yy_diag, Xty, G, b)
     if rss is None:
@@ -854,73 +762,30 @@ def _plan_pooled(
     (reference ``hdfe/hdfe.py:66-71``)."""
     if (
         estimate_variance
-        and cluster is not None
-        and len(cluster) == 1
         and not get_residual
-        and not robust
-        and len(y_cols) == 1
-        and len(x_cols) <= _CLUSTER_FAST_MAX_K
-        and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
+        and len(set(x_cols + y_cols)) == len(x_cols) + len(y_cols)
     ):
-        res = _pooled_cluster_onepass(
-            df, y_cols[0], list(x_cols), cluster[0], check_rank, tol
-        )
-        if res is not None:
-            return res
-    if (
-        estimate_variance
-        and cluster is not None
-        and len(cluster) == 2
-        and not get_residual
-        and not robust
-        and len(y_cols) == 1
-        and len(x_cols) <= _CLUSTER_FAST_MAX_K
-        and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
-    ):
-        res = _pooled_cluster2_onepass(
-            df, y_cols[0], list(x_cols), cluster[0], cluster[1],
-            check_rank, tol,
-        )
-        if res is not None:
-            return res
-    if (
-        estimate_variance
-        and cluster is None
-        and not get_residual
-        and len(set(list(x_cols) + list(y_cols)))
-        == len(x_cols) + len(y_cols)
-    ):
-        # One-pass pooled SE paths (r16, guide §1.2): HC1 via the
-        # per-row tensor identity, homoskedastic via closed-form RSS.
-        # Both fall back internally (None) on NULL/NaN or guard trips.
+        # One-pass SEs (guide §1.2): the sandwich family via the
+        # moment-tensor identity, homoskedastic via closed-form RSS.
+        # Both decline (None) on NULL/NaN or a guard trip, the
+        # two-way sandwich also at its pair gate.
         res = None
-        if (
-            robust
-            and len(y_cols) == 1
-            and len(x_cols) <= _CLUSTER_FAST_MAX_K
+        if (cluster is not None or robust) and (
+            len(y_cols) == 1 and len(x_cols) <= _CLUSTER_FAST_MAX_K
         ):
-            res = _pooled_hc1_onepass(
-                df, y_cols[0], list(x_cols), check_rank, tol
+            res = _pooled_sandwich_onepass(
+                df, y_cols[0], x_cols, cluster or [], check_rank, tol
             )
         elif (
-            not robust
+            cluster is None
+            and not robust
             and len(x_cols) + len(y_cols) <= _WITHIN_FAST_MAX_COLS
         ):
-            res = _pooled_homosked_onepass(
-                df, list(y_cols), list(x_cols), check_rank, tol
-            )
+            res = _pooled_homosked_onepass(df, y_cols, x_cols, check_rank, tol)
         if res is not None:
             return res
-    if check_rank:
-        G, Xty, n = gram_matrix(df, x_cols, y_cols)
-        ci, ki = find_collinear_cols_gram(G, tol=tol)
-        if ci:
-            x_cols = [x_cols[i] for i in ki]
-            G = G[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
-    else:
-        G, Xty, n = gram_matrix(df, x_cols, y_cols)
-
+    G, Xty, n = gram_matrix(df, x_cols, y_cols)
+    G, Xty, x_cols = _rank_repair(G, Xty, check_rank, tol, x_cols)
     b = _solve(G, Xty)
     res = EstimateResult(
         b=b, coef_names=list(x_cols), x_cols=list(x_cols),
@@ -933,19 +798,11 @@ def _plan_pooled(
     resid_cols = [f"resid_{yc}" for yc in y_cols]
     if get_residual:
         res.residuals = with_resid
-
     if estimate_variance:
-        G_inv = np.linalg.pinv(G)
-        if cluster is not None:
-            meat = _cluster_meat_multiway(with_resid, cluster, resid_cols, x_cols)
-            res.V = [G_inv @ meat[rc] @ G_inv for rc in resid_cols]
-        elif robust:
-            meat = _hc1_meat(with_resid, resid_cols, x_cols)
-            hc1 = n / max(n - len(x_cols), 1)
-            res.V = [G_inv @ meat[rc] @ G_inv * hc1 for rc in resid_cols]
-        else:
-            rss = _sum_sq(with_resid, resid_cols)
-            res.V = _homoskedastic_V(G_inv, rss, n, len(x_cols))
+        res.V = _exact_V(
+            with_resid, resid_cols, x_cols, np.linalg.pinv(G), n,
+            len(x_cols), cluster, robust,
+        )
         res.v_coef_names = list(x_cols)
     return res
 
@@ -1065,10 +922,7 @@ def _within_moments_gram(work, fe1, x_all, y_cols):
         return None
     n = int(row["__n"] or 0)
     n_levels = int(row["__cells"] or 0)
-    Gf = np.zeros((k, k))
-    for i, j in pairs:
-        v = row[f"__win_{i}_{j}"]
-        Gf[i, j] = Gf[j, i] = 0.0 if v is None else float(v)
+    Gf = _sym_from_row(row, k, "__win_")
     loss = 1.0
     for i in range(k):
         ss = float(row[f"__ss_{i}"] or 0.0)
@@ -1193,15 +1047,9 @@ def _plan_within(
     # (ADVICE r15 — slicing dm_cols below would leak the dropped
     # columns' __dm_* into the residual schema on the window path).
     dm_cols_all = list(dm_cols) if dm_cols else None
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G_dm, tol=tol)
-        if ci:
-            x_all = [x_all[i] for i in ki]
-            if dm_cols is not None:
-                dm_cols = [dm_cols[i] for i in ki]
-            G_dm = G_dm[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
-
+    G_dm, Xty, x_all, dm_cols = _rank_repair(
+        G_dm, Xty, check_rank, tol, x_all, dm_cols
+    )
     b_x = _solve(G_dm, Xty)
 
     # Residual against RAW x (reference: error = y - x·b,
@@ -1271,56 +1119,47 @@ def _plan_within(
         # The moment fast path already carries the level count on its
         # reduction row (r16) — no extra job.
         n_levels = n_cells if n_cells is not None else fe_agg.count()
-        k_x = len(x_all)
-        k_total = n_levels + k_x
+        k_total = n_levels + len(x_all)
         # Blockwise (X'X)⁻¹ for X = [D₁ | x]: A = diag(counts),
         # B = per-level x sums, Schur complement S = x'x − B'A⁻¹B =
         # demeaned Gram G_dm. No levels×levels dense matrix needed for
         # the slope block; FE blocks are formed only when small.
         S_inv = np.linalg.pinv(G_dm)
-        if robust:
-            # HC1 on the within-transformed model (slopes): demeaned x
-            # against FE-netted residuals, absorbed-dof correction.
-            meat = _hc1_meat(netted, resid_cols, dm_cols)
-            hc1 = n / max(n - k_total, 1)
-            res.V = [S_inv @ meat[rc] @ S_inv * hc1 for rc in resid_cols]
-            res.v_coef_names = list(x_all)
-        elif cluster is None:
-            # RSS closed-form from the moment pass when it ran (r16,
-            # guide §1.2): rss = ỹ'ỹ − 2b'X̃'y + b'Gb — the exact
-            # netting-scan RSS only when the cancellation guard trips
-            # (R² ≈ 1) or the window path computed the Gram.
-            rss = (
-                _rss_from_moments(yy_diag, Xty, G_dm, b_x, moment_loss)
-                if yy_diag is not None
-                else None
+        res.v_coef_names = list(x_all)
+        if robust or cluster is not None:
+            # Sandwich on the within-transformed model (slopes):
+            # demeaned-x scores against FE-netted residuals, with the
+            # absorbed-dof HC1 correction.
+            res.V = _exact_V(
+                netted, resid_cols, dm_cols, S_inv, n, k_total, cluster, robust
             )
-            if rss is None:
-                rss = _sum_sq(netted, resid_cols)
-            dof = max(n - k_total, 1)
-            if n_levels <= 2000:
-                sums = work.groupBy(fe1).agg(
-                    F.count(F.lit(1)).alias("__fe_count"),
-                    *[F.sum(c).alias(c) for c in x_all],
-                ).orderBy(fe1).collect()
-                B = np.array([[float(r[c] or 0.0) for c in x_all] for r in sums])
-                fe_counts = np.array([int(r["__fe_count"]) for r in sums])
-                A_inv = np.diag(1.0 / fe_counts)
-                AinvB = A_inv @ B
-                V_dd = A_inv + AinvB @ S_inv @ AinvB.T
-                V_dx = -AinvB @ S_inv
-                G_inv_full = np.block([[V_dd, V_dx], [V_dx.T, S_inv]])
-                res.V = [G_inv_full * (float(es) / dof) for es in rss]
-                res.v_coef_names = res.coef_names
-            else:
-                res.V = [S_inv * (float(es) / dof) for es in rss]
-                res.v_coef_names = list(x_all)
-        else:
-            # Cluster-robust on the within-transformed model (slopes):
-            # scores from demeaned x against FE-netted residuals.
-            meat = _cluster_meat_multiway(netted, cluster, resid_cols, dm_cols)
-            res.V = [S_inv @ meat[rc] @ S_inv for rc in resid_cols]
-            res.v_coef_names = list(x_all)
+            return res
+        # RSS closed-form from the moment pass when it ran (r16,
+        # guide §1.2): rss = ỹ'ỹ − 2b'X̃'y + b'Gb — the exact
+        # netting-scan RSS only when the cancellation guard trips
+        # (R² ≈ 1) or the window path computed the Gram.
+        rss = (
+            _rss_from_moments(yy_diag, Xty, G_dm, b_x, moment_loss)
+            if yy_diag is not None
+            else None
+        )
+        if rss is None:
+            rss = _sum_sq(netted, resid_cols)
+        V_inv = S_inv
+        if n_levels <= 2000:
+            sums = work.groupBy(fe1).agg(
+                F.count(F.lit(1)).alias("__fe_count"),
+                *[F.sum(c).alias(c) for c in x_all],
+            ).orderBy(fe1).collect()
+            B = np.array([[float(r[c] or 0.0) for c in x_all] for r in sums])
+            fe_counts = np.array([int(r["__fe_count"]) for r in sums])
+            A_inv = np.diag(1.0 / fe_counts)
+            AinvB = A_inv @ B
+            V_dd = A_inv + AinvB @ S_inv @ AinvB.T
+            V_dx = -AinvB @ S_inv
+            V_inv = np.block([[V_dd, V_dx], [V_dx.T, S_inv]])
+            res.v_coef_names = res.coef_names
+        res.V = _homoskedastic_V(V_inv, rss, n, k_total)
     return res
 
 
@@ -1930,14 +1769,9 @@ def _plan_alternating(
     # and are released with the sweep table at function exit.)
     if finish is not None:
         finish()
-    x_used = list(x_cols)
-    if check_rank:
-        ci, ki = find_collinear_cols_gram(G_dm, tol=tol)
-        if ci:
-            x_used = [x_cols[i] for i in ki]
-            dm_x = [dm_x[i] for i in ki]
-            G_dm = G_dm[np.ix_(ki, ki)]
-            Xty = Xty[ki, :]
+    G_dm, Xty, x_used, dm_x = _rank_repair(
+        G_dm, Xty, check_rank, tol, list(x_cols), dm_x
+    )
     b_x = _solve(G_dm, Xty)
 
     res = EstimateResult(
@@ -2016,21 +1850,11 @@ def _plan_alternating(
         # identical to the FE-netted residual at convergence), so the
         # back-fit pipeline is not executed for variance.
         k_absorbed = levels[cc[0]] + sum(levels[fe] - 1 for fe in cc[1:])
-        k_total = len(x_used) + k_absorbed
-        S_inv = np.linalg.pinv(G_dm)
-        swr = _append_residuals(sw, dm_y, dm_x, b_x)
-        rdm_cols = [f"resid_{d}" for d in dm_y]
-        if cluster is not None:
-            meat = _cluster_meat_multiway(swr, cluster, rdm_cols, dm_x)
-            res.V = [S_inv @ meat[rc] @ S_inv for rc in rdm_cols]
-        elif robust:
-            meat = _hc1_meat(swr, rdm_cols, dm_x)
-            hc1 = n / max(n - k_total, 1)
-            res.V = [S_inv @ meat[rc] @ S_inv * hc1 for rc in rdm_cols]
-        else:
-            rss = _sum_sq(swr, rdm_cols)
-            dof = max(n - k_total, 1)
-            res.V = [S_inv * (float(es) / dof) for es in rss]
+        res.V = _exact_V(
+            _append_residuals(sw, dm_y, dm_x, b_x),
+            [f"resid_{d}" for d in dm_y], dm_x, np.linalg.pinv(G_dm), n,
+            len(x_used) + k_absorbed, cluster, robust,
+        )
         res.v_coef_names = list(x_used)
     # Gram + variance are done with the sweep table; nothing returned
     # references it (back-fit reads the original df), so release the
@@ -2070,7 +1894,10 @@ def wls(
     regardless of data size. Variance (``estimate_variance=True``) is
     the classic known-weights GLS form ``V = σ̂² (X'WX)⁻¹`` with
     ``σ̂² = Σ wᵢeᵢ² / (n − k)``, where ``Σ we²`` comes closed-form from
-    the same pass (``y'Wy − 2b'X'Wy + b'X'WX b``) — no residual scan.
+    the same pass (``y'Wy − 2b'X'Wy + b'X'WX b``, `_rss_from_moments`)
+    — no residual scan unless its cancellation guard trips (R² ≈ 1, or
+    a large un-centered level such as y ≈ 1e8 + signal), when one
+    exact weighted residual scan over the same mask replaces it.
 
     NULL contract (listwise deletion, ADVICE r12; NaN-as-missing,
     ADVICE r13): the estimating sample is the rows where the weight,
@@ -2118,11 +1945,7 @@ def wls(
         )
 
     n = int(row["__n"] or 0)
-    G = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            v = row[f"__g_{i}_{j}"]
-            G[i, j] = G[j, i] = 0.0 if v is None else float(v)
+    G = _sym_from_row(row, k, "__g_")
     Xty = np.zeros((k, m))
     for i in range(k):
         for j in range(m):
@@ -2134,14 +1957,17 @@ def wls(
         b=b, coef_names=list(x_cols), x_cols=list(x_cols), plan="wls", n=n,
     )
     if estimate_variance:
-        G_inv = np.linalg.pinv(G)
-        dof = max(n - k, 1)
-        res.V = []
-        for j in range(m):
-            yy = float(row[f"__yy_{j}"] or 0.0)
-            bj = b[:, j]
-            wrss = yy - 2.0 * float(bj @ Xty[:, j]) + float(bj @ G @ bj)
-            res.V.append(G_inv * (max(wrss, 0.0) / dof))
+        yy = [float(row[f"__yy_{j}"] or 0.0) for j in range(m)]
+        wrss = _rss_from_moments(yy, Xty, G, b)
+        if wrss is None:
+            # Guard trip (e.g. y ≈ 1e8 + signal): one exact weighted
+            # residual scan over the same listwise mask.
+            wrss = _sum_sq(
+                _append_residuals(df.filter(valid), y_cols, x_cols, b),
+                [f"resid_{yc}" for yc in y_cols],
+                weight=weights,
+            )
+        res.V = _homoskedastic_V(np.linalg.pinv(G), wrss, n, k)
         res.v_coef_names = list(x_cols)
     return res
 
@@ -2169,9 +1995,10 @@ def iv_2sls(
     ``Z'y``, ``X'X``, ``X'y``, ``y'y``, ``n`` — and the driver does
     kz×k linear algebra. The 2SLS residual is against the ORIGINAL X
     (the 2SLS convention), and its sum of squares comes closed-form
-    from the collected blocks (``y'y − 2b'X'y + b'X'X b``), so
-    variance needs no second scan: ``V = σ̂² (X'P_Z X)⁻¹``,
-    ``σ̂² = Σe²/(n − k)``. ``first_stage`` on the result is the
+    from the collected blocks (``y'y − 2b'X'y + b'X'X b``,
+    `_rss_from_moments`), so variance needs no second scan unless the
+    cancellation guard trips (then one exact residual scan over the
+    same mask): ``V = σ̂² (X'P_Z X)⁻¹``, ``σ̂² = Σe²/(n − k)``. ``first_stage`` on the result is the
     (kz × k) matrix ``(Z'Z)⁻¹ Z'X`` of first-stage coefficients.
     """
     y_cols = _as_list(y)
@@ -2192,7 +2019,7 @@ def iv_2sls(
             " instrument — an endogenous regressor cannot instrument"
             " itself"
         )
-    k, kz, m = len(x_cols), len(z_cols), len(y_cols)
+    k = len(x_cols)
 
     # Moment blocks over the union of needed pairs, one aggregation.
     pairs: dict[tuple[str, str], str] = {}
@@ -2247,14 +2074,15 @@ def iv_2sls(
     res.first_stage = A @ ZX
     res.first_stage_names = (list(z_cols), list(x_cols))
     if estimate_variance:
-        XPX_inv = np.linalg.pinv(XPX)
-        dof = max(n - k, 1)
-        res.V = []
-        for j in range(m):
-            yy = _m(y_cols[j], y_cols[j])
-            bj = b[:, j]
-            rss = yy - 2.0 * float(bj @ Xy[:, j]) + float(bj @ XX @ bj)
-            res.V.append(XPX_inv * (max(rss, 0.0) / dof))
+        rss = _rss_from_moments([_m(yc, yc) for yc in y_cols], Xy, XX, b)
+        if rss is None:
+            # Guard trip: one exact residual scan (against the original
+            # X) over the same listwise mask.
+            rss = _sum_sq(
+                _append_residuals(df.filter(valid), y_cols, x_cols, b),
+                [f"resid_{yc}" for yc in y_cols],
+            )
+        res.V = _homoskedastic_V(np.linalg.pinv(XPX), rss, n, k)
         res.v_coef_names = list(x_cols)
     return res
 
@@ -2272,8 +2100,9 @@ def fit_stats(
     (reghdfe's ``R² within``): y and x are demeaned inside each FE
     level by one window pass, absorbing the G level means; without
     FEs the data is centered once (the intercept-model equivalent,
-    G = 1) using closed-form centered moments — no window, no second
-    scan. Either way the demeaned/centered Gram (x's AND y in one
+    G = 1) using closed-form centered moments — no window, and a
+    second (literal-mean centering) scan only when a centered
+    diagonal fails the cancellation guard. Either way the demeaned/centered Gram (x's AND y in one
     ``gram_matrix`` pass) gives everything closed-form:
     ``RSS = ỹ'ỹ − b'X̃'ỹ``, ``TSS = ỹ'ỹ``,
     ``R² = 1 − RSS/TSS``,
@@ -2370,13 +2199,27 @@ def fit_stats(
         s = np.array(
             [float(row[f"__s_{i}"] or 0.0) for i in range(len(cols))]
         )
-        M = np.zeros((len(cols), len(cols)))
-        for i in range(len(cols)):
-            for j in range(i, len(cols)):
-                v = row[f"__g_{i}_{j}"]
-                M[i, j] = M[j, i] = 0.0 if v is None else float(v)
+        raw = _sym_from_row(row, len(cols), "__g_")
         mean = s / max(n, 1)
-        M = M - n * np.outer(mean, mean)
+        M = raw - n * np.outer(mean, mean)
+        # Cancellation guard (the FE branch's rule): a centered
+        # diagonal must keep ~8 safe digits against Σc² — y ≈ 1e8 +
+        # signal cancels them all. On a trip, center each row in a
+        # second pass with the means folded in as literals (no window:
+        # one group would run on a single partition).
+        if any(
+            raw[i, i] > 0.0 and not M[i, i] > raw[i, i] * 1e-8
+            for i in range(len(cols))
+        ):
+            centered = df.filter(valid).select(
+                *[
+                    (F.col(c) - F.lit(float(mu))).alias(f"__c_{i}")
+                    for i, (c, mu) in enumerate(zip(cols, mean))
+                ]
+            )
+            M, _, _ = gram_matrix(
+                centered, [f"__c_{i}" for i in range(len(cols))]
+            )
         n_groups = 1
 
     G_dm = M[:k, :k]

@@ -314,3 +314,67 @@ def test_multi_outcome(reg_df, reg_pdf):
     assert res.b.shape[1] == 2
     b_y, _ = _local_within(reg_pdf, y_col="y", x_cols=("x2",))
     np.testing.assert_allclose(res.slopes[:, 0], b_y, rtol=1e-8)
+
+
+# ----------------------- closed-form RSS / centering cancellation guards
+
+
+@pytest.fixture(scope="module")
+def offset_pdf():
+    """``y = 1e8 + 0.5·x + e``: the un-centered level dominates every
+    raw second moment, so closed-form RSS and centering cancel."""
+    rng = np.random.RandomState(23)
+    n = 20_000
+    z = rng.randn(n)
+    x = z + rng.randn(n)
+    y = 1e8 + 0.5 * x + rng.randn(n)
+    return pd.DataFrame({"one": 1.0, "w": 1.0, "x": x, "z": z, "y": y})
+
+
+@pytest.fixture(scope="module")
+def offset_df(spark, offset_pdf):
+    return spark.createDataFrame(offset_pdf)
+
+
+def test_wls_variance_survives_large_offset(offset_df, offset_pdf):
+    from hdfe_spark.operators.estimate import wls
+
+    res = wls(offset_df, "y", ["one", "x"], weights="w", estimate_variance=True)
+    X = offset_pdf[["one", "x"]].to_numpy()
+    y = offset_pdf["y"].to_numpy()
+    b = np.linalg.solve(X.T @ X, X.T @ y)
+    e = y - X @ b
+    V_want = np.linalg.inv(X.T @ X) * float(e @ e) / (len(y) - 2)
+    np.testing.assert_allclose(res.b[:, 0], b, rtol=1e-9)
+    np.testing.assert_allclose(res.V[0], V_want, rtol=1e-6)
+
+
+def test_iv_2sls_variance_survives_large_offset(offset_df, offset_pdf):
+    from hdfe_spark.operators.estimate import iv_2sls
+
+    res = iv_2sls(offset_df, "y", "x", "z", x_exog="one", estimate_variance=True)
+    X = offset_pdf[["x", "one"]].to_numpy()
+    Z = offset_pdf[["z", "one"]].to_numpy()
+    y = offset_pdf["y"].to_numpy()
+    PX = Z @ np.linalg.solve(Z.T @ Z, Z.T @ X)
+    b = np.linalg.solve(PX.T @ X, PX.T @ y)
+    e = y - X @ b
+    V_want = np.linalg.inv(PX.T @ X) * float(e @ e) / (len(y) - 2)
+    # the raw-moment solve itself loses a few digits to the offset
+    np.testing.assert_allclose(res.b[:, 0], b, rtol=1e-7)
+    np.testing.assert_allclose(res.V[0], V_want, rtol=1e-6)
+
+
+def test_fit_stats_pooled_survives_large_offset(offset_df, offset_pdf):
+    from hdfe_spark.operators.estimate import fit_stats
+
+    got = fit_stats(offset_df, "y", ["x"])
+    xc = offset_pdf["x"].to_numpy() - offset_pdf["x"].mean()
+    yc = offset_pdf["y"].to_numpy() - offset_pdf["y"].mean()
+    b = float(xc @ yc) / float(xc @ xc)
+    tss = float(yc @ yc)
+    rss = float((yc - b * xc) @ (yc - b * xc))
+    assert got["n"] == len(yc)
+    np.testing.assert_allclose(got["tss"], tss, rtol=1e-6)
+    np.testing.assert_allclose(got["rss"], rss, rtol=1e-6)
+    np.testing.assert_allclose(got["r2"], 1.0 - rss / tss, rtol=1e-6)

@@ -238,14 +238,23 @@ def test_cluster_onepass_parity(panel, panel_pdf):
     assert fast.v_coef_names == ["x1", "x2"]
 
 
-def test_cluster_onepass_declines_nulls(panel):
+def test_cluster_onepass_declines_nulls(panel, count_jobs):
+    """NULL input declines the one-pass sandwich; the job counts pin
+    which path each call took (one pass on clean data, the exact
+    Gram + residual-scan path after the decline)."""
     with_null = panel.withColumn(
         "x1", F.when(F.col("id") == 3, F.lit(None)).otherwise(F.col("x1"))
     )
     assert (
-        E._pooled_cluster_onepass(with_null, "y", ["x1", "x2"], "g", False, 1e-9)
+        E._pooled_sandwich_onepass(with_null, "y", ["x1", "x2"], ["g"], False, 1e-9)
         is None
     )
+    for frame, jobs in ((panel, 3), (with_null, 8)):
+        assert count_jobs(
+            lambda: E.estimate(
+                frame, "y", ["x1", "x2"], estimate_variance=True, cluster="g"
+            )
+        ) == jobs
 
 
 def test_cluster_onepass_null_input_same_answer(panel):

@@ -1,5 +1,5 @@
 """Round-15 optimization guards: two-way (CGM) cluster-robust
-one-pass sandwich (`_pooled_cluster2_onepass`).
+one-pass sandwich (`_pooled_sandwich_onepass` with two keys).
 
 Same contract as the one-way guards in test_opt_r15.py: the
 optimization must be invisible in results — every test pins the
@@ -56,12 +56,19 @@ def test_cluster2_onepass_parity(panel, panel_pdf):
     assert fast.n == len(panel_pdf)
 
 
-def test_cluster2_onepass_triggers_on_clean_data(panel):
-    res = E._pooled_cluster2_onepass(
-        panel, "y", ["x1", "x2"], "g", "h", False, 1e-9
+def test_cluster2_onepass_triggers_on_clean_data(panel, count_jobs):
+    res = E._pooled_sandwich_onepass(
+        panel, "y", ["x1", "x2"], ["g", "h"], False, 1e-9
     )
     assert res is not None
     assert res.n == 400
+    # key probe, pair table + its reduction, the two threaded roll-ups
+    assert count_jobs(
+        lambda: E.estimate(
+            panel, "y", ["x1", "x2"], estimate_variance=True,
+            cluster=["g", "h"],
+        )
+    ) == 6
 
 
 def test_cluster2_onepass_declines_nulls_and_nans(panel, spark):
@@ -69,8 +76,8 @@ def test_cluster2_onepass_declines_nulls_and_nans(panel, spark):
         "x1", F.when(F.col("id") == 3, F.lit(None)).otherwise(F.col("x1"))
     )
     assert (
-        E._pooled_cluster2_onepass(
-            with_null, "y", ["x1", "x2"], "g", "h", False, 1e-9
+        E._pooled_sandwich_onepass(
+            with_null, "y", ["x1", "x2"], ["g", "h"], False, 1e-9
         )
         is None
     )
@@ -79,8 +86,8 @@ def test_cluster2_onepass_declines_nulls_and_nans(panel, spark):
         F.when(F.col("id") == 5, F.lit(float("nan"))).otherwise(F.col("y")),
     )
     assert (
-        E._pooled_cluster2_onepass(
-            with_nan, "y", ["x1", "x2"], "g", "h", False, 1e-9
+        E._pooled_sandwich_onepass(
+            with_nan, "y", ["x1", "x2"], ["g", "h"], False, 1e-9
         )
         is None
     )

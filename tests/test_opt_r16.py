@@ -50,25 +50,39 @@ def _frame(spark, rows, schema):
 # ------------------------------------------------ se_cluster2 pair gate
 
 
-def test_cluster2_pair_gate_declines_row_identity_keys(panel):
+def test_cluster2_pair_gate_declines_row_identity_keys(panel, count_jobs):
     """pairs ≈ rows (id × g is row-identity here) → the gate sends the
     call down the exact four-pass path (one-pass returns None)."""
     assert (
-        E._pooled_cluster2_onepass(
-            panel, "y", ["x1", "x2"], "id", "g", False, 1e-9
+        E._pooled_sandwich_onepass(
+            panel, "y", ["x1", "x2"], ["id", "g"], False, 1e-9
         )
         is None
     )
+    # the key probe, the Gram, then the three score/meat aggregations
+    # (AQE runs each shuffle stage as its own job)
+    assert count_jobs(
+        lambda: E.estimate(
+            panel, "y", ["x1", "x2"], estimate_variance=True,
+            cluster=["id", "g"],
+        )
+    ) == 13
 
 
-def test_cluster2_pair_gate_passes_low_cardinality_keys(panel):
+def test_cluster2_pair_gate_passes_low_cardinality_keys(panel, count_jobs):
     """pairs ≪ rows (13×5 = 65 pairs / 400 rows) → one-pass still
     selected through the gate."""
-    res = E._pooled_cluster2_onepass(
-        panel, "y", ["x1", "x2"], "g", "h", False, 1e-9
+    res = E._pooled_sandwich_onepass(
+        panel, "y", ["x1", "x2"], ["g", "h"], False, 1e-9
     )
     assert res is not None
     assert res.n == 400
+    assert count_jobs(
+        lambda: E.estimate(
+            panel, "y", ["x1", "x2"], estimate_variance=True,
+            cluster=["g", "h"],
+        )
+    ) == 6
 
 
 def test_cluster2_gate_ratio_env_override(panel, panel_pdf, monkeypatch):
@@ -76,8 +90,8 @@ def test_cluster2_gate_ratio_env_override(panel, panel_pdf, monkeypatch):
     keys, and its values still match numpy OLS + the CGM sandwich (the
     r15 parity contract is independent of the gate)."""
     monkeypatch.setenv("HDFE_CLUSTER2_PAIR_RATIO", "1.1")
-    assert E._pooled_cluster2_onepass(
-        panel, "y", ["x1", "x2"], "id", "g", False, 1e-9
+    assert E._pooled_sandwich_onepass(
+        panel, "y", ["x1", "x2"], ["id", "g"], False, 1e-9
     ) is not None
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True,
@@ -342,15 +356,28 @@ def test_pooled_onepass_rank_repair_parity(panel, panel_pdf):
         assert np.allclose(fast.V[0], V, rtol=1e-7)
 
 
-def test_pooled_onepass_triggers_on_clean_data(panel):
+def test_pooled_onepass_triggers_on_clean_data(panel, count_jobs):
     assert (
-        E._pooled_hc1_onepass(panel, "y", ["x1", "x2"], False, 1e-9)
+        E._pooled_sandwich_onepass(panel, "y", ["x1", "x2"], [], False, 1e-9)
         is not None
     )
     assert (
         E._pooled_homosked_onepass(panel, ["y"], ["x1", "x2"], False, 1e-9)
         is not None
     )
+    # One pass on clean data; a NULL declines to the Gram + residual
+    # scan path, whose job count shows it ran.
+    bad = panel.withColumn(
+        "x2",
+        F.when(F.col("id") == 11, F.lit(None)).otherwise(F.col("x2")),
+    )
+    for extra in ({}, {"robust": True}):
+        for frame, jobs in ((panel, 2), (bad, 6)):
+            assert count_jobs(
+                lambda: E.estimate(
+                    frame, "y", ["x1", "x2"], estimate_variance=True, **extra
+                )
+            ) == jobs
 
 
 # --------------------------------------------- _spread_by_keys probing
