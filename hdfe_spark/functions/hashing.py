@@ -15,6 +15,11 @@ Hash family: polynomial rolling hash over UTF-8 bytes,
 ``h(g) = Σ b_j·B^(k-1-j) (mod 2^64)``; MinHash fns are the standard
 affine family ``h_i = a_i·h + c_i (mod 2^64)`` with seeded odd
 multipliers (2-universal enough for sketching).
+
+One per-document kernel, ``_sketcher``, computes the shingle set, the
+min-hash signature and the LSH band digests; ``make_minhash_udf``,
+``make_minhash_bands_udf``, ``make_minhash_bands_and_set_udf`` and
+``make_kgram_set_udf`` are thin wrappers that pick its outputs.
 """
 
 from __future__ import annotations
@@ -27,6 +32,16 @@ from pyspark.sql import types as T
 _BASE = np.uint64(1099511628211)  # FNV prime as polynomial base
 
 
+def _base_powers(n: int) -> np.ndarray:
+    """``[B^(n-1), ..., B, 1]`` (mod 2^64) for the polynomial hash."""
+    powers = np.empty(n, dtype=np.uint64)
+    powers[-1] = np.uint64(1)
+    with np.errstate(over="ignore"):  # mod-2^64 wraparound is intended
+        for j in range(n - 2, -1, -1):
+            powers[j] = powers[j + 1] * _BASE
+    return powers
+
+
 def kgram_hashes_np(text: str, k: int) -> np.ndarray:
     """uint64 hashes of every char k-gram (UTF-8 bytes), vectorized:
     one cumulative polynomial pass + window recombination."""
@@ -37,12 +52,8 @@ def kgram_hashes_np(text: str, k: int) -> np.ndarray:
     with np.errstate(over="ignore"):
         d = data.astype(np.uint64)
         # windows[i] = sum_{j<k} d[i+j] * B^(k-1-j)  via sliding dot
-        powers = np.empty(k, dtype=np.uint64)
-        powers[-1] = np.uint64(1)
-        for j in range(k - 2, -1, -1):
-            powers[j] = powers[j + 1] * _BASE
         win = np.lib.stride_tricks.sliding_window_view(d, k)
-        out = (win * powers[None, :]).sum(axis=1, dtype=np.uint64)
+        out = (win * _base_powers(k)[None, :]).sum(axis=1, dtype=np.uint64)
     # xorshift finalize to decorrelate adjacent grams
     out = out ^ (out >> np.uint64(33))
     with np.errstate(over="ignore"):
@@ -120,28 +131,59 @@ def _affine_params(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, c
 
 
+def _sketcher(shingle_k: int, num_hashes: int = 0, bands: int = 0, seed: int = 42):
+    """The one per-document MinHash kernel behind every ``make_*``
+    factory below: returns ``sketch(text) -> (shingles, signature,
+    band_digests)``, all uint64 arrays.
+
+    - ``shingles``: sorted distinct char ``shingle_k``-gram hashes of
+      the lowercased text (NULL and short texts give an empty set);
+    - ``signature``: the ``num_hashes`` affine min-hashes of that set,
+      all zeros for an empty set (``None`` when ``num_hashes == 0``);
+    - ``band_digests``: one digest per band — a polynomial hash of the
+      band's slice of the signature, finalized and salted with the
+      band index so identical slices in different bands never collide
+      (``None`` when ``bands == 0``). Two documents share a band digest
+      iff they agree on every min-hash in that band.
+    """
+    a, c = _affine_params(num_hashes, seed)
+    band_pows = _base_powers(num_hashes // bands) if bands else None
+
+    def sketch(text):
+        h = np.unique(kgram_hashes_np((text or "").lower(), shingle_k))
+        if not num_hashes:
+            return h, None, None
+        if h.size == 0:
+            m = np.zeros(num_hashes, dtype=np.uint64)
+        else:
+            with np.errstate(over="ignore"):
+                m = (a[:, None] * h[None, :] + c[:, None]).min(axis=1)
+        if not bands:
+            return h, m, None
+        with np.errstate(over="ignore"):
+            sl = m.reshape(bands, band_pows.size)
+            digs = (sl * band_pows[None, :]).sum(axis=1, dtype=np.uint64)
+            digs = digs ^ (digs >> np.uint64(33))
+            digs = digs * np.uint64(0xC4CEB9FE1A85EC53)
+            digs = digs + np.arange(bands, dtype=np.uint64)
+        return h, m, digs
+
+    return sketch
+
+
+def _int64_lists(arrays) -> pd.Series:
+    return pd.Series([x.astype(np.int64).tolist() for x in arrays])
+
+
 def make_minhash_udf(num_hashes: int = 64, shingle_k: int = 5, seed: int = 42):
     """Returns a pandas UDF: text → array<bigint> MinHash signature.
-
-    Empty/short texts get the all-zeros signature (parity with the
-    JVM fallback in dedup.minhash_signature's coalesce-to-0)."""
-    a, c = _affine_params(num_hashes, seed)
+    NULL, empty and shorter-than-``shingle_k`` texts get the all-zeros
+    signature."""
+    sketch = _sketcher(shingle_k, num_hashes, seed=seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([0] * num_hashes)
-                continue
-            h = np.unique(kgram_hashes_np(t.lower(), shingle_k))
-            if h.size == 0:
-                out.append([0] * num_hashes)
-                continue
-            with np.errstate(over="ignore"):
-                m = (a[:, None] * h[None, :] + c[:, None]).min(axis=1)
-            out.append(m.astype(np.int64).tolist())
-        return pd.Series(out)
+        return _int64_lists(sketch(t)[1] for t in texts)
 
     return sig
 
@@ -150,43 +192,15 @@ def make_minhash_bands_udf(
     num_hashes: int = 64, bands: int = 16, shingle_k: int = 5, seed: int = 42
 ):
     """Returns a pandas UDF: text → array<bigint> of ``bands`` band
-    digests (the LSH bucketing keys). Band digest = polynomial hash of
-    the band's slice of the MinHash signature, so two docs share a
-    band digest iff they agree on every min-hash in that band.
+    digests (the LSH bucketing keys; see :func:`_sketcher`).
     Computed inside one UDF because Python UDF columns cannot feed
     higher-order JVM lambdas (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_
     WITH_PYTHON_UDF)."""
-    a, c = _affine_params(num_hashes, seed)
-    rows_per_band = num_hashes // bands
-    band_pows = np.empty(rows_per_band, dtype=np.uint64)
-    band_pows[-1] = np.uint64(1)
-    with np.errstate(over="ignore"):  # mod-2^64 wraparound is intended
-        for j in range(rows_per_band - 2, -1, -1):
-            band_pows[j] = band_pows[j + 1] * _BASE
+    sketch = _sketcher(shingle_k, num_hashes, bands, seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_sig(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                h = np.empty(0, dtype=np.uint64)
-            else:
-                h = np.unique(kgram_hashes_np(t.lower(), shingle_k))
-            if h.size == 0:
-                m = np.zeros(num_hashes, dtype=np.uint64)
-            else:
-                with np.errstate(over="ignore"):
-                    m = (a[:, None] * h[None, :] + c[:, None]).min(axis=1)
-            with np.errstate(over="ignore"):
-                sl = m.reshape(bands, rows_per_band)
-                digs = (sl * band_pows[None, :]).sum(axis=1, dtype=np.uint64)
-                digs = digs ^ (digs >> np.uint64(33))
-                digs = digs * np.uint64(0xC4CEB9FE1A85EC53)
-                # salt with band index so identical slices in different
-                # bands never collide across bands
-                digs = digs + np.arange(bands, dtype=np.uint64)
-            out.append(digs.astype(np.int64).tolist())
-        return pd.Series(out)
+        return _int64_lists(sketch(t)[2] for t in texts)
 
     return band_sig
 
@@ -198,19 +212,13 @@ def make_minhash_bands_and_set_udf(
     ``struct(bands array<bigint>, shingles array<bigint>)`` in ONE
     Arrow pass. ``bands`` is bit-identical to
     :func:`make_minhash_bands_udf`; ``shingles`` to
-    :func:`make_kgram_set_udf`. Both start from the same
-    ``unique(kgram_hashes)`` set, which the unfused pipeline computed
-    four times per corpus (bands twice for the LSH self-join's two
-    sides, the shingle set twice for the verify join's two sides);
-    computing it once and persisting the compact signature table
-    removes three full text scans + Arrow passes from near-dedup."""
-    a, c = _affine_params(num_hashes, seed)
-    rows_per_band = num_hashes // bands
-    band_pows = np.empty(rows_per_band, dtype=np.uint64)
-    band_pows[-1] = np.uint64(1)
-    with np.errstate(over="ignore"):
-        for j in range(rows_per_band - 2, -1, -1):
-            band_pows[j] = band_pows[j + 1] * _BASE
+    :func:`make_kgram_set_udf`. Both start from the same shingle set,
+    which the unfused pipeline computed four times per corpus (bands
+    twice for the LSH self-join's two sides, the shingle set twice for
+    the verify join's two sides); computing it once and persisting the
+    compact signature table removes three full text scans + Arrow
+    passes from near-dedup."""
+    sketch = _sketcher(shingle_k, num_hashes, bands, seed)
 
     @F.pandas_udf(
         T.StructType(
@@ -221,28 +229,13 @@ def make_minhash_bands_and_set_udf(
         )
     )
     def bands_and_set(texts: pd.Series) -> pd.DataFrame:
-        out_b, out_s = [], []
-        for t in texts:
-            if t is None:
-                h = np.empty(0, dtype=np.uint64)
-            else:
-                h = np.unique(kgram_hashes_np(t.lower(), shingle_k))
-            # shingle set: kset semantics ((t or "") — identical for
-            # None input: empty array)
-            out_s.append(h.astype(np.int64).tolist())
-            if h.size == 0:
-                m = np.zeros(num_hashes, dtype=np.uint64)
-            else:
-                with np.errstate(over="ignore"):
-                    m = (a[:, None] * h[None, :] + c[:, None]).min(axis=1)
-            with np.errstate(over="ignore"):
-                sl = m.reshape(bands, rows_per_band)
-                digs = (sl * band_pows[None, :]).sum(axis=1, dtype=np.uint64)
-                digs = digs ^ (digs >> np.uint64(33))
-                digs = digs * np.uint64(0xC4CEB9FE1A85EC53)
-                digs = digs + np.arange(bands, dtype=np.uint64)
-            out_b.append(digs.astype(np.int64).tolist())
-        return pd.DataFrame({"bands": out_b, "shingles": out_s})
+        sk = [sketch(t) for t in texts]
+        return pd.DataFrame(
+            {
+                "bands": _int64_lists(x[2] for x in sk),
+                "shingles": _int64_lists(x[0] for x in sk),
+            }
+        )
 
     return bands_and_set
 
@@ -252,14 +245,11 @@ def make_kgram_set_udf(shingle_k: int = 5):
     char k-gram hashes — the set representation used for exact
     Jaccard. Same Jaccard value as string-shingle sets up to 2^-64
     collisions."""
+    sketch = _sketcher(shingle_k)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def kset(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            h = np.unique(kgram_hashes_np((t or "").lower(), shingle_k))
-            out.append(h.astype(np.int64).tolist())
-        return pd.Series(out)
+        return _int64_lists(sketch(t)[0] for t in texts)
 
     return kset
 

@@ -7,20 +7,78 @@ are the basket-shaped sibling of `text.pmi_bigrams` — the same
 transactions, user item sets, or per-document tag sets, and a
 curation primitive (topic co-occurrence before sampling).
 
-Scale contract: candidate pairs come from a within-basket self-join,
-so the materialized pair volume is sum over baskets of |basket|² —
-LINEAR when baskets are bounded (the retail/tag regime this is for),
-quadratic in the largest basket otherwise (the `dbscan_grid` density
-caveat, stated loudly in the docstring); cap or pre-trim oversized
-baskets upstream. Every emitted statistic is either an exact BIGINT
-count or ONE IEEE division/product of exact counts — no float
-summation anywhere, so a SQL oracle mirrors it bit-for-bit.
+Scale contract: candidate pairs come from a within-basket self-join
+(the shared pair kernel `setjoin._posting_pairs`, with items as ids
+and baskets as keys), so the materialized pair volume is sum over
+baskets of |basket|² — LINEAR when baskets are bounded (the
+retail/tag regime this is for), quadratic in the largest basket
+otherwise (the `dbscan_grid` density caveat, stated loudly in the
+docstring); cap or pre-trim oversized baskets upstream. Every
+emitted statistic is either an exact BIGINT count or ONE IEEE
+division/product of exact counts — no float summation anywhere, so a
+SQL oracle mirrors it bit-for-bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from hdfe_spark.operators.setjoin import _posting_pairs
+
+
+def _cooccurrence(
+    df: DataFrame,
+    basket_col: str,
+    item_col: str,
+    min_count: int,
+    names: tuple[str, str, str, str],
+) -> tuple[DataFrame, DataFrame]:
+    """The shared front half of `assoc_rules` and `item_cf`:
+    ``(incidence, rows)`` where ``incidence`` is the distinct
+    (``__b``, ``__i``) table of non-NULL baskets and items, eagerly
+    checkpointed, and ``rows`` holds both directions of every item
+    pair co-occurring in >= ``min_count`` baskets, as columns
+    ``names[0]``, ``names[1]``, ``n_ab``, ``names[2]``, ``names[3]``
+    (item, other item, pair count, item margin, other margin).
+
+    The incidence is materialized once: it feeds several plan
+    branches (the margins, both sides of the pair join, and the
+    caller's basket count), so without it the distinct shuffle
+    recomputes per branch, and a non-deterministic source could make
+    a basket count disagree with the pair counts it divides (the
+    anova_oneway one-action convention)."""
+    bi = (
+        df.filter(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
+        .select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    margins = bi.groupBy("__i").agg(F.count(F.lit(1)).cast("long").alias("__n"))
+
+    def margin(side):
+        return margins.select(
+            F.col("__i").alias(f"id_{side}"), F.col("__n").alias(f"__n{side}")
+        )
+
+    counted = (
+        _posting_pairs(bi, "__i", ["__b"])
+        .filter(F.col("n_shared") >= F.lit(int(min_count)))
+        .join(margin("a"), "id_a")
+        .join(margin("b"), "id_b")
+    )
+    x, y, nx, ny = names
+
+    def direction(p, q):
+        return counted.select(
+            F.col(f"id_{p}").alias(x),
+            F.col(f"id_{q}").alias(y),
+            F.col("n_shared").alias("n_ab"),
+            F.col(f"__n{p}").alias(nx),
+            F.col(f"__n{q}").alias(ny),
+        )
+
+    return bi, direction("a", "b").unionByName(direction("b", "a"))
 
 
 def assoc_rules(
@@ -52,69 +110,15 @@ def assoc_rules(
     support, confidence, lift. NULL baskets/items are excluded."""
     if min_count < 1:
         raise ValueError("assoc_rules: min_count must be >= 1")
-    bi = (
-        df.filter(
-            F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
-        )
-        .select(
-            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-        )
-        .distinct()
-        # materialize once: the distinct pair table feeds FOUR plan
-        # branches (N, item margins, both self-join sides) — without
-        # this the distinct shuffle recomputes per branch AND a
-        # non-deterministic source could make N disagree with the
-        # pair counts it divides (the anova_oneway one-action
-        # convention)
-        .localCheckpoint(eager=True)
+    bi, both = _cooccurrence(
+        df, basket_col, item_col, min_count,
+        ("antecedent", "consequent", "n_a", "n_b"),
     )
     n_baskets = bi.agg(
         F.count_distinct("__b").cast("long")
     ).collect()[0][0]
     if not n_baskets:
         raise ValueError("assoc_rules: no baskets")
-    item_counts = bi.groupBy("__i").agg(
-        F.count(F.lit(1)).cast("long").alias("__n")
-    )
-    pairs = (
-        bi.alias("l")
-        .join(bi.alias("r"), "__b")
-        .filter(F.col("l.__i") < F.col("r.__i"))
-        .groupBy(
-            F.col("l.__i").alias("__ia"), F.col("r.__i").alias("__ib")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= F.lit(int(min_count)))
-    )
-    counted = (
-        pairs.join(
-            item_counts.select(
-                F.col("__i").alias("__ia"), F.col("__n").alias("__na")
-            ),
-            "__ia",
-        )
-        .join(
-            item_counts.select(
-                F.col("__i").alias("__ib"), F.col("__n").alias("__nb")
-            ),
-            "__ib",
-        )
-    )
-    both = counted.select(
-        F.col("__ia").alias("antecedent"),
-        F.col("__ib").alias("consequent"),
-        "n_ab",
-        F.col("__na").alias("n_a"),
-        F.col("__nb").alias("n_b"),
-    ).unionByName(
-        counted.select(
-            F.col("__ib").alias("antecedent"),
-            F.col("__ia").alias("consequent"),
-            "n_ab",
-            F.col("__nb").alias("n_a"),
-            F.col("__na").alias("n_b"),
-        )
-    )
     nf = F.lit(float(int(n_baskets)))
     return both.select(
         "antecedent",
@@ -152,11 +156,11 @@ def item_cf(
     and this operator SELECTS the per-item top-k rather than
     emitting every rule.
 
-    Plan (100 TB shape): identical front half to `assoc_rules` —
-    distinct (basket, item) incidence (one shuffle), a basket-keyed
-    self-join bounded by sum-of-|basket|^2 (the dbscan density
-    caveat: cap oversized baskets upstream), pair counts >=
-    ``min_count``, two item-margin joins — then ONE window ranking
+    Plan (100 TB shape): the same front half as `assoc_rules`
+    (`_cooccurrence`) — distinct (basket, item) incidence (one
+    shuffle), a basket-keyed self-join bounded by sum-of-|basket|^2
+    (the dbscan density caveat: cap oversized baskets upstream), pair
+    counts >= ``min_count``, two item-margin joins — then ONE window ranking
     partitioned per item over its candidate neighbors (bounded by
     the co-occurring vocabulary, never the corpus). Counts are
     exact BIGINTs; cosine is n_ab / sqrt(n_a*n_b) where sqrt is
@@ -172,57 +176,10 @@ def item_cf(
         raise ValueError("item_cf: min_count must be >= 1")
     if k < 1:
         raise ValueError("item_cf: k must be >= 1")
-    bi = (
-        df.filter(
-            F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
-        )
-        .select(
-            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-        )
-        .distinct()
-        # one materialization, three consumers (margins + both join
-        # sides) — the assoc_rules convention
-        .localCheckpoint(eager=True)
-    )
-    item_counts = bi.groupBy("__i").agg(
-        F.count(F.lit(1)).cast("long").alias("__n")
-    )
-    pairs = (
-        bi.alias("l")
-        .join(bi.alias("r"), "__b")
-        .filter(F.col("l.__i") < F.col("r.__i"))
-        .groupBy(
-            F.col("l.__i").alias("__ia"), F.col("r.__i").alias("__ib")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .filter(F.col("n_ab") >= F.lit(int(min_count)))
-    )
-    counted = pairs.join(
-        item_counts.select(
-            F.col("__i").alias("__ia"), F.col("__n").alias("__na")
-        ),
-        "__ia",
-    ).join(
-        item_counts.select(
-            F.col("__i").alias("__ib"), F.col("__n").alias("__nb")
-        ),
-        "__ib",
-    )
-    both = counted.select(
-        F.col("__ia").alias("item"),
-        F.col("__ib").alias("neighbor"),
-        "n_ab",
-        F.col("__na").alias("n_item"),
-        F.col("__nb").alias("n_neighbor"),
-    ).unionByName(
-        counted.select(
-            F.col("__ib").alias("item"),
-            F.col("__ia").alias("neighbor"),
-            "n_ab",
-            F.col("__nb").alias("n_item"),
-            F.col("__na").alias("n_neighbor"),
-        )
-    )
+    both = _cooccurrence(
+        df, basket_col, item_col, min_count,
+        ("item", "neighbor", "n_item", "n_neighbor"),
+    )[1]
     cos = F.col("n_ab").cast("double") / F.sqrt(
         F.col("n_item").cast("double") * F.col("n_neighbor").cast("double")
     )

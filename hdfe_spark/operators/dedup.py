@@ -22,8 +22,13 @@ Scale design:
 - **SimHash** (Charikar 2002): 64-bit signature via bit-vote over
   token hashes; near-dup = identical signature, or banded 16-bit
   chunks for Hamming ≤ 3-style candidates.
-- **n-gram Jaccard** is the exact verifier applied to candidate pairs
-  (array_intersect/array_union on shingle sets).
+- **n-gram Jaccard** is the exact verifier applied to candidate pairs:
+  sorted int64 char-shingle hash sets compared by the Arrow
+  ``make_jaccard_udf`` (``np.intersect1d``), shared by
+  ``ngram_jaccard_pairs`` and ``minhash_dedup`` (``_jaccard_verify``).
+- Every candidate pair built from a posting table (MinHash band
+  buckets, containment shingles) comes from the one pair kernel
+  ``setjoin._posting_pairs``.
 - **Embedding near-dup**: normalized vectors, random-hyperplane LSH
   buckets, exact cosine verify within bucket (see similarity.py for
   the shared vector helpers).
@@ -36,6 +41,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hdfe_spark.operators.setjoin import _check_unit_interval, _posting_pairs
 
 
 # Query-scoped persists (optimization r16, ADVICE r15): Spark has no
@@ -150,6 +157,17 @@ def minhash_signature(
     return make_minhash_udf(num_hashes=num_hashes, shingle_k=shingle_k)(text)
 
 
+def _check_bands(op: str, num_hashes: int, bands: int) -> None:
+    """Driver-side guard: the signature splits into ``bands`` equal bands."""
+    if bands < 1:
+        raise ValueError(f"{op}: bands must be >= 1, got {bands!r}")
+    if num_hashes < 1 or num_hashes % bands:
+        raise ValueError(
+            f"{op}: num_hashes must be a positive multiple of bands "
+            f"({bands}), got {num_hashes!r}"
+        )
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -163,12 +181,12 @@ def minhash_candidate_pairs(
     One Arrow pass computes all band digests per doc; one shuffle on
     (band index, band hash); a self-join *within buckets only*.
     Oversized buckets (pathological collisions) are handled by AQE
-    skew-join splitting.
+    skew-join splitting. ``num_hashes`` must be a multiple of ``bands``.
     """
     from hdfe_spark.functions.hashing import make_minhash_bands_udf
-
     from hdfe_spark.session import py_stage_partitions
 
+    _check_bands("minhash_candidate_pairs", num_hashes, bands)
     par = py_stage_partitions(df.sparkSession)
     band_udf = make_minhash_bands_udf(num_hashes, bands, shingle_k)
     banded = (
@@ -179,25 +197,24 @@ def minhash_candidate_pairs(
             F.posexplode(band_udf(F.col(text_col))).alias("band", "band_hash"),
         )
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("band_matches"))
+    return _posting_pairs(banded, id_col, ["band", "band_hash"]).withColumnRenamed(
+        "n_shared", "band_matches"
     )
-    return pairs
+
+
+def _jaccard_verify(pairs: DataFrame, sets: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` with an exact ``jaccard`` column: both sides' sorted
+    int64 shingle sets (``sets``: ``id_col``, ``__sh``) joined on
+    ``id_a`` / ``id_b`` and compared by the Arrow Jaccard kernel."""
+    from hdfe_spark.functions.hashing import make_jaccard_udf
+
+    jac = make_jaccard_udf()
+    return (
+        pairs.join(sets.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")), on="id_a")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")), on="id_b")
+        .withColumn("jaccard", jac(F.col("__sh_a"), F.col("__sh_b")))
+        .drop("__sh_a", "__sh_b")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -218,8 +235,7 @@ def ngram_jaccard_pairs(
     # to string sets up to 2^-64 collisions). Repartition first: the
     # fixture tables are single parquet files → a single task would
     # otherwise serialize all per-doc hashing on one core.
-    from hdfe_spark.functions.hashing import make_jaccard_udf, make_kgram_set_udf
-
+    from hdfe_spark.functions.hashing import make_kgram_set_udf
     from hdfe_spark.session import py_stage_partitions
 
     par = py_stage_partitions(df.sparkSession)
@@ -231,20 +247,12 @@ def ngram_jaccard_pairs(
     )
     # Fused signature table (optimization r16, guide §1.2/§4 — the
     # minhash_dedup r15 rewrite applied here): without the persist the
-    # two joins below each evaluate their own copy of the Arrow
+    # two verify joins each evaluate their own copy of the Arrow
     # shingle pass (the UDF sits above the reusable exchange), so the
     # corpus is hashed twice per call. One query-scoped persisted pass
     # feeds both sides; hashes are identical, so every jaccard is
     # bit-identical.
-    sets = _query_scoped_persist(sets)
-    jac = make_jaccard_udf()
-    out = (
-        pairs.join(sets.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")), on="id_a")
-        .join(sets.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")), on="id_b")
-        .withColumn("jaccard", jac(F.col("__sh_a"), F.col("__sh_b")))
-        .drop("__sh_a", "__sh_b")
-    )
-    return out
+    return _jaccard_verify(pairs, _query_scoped_persist(sets), id_col)
 
 
 def minhash_dedup(
@@ -270,13 +278,12 @@ def minhash_dedup(
     (id, band digests, shingle set) in a single Arrow pass, persists it
     for the duration of the query, and runs the LSH self-join +
     exact-Jaccard verify off it — identical band digests and shingle
-    hashes, so the surviving set is bit-identical to the composition."""
-    from hdfe_spark.functions.hashing import (
-        make_jaccard_udf,
-        make_minhash_bands_and_set_udf,
-    )
+    hashes, so the surviving set is bit-identical to the composition.
+    ``num_hashes`` must be a multiple of ``bands``."""
+    from hdfe_spark.functions.hashing import make_minhash_bands_and_set_udf
     from hdfe_spark.session import py_stage_partitions
 
+    _check_bands("minhash_dedup", num_hashes, bands)
     par = py_stage_partitions(df.sparkSession)
     fused = make_minhash_bands_and_set_udf(num_hashes, bands, shingle_k)
     sig = _query_scoped_persist(
@@ -293,34 +300,9 @@ def minhash_dedup(
         F.col(id_col),
         F.posexplode("__bands").alias("band", "band_hash"),
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    jac = make_jaccard_udf()
+    cand = _posting_pairs(banded, id_col, ["band", "band_hash"]).select("id_a", "id_b")
     losers = (
-        cand.join(
-            sig.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a")),
-            on="id_a",
-        )
-        .join(
-            sig.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b")),
-            on="id_b",
-        )
-        .withColumn("jaccard", jac(F.col("__sh_a"), F.col("__sh_b")))
+        _jaccard_verify(cand, sig, id_col)
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
@@ -745,9 +727,13 @@ def containment_pairs(
     self-equi-join on the shingle + one grouped count; the join key
     skews on stop-shingles at corpus scale — AQE skew splitting
     handles the hot keys, and the shuffle moves (doc, shingle)
-    pairs, never text.
+    pairs, never text. Each unordered pair is counted once
+    (``_posting_pairs``) and then emitted in both directions.
+    ``threshold`` must be in (0, 1].
     """
     from hdfe_spark.operators.text import shingles
+
+    _check_unit_interval("containment_pairs", "threshold", threshold)
 
     # Hoist lower() behind a projection boundary (optimization r16,
     # guide §1.2): the char-shingle transform lambda substr's its text
@@ -783,14 +769,10 @@ def containment_pairs(
     ex = sh.select(F.col(id_col), F.explode_outer("__s").alias("__g")).filter(
         F.col("__g").isNotNull()
     )
-    a = ex.select(F.col(id_col).alias("id_a"), "__g")
-    b = ex.select(F.col(id_col).alias("id_b"), "__g")
-    common = (
-        a.join(b, "__g")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-    )
+    once = _posting_pairs(ex, id_col, ["__g"])
+    common = once.unionByName(
+        once.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "n_shared")
+    ).withColumnRenamed("n_shared", "n_common")
     out = common.join(
         sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed(
             "__size", "size_a"

@@ -35,14 +35,53 @@ on *prefix* shingles only is a lossless candidate generator:
 No Python in any hot path: shingling, ordering, prefix slicing, and
 exact Jaccard verification are all JVM codegen expressions
 (``transform`` / ``slice`` / ``array_intersect``).
+
+One pair kernel for the set-similarity family
+---------------------------------------------
+``_posting_pairs(postings, id_col, keys)`` is the single place where
+candidate pairs are generated from a posting table: an equi-join on
+``keys`` with ``id_a < id_b`` in the join condition, then one
+``groupBy(id_a, id_b).count()`` as ``n_shared``. Its contract is that
+``postings`` holds each ``(id, keys)`` row at most once, so
+``n_shared`` is the number of distinct keys the two ids share; NULL
+ids and NULL keys never pair. ``minhash_candidate_pairs``,
+``minhash_dedup`` and ``containment_pairs`` (``dedup.py``),
+``fingerprint_neardup_pairs`` (``text.py``), ``setsim_join`` and
+``assoc_rules`` / ``item_cf`` (``basket.py``) all route through it.
+Two pair operators stay outside it on purpose:
+``dedup.simhash_neardup_pairs`` and ``fuzzy.fuzzy_pairs`` carry a
+payload through the join and verify on the joined row.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfe_spark.operators.text import tokens
+
+
+def _posting_pairs(postings: DataFrame, id_col: str, keys: Sequence[str]) -> DataFrame:
+    """``(id_a, id_b, n_shared)`` for every pair of ids with
+    ``id_a < id_b`` that share at least one posting key; ``n_shared``
+    counts the shared ``keys`` tuples. ``postings`` must be distinct
+    per ``(id_col, *keys)`` (see the module docstring)."""
+    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        postings.alias("a")
+        .join(postings.alias("b"), cond)
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+
+
+def _check_unit_interval(op: str, name: str, value: float) -> None:
+    """Driver-side guard for a similarity threshold: ``0 < value <= 1``."""
+    if not 0.0 < value <= 1.0:
+        raise ValueError(f"{op}: {name} must be in (0, 1], got {value!r}")
 
 
 def _shingles(t, k: int):
@@ -128,8 +167,10 @@ def setsim_join(
     distinct shingles (hash agg), document frequency (hash agg),
     frequency-order join (equi-join on shingle; AQE may broadcast),
     per-document sort+slice (hash agg on id), prefix self-join
-    (equi-join on shingle), pair distinct, two id-keyed verify joins.
+    (equi-join on shingle, ``_posting_pairs``), two id-keyed verify
+    joins. ``tau`` must be in (0, 1].
     """
+    _check_unit_interval("setsim_join", "tau", tau)
     # Hoisted token array (see word_shingle_frame): tokens() runs once
     # per row, not once per shingle. The explode is explode_outer +
     # isNotNull-on-output because InferFiltersFromGenerate's
@@ -172,15 +213,7 @@ def setsim_join(
         "id", F.explode(F.slice("set", F.lit(1), p)).alias("tok")
     )
 
-    cand = (
-        prefixes.alias("a")
-        .join(
-            prefixes.alias("b"),
-            (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _posting_pairs(prefixes, "id", ["tok"]).select("id_a", "id_b")
 
     sets = ordered.select("id", "set", "n")
     inter = F.size(F.array_intersect("sa.set", "sb.set"))

@@ -568,14 +568,21 @@ def fingerprint_neardup_pairs(
 
     Plan shape: fingerprint (Arrow kernel, no shuffle) → explode to
     (fingerprint, id) postings → self-join within equal-fingerprint
-    postings only → per-pair count. Cost scales with posting-list
-    collisions, never O(n²); a pathologically common fingerprint (a
-    boilerplate phrase) is the skew knob — drop postings whose list
-    exceeds ``HDFE_MAX_POSTING`` df-frequency (stop-fingerprint
-    removal, the standard fix).
+    postings only → per-pair count (``setjoin._posting_pairs``). Cost
+    scales with posting-list collisions, never O(n²); a pathologically
+    common fingerprint (a boilerplate phrase) is the skew knob — drop
+    postings whose list exceeds ``HDFE_MAX_POSTING`` df-frequency
+    (stop-fingerprint removal, the standard fix). ``min_shared`` must
+    be >= 1.
     """
     import os
 
+    from hdfe_spark.operators.setjoin import _posting_pairs
+
+    if min_shared < 1:
+        raise ValueError(
+            f"fingerprint_neardup_pairs: min_shared must be >= 1, got {min_shared!r}"
+        )
     max_posting = int(os.environ.get("HDFE_MAX_POSTING", 1000))
     fp = doc_fingerprint(df, text_col, k=k, window=window).select(
         F.col(id_col), F.explode("fingerprint").alias("__fp")
@@ -586,20 +593,9 @@ def fingerprint_neardup_pairs(
         counts.filter(F.col("__df") <= max_posting).select("__fp"),
         on="__fp",
     )
-    a, b = fp.alias("a"), fp.alias("b")
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.__fp") == F.col("b.__fp"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared_fingerprints"))
+        _posting_pairs(fp, id_col, ["__fp"])
+        .withColumnRenamed("n_shared", "shared_fingerprints")
         .filter(F.col("shared_fingerprints") >= min_shared)
     )
 

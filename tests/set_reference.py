@@ -1,7 +1,7 @@
 """Brute-force Python references for the set-similarity operators:
 word shingles, all-pairs Jaccard and containment, cross-document
-duplicated n-gram spans. Plain sets and loops over every pair —
-nothing here calls ``hdfe_spark``.
+duplicated n-gram spans, posting-list pair counts. Plain sets and
+loops over every pair — nothing here calls ``hdfe_spark``.
 
 The tokenizer matches the engine's contract (lowercase, split on
 whitespace, drop empty tokens); the test corpora are ASCII, where
@@ -81,4 +81,21 @@ def dup_ngram_spans(docs, k):
         out.append(
             (i, len(gs), n_dup, float(frac.quantize(Decimal("1e-6"), ROUND_HALF_UP)))
         )
+    return sorted(out)
+
+
+def posting_pairs(postings):
+    """``(id_a, id_b, n_shared)`` for every id_a < id_b sharing at least
+    one key, from ``(id, key_tuple)`` postings: ``n_shared`` counts the
+    distinct shared key tuples. A NULL id, or a key tuple holding a
+    NULL, never pairs (SQL equality)."""
+    keys = {}
+    for i, key in postings:
+        if i is not None and None not in key:
+            keys.setdefault(i, set()).add(key)
+    out = []
+    for a, b in combinations(sorted(keys), 2):
+        n = len(keys[a] & keys[b])
+        if n:
+            out.append((a, b, n))
     return sorted(out)

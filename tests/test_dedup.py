@@ -33,6 +33,35 @@ def planted_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+_BAD_PAIR_ARGS = [
+    ("setsim_join", {"tau": 0.0}, "tau"),
+    ("setsim_join", {"tau": 1.5}, "tau"),
+    ("containment_pairs", {"threshold": 0}, "threshold"),
+    ("containment_pairs", {"threshold": 1.2}, "threshold"),
+    ("fingerprint_neardup_pairs", {"min_shared": 0}, "min_shared"),
+    ("minhash_candidate_pairs", {"num_hashes": 100, "bands": 16}, "num_hashes"),
+    ("minhash_candidate_pairs", {"bands": 0}, "bands"),
+    ("minhash_dedup", {"num_hashes": 100, "bands": 16}, "num_hashes"),
+    ("minhash_dedup", {"bands": 0}, "bands"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, arg",
+    _BAD_PAIR_ARGS,
+    ids=[f"{op}-{arg}={kw[arg]}" for op, kw, arg in _BAD_PAIR_ARGS],
+)
+def test_pair_operator_arguments_validated_on_driver(planted_docs, op, kwargs, arg):
+    """Out-of-contract arguments raise at call time, naming the
+    operator and the argument, instead of returning a partial pair set
+    or failing later inside a Spark task."""
+    from hdfe_spark.operators import dedup, setjoin, text
+
+    fn = next(getattr(m, op) for m in (dedup, setjoin, text) if hasattr(m, op))
+    with pytest.raises(ValueError, match=rf"^{op}: {arg} must"):
+        fn(planted_docs, **kwargs)
+
+
 def test_exact_dedup(planted_docs):
     out = exact_dedup(planted_docs, "text", id_col="doc_id").toPandas()
     assert sorted(out["doc_id"]) == [0, 2, 3, 4]  # min-id survivor

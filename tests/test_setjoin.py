@@ -6,8 +6,9 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from hdfe_spark.operators.setjoin import setsim_join, shingle_array
+from hdfe_spark.operators.setjoin import _posting_pairs, setsim_join, shingle_array
 from hdfe_spark.operators.text import dup_ngram_spans
+from set_reference import posting_pairs
 
 
 def _brute_pairs(rows, tau, k):
@@ -81,3 +82,27 @@ def test_dup_ngram_spans_short_doc_zero(spark):
     df = spark.createDataFrame([(1, "too short"), (2, "too short")], ["doc_id", "text"])
     out = {r.doc_id: r for r in dup_ngram_spans(df, k=8).collect()}
     assert out[1].n_grams == 0 and out[1].n_dup == 0 and out[1].dup_frac == 0.0
+
+
+def test_posting_pairs_matches_brute_force(spark):
+    """The one pair kernel against brute-force set intersection, on
+    string ids (ordered as strings: "d10" < "d2"), a NULL key, a NULL
+    id, the MinHash (band, band_hash) two-column key and ids that
+    share several keys."""
+    rows = [
+        ("d1", 0, 11), ("d1", 1, 12), ("d1", 2, 13), ("d1", 3, 14),
+        ("d2", 0, 11), ("d2", 1, 12), ("d2", 2, 99), ("d2", 3, 14),
+        ("d10", 0, 11), ("d10", 2, 13),
+        ("d3", 1, None), ("d4", 1, None),  # NULL keys never match
+        ("d5", 1, 12),
+        (None, 0, 11), (None, 1, 12),  # a NULL id never pairs
+        ("d6", 2, 98), ("d7", 5, 12),  # share nothing / key parts only
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, band int, band_hash long")
+    for keys in (["band", "band_hash"], ["band_hash"]):
+        got = sorted(tuple(r) for r in _posting_pairs(df, "doc_id", keys).collect())
+        want = posting_pairs(
+            (i, tuple(dict(band=b, band_hash=h)[k] for k in keys)) for i, b, h in rows
+        )
+        assert got == want, keys
+    assert ("d1", "d2", 3) in want and ("d10", "d2", 1) in want
