@@ -178,8 +178,11 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """LSH candidate pairs ``(id_a < id_b, band_matches)``.
 
-    One Arrow pass computes all band digests per doc; one shuffle on
-    (band index, band hash); a self-join *within buckets only*.
+    One Arrow pass computes all band digests per doc, and a
+    query-scoped persist lets both sides of the self-join read it (the
+    UDF sits above the exchange, so exchange reuse cannot share it);
+    one shuffle on (band index, band hash); a self-join *within
+    buckets only*.
     Oversized buckets (pathological collisions) are handled by AQE
     skew-join splitting. ``num_hashes`` must be a multiple of ``bands``.
     """
@@ -189,7 +192,7 @@ def minhash_candidate_pairs(
     _check_bands("minhash_candidate_pairs", num_hashes, bands)
     par = py_stage_partitions(df.sparkSession)
     band_udf = make_minhash_bands_udf(num_hashes, bands, shingle_k)
-    banded = (
+    banded = _query_scoped_persist(
         df.select(id_col, text_col)
         .repartition(par, F.col(id_col))
         .select(

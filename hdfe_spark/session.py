@@ -9,6 +9,35 @@ the DuckDB oracle.
 At cluster scale the same builder works — only ``master`` and the
 memory knobs change; ``spark.sql.shuffle.partitions`` should then be
 sized to ~2-3× total cores and AQE left on to coalesce.
+
+Session contract
+----------------
+:func:`get_spark` also selects the engine's Python worker daemon,
+``spark.python.daemon.module = hdfe_spark._pyworker``, and puts this
+package's root on the workers' path (``spark.executorEnv.PYTHONPATH``,
+which Spark adds to the daemon's ``PYTHONPATH``), so the daemon and
+every UDF imports this package whatever directory the process was
+launched from. Every Python task (``pandas_udf``, ``applyInPandas``,
+``mapInArrow``) runs pyspark's ``setup_spark_files``, whose
+``importlib.invalidate_caches()`` makes CPython 3.11/3.12 re-read every
+zip archive on the worker path: ``pyspark.zip`` and the Spark core jar,
+~0.2 s per task. The daemon re-reads an archive only when it changed
+(see ``_pyworker``). A session built elsewhere — by a harness that then
+calls ``entry(spark)``, or ``ORACLE_VANILLA=1 tools/check_oracle.py`` —
+keeps Spark's default daemon and pays the re-read. ``extra_conf``
+overrides every setting here, these two included.
+
+Some set-similarity operators (``minhash_candidate_pairs``,
+``minhash_dedup``, ``ngram_jaccard_pairs``, ``setsim_join``,
+``dup_ngram_spans``) persist a signature table so that every consumer
+in the query reads one pass. Those persists stay in the cache until
+more than ``HDFE_SCOPED_PERSIST_CAP`` (default 8) are outstanding, when
+the oldest are dropped. In a long session, call
+``hdfe_spark.operators.dedup.release_query_caches()`` once a query's
+results are collected or written, as ``perfbench/run.py`` does after
+every step. Do not call it between building a lazy frame and running
+it: the values stay the same, but each consumer then recomputes the
+signature pass.
 """
 
 from __future__ import annotations
@@ -16,6 +45,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The Python worker daemon, and the package root on the workers' path so
+# that the daemon and the UDFs import this package from any launch cwd.
+_WORKER_CONF = {
+    "spark.python.daemon.module": "hdfe_spark._pyworker",
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+}
 
 
 def py_stage_partitions(
@@ -75,7 +113,10 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
-    32). Explicit arguments override environment.
+    32). Explicit arguments override environment. The Python worker
+    daemon and the workers' path are set as the module docstring's
+    session contract says; ``extra_conf`` is applied last and
+    overrides them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -102,7 +143,7 @@ def get_spark(
         # needed (see streaming/ops.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_WORKER_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -81,6 +81,36 @@ def test_minhash_candidates_find_near_dup(planted_docs):
     assert (0, 2) in got or (1, 2) in got  # near dup collides in some band
 
 
+def test_minhash_candidate_pairs_evaluates_band_udf_once(planted_docs, spark, monkeypatch):
+    """Both sides of the band self-join read one Arrow pass: the band
+    UDF sees each document once per query, not once per join side."""
+    from pyspark.sql import types as T
+
+    from hdfe_spark.functions import hashing
+    from hdfe_spark.operators.dedup import release_query_caches
+
+    seen = spark.sparkContext.accumulator(0)
+    make = hashing.make_minhash_bands_udf
+
+    def counted(*args, **kwargs):
+        band_sig = make(*args, **kwargs).func
+
+        @F.pandas_udf(T.ArrayType(T.LongType()))
+        def counted_band_sig(texts: pd.Series) -> pd.Series:
+            seen.add(len(texts))
+            return band_sig(texts)
+
+        return counted_band_sig
+
+    monkeypatch.setattr(hashing, "make_minhash_bands_udf", counted)
+    try:
+        pairs = minhash_candidate_pairs(planted_docs, num_hashes=64, bands=32).collect()
+    finally:
+        release_query_caches()
+    assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs}
+    assert seen.value == planted_docs.count()
+
+
 def test_ngram_jaccard(planted_docs, spark):
     pairs = spark.createDataFrame(
         [(0, 1), (0, 2), (0, 3)], "id_a long, id_b long"

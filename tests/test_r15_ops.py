@@ -10,6 +10,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hdfe_spark.operators.stats import (
+    _bayes_ab_escape,
     _bayes_ab_exact,
     _bayes_ab_normal,
     bayes_ab,
@@ -66,9 +67,11 @@ def test_bayes_ab_unknown_method_raises(spark):
 
 # ------------------------------------------------ the pinned bound
 #
-# The docstring advertises |exact − normal| <= 0.6/sqrt(min
+# The docstring advertises |exact − escape| <= 0.6/sqrt(min
 # posterior n). Hypothesis sweeps the count × rate grid (driver-side
 # scalar math only — no Spark session needed, so the sweep is cheap).
+# Where the escape answers "normal", its value is the plain normal
+# formula, so the bound holds for that formula there.
 
 
 @settings(max_examples=200, deadline=None)
@@ -81,9 +84,23 @@ def test_bayes_ab_normal_escape_error_bound(n, pa, pb):
     s_a, s_b = int(round(n * pa)), int(round(n * pb))
     aA, bA = 1 + s_a, 1 + n - s_a
     aB, bB = 1 + s_b, 1 + n - s_b
-    err = abs(_bayes_ab_exact(aA, bA, aB, bB)
-              - _bayes_ab_normal(aA, bA, aB, bB))
+    p, method = _bayes_ab_escape(aA, bA, aB, bB)
+    if method == "normal":
+        assert p == _bayes_ab_normal(aA, bA, aB, bB)
+    err = abs(_bayes_ab_exact(aA, bA, aB, bB) - p)
     assert err <= 0.6 / math.sqrt(min(aA + bA, aB + bB))
+
+
+def test_bayes_ab_short_cook_sum_reports_exact(spark):
+    # 0 vs 2 successes of 400: the plain normal formula misses the
+    # bound on such skewed posteriors, so the escape takes the short
+    # Cook sum, and the method column says so
+    r = bayes_ab(_df(spark, 400, 0, 400, 2), "arm", "s", "A", "B",
+                 method="normal").collect()[0]
+    assert r["method"] == "exact"
+    assert r["p_b_beats_a"] == _bayes_ab_exact(1, 401, 3, 399)
+    assert abs(_bayes_ab_normal(1, 401, 3, 399) - r["p_b_beats_a"]) > (
+        0.6 / math.sqrt(402))
 
 
 def test_bayes_ab_swap_identity_scalar():

@@ -10,5 +10,5 @@ set -e
 cd "$(dirname "$0")/.."
 tag="${1:-local}"
 ORACLE_VANILLA=1 python -u tools/check_oracle.py 2>&1 \
-  | tr '\r' '\n' | grep -E "^(ok|FAIL|ERR|[0-9]+ ok)" \
+  | tr '\r' '\n' | grep -E "^(ok|FAIL|ERR|rows-only|[0-9]+ ok)" \
   | tee "GATELOG_${tag}.txt"
