@@ -78,7 +78,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import os as _os_env
-import re as _re
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -89,6 +88,7 @@ from hdfe_spark.operators.collinearity import (
     gram_matrix,
 )
 from hdfe_spark.operators.encoding import make_dummies
+from hdfe_spark.session import _already_exchanged
 
 
 def _as_list(x) -> list[str]:
@@ -837,29 +837,7 @@ def _spread_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     for itself. Only applied to shuffle-free plans (anything already
     exchanged is already wide; probing ``.rdd`` there would eagerly
     execute upstream stages under AQE)."""
-    try:
-        lp = df._jdf.queryExecution().logical().toString()
-    except Exception:
-        return df
-    # Classify by the NODE NAME at the start of each tree line, not by
-    # raw substring containment (review r16): the plan string also
-    # prints user identifiers, so a column named e.g. 'SortKey' would
-    # otherwise make a shuffle-free scan look exchanged and silently
-    # disable the spread. Tree-drawing prefixes are spaces and
-    # ':+-|'; unresolved nodes carry a leading apostrophe.
-    nodes = {
-        m.group(1)
-        for m in _re.finditer(r"(?m)^[\s:+\-|]*'?([A-Za-z][A-Za-z0-9]*)", lp)
-    }
-    if nodes & {
-        "Window",
-        "Aggregate",
-        "Join",
-        "Sort",
-        "Repartition",
-        "RepartitionByExpression",
-        "RebalancePartitions",
-    }:
+    if _already_exchanged(df):
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

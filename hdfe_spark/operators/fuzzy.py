@@ -100,9 +100,10 @@ def fuzzy_pairs(
     text prefixes spread over thousands of case-folded bigrams; a
     low-alphabet corpus concentrates them — hex digests have only
     256 possible bigrams, which at 4M rows measured >1e10 candidate
-    pairs (killed; tools/stress_r10b.py). For hash-like keys use
-    `exact_dedup` (digest equality) instead — edit distance on
-    uniform hashes is meaningless anyway."""
+    pairs (killed; SCALE.md, the `fuzzy.er_cluster` row of the
+    round-10 second batch). For hash-like keys use `exact_dedup`
+    (digest equality) instead — edit distance on uniform hashes is
+    meaningless anyway."""
     norm = F.substring(
         F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "),
         1,

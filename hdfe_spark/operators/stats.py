@@ -6379,18 +6379,29 @@ def _bayes_ab_escape(aA: int, bA: int, aB: int, bB: int) -> tuple:
 
     A posterior with only a handful of successes (or failures) is too
     skewed for the normal approximation's bound: on equal arms of
-    n = 4,000 with 0-4 successes its error is up to 3.5× it. So when
-    the shorter Cook sum — over the alphas, or over the betas by
+    n = 4,000 with 0-4 successes its error is up to 3.5× it. On equal
+    arms the two skews largely cancel; on unequal arms (posterior
+    sizes ``n_lo ≤ n_hi``, ``rho = n_lo / n_hi``) the small arm's skew
+    is left over, and the normal formula misses the bound up to a
+    short-side count that grows linearly in ``n_lo``, by
+    ``(1 − rho)² / (1 + rho)`` (measured: ≈ 0.044 × that × n_lo). So
+    when the shorter Cook sum — over the alphas, or over the betas by
     ``P(p_B > p_A) = P(1 − p_A > 1 − p_B)`` — has at most
-    ``sqrt(min posterior n) / 4`` terms, that sum is taken exactly
-    (O(sqrt(n)) work) and the method is ``"exact"``; otherwise it is
-    :func:`_bayes_ab_normal` and ``"normal"``. On equal arms (n = 50
-    to 40,000, every count ≤ 130 from either end) the largest error
-    is then 0.36× the bound. Unequal arms with few successes can
-    still exceed it."""
+
+    ``k = max(sqrt(n_lo) / 4, n_lo · (1 − rho)² / (16 · (1 + rho)))``
+
+    terms, that sum is taken exactly and the method is ``"exact"``;
+    otherwise it is :func:`_bayes_ab_normal` and ``"normal"``. An
+    exact sum here therefore has at most ``max(sqrt(n_lo) / 4,
+    n_lo / 16)`` terms, and at most ``sqrt(n_lo) / 4`` on equal arms.
+    The largest error is then 0.36× the bound on equal arms (n = 50
+    to 40,000, every count ≤ 130 from either end) and 0.85× on
+    unequal arms (n_lo = 50 to 100,000, size ratios 1.3 to 100)."""
     import math
 
-    k = math.sqrt(min(aA + bA, aB + bB)) / 4
+    n_lo, n_hi = sorted((aA + bA, aB + bB))
+    rho = n_lo / n_hi
+    k = max(math.sqrt(n_lo) / 4, n_lo * (1 - rho) ** 2 / (16 * (1 + rho)))
     if min(aA, aB) <= k:
         return _bayes_ab_exact(aA, bA, aB, bB), "exact"
     if min(bA, bB) <= k:
@@ -6434,8 +6445,8 @@ def bayes_ab(
     column says ``"exact"`` (see ``_bayes_ab_escape``). The escape's
     error is bounded by ``0.6/sqrt(min posterior n)`` (≈ 1.3e-3 at
     the default envelope boundary; observed ≲ 1e-9 for balanced
-    rates there), pinned by a property test over the count×rate
-    grid of equal arms (test_r15_ops). Priors
+    rates there), pinned by property tests over equal and unequal
+    arms (test_r15_ops). Priors
     must be positive integers (the closed form needs an integer sum
     bound).
 

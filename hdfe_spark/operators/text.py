@@ -19,6 +19,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hdfe_spark.session import _already_exchanged
+
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language ID. Deliberately small + deterministic; a production system
 # would swap in fastText — this mirrors common public heuristics
@@ -52,11 +54,7 @@ def _spread(df: DataFrame) -> DataFrame:
     exchanged (window/agg/join/repartition), the data is already
     ``shuffle.partitions`` wide — and probing ``df.rdd`` there would
     eagerly execute the upstream stages under AQE."""
-    lp = df._jdf.queryExecution().logical().toString()
-    if any(
-        k in lp
-        for k in ("Window", "Aggregate", "Join", "Repartition", "Sort")
-    ):
+    if _already_exchanged(df):
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

@@ -43,6 +43,7 @@ signature pass.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -102,6 +103,31 @@ def py_stage_partitions(
         except Exception:
             pass
     return floor
+
+
+# Logical-plan nodes whose output is already shuffle-wide.
+_EXCHANGE_NODES = frozenset({
+    "Window", "Aggregate", "Join", "Sort", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions",
+})
+
+
+def _already_exchanged(df) -> bool:
+    """Whether ``df``'s logical plan already shuffles (a window,
+    aggregate, join, sort or repartition node), so its output is
+    already ``shuffle.partitions`` wide and probing ``df.rdd`` would
+    eagerly run the upstream stages under AQE. Classifies by the node
+    name at the start of each tree line, not by raw substring: the
+    plan string also prints column names and literals (a column
+    ``SortKey``, a filter on ``"Join us"``). Tree-drawing prefixes are
+    spaces and ``:+-|``; unresolved nodes carry a leading apostrophe.
+    A plan that cannot be read counts as exchanged."""
+    try:
+        lp = df._jdf.queryExecution().logical().toString()
+    except Exception:
+        return True
+    nodes = re.findall(r"(?m)^[\s:+\-|]*'?([A-Za-z][A-Za-z0-9]*)", lp)
+    return not _EXCHANGE_NODES.isdisjoint(nodes)
 
 
 def get_spark(

@@ -5,7 +5,7 @@ property-pinned error bound of the normal escape."""
 import math
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -84,6 +84,38 @@ def test_bayes_ab_normal_escape_error_bound(n, pa, pb):
     s_a, s_b = int(round(n * pa)), int(round(n * pb))
     aA, bA = 1 + s_a, 1 + n - s_a
     aB, bB = 1 + s_b, 1 + n - s_b
+    p, method = _bayes_ab_escape(aA, bA, aB, bB)
+    if method == "normal":
+        assert p == _bayes_ab_normal(aA, bA, aB, bB)
+    err = abs(_bayes_ab_exact(aA, bA, aB, bB) - p)
+    assert err <= 0.6 / math.sqrt(min(aA + bA, aB + bB))
+
+
+# Unequal arms: near equal rates the small arm's skew no longer
+# cancels against the large arm's, which is where the plain normal
+# formula misses the bound. B's count is drawn around A's rate.
+@settings(max_examples=200, deadline=None)
+@given(
+    n_a=st.integers(min_value=50, max_value=2000),
+    ratio=st.floats(min_value=1.5, max_value=16.0),
+    s_a=st.integers(min_value=0, max_value=60),
+    d=st.floats(min_value=-1.5, max_value=1.5),
+    failures=st.booleans(),
+)
+@example(n_a=1000, ratio=8.0, s_a=7, d=(64 - 56) / (8 * math.sqrt(8)),
+         failures=False)
+@example(n_a=454, ratio=3356 / 454, s_a=6,
+         d=(45 * 454 / 3356 - 6) / math.sqrt(7), failures=False)
+def test_bayes_ab_escape_error_bound_unequal_arms(n_a, ratio, s_a, d,
+                                                  failures):
+    n_b = round(n_a * ratio)
+    s_a = min(s_a, n_a)
+    s_b = round((s_a + d * math.sqrt(s_a + 1)) * n_b / n_a)
+    s_b = min(max(s_b, 0), n_b)
+    if failures:
+        s_a, s_b = n_a - s_a, n_b - s_b
+    aA, bA = 1 + s_a, 1 + n_a - s_a
+    aB, bB = 1 + s_b, 1 + n_b - s_b
     p, method = _bayes_ab_escape(aA, bA, aB, bB)
     if method == "normal":
         assert p == _bayes_ab_normal(aA, bA, aB, bB)

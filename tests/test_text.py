@@ -336,3 +336,21 @@ def test_extract_fields_parses_log_lines(spark):
     # garbage: every non-string cast nulls out
     bad = out.filter("id IS NULL").collect()
     assert len(bad) == 1 and bad[0]["etype"] == ""
+
+
+def test_token_stats_spreads_past_plan_words_in_names(spark, tmp_path):
+    # A single-split scan is spread to the cluster's cores unless the
+    # plan already shuffles. Column names and literals that spell a
+    # plan node ('Join us', 'SortKey') do not make a plan shuffled.
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs more than one core")
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"doc {i} text", i % 3) for i in range(60)],
+        "doc_id long, text string, SortKey int",
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    out = token_stats(df.filter(F.col("text") != "Join us"))
+    assert out.rdd.getNumPartitions() > 1
+    assert token_stats(df).rdd.getNumPartitions() > 1

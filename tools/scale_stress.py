@@ -1,25 +1,29 @@
-"""Round-16 scaling evidence: the five most expensive headline paths
-at synthetic 10-20M-row scale, 32 vs 8 cores (VERDICT r15 item 3).
+"""Scale harness: the engine's most expensive operator paths on
+deterministic synthetic inputs of 5-20M rows, where they are
+throughput-bound rather than bound by per-query overhead.
 
-The sf0.1 bench cannot resolve parallelism (single-row-group scans,
-0.25-0.45 s per-query fixed overhead — PERF_r15's scaling block is ≈1
-across the board), so this script builds multi-partition synthetic
-inputs large enough that the operators are throughput-bound and
-measures the same operator paths at SPARK_GRAFT_CPUS=32 vs 8. Ratios
-≈ core ratio on throughput-bound paths demonstrate real scaling;
-bench.py itself stays frozen.
+The sf0.1 bench (`bench.py`) and the `perfbench/` workloads cannot
+judge throughput work: their scans are single row groups and each
+query carries a fixed overhead. Two ROADMAP items are judged here
+instead, each at a fixed core count: the MinHash kernel rewrite on
+`minhash_dedup` (400k documents) and the fused FE sweep on `ols_2fe`
+(5M rows, the distributed alternating-projection tier). Its results
+are recorded in SCALE.md.
 
-Inputs are deterministic (spark.range + hash-derived columns, fixed
-partition counts) so the two core-count runs process identical data.
+Inputs are built from spark.range plus hash-derived columns with fixed
+partition counts, so runs at different core counts or commits process
+identical data. Each query runs once to warm up and twice timed; a
+capacity probe (the same construction as bench.py) brackets the run.
+Prints one JSON line: cores, input sizes, times, probes.
 
 Usage:
-  SPARK_GRAFT_CPUS=32 python tools/stress_r16scale.py [query ...] > scale32.json
-  SPARK_GRAFT_CPUS=8  python tools/stress_r16scale.py [query ...] > scale8.json
+  SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEM=6g \
+      python tools/scale_stress.py [query ...] > scale.json
 
-`ols_2fe` runs at N_PANEL/4 (5M rows): the alternating-projection
-solver over 20k partkey levels costs 200-450 s/rep at 20M×32 cores —
-out of the measurement budget — and the core-ratio question is
-answered equally at 5M.
+Queries: ols_2fe, residuals, within_se, token_stats, tfidf_topk,
+minhash_dedup (all when none is named). `ols_2fe` runs at N_PANEL/4
+(5M rows): the alternating-projection solver over 20k partkey levels
+costs 200-450 s a repetition at 20M rows on 32 cores.
 """
 
 from __future__ import annotations
@@ -91,12 +95,12 @@ def docs(spark, n=N_DOCS, parts=64):
 def run(spark, name, build):
     from pyspark.sql import functions as F  # noqa: F401
 
-    spark.sparkContext.setJobDescription(f"stress_r16scale:{name}:warm")
+    spark.sparkContext.setJobDescription(f"scale_stress:{name}:warm")
     _noop(build(spark))
     _clear(spark)
     times = []
     for i in range(2):
-        spark.sparkContext.setJobDescription(f"stress_r16scale:{name}:{i}")
+        spark.sparkContext.setJobDescription(f"scale_stress:{name}:{i}")
         t0 = time.perf_counter()
         _noop(build(spark))
         times.append(round(time.perf_counter() - t0, 3))
@@ -109,7 +113,7 @@ def main():
     from hdfe_spark.session import get_spark
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="stress_r16scale")
+    spark = get_spark(app_name="scale_stress")
     cpus = spark.sparkContext.defaultParallelism
 
     # capacity probe (same construction as bench.py) brackets the run
