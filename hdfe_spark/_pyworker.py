@@ -17,8 +17,13 @@ stat error falls back to the stdlib re-read. The patch goes in before
 the daemon forks, so every worker inherits it. Then the module runs
 ``pyspark.daemon.manager()``. Running under ``-m`` also imports the
 ``hdfe_spark`` package (and with it numpy, pandas and pyarrow) in the
-daemon before it forks. That costs the daemon ~0.5 s at start; whether
-forked workers gain anything from it has not been measured.
+daemon before it forks, so forked workers inherit those modules. The
+daemon itself imports pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``,
+which holds ~1,170 ``.py`` files and no ``.pyc``, so every daemon start
+compiles pyspark from source: ``import hdfe_spark, pyspark.daemon`` takes
+1.5-1.8 s with the zip first on the path against 0.6-0.8 s from an
+installed pyspark 4.1.2 (4-vCPU VM), and the first ``applyInPandas``
+after a session restart pays it. ROADMAP keeps this as an open item.
 """
 
 import importlib

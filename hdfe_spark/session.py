@@ -27,6 +27,21 @@ calls ``entry(spark)``, or ``ORACLE_VANILLA=1 tools/check_oracle.py`` —
 keeps Spark's default daemon and pays the re-read. ``extra_conf``
 overrides every setting here, these two included.
 
+:func:`get_spark` also sets ``spark.sql.codegen.cache.maxEntries`` to
+``CODEGEN_CACHE_ENTRIES`` (1,000), the size of Spark's LRU of compiled
+whole-stage classes. At Spark's default of 100, one bench pass (124
+distinct classes on ``panel_fixture``, ~170 on ``curate_docs``) cycles
+the LRU and the next pass recompiles 117-161 of them, each compile also
+throwing away the JIT work done on the old class; at 1,000 it
+recompiles 0-4. The size is a static setting for the whole JVM, fixed
+by the first code generation in that JVM. A session built elsewhere —
+by a harness that then calls ``entry(spark)``, or ``ORACLE_VANILLA=1
+tools/check_oracle.py`` — keeps Spark's 100. An entry is keyed by its
+generated source (mean 5-11 KB on the bench workloads) and holds the
+loaded classes (2-3 KB of bytecode each). Measured after a full GC, 600
+small one-stage entries held ~19 KB of heap and ~1.5 KB of Metaspace
+each, so a full cache costs a few tens of MB.
+
 Some set-similarity operators (``minhash_candidate_pairs``,
 ``minhash_dedup``, ``ngram_jaccard_pairs``, ``setsim_join``,
 ``dup_ngram_spans``) persist a signature table so that every consumer
@@ -48,6 +63,10 @@ import re
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Entries of Spark's per-JVM generated-code cache; both bench workloads
+# together need ~300 (see the module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 # The Python worker daemon, and the package root on the workers' path so
 # that the daemon and the UDFs import this package from any launch cwd.
@@ -140,9 +159,11 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     32). Explicit arguments override environment. The Python worker
-    daemon and the workers' path are set as the module docstring's
+    daemon, the workers' path and the generated-code cache size
+    (``CODEGEN_CACHE_ENTRIES``) are set as the module docstring's
     session contract says; ``extra_conf`` is applied last and
-    overrides them.
+    overrides them. The cache size takes effect only if this session
+    is built before the JVM's first code generation.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -168,6 +189,7 @@ def get_spark(
         # timestamp_micros(ns div 1000) where a real timestamp is
         # needed (see streaming/ops.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in {**_WORKER_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

@@ -13,8 +13,11 @@ are recorded in SCALE.md.
 Inputs are built from spark.range plus hash-derived columns with fixed
 partition counts, so runs at different core counts or commits process
 identical data. Each query runs once to warm up and twice timed; a
-capacity probe (the same construction as bench.py) brackets the run.
-Prints one JSON line: cores, input sizes, times, probes.
+capacity probe brackets the run. It times bench.py's numpy task alone,
+then `cpus` copies on a `cpus`-wide thread pool (`par{cpus}_sec`), and
+reports `effective_parallelism = cpus * single / par`: on an idle host
+`par{cpus}_sec` is about one task time and the parallelism about
+`cpus`. Prints one JSON line: cores, input sizes, times, probes.
 
 Usage:
   SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEM=6g \
@@ -116,7 +119,7 @@ def main():
     spark = get_spark(app_name="scale_stress")
     cpus = spark.sparkContext.defaultParallelism
 
-    # capacity probe (same construction as bench.py) brackets the run
+    # capacity probe brackets the run (see the module docstring)
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
@@ -132,11 +135,13 @@ def main():
         task(0)
         t_single = time.perf_counter() - t0
         t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=32) as ex:
-            list(ex.map(task, range(32)))
+        with ThreadPoolExecutor(max_workers=cpus) as ex:
+            list(ex.map(task, range(cpus)))
+        t_par = time.perf_counter() - t0
         return {
             "single_task_sec": round(t_single, 4),
-            "par32_sec": round(time.perf_counter() - t0, 4),
+            f"par{cpus}_sec": round(t_par, 4),
+            "effective_parallelism": round(cpus * t_single / t_par, 2),
         }
 
     p0 = probe()
