@@ -10,7 +10,12 @@ Algorithm (same as the reference, re-based onto the Gram):
    Gram is the *only* data-sized computation and it is one distributed
    aggregation — ``k(k+1)/2`` sum-of-products expressions with
    map-side partial aggregation, one shuffle of k×k partials, nothing
-   collected but the k×k result.
+   collected but the k×k result. ``gram_matrix`` is a thin wrapper
+   over ``_moments``, the engine's one moment pass: ``n``, per-column
+   sums and Σ w·cᵢcⱼ, optionally under a listwise mask, a weight, or
+   per group reduced to within-group central moments (with the
+   ``_centered_ok`` digits guard). Every estimator in ``estimate.py``
+   outside the sandwich meat builds its moments through it.
 2. Driver-side: rank of G; if deficient, QR of G and scan the R
    diagonal in column order against ``tol``
    (``hdfe/multicollinearity.py:86-101``). Columns of G carry exactly
@@ -34,10 +39,182 @@ from __future__ import annotations
 
 import warnings
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+
+class _Moments(NamedTuple):
+    """What one `_moments` aggregation returns (driver-side numpy)."""
+
+    n: int  # rows (the ``valid`` rows when a mask is given)
+    s: np.ndarray | None  # per-column Σ w·c (None with ``by``)
+    M: np.ndarray  # Σ w·cᵢcⱼ; with ``by`` the within-group Σ_g(p − sᵢsⱼ/w)
+    ss: np.ndarray  # the raw diagonal Σ w·c²
+    groups: int  # ``by`` groups, a NULL group included (1 without ``by``)
+    bad: bool  # a NULL/NaN flag tripped (``flags=True`` only)
+    row: Row  # the collected row, for the caller's ``extra`` riders
+
+
+def _sym_from_row(row, k: int, prefix: str, full: bool = True) -> np.ndarray:
+    """Symmetric k×k ndarray from the upper-triangle aggregate columns
+    ``{prefix}{i}_{j}`` (i ≤ j; the diagonal alone when not ``full``)
+    of a collected row; NULL reads as 0."""
+    M = np.zeros((k, k))
+    for i in range(k):
+        for j in range(i, k if full else i + 1):
+            v = row[f"{prefix}{i}_{j}"]
+            M[i, j] = M[j, i] = 0.0 if v is None else float(v)
+    return M
+
+
+def _null_nan_flags(df: DataFrame, cols, prefix: str = "__bad") -> list:
+    """``max(isNull | isnan)`` rider expressions for ``cols`` — the
+    missing-value rule of ``estimate._and_complete`` (NaN counts as
+    missing for double/float columns) as aggregate flags, which the
+    moment fast paths read to decide fallback."""
+    dtypes = dict(df.dtypes)
+    out = []
+    for i, c in enumerate(cols):
+        flag = F.col(c).isNull()
+        if dtypes.get(c) in ("double", "float"):
+            flag = flag | F.isnan(F.col(c))
+        out.append(F.max(flag.cast("int")).alias(f"{prefix}_{i}"))
+    return out
+
+
+def _moment_aggs(cols: list, valid=None, weight=None, full: bool = True) -> list:
+    """Aggregate expressions ``__w`` (row count), ``__s_{i}`` (Σ w·cᵢ)
+    and ``__p_{i}_{j}`` (Σ w·cᵢcⱼ, upper triangle; the diagonal alone
+    when not ``full``) over the Column expressions ``cols``, every sum
+    gated by the ``valid`` mask when one is given."""
+
+    def kept(e):
+        return e if valid is None else F.when(valid, e)
+
+    wc = cols if weight is None else [F.col(weight) * c for c in cols]
+    k = len(cols)
+    return [
+        F.count(kept(F.lit(1))).alias("__w"),
+        *[F.sum(kept(wc[i])).alias(f"__s_{i}") for i in range(k)],
+        *[
+            F.sum(kept(wc[i] * cols[j])).alias(f"__p_{i}_{j}")
+            for i in range(k)
+            for j in range(i, k if full else i + 1)
+        ],
+    ]
+
+
+def _moment_cells(
+    df: DataFrame, cols: list[str], by, full: bool = True, flags: bool = False
+) -> DataFrame:
+    """Per-group moment table of `_moments` with ``by``: one row per
+    level of ``by`` with ``__w``, ``__s_{i}``, ``__p_{i}_{j}`` over the
+    columns cast to double (and the ``__bad_{i}`` NULL/NaN flags)."""
+    by = [by] if isinstance(by, str) else list(by)
+    dv = [F.col(c).cast("double") for c in cols]
+    return df.groupBy(*by).agg(
+        *_moment_aggs(dv, full=full),
+        *(_null_nan_flags(df, cols) if flags else []),
+    )
+
+
+def _moments(
+    df: DataFrame,
+    cols: Sequence[str],
+    valid=None,
+    weight: str | None = None,
+    by=None,
+    *,
+    full: bool = True,
+    flags: bool = False,
+    extra: Sequence = (),
+    cells: DataFrame | None = None,
+) -> _Moments:
+    """The engine's one moment pass: ``n``, the per-column sums and the
+    symmetric matrix of Σ w·cᵢcⱼ over ``cols``, from ONE aggregation
+    with map-side partials — only O(k²) numbers reach the driver.
+    ``valid`` and ``weight`` apply without ``by`` only.
+
+    - Without ``by`` every column but a DECIMAL one is cast to double
+      (no long overflow, no float32 products); DECIMAL sums stay
+      exact. NULL products are skipped pair by pair,
+      and ``n`` counts every row — unless ``valid`` is given: then one
+      listwise mask gates every sum and ``n`` counts the masked rows.
+      ``weight`` (a column name) multiplies every sum: ``w·cᵢ·cⱼ``.
+    - With ``by`` the columns are cast to double, a per-group
+      ``(w, Σc, Σcᵢcⱼ)`` table is built (`_moment_cells`, or the
+      prebuilt ``cells``), and a second aggregation over it reduces
+      to the within-group central moments Σ_g(p − sᵢsⱼ/w) — stable
+      because each difference cancels inside its own small group —
+      plus the group count and the raw diagonal ``ss`` = Σc², against
+      which `_centered_ok` checks the digits kept.
+
+    ``full=False`` forms the diagonal only. ``flags=True`` adds the
+    `_null_nan_flags` of ``cols`` (rolled up per group with ``by``).
+    ``extra`` aggregate expressions ride the final aggregation; read
+    them from ``row``.
+    """
+    cols = list(cols)
+    k = len(cols)
+    if by is None:
+        dtypes = dict(df.dtypes)
+        cv = [
+            F.col(c)
+            if dtypes.get(c, "").startswith("decimal")
+            else F.col(c).cast("double")
+            for c in cols
+        ]
+        row = df.agg(
+            *_moment_aggs(cv, valid, weight, full),
+            *(_null_nan_flags(df, cols) if flags else []),
+            *extra,
+        ).collect()[0]
+        M = _sym_from_row(row, k, "__p_", full)
+        s = np.array([float(row[f"__s_{i}"] or 0.0) for i in range(k)])
+        n, groups, ss = int(row["__w"]), 1, np.diag(M).copy()
+    else:
+        if cells is None:
+            cells = _moment_cells(df, cols, by, full, flags)
+        row = cells.agg(
+            F.sum("__w").alias("__n"),
+            F.count(F.lit(1)).alias("__groups"),
+            *[
+                F.sum(
+                    F.col(f"__p_{i}_{j}")
+                    - F.col(f"__s_{i}") * F.col(f"__s_{j}") / F.col("__w")
+                ).alias(f"__win_{i}_{j}")
+                for i in range(k)
+                for j in range(i, k if full else i + 1)
+            ],
+            *[F.sum(f"__p_{i}_{i}").alias(f"__ss_{i}") for i in range(k)],
+            *[F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k) if flags],
+            *extra,
+        ).collect()[0]
+        M = _sym_from_row(row, k, "__win_", full)
+        s = None
+        n, groups = int(row["__n"] or 0), int(row["__groups"])
+        ss = np.array([float(row[f"__ss_{i}"] or 0.0) for i in range(k)])
+    bad = flags and any(int(row[f"__bad_{i}"] or 0) for i in range(k))
+    return _Moments(n, s, M, ss, groups, bad, row)
+
+
+def _centered_ok(M: np.ndarray, ss) -> float | None:
+    """Cancellation guard of a centered (demeaned) moment matrix:
+    every diagonal with ``ssᵢ = Σc² > 0`` must keep ~8 safe digits,
+    ``Mᵢᵢ > 1e-8·ssᵢ`` (y ≈ 1e8 + signal cancels them all). Returns
+    None on a trip, else the digit-loss factor ``max(1, ssᵢ/Mᵢᵢ)`` —
+    the entries of M carry absolute error ~1e-16·ss = 1e-16·loss·Mᵢᵢ,
+    so downstream subtractions scale their own guards by it."""
+    loss = 1.0
+    for i, s in enumerate(ss):
+        if s > 0.0:
+            if not M[i, i] > s * 1e-8:
+                return None
+            loss = max(loss, s / M[i, i])
+    return loss
 
 
 def gram_matrix(
@@ -48,40 +225,14 @@ def gram_matrix(
     """One-pass distributed ``(X'X, X'y, n)``.
 
     Returns ``(G, Xty, n)`` with ``G`` k×k and ``Xty`` k×m (None when
-    ``y_cols`` is None). Single ``agg`` — Catalyst fuses all
-    sum-of-products into one whole-stage-codegen'd partial aggregate;
-    only k(k+1)/2 + k·m + 1 doubles cross the network per partition.
+    ``y_cols`` is None): the x and x-y blocks of one `_moments` pass
+    over ``x_cols + y_cols``. NULL products are skipped pair by pair;
+    ``n`` counts every row.
     """
     x_cols = list(x_cols)
-    y_cols = list(y_cols) if y_cols else []
-    k, m = len(x_cols), len(y_cols)
-
-    exprs = [F.count(F.lit(1)).alias("__n")]
-    for i in range(k):
-        for j in range(i, k):
-            exprs.append(
-                F.sum(F.col(x_cols[i]) * F.col(x_cols[j])).alias(f"__g_{i}_{j}")
-            )
-    for i in range(k):
-        for j in range(m):
-            exprs.append(
-                F.sum(F.col(x_cols[i]) * F.col(y_cols[j])).alias(f"__xy_{i}_{j}")
-            )
-    row = df.agg(*exprs).collect()[0]
-
-    G = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            v = row[f"__g_{i}_{j}"]
-            G[i, j] = G[j, i] = 0.0 if v is None else float(v)
-    Xty = None
-    if m:
-        Xty = np.zeros((k, m))
-        for i in range(k):
-            for j in range(m):
-                v = row[f"__xy_{i}_{j}"]
-                Xty[i, j] = 0.0 if v is None else float(v)
-    return G, Xty, int(row["__n"])
+    k = len(x_cols)
+    mom = _moments(df, x_cols + list(y_cols or []))
+    return mom.M[:k, :k], (mom.M[:k, k:] if y_cols else None), mom.n
 
 
 def find_collinear_cols_gram(

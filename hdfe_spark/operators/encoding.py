@@ -119,28 +119,16 @@ def get_all_dummies(
     if len(cols) == 1:
         return make_dummies(df, cols[0], drop_col=False, output=output)
 
-    if output == "vector":
-        from pyspark.ml.feature import OneHotEncoder, VectorAssembler
-
-        out = df
-        onehot_cols = []
-        for i, c in enumerate(cols):
-            out = factorize(out, c)
-            enc = OneHotEncoder(
-                inputCols=[f"{c}_code"],
-                outputCols=[f"{c}_onehot"],
-                dropLast=(i > 0),
-            )
-            out = enc.fit(out).transform(out)
-            onehot_cols.append(f"{c}_onehot")
-        asm = VectorAssembler(inputCols=onehot_cols, outputCol="dummies")
-        return asm.transform(out), ["dummies"]
-
     out = df
     names: list[str] = []
     for i, c in enumerate(cols):
-        out, n = make_dummies(out, c, drop_col=(i > 0), output="columns")
+        out, n = make_dummies(out, c, drop_col=(i > 0), output=output)
         names += n
+    if output == "vector":
+        from pyspark.ml.feature import VectorAssembler
+
+        asm = VectorAssembler(inputCols=names, outputCol="dummies")
+        return asm.transform(out), ["dummies"]
     return out, names
 
 

@@ -20,7 +20,7 @@ Plans (picked exactly like the reference's dispatch,
   sandwich pass declines to the exact path (Gram, then a residual
   scan) for three reasons: NULL/NaN in (x, y), a cancellation-guard
   trip, or — two-way only — the pair gate (pairs/rows above
-  ``HDFE_CLUSTER2_PAIR_RATIO``).
+  ``_CLUSTER2_PAIR_RATIO``).
 - **Plan B ("within")** — 1 FE (or ``within_if_fe=True``): the
   Frisch–Waugh–Lovell rewrite (``hdfe/hdfe.py:73-120``). FEs #2+
   become drop-last dummy columns appended to x; x is demeaned within
@@ -42,8 +42,18 @@ Plans (picked exactly like the reference's dispatch,
 
 Every data-sized computation is one of: a window aggregate (shuffle on
 the FE key), a grouped aggregate (shuffle on FE/cluster key with
-map-side partials), or the Gram aggregation (map-side partial k×k
-fan-in). Only k×k / (levels×k) matrices reach the driver.
+map-side partials), or a moment pass (map-side partial k×k fan-in).
+Only k×k / (levels×k) matrices reach the driver.
+
+Moments: outside the sandwich meat (`_tensor_agg_exprs`,
+`_cluster_meat`, `_hc1_meat`), every moment matrix comes from the one
+kernel ``collinearity._moments`` — ``n``, per-column sums and Σ w·cᵢcⱼ
+in one aggregation, optionally under a listwise mask, a weight, or
+reduced from a per-group table to within-group central moments — and
+every centered diagonal is checked by the one guard
+``collinearity._centered_ok``. Its callers: `gram_matrix`,
+`_pooled_homosked_onepass`, `_within_moments_gram`, Plan C's cell
+table and gate, `wls`, `iv_2sls` and `fit_stats`.
 
 Variance (``hdfe/hdfe.py:147-181``):
 
@@ -84,6 +94,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hdfe_spark.operators.collinearity import (
+    _centered_ok,
+    _moment_cells,
+    _moments,
+    _null_nan_flags,
+    _sym_from_row,
     find_collinear_cols_gram,
     gram_matrix,
 )
@@ -112,21 +127,6 @@ def _and_complete(valid, df: DataFrame, cols) -> "F.Column":
         if dtypes.get(c) in ("double", "float"):
             valid = valid & ~F.isnan(F.col(c))
     return valid
-
-
-def _null_nan_flags(df: DataFrame, cols, prefix: str = "__bad") -> list:
-    """``max(isNull | isnan)`` rider expressions for ``cols`` — the
-    same dtype-sensitive missing-value rule as ``_and_complete``, as
-    aggregate flags the moment fast paths use to decide fallback
-    (one shared definition; review r15)."""
-    dtypes = dict(df.dtypes)
-    out = []
-    for i, c in enumerate(cols):
-        flag = F.col(c).isNull()
-        if dtypes.get(c) in ("double", "float"):
-            flag = flag | F.isnan(F.col(c))
-        out.append(F.max(flag.cast("int")).alias(f"{prefix}_{i}"))
-    return out
 
 
 def _solve(G: np.ndarray, Xty: np.ndarray) -> np.ndarray:
@@ -262,17 +262,6 @@ def _sum_sq(
 
     row = df.agg(*[F.sum(sq(c)).alias(c) for c in cols]).collect()[0]
     return np.array([float(row[c]) if row[c] is not None else 0.0 for c in cols])
-
-
-def _sym_from_row(row, k: int, prefix: str) -> np.ndarray:
-    """Symmetric k×k ndarray from the upper-triangle aggregate columns
-    ``{prefix}{i}_{j}`` (i ≤ j) of a collected row; NULL reads as 0."""
-    M = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            v = row[f"{prefix}{i}_{j}"]
-            M[i, j] = M[j, i] = 0.0 if v is None else float(v)
-    return M
 
 
 def _rank_repair(G, Xty, check_rank: bool, tol: float, *aligned):
@@ -464,7 +453,10 @@ def estimate(
 
 # Widest regressor block the one-pass cluster-sandwich path will fuse:
 # the second-level aggregation carries O(k⁴) product sums.
-_CLUSTER_FAST_MAX_K = int(_os_env.environ.get("HDFE_CLUSTER_FAST_MAX_K", 4))
+_CLUSTER_FAST_MAX_K = 4
+# The two-way one-pass keeps its pair table only when pairs/rows is at
+# most this: near row-identity keys the table reduces nothing.
+_CLUSTER2_PAIR_RATIO = 0.5
 
 
 def _tensor_agg_exprs(k: int, extra: list | None = None) -> list:
@@ -605,7 +597,7 @@ def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
       pairs ≈ rows (measured +0.6–1.5 s warm at sf0.1 on near-
       row-identity keys), so a key-only probe (approx_count_distinct
       + count, column-pruned at the scan) keeps the one pass only
-      when pairs/rows ≤ ``HDFE_CLUSTER2_PAIR_RATIO`` (default 0.5).
+      when pairs/rows ≤ ``_CLUSTER2_PAIR_RATIO`` (0.5).
     """
     k = len(x_cols)
     P = [(j, l) for j in range(k) for l in range(j, k)]
@@ -647,13 +639,12 @@ def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
         from pyspark import StorageLevel
 
         key_a, key_b = cluster
-        ratio_max = float(_os_env.environ.get("HDFE_CLUSTER2_PAIR_RATIO", "0.5"))
         prow = df.select(key_a, key_b).agg(
             F.approx_count_distinct(F.struct(key_a, key_b)).alias("__pairs"),
             F.count(F.lit(1)).alias("__rows"),
         ).collect()[0]
         n_rows = int(prow["__rows"] or 0)
-        if n_rows == 0 or int(prow["__pairs"] or 0) > ratio_max * n_rows:
+        if n_rows == 0 or int(prow["__pairs"] or 0) > _CLUSTER2_PAIR_RATIO * n_rows:
             return None
         need = list(dict.fromkeys([key_a, key_b, *x_cols, y_col]))
         pair = _blocks(
@@ -722,20 +713,10 @@ def _pooled_homosked_onepass(df, y_cols, x_cols, check_rank, tol):
     moment sums) or when `_rss_from_moments`' cancellation guard
     trips (R² ≈ 1)."""
     k, m = len(x_cols), len(y_cols)
-    all_cols = list(x_cols) + list(y_cols)
-    cv = [F.col(c).cast("double") for c in all_cols]
-    bad_flags = _null_nan_flags(df, all_cols)
-    pairs = [(i, j) for i in range(k + m) for j in range(i, k + m)]
-    row = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *bad_flags,
-        *[F.sum(cv[i] * cv[j]).alias(f"__g_{i}_{j}") for i, j in pairs],
-    )
-    row = row.collect()[0]
-    if any(int(row[f"__bad_{i}"] or 0) for i in range(k + m)):
+    mom = _moments(df, list(x_cols) + list(y_cols), flags=True)
+    if mom.bad:
         return None
-    n = int(row["__n"] or 0)
-    M = _sym_from_row(row, k + m, "__g_")
+    n, M = mom.n, mom.M
     yy_diag = [float(M[k + t, k + t]) for t in range(m)]
     G, Xty, x_used = _rank_repair(
         M[:k, :k], M[:k, k:], check_rank, tol, list(x_cols)
@@ -812,9 +793,7 @@ def _plan_pooled(
 # Widest (x + y) column set the Plan-B moment fast path will fuse into
 # one aggregation — k(k+1)/2 product expressions; beyond this the
 # codegen'd aggregate gets unwieldy and the window path wins anyway.
-_WITHIN_FAST_MAX_COLS = int(
-    _os_env.environ.get("HDFE_WITHIN_FAST_MAX_COLS", 16)
-)
+_WITHIN_FAST_MAX_COLS = 16
 
 
 def _spread_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -868,46 +847,11 @@ def _within_moments_gram(work, fe1, x_all, y_cols):
     so downstream subtractions must scale their cancellation guards
     by ``loss`` (review r16).
     """
-    all_cols = list(x_all) + list(y_cols)
-    k = len(all_cols)
-    pairs = [(i, j) for i in range(k) for j in range(i, k)]
-    cols = [F.col(c).cast("double") for c in all_cols]
-    nan_flags = _null_nan_flags(work, all_cols)
-    cells = work.groupBy(fe1).agg(
-        F.count(F.lit(1)).alias("__w"),
-        *[F.sum(cols[i]).alias(f"__s_{i}") for i in range(k)],
-        *[
-            F.sum(cols[i] * cols[j]).alias(f"__p_{i}_{j}")
-            for i, j in pairs
-        ],
-        *nan_flags,
-    )
-    row = cells.agg(
-        F.sum("__w").alias("__n"),
-        F.count(F.lit(1)).alias("__cells"),
-        *[F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k)],
-        *[
-            F.sum(
-                F.col(f"__p_{i}_{j}")
-                - F.col(f"__s_{i}") * F.col(f"__s_{j}") / F.col("__w")
-            ).alias(f"__win_{i}_{j}")
-            for i, j in pairs
-        ],
-        *[F.sum(f"__p_{i}_{i}").alias(f"__ss_{i}") for i in range(k)],
-    )
-    row = row.collect()[0]
-    if any(int(row[f"__bad_{i}"] or 0) for i in range(k)):
+    mom = _moments(work, list(x_all) + list(y_cols), by=fe1, flags=True)
+    loss = None if mom.bad else _centered_ok(mom.M, mom.ss)
+    if loss is None:
         return None
-    n = int(row["__n"] or 0)
-    n_levels = int(row["__cells"] or 0)
-    Gf = _sym_from_row(row, k, "__win_")
-    loss = 1.0
-    for i in range(k):
-        ss = float(row[f"__ss_{i}"] or 0.0)
-        if ss > 0.0:
-            if not Gf[i, i] > ss * 1e-8:
-                return None
-            loss = max(loss, ss / Gf[i, i])
+    Gf = mom.M
     k_x = len(x_all)
     G_x = Gf[:k_x, :k_x]
     # Conditioning-amplified guard (review r15): the moment identity's
@@ -924,7 +868,7 @@ def _within_moments_gram(work, fe1, x_all, y_cols):
             cond = float(np.linalg.cond(G_x / np.outer(d, d)))
         if not cond * loss < 1e7:
             return None
-    return G_x, Gf[:k_x, k_x:], n, Gf, n_levels, loss
+    return G_x, Gf[:k_x, k_x:], mom.n, Gf, mom.groups, loss
 
 
 def _rss_from_moments(yy_diag, Xty, G, b, loss=1.0):
@@ -1189,7 +1133,8 @@ def _fe_adjust_driver(cells, cc, dmv, ap_tol, scale, max_iter):
     but each sweep is a few ``np.bincount`` matvecs over the cell
     arrays instead of a full-data pass, so sweeps cost milliseconds.
 
-    ``cells``: pandas (cc..., __w, __s_<d>...) — one row per distinct
+    ``cells``: pandas (cc..., __w, __s_<i>... for the i-th column of
+    ``dmv``) — one row per distinct
     FE combination. Everything is factorized to integer codes once;
     per-FE weights/sums and every cross-FE coupling are bincounts over
     the cell arrays (works for ANY number of FEs — the cell row IS the
@@ -1214,10 +1159,10 @@ def _fe_adjust_driver(cells, cc, dmv, ap_tol, scale, max_iter):
         fe: {
             d: np.bincount(
                 codes[fe],
-                weights=cells[f"__s_{d}"].to_numpy(np.float64),
+                weights=cells[f"__s_{i}"].to_numpy(np.float64),
                 minlength=L[fe],
             )
-            for d in dmv
+            for i, d in enumerate(dmv)
         }
         for fe in cc
     }
@@ -1478,9 +1423,6 @@ def _plan_alternating(
     # combination appears exactly once in the cell table, so the
     # approximate distinct counts are the same quantities; the cell
     # count itself becomes EXACT for free.
-    dpairs = [
-        (i, j) for i in range(len(dmv)) for j in range(i, len(dmv))
-    ]
     # Fast (driver-assembled) Gram is possible only when nothing
     # downstream needs a demeaned ROW table and the dm name-dedup
     # kept every x/y column distinct (review r14b: duplicate or
@@ -1494,58 +1436,27 @@ def _plan_alternating(
         and not robust
         and len(dmv) == len(all_cols)
     )
-    emit_pairs = (
-        dpairs if fast_possible
-        else [(i, i) for i in range(len(dmv))]
-    )
-
-    def _cells_of(frame):
-        return frame.groupBy(*cc).agg(
-            F.count(F.lit(1)).alias("__w"),
-            *[F.sum(d).alias(f"__s_{d}") for d in dmv],
+    # The gate is the `_moments` reduction of the persisted cell table:
+    # n, the exact cell count, the raw diagonal Σdᵢ² and the
+    # within-cell central moments (the first Gram term of the driver
+    # fast path below), with the level/pair counts and the null
+    # detection riding the same scan.
+    cells_df = _moment_cells(sw, dmv, cc, full=fast_possible).persist()
+    gate = _moments(
+        sw, dmv, by=cc, full=fast_possible, cells=cells_df,
+        extra=[
+            *[F.approx_count_distinct(fe).alias(f"__l_{fe}") for fe in cc],
             *[
-                F.sum(F.col(dmv[i]) * F.col(dmv[j]))
-                .alias(f"__p_{i}_{j}")
-                for i, j in emit_pairs
+                F.approx_count_distinct(F.xxhash64(a, b)).alias(f"__pairs_{i}")
+                for i, (a, b) in enumerate(fe_pairs)
             ],
-        )
-
-    cells_df = _cells_of(sw).persist()
-    gate = cells_df.agg(
-        F.count(F.lit(1)).alias("__cells"),
-        F.sum("__w").alias("__n"),
-        *[F.approx_count_distinct(fe).alias(f"__l_{fe}") for fe in cc],
-        *[
-            F.approx_count_distinct(F.xxhash64(a, b)).alias(f"__p_{i}")
-            for i, (a, b) in enumerate(fe_pairs)
-        ],
-        *[
-            F.sum(f"__p_{i}_{i}").alias(f"__ss_{d}")
-            for i, d in enumerate(dmv)
-        ],
-        # within-cell central moments, aggregated to ONE scalar per
-        # pair: the per-cell difference p − sᵢsⱼ/w is numerically
-        # small (it cancels inside each small cell), so summing the
-        # differences is stable where Σp − Σss/w globally would
-        # cancel catastrophically; these are the first Gram term of
-        # the driver fast path below
-        *[
-            F.sum(
-                F.col(f"__p_{i}_{j}")
-                - F.col(f"__s_{dmv[i]}") * F.col(f"__s_{dmv[j]}")
-                / F.col("__w")
-            ).alias(f"__win_{i}_{j}")
-            for i, j in emit_pairs
-        ],
-        # Null detection rides the gate scan for free (see below).
-        *[
-            F.max(F.col(fe).isNull().cast("int")).alias(f"__null_{fe}")
-            for fe in cc
+            *[
+                F.max(F.col(fe).isNull().cast("int")).alias(f"__null_{fe}")
+                for fe in cc
+            ],
         ],
     )
-    gate = gate.collect()[0]
-    n_rows = int(gate["__n"] or 0)
-    n_cells = int(gate["__cells"])
+    n_rows, n_cells = gate.n, gate.groups
     # Null FE levels are REAL levels (same semantics as groupBy /
     # window demeaning, which keep a null group) — but equi-joins
     # never match null keys and pd.factorize codes nulls as -1
@@ -1558,7 +1469,7 @@ def _plan_alternating(
     # the re-encoded keys (one extra full pass, nulls-present inputs
     # only); null-free inputs — the common case — keep their native
     # key types and pay nothing.
-    null_fes = [fe for fe in cc if int(gate[f"__null_{fe}"] or 0)]
+    null_fes = [fe for fe in cc if int(gate.row[f"__null_{fe}"] or 0)]
     if null_fes:
         fe_key = {
             fe: F.when(F.col(fe).isNull(), F.lit("\x00"))
@@ -1571,24 +1482,19 @@ def _plan_alternating(
             *dmv,
         )
         cells_df.unpersist(False)
-        cells_df = _cells_of(sw).persist()
-    approx_levels = sum(int(gate[f"__l_{fe}"]) for fe in cc)
+        cells_df = _moment_cells(sw, dmv, cc, full=fast_possible).persist()
+    approx_levels = sum(int(gate.row[f"__l_{fe}"]) for fe in cc)
     # The driver path collects the full-combination cell table, so the
     # gate bounds BOTH the pairwise nnz and the cell count (for C=2
     # they coincide; for C>2 cells can be much larger).
     approx_nnz = max(
-        sum(int(gate[f"__p_{i}"]) for i in range(len(fe_pairs))),
+        sum(int(gate.row[f"__pairs_{i}"]) for i in range(len(fe_pairs))),
         n_cells,
     )
     # Relative convergence scale: largest column RMS (an absolute test
     # on e.g. price-scaled data forces dozens of extra sweeps).
     scale = max(
-        [
-            (float(gate[f"__ss_{d}"]) / n_rows) ** 0.5
-            for d in dmv
-            if gate[f"__ss_{d}"] is not None and n_rows > 0
-        ]
-        or [1.0]
+        [(float(ss) / n_rows) ** 0.5 for ss in gate.ss if n_rows > 0] or [1.0]
     ) or 1.0
 
     adj_cols = {d: f"__adj_{d}" for d in dmv}
@@ -1615,7 +1521,7 @@ def _plan_alternating(
         # so the whole Plan-C estimate is ONE full-data pass.
         fast_gram = fast_possible
         cells_pdf = cells_df.select(
-            *cc, "__w", *[f"__s_{d}" for d in dmv]
+            *cc, "__w", *[f"__s_{i}" for i in range(len(dmv))]
         ).toPandas()
         cells_df.unpersist(False)
         cells_df = None
@@ -1626,7 +1532,8 @@ def _plan_alternating(
         if fast_gram:
             wv = cells_pdf["__w"].to_numpy(np.float64)
             S = [
-                cells_pdf[f"__s_{d}"].to_numpy(np.float64) for d in dmv
+                cells_pdf[f"__s_{i}"].to_numpy(np.float64)
+                for i in range(len(dmv))
             ]
             adj_cell = [np.zeros(len(wv)) for _ in dmv]
             for fe in cc:
@@ -1640,27 +1547,18 @@ def _plan_alternating(
             R = [
                 S[di] / wv - adj_cell[di] for di in range(len(dmv))
             ]
-            G_full = np.zeros((len(dmv), len(dmv)))
-            for i, j in dpairs:
-                G_full[i, j] = G_full[j, i] = float(
-                    float(gate[f"__win_{i}_{j}"] or 0.0)
-                    + (wv * R[i] * R[j]).sum()
-                )
-            # Cancellation guard (review r14b): the one-pass within
-            # formula loses ~log10(ss/G) digits to cancellation on
-            # data with a dominant un-centered level (y ≈ 1e8 + signal
-            # makes p and s²/w cancel catastrophically). When any
-            # demeaned diagonal retains < ~8 safe digits relative to
-            # its raw second moment, discard the fast result and fall
-            # back to the demeaned-row Gram (exact on O(σ)-sized
-            # values) — accuracy over the saved pass.
-            ok = True
-            for i, d in enumerate(dmv):
-                ssv = float(gate[f"__ss_{d}"] or 0.0)
-                if ssv > 0.0 and not G_full[i, i] > ssv * 1e-8:
-                    ok = False
-                    break
-            if ok:
+            G_full = gate.M.copy()
+            for i in range(len(dmv)):
+                for j in range(i, len(dmv)):
+                    G_full[i, j] = G_full[j, i] = (
+                        gate.M[i, j] + (wv * R[i] * R[j]).sum()
+                    )
+            # Cancellation guard (review r14b): on data with a dominant
+            # un-centered level (y ≈ 1e8 + signal) p and s²/w cancel
+            # catastrophically; then fall back to the demeaned-row Gram
+            # (exact on O(σ)-sized values) — accuracy over the saved
+            # pass.
+            if _centered_ok(G_full, gate.ss) is not None:
                 fast = (G_full, int(round(float(wv.sum()))))
         if fast is None:
             for i, fe in enumerate(cc):
@@ -1701,7 +1599,7 @@ def _plan_alternating(
         # projection of it, no second full-data groupBy (round-14).
         cells = cells_df.select(
             *cc, "__w",
-            *[(F.col(f"__s_{d}") / F.col("__w")).alias(d) for d in dmv],
+            *[(F.col(f"__s_{i}") / F.col("__w")).alias(d) for i, d in enumerate(dmv)],
         )
         levels = {fe: cells_df.select(fe).distinct().count() for fe in cc}
         if n_cells <= n_rows // 2:
@@ -1890,53 +1788,28 @@ def wls(
     """
     y_cols = _as_list(y)
     x_cols = list(_as_list(x))
-    k, m = len(x_cols), len(y_cols)
-    w = F.col(weights)
+    k = len(x_cols)
     valid = _and_complete(F.lit(True), df, [weights] + x_cols + y_cols)
-
-    exprs = [
-        F.sum(F.when(valid, 1).otherwise(0)).alias("__n"),
-        F.sum(F.when(valid & (w < 0), 1).otherwise(0)).alias("__negw"),
-    ]
-    for i in range(k):
-        for j in range(i, k):
-            exprs.append(
-                F.sum(F.when(valid, w * F.col(x_cols[i]) * F.col(x_cols[j])))
-                .alias(f"__g_{i}_{j}")
-            )
-    for i in range(k):
-        for j in range(m):
-            exprs.append(
-                F.sum(F.when(valid, w * F.col(x_cols[i]) * F.col(y_cols[j])))
-                .alias(f"__xy_{i}_{j}")
-            )
-    for j in range(m):
-        exprs.append(
-            F.sum(F.when(valid, w * F.col(y_cols[j]) * F.col(y_cols[j])))
-            .alias(f"__yy_{j}")
-        )
-    row = df.agg(*exprs).collect()[0]
-    if int(row["__negw"] or 0) > 0:
+    negw = F.sum(F.when(valid & (F.col(weights) < 0), 1).otherwise(0))
+    mom = _moments(
+        df, x_cols + y_cols, valid=valid, weight=weights,
+        extra=[negw.alias("__negw")],
+    )
+    if int(mom.row["__negw"] or 0) > 0:
         raise ValueError(
-            f"wls: {int(row['__negw'])} rows carry a negative weight;"
+            f"wls: {int(mom.row['__negw'])} rows carry a negative weight;"
             " X'WX would be indefinite, clip or filter weights first"
         )
 
-    n = int(row["__n"] or 0)
-    G = _sym_from_row(row, k, "__g_")
-    Xty = np.zeros((k, m))
-    for i in range(k):
-        for j in range(m):
-            v = row[f"__xy_{i}_{j}"]
-            Xty[i, j] = 0.0 if v is None else float(v)
-
+    # X'Wy as a contiguous copy: numpy's dot over a strided column
+    # rounds differently, and the closed-form RSS below cancels.
+    n, G, Xty = mom.n, mom.M[:k, :k], mom.M[:k, k:].copy()
     b = _solve(G, Xty)
     res = EstimateResult(
         b=b, coef_names=list(x_cols), x_cols=list(x_cols), plan="wls", n=n,
     )
     if estimate_variance:
-        yy = [float(row[f"__yy_{j}"] or 0.0) for j in range(m)]
-        wrss = _rss_from_moments(yy, Xty, G, b)
+        wrss = _rss_from_moments(mom.ss[k:], Xty, G, b)
         if wrss is None:
             # Guard trip (e.g. y ≈ 1e8 + signal): one exact weighted
             # residual scan over the same listwise mask.
@@ -1998,48 +1871,22 @@ def iv_2sls(
             " itself"
         )
     k = len(x_cols)
-
-    # Moment blocks over the union of needed pairs, one aggregation.
-    pairs: dict[tuple[str, str], str] = {}
-
-    def _key(a: str, bcol: str) -> str:
-        pr = (a, bcol) if a <= bcol else (bcol, a)
-        if pr not in pairs:
-            pairs[pr] = f"__p_{len(pairs)}"
-        return pairs[pr]
-
-    for a in z_cols:
-        for bcol in z_cols + x_cols + y_cols:
-            _key(a, bcol)
-    for a in x_cols:
-        for bcol in x_cols + y_cols:
-            _key(a, bcol)
-    for yc in y_cols:
-        _key(yc, yc)
     # NULL contract (listwise deletion, ADVICE r12; NaN-as-missing,
     # ADVICE r13): ONE shared mask — rows where every y, x, and
     # instrument column is non-NULL and non-NaN — gates every moment
     # sum AND n, so Z'Z / Z'y can never disagree on the estimating
     # sample and dof counts the rows actually estimated.
-    valid = _and_complete(
-        F.lit(True), df, list(dict.fromkeys(z_cols + x_cols + y_cols))
-    )
-    exprs = [F.sum(F.when(valid, 1).otherwise(0)).alias("__n")] + [
-        F.sum(F.when(valid, F.col(a) * F.col(bcol))).alias(alias)
-        for (a, bcol), alias in pairs.items()
-    ]
-    row = df.agg(*exprs).collect()[0]
-    n = int(row["__n"] or 0)
+    cols = list(dict.fromkeys(z_cols + x_cols + y_cols))
+    valid = _and_complete(F.lit(True), df, cols)
+    mom = _moments(df, cols, valid=valid)
+    n = mom.n
 
-    def _m(a: str, bcol: str) -> float:
-        v = row[_key(a, bcol)]
-        return 0.0 if v is None else float(v)
+    def _blk(rows, columns):
+        ix = [cols.index(c) for c in rows], [cols.index(c) for c in columns]
+        return mom.M[np.ix_(*ix)]
 
-    ZZ = np.array([[_m(a, bcol) for bcol in z_cols] for a in z_cols])
-    ZX = np.array([[_m(a, bcol) for bcol in x_cols] for a in z_cols])
-    Zy = np.array([[_m(a, yc) for yc in y_cols] for a in z_cols])
-    XX = np.array([[_m(a, bcol) for bcol in x_cols] for a in x_cols])
-    Xy = np.array([[_m(a, yc) for yc in y_cols] for a in x_cols])
+    ZZ, ZX, Zy = _blk(z_cols, z_cols), _blk(z_cols, x_cols), _blk(z_cols, y_cols)
+    XX, Xy = _blk(x_cols, x_cols), _blk(x_cols, y_cols)
 
     A = np.linalg.pinv(ZZ)
     XPX = ZX.T @ A @ ZX
@@ -2052,7 +1899,7 @@ def iv_2sls(
     res.first_stage = A @ ZX
     res.first_stage_names = (list(z_cols), list(x_cols))
     if estimate_variance:
-        rss = _rss_from_moments([_m(yc, yc) for yc in y_cols], Xy, XX, b)
+        rss = _rss_from_moments(np.diag(_blk(y_cols, y_cols)), Xy, XX, b)
         if rss is None:
             # Guard trip: one exact residual scan (against the original
             # X) over the same listwise mask.
@@ -2161,34 +2008,15 @@ def fit_stats(
         # the dof all describe the same estimating sample.
         cols = x_cols + [y]
         valid = _and_complete(F.lit(True), df, cols)
-        exprs = [F.sum(F.when(valid, 1).otherwise(0)).alias("__n")]
-        exprs += [
-            F.sum(F.when(valid, F.col(c))).alias(f"__s_{i}")
-            for i, c in enumerate(cols)
-        ]
-        for i in range(len(cols)):
-            for j in range(i, len(cols)):
-                exprs.append(
-                    F.sum(F.when(valid, F.col(cols[i]) * F.col(cols[j])))
-                    .alias(f"__g_{i}_{j}")
-                )
-        row = df.agg(*exprs).collect()[0]
-        n = int(row["__n"] or 0)
-        s = np.array(
-            [float(row[f"__s_{i}"] or 0.0) for i in range(len(cols))]
-        )
-        raw = _sym_from_row(row, len(cols), "__g_")
-        mean = s / max(n, 1)
-        M = raw - n * np.outer(mean, mean)
-        # Cancellation guard (the FE branch's rule): a centered
-        # diagonal must keep ~8 safe digits against Σc² — y ≈ 1e8 +
-        # signal cancels them all. On a trip, center each row in a
-        # second pass with the means folded in as literals (no window:
-        # one group would run on a single partition).
-        if any(
-            raw[i, i] > 0.0 and not M[i, i] > raw[i, i] * 1e-8
-            for i in range(len(cols))
-        ):
+        mom = _moments(df, cols, valid=valid)
+        n = mom.n
+        mean = mom.s / max(n, 1)
+        M = mom.M - n * np.outer(mean, mean)
+        # Cancellation guard (the FE branch's rule): on a trip, center
+        # each row in a second pass with the means folded in as
+        # literals (no window: one group would run on a single
+        # partition).
+        if _centered_ok(M, mom.ss) is None:
             centered = df.filter(valid).select(
                 *[
                     (F.col(c) - F.lit(float(mu))).alias(f"__c_{i}")

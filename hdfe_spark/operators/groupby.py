@@ -68,28 +68,26 @@ def _as_list(x) -> list[str]:
     return list(x)
 
 
-def _agg_cols(
+def _value_items(
     values: Sequence[str] | dict[str, str | Sequence[str]],
     default_fn: str = "mean",
-) -> list[Column]:
-    """Build aliased aggregate Columns from a values spec.
+) -> list[tuple[str, str]]:
+    """Parse a values spec into ``(col, fn)`` pairs, in spec order.
 
     ``values`` is either a list of column names (all aggregated with
     ``default_fn``) or a dict ``{col: fn}`` / ``{col: [fn, ...]}``.
-    Output alias contract: ``{fn}_{col}`` — matching names must be used
-    in oracle SQL.
+    Unknown fn names raise ``KeyError`` listing the known ones. Output
+    alias contract: ``{fn}_{col}`` — matching names must be used in
+    oracle SQL.
     """
-    out: list[Column] = []
     if isinstance(values, dict):
-        items = [(c, _as_list(fns)) for c, fns in values.items()]
+        items = [(c, fn) for c, fns in values.items() for fn in _as_list(fns)]
     else:
-        items = [(c, [default_fn]) for c in _as_list(values)]
-    for col, fns in items:
-        for fn in fns:
-            if fn not in _NAMED_FNS:
-                raise KeyError(f"unknown aggregate fn {fn!r}; have {sorted(_NAMED_FNS)}")
-            out.append(_NAMED_FNS[fn](F.col(col)).alias(f"{fn}_{col}"))
-    return out
+        items = [(c, default_fn) for c in _as_list(values)]
+    for _, fn in items:
+        if fn not in _NAMED_FNS:
+            raise KeyError(f"unknown aggregate fn {fn!r}; have {sorted(_NAMED_FNS)}")
+    return items
 
 
 def grouped_agg(
@@ -109,33 +107,33 @@ def grouped_agg(
     """
     keys = _as_list(keys)
     if salt <= 0:
-        return df.groupBy(*keys).agg(*_agg_cols(values, default_fn))
+        return df.groupBy(*keys).agg(
+            *[
+                _NAMED_FNS[fn](F.col(col)).alias(f"{fn}_{col}")
+                for col, fn in _value_items(values, default_fn)
+            ]
+        )
 
     # Two-phase salted aggregation: mean/std/median are not directly
     # mergeable, so restrict to algebraic fns and rewrite mean.
-    if isinstance(values, dict):
-        items = [(c, _as_list(fns)) for c, fns in values.items()]
-    else:
-        items = [(c, [default_fn]) for c in _as_list(values)]
     salted = df.withColumn("__salt", (F.rand(seed=0) * salt).cast("int"))
     phase1: list[Column] = []
     phase2: list[Column] = []
-    for col, fns in items:
-        for fn in fns:
-            if fn in ("sum", "min", "max"):
-                phase1.append(_NAMED_FNS[fn](F.col(col)).alias(f"{fn}_{col}"))
-                phase2.append(_NAMED_FNS[fn](F.col(f"{fn}_{col}")).alias(f"{fn}_{col}"))
-            elif fn == "count":
-                phase1.append(F.count(F.col(col)).alias(f"count_{col}"))
-                phase2.append(F.sum(F.col(f"count_{col}")).alias(f"count_{col}"))
-            elif fn in ("mean", "avg"):
-                phase1.append(F.sum(F.col(col)).alias(f"__s_{col}"))
-                phase1.append(F.count(F.col(col)).alias(f"__c_{col}"))
-                phase2.append(
-                    (F.sum(f"__s_{col}") / F.sum(f"__c_{col}")).alias(f"{fn}_{col}")
-                )
-            else:
-                raise ValueError(f"fn {fn!r} is not salt-mergeable")
+    for col, fn in _value_items(values, default_fn):
+        if fn in ("sum", "min", "max"):
+            phase1.append(_NAMED_FNS[fn](F.col(col)).alias(f"{fn}_{col}"))
+            phase2.append(_NAMED_FNS[fn](F.col(f"{fn}_{col}")).alias(f"{fn}_{col}"))
+        elif fn == "count":
+            phase1.append(F.count(F.col(col)).alias(f"count_{col}"))
+            phase2.append(F.sum(F.col(f"count_{col}")).alias(f"count_{col}"))
+        elif fn in ("mean", "avg"):
+            phase1.append(F.sum(F.col(col)).alias(f"__s_{col}"))
+            phase1.append(F.count(F.col(col)).alias(f"__c_{col}"))
+            phase2.append(
+                (F.sum(f"__s_{col}") / F.sum(f"__c_{col}")).alias(f"{fn}_{col}")
+            )
+        else:
+            raise ValueError(f"fn {fn!r} is not salt-mergeable")
     part = salted.groupBy(*keys, "__salt").agg(*phase1)
     return part.groupBy(*keys).agg(*phase2)
 
@@ -202,39 +200,23 @@ def grouped_transform(
     same ``{fn}_{col}`` contract as :func:`grouped_agg`.
     """
     keys = _as_list(keys)
-    if isinstance(values, dict):
-        items = [(c, _as_list(fns)) for c, fns in values.items()]
-    else:
-        items = [(c, [default_fn]) for c in _as_list(values)]
-    for col, fns in items:
-        for fn in fns:
-            if fn not in _NAMED_FNS:
-                raise KeyError(f"unknown aggregate fn {fn!r}")
+    items = _value_items(values, default_fn)
     # Output-name collisions keep the window path (review r16): the
     # join plan APPENDS `{fn}_{col}`, so a pre-existing column of that
     # name would become duplicate/ambiguous downstream, whereas
     # withColumn (the window path) replaces it — the pre-r15 contract.
     existing = set(df.columns)
-    collides = any(
-        f"{fn}_{col}" in existing for col, fns in items for fn in fns
-    )
-    if not collides and all(
-        fn in _ORDER_FREE_FNS for _, fns in items for fn in fns
-    ):
+    collides = any(f"{fn}_{col}" in existing for col, fn in items)
+    if not collides and all(fn in _ORDER_FREE_FNS for _, fn in items):
         return _join_group_aggs(
             df,
             keys,
-            {
-                f"{fn}_{col}": _NAMED_FNS[fn](F.col(col))
-                for col, fns in items
-                for fn in fns
-            },
+            {f"{fn}_{col}": _NAMED_FNS[fn](F.col(col)) for col, fn in items},
         )
     w = Window.partitionBy(*keys)
     out = df
-    for col, fns in items:
-        for fn in fns:
-            out = out.withColumn(f"{fn}_{col}", _NAMED_FNS[fn](F.col(col)).over(w))
+    for col, fn in items:
+        out = out.withColumn(f"{fn}_{col}", _NAMED_FNS[fn](F.col(col)).over(w))
     return out
 
 

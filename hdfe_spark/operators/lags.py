@@ -37,12 +37,26 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
 def _as_list(x) -> list[str]:
     return [x] if isinstance(x, str) else list(x)
+
+
+def _lag_cols(
+    outcome: str, lag: int, w: WindowSpec, name: str, fill_zeros: bool
+) -> dict[str, Column]:
+    """``{name: lag expr}`` — with ``fill_zeros``, missing → 0.0 plus the
+    ``{name}_mi`` missing indicator."""
+    shifted = F.lag(F.col(outcome), lag).over(w)  # F.lag(n<0) == lead
+    if not fill_zeros:
+        return {name: shifted}
+    return {
+        name: F.coalesce(shifted, F.lit(0.0)),
+        f"{name}_mi": F.isnull(shifted).cast("int"),
+    }
 
 
 def make_one_lag(
@@ -61,12 +75,7 @@ def make_one_lag(
     """
     name = out_col or f"{outcome}_lag_{lag}"
     w = Window.partitionBy(*_as_list(groupby)).orderBy(*_as_list(order_by))
-    shifted = F.lag(F.col(outcome), lag).over(w)  # F.lag(n<0) == lead
-    if not fill_zeros:
-        return df.withColumn(name, shifted)
-    return df.withColumn(name, F.coalesce(shifted, F.lit(0.0))).withColumn(
-        f"{name}_mi", F.isnull(shifted).cast("int")
-    )
+    return df.withColumns(_lag_cols(outcome, lag, w, name, fill_zeros))
 
 
 def make_lags(
@@ -101,14 +110,8 @@ def make_lags(
     for out in outcomes:
         names: list[str] = []
         for lag in lags:
-            name = f"{out}_lag_{lag}"
-            shifted = F.lag(F.col(out), lag).over(w)
-            if fill_zeros:
-                exprs.append(F.coalesce(shifted, F.lit(0.0)).alias(name))
-                exprs.append(F.isnull(shifted).cast("int").alias(f"{name}_mi"))
-                names += [name, f"{name}_mi"]
-            else:
-                exprs.append(shifted.alias(name))
-                names.append(name)
+            cols = _lag_cols(out, lag, w, f"{out}_lag_{lag}", fill_zeros)
+            exprs += [e.alias(n) for n, e in cols.items()]
+            names += list(cols)
         lag_vars[out] = names
     return df.select("*", *exprs), lag_vars

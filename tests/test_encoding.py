@@ -82,6 +82,36 @@ def test_vector_output_matches_columns(small_int_df):
     np.testing.assert_array_equal(dense, [[0, 1], [1, 0], [1, 0]])
 
 
+def test_get_all_dummies_vector_output(spark):
+    """``output="vector"``: one assembled ``dummies`` vector per row —
+    all levels of the first column (sorted), drop-last for each later
+    one; pinned at the values of the inline encoder it replaced."""
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "row_id": [0, 1, 2, 3, 4],
+                "a": ["horse", "cat", "cat", "dog", "horse"],
+                "b": [2, 0, 1, 2, 0],
+                "c": [7, 7, 5, 5, 7],
+            }
+        )
+    )
+    out, names = get_all_dummies(df, ["a", "b", "c"], output="vector")
+    assert names == ["dummies"]
+    pdf = out.toPandas().sort_values("row_id")
+    dense = np.array([v.toArray() for v in pdf["dummies"]])
+    np.testing.assert_array_equal(
+        dense,
+        [
+            [0, 0, 1, 0, 0, 0],
+            [1, 0, 0, 1, 0, 0],
+            [1, 0, 0, 0, 1, 1],
+            [0, 1, 0, 0, 0, 1],
+            [0, 0, 1, 1, 0, 0],
+        ],
+    )
+
+
 def test_target_encode_loo(spark):
     import pytest
 

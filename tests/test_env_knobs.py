@@ -10,9 +10,6 @@ import pathlib
 import re
 
 _KEPT = {
-    "HDFE_CLUSTER_FAST_MAX_K",
-    "HDFE_WITHIN_FAST_MAX_COLS",
-    "HDFE_CLUSTER2_PAIR_RATIO",
     "HDFE_AP_DRIVER_LEVELS_MAX",
     "HDFE_AP_DRIVER_NNZ_MAX",
     "HDFE_PY_STAGE_PARTITIONS",

@@ -378,3 +378,112 @@ def test_fit_stats_pooled_survives_large_offset(offset_df, offset_pdf):
     np.testing.assert_allclose(got["tss"], tss, rtol=1e-6)
     np.testing.assert_allclose(got["rss"], rss, rtol=1e-6)
     np.testing.assert_allclose(got["r2"], 1.0 - rss / tss, rtol=1e-6)
+
+
+# ------------------------------------------------ the one moment kernel
+
+
+@pytest.fixture(scope="module")
+def moment_frame(spark):
+    """60 rows: a NULL in ``a``, a NaN in ``b``, NULL FE levels in
+    ``g``, an integer column ``i`` and a positive weight ``w``."""
+    rng = np.random.RandomState(5)
+    n = 60
+    g = rng.randint(0, 6, n)
+    a, b = rng.randn(n), rng.randn(n) * 3.0 + 1.0
+    i, w = rng.randint(-5, 9, n), rng.uniform(0.5, 2.0, n)
+    rows = [
+        (
+            None if r in (3, 17, 40) else int(g[r]),
+            None if r == 7 else float(a[r]),
+            float("nan") if r == 11 else float(b[r]),
+            int(i[r]),
+            float(w[r]),
+        )
+        for r in range(n)
+    ]
+    df = spark.createDataFrame(rows, "g long, a double, b double, i int, w double")
+    return df, pd.DataFrame(rows, columns=["g", "a", "b", "i", "w"])
+
+
+def test_moment_kernel_matches_numpy(moment_frame):
+    from pyspark.sql import functions as F
+
+    from hdfe_spark.operators.collinearity import _centered_ok, _moments
+    from hdfe_spark.operators.estimate import _and_complete
+
+    df, pdf = moment_frame
+    cols = ["a", "b", "i"]
+
+    # raw: NULL products skipped pair by pair, n counts every row,
+    # NaN poisons every sum it touches
+    raw = _moments(df, ["a", "i"])
+    a_ok = pdf["a"].notna().to_numpy()
+    av, iv = pdf["a"].to_numpy()[a_ok], pdf["i"].to_numpy()
+    assert raw.n == 60 and raw.groups == 1
+    np.testing.assert_allclose(raw.s, [av.sum(), iv.sum()], rtol=1e-12)
+    np.testing.assert_allclose(
+        raw.M,
+        [[av @ av, av @ iv[a_ok]], [av @ iv[a_ok], iv @ iv]],
+        rtol=1e-12,
+    )
+    assert np.isnan(_moments(df, cols).M[1]).all()
+    # integers are summed as double: a long Σt² would overflow
+    big = df.withColumn("t", F.col("i").cast("long") + 4_000_000_000)
+    tv = iv.astype(float) + 4e9
+    np.testing.assert_allclose(_moments(big, ["t"]).M, [[tv @ tv]], rtol=1e-12)
+
+    # masked: one listwise mask gates every sum and n
+    valid = _and_complete(F.lit(True), df, cols)
+    keep = pdf[cols].notna().all(axis=1).to_numpy()
+    X, wv = pdf.loc[keep, cols].to_numpy(float), pdf.loc[keep, "w"].to_numpy()
+    masked = _moments(df, cols, valid=valid)
+    assert masked.n == keep.sum() == 58
+    np.testing.assert_allclose(masked.s, X.sum(axis=0), rtol=1e-12)
+    np.testing.assert_allclose(masked.M, X.T @ X, rtol=1e-12)
+    np.testing.assert_allclose(masked.ss, np.diag(X.T @ X), rtol=1e-12)
+
+    # weighted: Σ w·c and Σ w·cᵢcⱼ over the same mask
+    weighted = _moments(df, cols, valid=valid, weight="w")
+    assert weighted.n == 58
+    np.testing.assert_allclose(weighted.s, wv @ X, rtol=1e-12)
+    np.testing.assert_allclose(weighted.M, X.T @ (wv[:, None] * X), rtol=1e-12)
+
+    # within `by`: central moments per FE level, the NULL level its own
+    # group; the flags see the NULL and the NaN of the unfiltered frame
+    assert _moments(df, cols, by="g", flags=True).bad
+    within = _moments(df.filter(valid), cols, by="g", flags=True)
+    sub = pdf.loc[keep].fillna({"g": -1})
+    Xd = X - sub.groupby("g")[cols].transform("mean").to_numpy(float)
+    assert not within.bad
+    assert within.n == 58 and within.groups == sub["g"].nunique()
+    np.testing.assert_allclose(within.M, Xd.T @ Xd, rtol=1e-10)
+    np.testing.assert_allclose(within.ss, np.diag(X.T @ X), rtol=1e-12)
+    loss = _centered_ok(within.M, within.ss)
+    assert loss is not None and loss >= 1.0
+
+    # the digits guard trips on a dominant un-centered level
+    shifted = df.filter(valid).withColumn("b", F.col("b") + 1e9)
+    far = _moments(shifted, cols, by="g")
+    assert _centered_ok(far.M, far.ss) is None
+
+
+def test_moment_sites_job_counts(reg_df, count_jobs):
+    """The bench steps that reach the moment kernel keep their Spark
+    job counts: the Gram, the within plan with residuals, and Plan C's
+    driver tier with the driver-assembled Gram."""
+    from hdfe_spark.operators.collinearity import gram_matrix
+
+    assert count_jobs(lambda: gram_matrix(reg_df, ["x1", "x2"], ["y"])) == 2
+    assert count_jobs(
+        lambda: estimate(
+            reg_df, "y", ["x1", "x2"], categorical_controls=["fe1"],
+            get_residual=True,
+        )
+    ) == 3
+    assert count_jobs(
+        lambda: estimate(
+            reg_df, "y", ["x1", "x2"], categorical_controls=["fe1", "fe2"],
+            within_if_fe=False,
+        )
+    ) == 5

@@ -142,3 +142,12 @@ def test_groupby_apply_broadcast(fixture_df, fixture_pdf):
     np.testing.assert_allclose(
         got["y_centered"].values, want["y_centered"].values, atol=1e-12
     )
+
+
+def test_grouped_transform_unknown_fn_raises(fixture_df):
+    """An unknown fn name fails on the driver with the list of known
+    fns, on the transform path as on the aggregate path."""
+    with pytest.raises(KeyError, match="unknown aggregate fn 'nope'; have .*'mean'"):
+        grouped_transform(fixture_df, "first_category", {"y": ["mean", "nope"]})
+    with pytest.raises(KeyError, match="unknown aggregate fn 'nope'; have .*'mean'"):
+        grouped_agg(fixture_df, "first_category", {"y": "nope"})

@@ -89,7 +89,7 @@ def test_cluster2_gate_ratio_env_override(panel, panel_pdf, monkeypatch):
     """Forcing the ratio to 1.1 re-enables one-pass on row-identity
     keys, and its values still match numpy OLS + the CGM sandwich (the
     r15 parity contract is independent of the gate)."""
-    monkeypatch.setenv("HDFE_CLUSTER2_PAIR_RATIO", "1.1")
+    monkeypatch.setattr(E, "_CLUSTER2_PAIR_RATIO", 1.1)
     assert E._pooled_sandwich_onepass(
         panel, "y", ["x1", "x2"], ["id", "g"], False, 1e-9
     ) is not None
