@@ -43,8 +43,14 @@ from pyspark.sql import functions as F
 def levels_of(df: DataFrame, col: str) -> list:
     """Distinct levels of ``col`` in sorted order (the reference's
     ``np.unique`` ordering, ``hdfe/hdfe.py:26``). Driver-side list —
-    intended for dimension-sized cardinalities."""
-    return [r[0] for r in df.select(col).distinct().orderBy(col).collect()]
+    intended for dimension-sized cardinalities, so the distinct values
+    are sorted in one task: the same order as ``orderBy(col)`` (NULL
+    first, NaN last), without its range-partition sampling job and
+    sort shuffle."""
+    return [
+        r[0]
+        for r in df.select(col).distinct().coalesce(1).sortWithinPartitions(col).collect()
+    ]
 
 
 def factorize(df: DataFrame, col: str, code_col: str | None = None) -> DataFrame:

@@ -42,6 +42,21 @@ loaded classes (2-3 KB of bytecode each). Measured after a full GC, 600
 small one-stage entries held ~19 KB of heap and ~1.5 KB of Metaspace
 each, so a full cache costs a few tens of MB.
 
+:func:`get_spark` also sets ``spark.python.sql.dataFrameDebugging.enabled``
+to ``false``. PySpark 4 wraps every ``functions`` call and every
+``Column`` method so that, with the flag on, each call records its
+Python call site for DataFrame error context: several py4j round trips,
+a stack walk and a failed ``import IPython``, ~0.85 ms a call and 432
+calls in one ``panel_fixture`` warm pass. With it off, an error's
+class and message are unchanged, but its DataFrame query context no
+longer names the Python line that built the failing expression.
+PySpark reads the flag once per process, at the first wrapped call,
+from the session active then (off if none is), and keeps that value
+for the life of the process, whatever later sessions set. A session built
+elsewhere — by a harness that then calls ``entry(spark)``, or
+``ORACLE_VANILLA=1 tools/check_oracle.py`` — keeps PySpark's default,
+on. ``extra_conf`` can turn it back on.
+
 Some set-similarity operators (``minhash_candidate_pairs``,
 ``minhash_dedup``, ``ngram_jaccard_pairs``, ``setsim_join``,
 ``dup_ngram_spans``) persist a signature table so that every consumer
@@ -159,11 +174,13 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
     32). Explicit arguments override environment. The Python worker
-    daemon, the workers' path and the generated-code cache size
-    (``CODEGEN_CACHE_ENTRIES``) are set as the module docstring's
-    session contract says; ``extra_conf`` is applied last and
-    overrides them. The cache size takes effect only if this session
-    is built before the JVM's first code generation.
+    daemon, the workers' path, the generated-code cache size
+    (``CODEGEN_CACHE_ENTRIES``) and the DataFrame debugging flag are
+    set as the module docstring's session contract says;
+    ``extra_conf`` is applied last and overrides them. The cache size
+    takes effect only if this session is built before the JVM's first
+    code generation, and the debugging flag only if no ``functions``
+    or ``Column`` call ran under an earlier session in this process.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -190,6 +207,8 @@ def get_spark(
         # needed (see streaming/ops.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # per-call Python call-site capture, ~0.85 ms a call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in {**_WORKER_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from hdfe_spark.sources.tables import load_table
+
 
 def read_table_stream(
     spark: SparkSession,
@@ -36,14 +38,16 @@ def read_table_stream(
     file-stream source requires a DIRECTORY, so the file is exposed
     through a cached temp dir of symlinks, swept at interpreter
     exit. No event-time normalization — `read_events_stream` wraps
-    this helper and adds it for the events table."""
+    this helper and adds it for the events table. Without a ``schema``,
+    ``table`` must be one of ``sources.tables.TABLES``: the schema is
+    ``load_table``'s, inferred once per file per session."""
     import atexit
     import os
     import shutil
     import tempfile
 
     if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+        schema = load_table(spark, table, sf_dir).schema
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
     cache = read_table_stream.__dict__.setdefault("_dirs", {})
     d = cache.get(src)

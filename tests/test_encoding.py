@@ -148,3 +148,22 @@ def test_target_encode_loo(spark):
     # smoothing blends LOO mean with prior
     want = ((60 - 10) + 2 * mu) / (3 - 1 + 2)
     assert got2[("a", 10.0)] == pytest.approx(want)
+
+
+def test_levels_of_order_and_jobs(spark, count_jobs):
+    """``levels_of`` sorts the distinct values in one task: the order of
+    ``distinct().orderBy(col)`` (NULL first, NaN last) on numbers and
+    strings, in two jobs (the distinct's shuffle and the collect)."""
+    from hdfe_spark.operators.encoding import levels_of
+
+    df = spark.createDataFrame(
+        [(2.0, "b"), (float("nan"), None), (None, "a"), (-1.5, "B"),
+         (0.0, "b"), (float("nan"), "a"), (None, ""), (2.0, "é")],
+        "x double, s string",
+    )
+    for col, want in (("x", [None, -1.5, 0.0, 2.0, float("nan")]),
+                      ("s", [None, "", "B", "a", "b", "é"])):
+        old = [r[0] for r in df.select(col).distinct().orderBy(col).collect()]
+        got = levels_of(df, col)
+        assert repr(got) == repr(old) == repr(want)
+        assert count_jobs(lambda col=col: levels_of(df, col)) == 2

@@ -487,7 +487,8 @@ def test_query_scoped_persist_thread_safe(monkeypatch):
             start.wait()
             for _ in range(2000):
                 D._query_scoped_persist(_FakeFrame())
-                sizes.append(len(D._SCOPED_PERSISTS))
+                with D._SCOPED_LOCK:
+                    sizes.append(len(D._SCOPED_PERSISTS))
         except Exception as exc:  # noqa: BLE001 — the test's subject
             errors.append(exc)
 

@@ -1,9 +1,11 @@
-"""Spark's generated-code cache holds the engine's working set.
+"""Session confs ``get_spark`` sets for the engine's fixed costs.
 
 ``get_spark`` sizes ``spark.sql.codegen.cache.maxEntries`` to
 ``CODEGEN_CACHE_ENTRIES``. With Spark's default of 100 entries, a
 workload that compiles more than 100 distinct classes cycles the LRU
-and every repeated query compiles again.
+and every repeated query compiles again. It also turns off
+``spark.python.sql.dataFrameDebugging.enabled``, PySpark's call-site
+capture on every ``functions`` and ``Column`` call.
 """
 
 from hdfe_spark.session import CODEGEN_CACHE_ENTRIES
@@ -35,3 +37,12 @@ def test_repeated_queries_reuse_compiled_code(spark):
     second = run_all()
     assert first >= QUERIES - 5, first
     assert second <= 5, (first, second)
+
+
+def test_fixture_session_turns_off_dataframe_debugging(spark):
+    """PySpark's per-call call-site capture is off on ``get_spark``
+    sessions, and the process-wide flag PySpark caches reads it."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
