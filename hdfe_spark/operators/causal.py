@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfe_spark.operators._guards import no_output_collision
+from hdfe_spark.operators.collinearity import _moment_cells, _sym_from_row
 
 
 def _clipped_propensity(propensity: str, clip: float):
@@ -740,46 +741,39 @@ def dml_plm(
                 base, fold, y, d, x_cols, n_folds, id_col
             )
         else:
-            feats = [F.lit(1.0)] + [F.col(c) for c in x_cols]
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(F.sum(feats[i] * feats[j]).alias(f"__g_{i}_{j}"))
-                aggs.append(F.sum(feats[i] * F.col(y)).alias(f"__xy_{i}"))
-                aggs.append(F.sum(feats[i] * F.col(d)).alias(f"__xd_{i}"))
-            mom = base.groupBy(fold.alias("__f")).agg(*aggs).collect()
+            # Per-fold moment cells over (x, y, d): Σ1·1 = __w, Σ1·c =
+            # __s_i, Σcᵢcⱼ = __p_i_j — the [1|x|y|d] Gram of each fold.
+            kc = k + 1
+            cells = _moment_cells(
+                base, x_cols + [y, d], [fold.alias("__f")]
+            ).collect()
             # An id whose cast-to-long fails (non-numeric string, NaN double)
             # lands in a NULL fold — name the cause instead of crashing on
             # int(None) below (review r13c).
-            if any(r["__f"] is None for r in mom):
+            if any(r["__f"] is None for r in cells):
                 raise ValueError(
                     f"dml_plm: id_col {id_col!r} has values that do not cast"
                     " to an integer — fold assignment needs integer-castable"
                     " ids"
                 )
-            if len(mom) < n_folds:
-                sizes = {int(r["__f"]): int(r["__n"]) for r in mom}
+            if len(cells) < n_folds:
+                sizes = {int(r["__f"]): int(r["__w"]) for r in cells}
                 raise ValueError(
-                    f"dml_plm: only {len(mom)} of {n_folds} folds are"
+                    f"dml_plm: only {len(cells)} of {n_folds} folds are"
                     f" populated (fold sizes {sizes}) — too few distinct ids"
                 )
             G = {}
             Xy = {}
             Xd = {}
-            for r in mom:
+            for r in cells:
                 f = int(r["__f"])
-                g = np.zeros((k, k))
-                for i in range(k):
-                    for j in range(i, k):
-                        v = r[f"__g_{i}_{j}"]
-                        g[i, j] = g[j, i] = 0.0 if v is None else float(v)
-                G[f] = g
-                Xy[f] = np.array(
-                    [float(r[f"__xy_{i}"] or 0.0) for i in range(k)]
-                )
-                Xd[f] = np.array(
-                    [float(r[f"__xd_{i}"] or 0.0) for i in range(k)]
-                )
+                aug = np.empty((kc + 1, kc + 1))
+                aug[0, 0] = float(r["__w"])
+                aug[0, 1:] = aug[1:, 0] = [
+                    float(r[f"__s_{i}"] or 0.0) for i in range(kc)
+                ]
+                aug[1:, 1:] = _sym_from_row(r, kc, "__p_")
+                G[f], Xy[f], Xd[f] = aug[:k, :k], aug[:k, k], aug[:k, k + 1]
             # complement-fold nuisance fits (cross-fitting)
             by = {}
             bd = {}

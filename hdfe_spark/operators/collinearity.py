@@ -14,8 +14,14 @@ Algorithm (same as the reference, re-based onto the Gram):
    over ``_moments``, the engine's one moment pass: ``n``, per-column
    sums and Σ w·cᵢcⱼ, optionally under a listwise mask, a weight, or
    per group reduced to within-group central moments (with the
-   ``_centered_ok`` digits guard). Every estimator in ``estimate.py``
-   outside the sandwich meat builds its moments through it.
+   ``_centered_ok`` digits guard). Every Gram-shaped aggregation of
+   the engine builds its moments through it: the ``estimate.py``
+   estimators, sandwich tensors, exact meats and residual-scan RSS
+   (several outcomes' sets in one aggregation via `_moment_sets`),
+   the fixed-point DECIMAL(38,0) Grams of ``stats.ridge2``,
+   ``stats.pca``, ``stats.pca2`` and ``validate.mahalanobis_outliers``
+   (`_fixed_point_moments`), and ``causal.dml_plm``'s per-fold cells
+   (`_moment_cells`).
 2. Driver-side: rank of G; if deficient, QR of G and scan the R
    diagonal in column order against ``tol``
    (``hdfe/multicollinearity.py:86-101``). Columns of G carry exactly
@@ -37,11 +43,14 @@ collinearity pass an explicit tol scaled to your data.
 
 from __future__ import annotations
 
+import operator
 import warnings
 from collections.abc import Sequence
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -85,22 +94,30 @@ def _null_nan_flags(df: DataFrame, cols, prefix: str = "__bad") -> list:
     return out
 
 
-def _moment_aggs(cols: list, valid=None, weight=None, full: bool = True) -> list:
+def _moment_aggs(
+    cols: list, valid=None, weight=None, full: bool = True, prefix: str = ""
+) -> list:
     """Aggregate expressions ``__w`` (row count), ``__s_{i}`` (Σ w·cᵢ)
     and ``__p_{i}_{j}`` (Σ w·cᵢcⱼ, upper triangle; the diagonal alone
     when not ``full``) over the Column expressions ``cols``, every sum
-    gated by the ``valid`` mask when one is given."""
+    gated by the ``valid`` mask when one is given. ``weight`` is a
+    column name or a Column; ``prefix`` goes in front of every alias,
+    so several sets can share one aggregation."""
 
     def kept(e):
         return e if valid is None else F.when(valid, e)
 
-    wc = cols if weight is None else [F.col(weight) * c for c in cols]
+    if weight is not None:
+        w = F.col(weight) if isinstance(weight, str) else weight
+        wc = [w * c for c in cols]
+    else:
+        wc = cols
     k = len(cols)
     return [
-        F.count(kept(F.lit(1))).alias("__w"),
-        *[F.sum(kept(wc[i])).alias(f"__s_{i}") for i in range(k)],
+        F.count(kept(F.lit(1))).alias(f"{prefix}__w"),
+        *[F.sum(kept(wc[i])).alias(f"{prefix}__s_{i}") for i in range(k)],
         *[
-            F.sum(kept(wc[i] * cols[j])).alias(f"__p_{i}_{j}")
+            F.sum(kept(wc[i] * cols[j])).alias(f"{prefix}__p_{i}_{j}")
             for i in range(k)
             for j in range(i, k if full else i + 1)
         ],
@@ -121,11 +138,45 @@ def _moment_cells(
     )
 
 
+def _moment_sets(
+    df: DataFrame, sets, valid=None, *, full: bool = True, extra: Sequence = ()
+) -> list[_Moments]:
+    """Several moment sets from ONE aggregation: one `_moments` result
+    (without ``by``) per ``(cols, weight)`` pair of ``sets`` — e.g.
+    one per outcome of a multi-outcome sandwich meat. Set ``t``'s
+    aliases carry the prefix ``__{t}`` (none for the first); every
+    result shares the collected ``row``, ``extra`` riders included."""
+    dtypes = dict(df.dtypes)
+
+    def cast(c):
+        if dtypes.get(c, "").startswith("decimal"):
+            return F.col(c)
+        return F.col(c).cast("double")
+
+    prefixes = [f"__{t}" if t else "" for t in range(len(sets))]
+    row = df.agg(
+        *[
+            a
+            for pre, (cols, weight) in zip(prefixes, sets)
+            for a in _moment_aggs([cast(c) for c in cols], valid, weight, full, pre)
+        ],
+        *extra,
+    ).collect()[0]
+    out = []
+    for pre, (cols, _) in zip(prefixes, sets):
+        k = len(cols)
+        M = _sym_from_row(row, k, f"{pre}__p_", full)
+        s = np.array([float(row[f"{pre}__s_{i}"] or 0.0) for i in range(k)])
+        n = int(row[f"{pre}__w"])
+        out.append(_Moments(n, s, M, np.diag(M).copy(), 1, False, row))
+    return out
+
+
 def _moments(
     df: DataFrame,
     cols: Sequence[str],
     valid=None,
-    weight: str | None = None,
+    weight=None,
     by=None,
     *,
     full: bool = True,
@@ -143,7 +194,8 @@ def _moments(
       exact. NULL products are skipped pair by pair,
       and ``n`` counts every row — unless ``valid`` is given: then one
       listwise mask gates every sum and ``n`` counts the masked rows.
-      ``weight`` (a column name) multiplies every sum: ``w·cᵢ·cⱼ``.
+      ``weight`` (a column name or a Column) multiplies every sum:
+      ``(w·cᵢ)·cⱼ``.
     - With ``by`` the columns are cast to double, a per-group
       ``(w, Σc, Σcᵢcⱼ)`` table is built (`_moment_cells`, or the
       prebuilt ``cells``), and a second aggregation over it reduces
@@ -156,25 +208,24 @@ def _moments(
     `_null_nan_flags` of ``cols`` (rolled up per group with ``by``).
     ``extra`` aggregate expressions ride the final aggregation; read
     them from ``row``.
+
+    Callers: `gram_matrix`; in ``estimate.py`` the pooled one-passes
+    (homoskedastic, and the sandwich tensors over the per-row or
+    per-cluster cell table), `_within_moments_gram`, Plan C's cell
+    table and gate, the residual-scan RSS, `wls`, `iv_2sls`,
+    `fit_stats`, and through `_moment_sets` the exact cluster and HC1
+    meats; through `_fixed_point_moments` the DECIMAL(38,0) Grams of
+    ``stats.ridge2``, ``stats.pca``, ``stats.pca2`` and
+    ``validate.mahalanobis_outliers``. ``causal.dml_plm`` reads the
+    per-fold `_moment_cells` table itself.
     """
     cols = list(cols)
     k = len(cols)
     if by is None:
-        dtypes = dict(df.dtypes)
-        cv = [
-            F.col(c)
-            if dtypes.get(c, "").startswith("decimal")
-            else F.col(c).cast("double")
-            for c in cols
-        ]
-        row = df.agg(
-            *_moment_aggs(cv, valid, weight, full),
-            *(_null_nan_flags(df, cols) if flags else []),
-            *extra,
-        ).collect()[0]
-        M = _sym_from_row(row, k, "__p_", full)
-        s = np.array([float(row[f"__s_{i}"] or 0.0) for i in range(k)])
-        n, groups, ss = int(row["__w"]), 1, np.diag(M).copy()
+        mom = _moment_sets(
+            df, [(cols, weight)], valid, full=full,
+            extra=[*(_null_nan_flags(df, cols) if flags else []), *extra],
+        )[0]
     else:
         if cells is None:
             cells = _moment_cells(df, cols, by, full, flags)
@@ -193,12 +244,56 @@ def _moments(
             *[F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k) if flags],
             *extra,
         ).collect()[0]
-        M = _sym_from_row(row, k, "__win_", full)
-        s = None
-        n, groups = int(row["__n"] or 0), int(row["__groups"])
-        ss = np.array([float(row[f"__ss_{i}"] or 0.0) for i in range(k)])
-    bad = flags and any(int(row[f"__bad_{i}"] or 0) for i in range(k))
-    return _Moments(n, s, M, ss, groups, bad, row)
+        mom = _Moments(
+            int(row["__n"] or 0),
+            None,
+            _sym_from_row(row, k, "__win_", full),
+            np.array([float(row[f"__ss_{i}"] or 0.0) for i in range(k)]),
+            int(row["__groups"]),
+            False,
+            row,
+        )
+    bad = flags and any(int(mom.row[f"__bad_{i}"] or 0) for i in range(k))
+    return mom._replace(bad=bad)
+
+
+def _fixed_point_moments(
+    df: DataFrame, cols: Sequence[str], scale: float, op_name: str,
+    complete: bool = True,
+) -> _Moments:
+    """Exact fixed-point moments: `_moments` over ``round(c·scale)``
+    cast to DECIMAL(38,0), so every sum is an integer sum —
+    order-free and engine-portable. ``complete`` keeps the rows where
+    every column is non-NULL (``n`` counts them); without it NULL
+    products are skipped pair by pair and ``n`` counts every row.
+    A DECIMAL(38,0) overflow — of a value, a product or a sum —
+    raises a ValueError naming ``op_name`` and the fix, a smaller
+    ``scale``, instead of Spark's bare ArithmeticException; the guard
+    runs no Spark job of its own."""
+    cols = list(cols)
+    if complete:
+        df = df.filter(
+            reduce(operator.and_, [F.col(c).isNotNull() for c in cols])
+        )
+    names = [f"__fp_{i}" for i in range(len(cols))]
+    fixed = df.select(
+        *[
+            F.round(F.col(c) * scale).cast("decimal(38,0)").alias(name)
+            for c, name in zip(cols, names)
+        ]
+    )
+    try:
+        return _moments(fixed, names)
+    except ArithmeticException as e:
+        if not (e.getCondition() or "").startswith(
+            ("NUMERIC_VALUE_OUT_OF_RANGE", "ARITHMETIC_OVERFLOW")
+        ):
+            raise
+        raise ValueError(
+            f"{op_name}: the fixed-point moments of round(value*scale)"
+            " overflow DECIMAL(38,0) — lower `scale` for this value"
+            " range / row count"
+        ) from e
 
 
 def _centered_ok(M: np.ndarray, ss) -> float | None:

@@ -36,38 +36,39 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _sorted_levels(df: DataFrame, col: str) -> DataFrame:
+    """The distinct values of ``col`` sorted in one task: the order of
+    ``orderBy(col)`` (NULL first, NaN last) without its
+    range-partition sampling job and sort shuffle — the level table
+    is dimension-sized."""
+    return df.select(col).distinct().coalesce(1).sortWithinPartitions(col)
 
 
 def levels_of(df: DataFrame, col: str) -> list:
     """Distinct levels of ``col`` in sorted order (the reference's
     ``np.unique`` ordering, ``hdfe/hdfe.py:26``). Driver-side list —
-    intended for dimension-sized cardinalities, so the distinct values
-    are sorted in one task: the same order as ``orderBy(col)`` (NULL
-    first, NaN last), without its range-partition sampling job and
-    sort shuffle."""
-    return [
-        r[0]
-        for r in df.select(col).distinct().coalesce(1).sortWithinPartitions(col).collect()
-    ]
+    intended for dimension-sized cardinalities."""
+    return [r[0] for r in _sorted_levels(df, col).collect()]
 
 
 def factorize(df: DataFrame, col: str, code_col: str | None = None) -> DataFrame:
     """Add a dense integer code column ``0..k-1`` for ``col``.
 
     Codes follow sorted level order (``np.unique`` parity). The code
-    table is built by ranking the distinct values (k rows — tiny) and
-    broadcast-joined back, so the fact table never shuffles.
+    table numbers the sorted distinct values (k rows — tiny) in their
+    one partition, where ``monotonically_increasing_id`` counts 0, 1,
+    … — no window, so no unpartitioned window exchange — and is
+    broadcast-joined back, so the fact table never shuffles. The
+    NULL level takes a code in the table, but a NULL key never
+    matches the join, so NULL rows get a NULL code.
     """
     code_col = code_col or f"{col}_code"
-    codes = (
-        df.select(col)
-        .distinct()
-        .select(
-            col,
-            (F.dense_rank().over(Window.orderBy(col)) - 1).alias(code_col),
-        )
+    codes = _sorted_levels(df, col).select(
+        col, F.monotonically_increasing_id().cast("int").alias(code_col)
     )
     return df.join(F.broadcast(codes), on=col, how="left")
 

@@ -45,15 +45,17 @@ the FE key), a grouped aggregate (shuffle on FE/cluster key with
 map-side partials), or a moment pass (map-side partial k×k fan-in).
 Only k×k / (levels×k) matrices reach the driver.
 
-Moments: outside the sandwich meat (`_tensor_agg_exprs`,
-`_cluster_meat`, `_hc1_meat`), every moment matrix comes from the one
-kernel ``collinearity._moments`` — ``n``, per-column sums and Σ w·cᵢcⱼ
-in one aggregation, optionally under a listwise mask, a weight, or
-reduced from a per-group table to within-group central moments — and
-every centered diagonal is checked by the one guard
+Moments: every moment matrix comes from the one kernel
+``collinearity._moments`` — ``n``, per-column sums and Σ w·cᵢcⱼ in one
+aggregation, optionally under a listwise mask, a weight, or reduced
+from a per-group table to within-group central moments — and every
+centered diagonal is checked by the one guard
 ``collinearity._centered_ok``. Its callers: `gram_matrix`,
-`_pooled_homosked_onepass`, `_within_moments_gram`, Plan C's cell
-table and gate, `wls`, `iv_2sls` and `fit_stats`.
+`_pooled_homosked_onepass`, `_pooled_sandwich_onepass` (the meat
+tensors over its cell table), `_within_moments_gram`, Plan C's cell
+table and gate, the exact meats and residual-scan RSS of `_exact_V`
+(several outcomes in one aggregation through `_moment_sets`), `wls`,
+`iv_2sls` and `fit_stats`.
 
 Variance (``hdfe/hdfe.py:147-181``):
 
@@ -96,9 +98,9 @@ from pyspark.sql import functions as F
 from hdfe_spark.operators.collinearity import (
     _centered_ok,
     _moment_cells,
+    _moment_sets,
     _moments,
     _null_nan_flags,
-    _sym_from_row,
     find_collinear_cols_gram,
     gram_matrix,
 )
@@ -250,20 +252,6 @@ def _append_residuals(
     return df.select("*", *exprs)
 
 
-def _sum_sq(
-    df: DataFrame, cols: list[str], weight: str | None = None
-) -> np.ndarray:
-    """``Σ c²`` per column in one aggregation (``Σ w·c²`` when a
-    ``weight`` column is given)."""
-
-    def sq(c):
-        e = F.col(c) * F.col(c)
-        return e if weight is None else F.col(weight) * e
-
-    row = df.agg(*[F.sum(sq(c)).alias(c) for c in cols]).collect()[0]
-    return np.array([float(row[c]) if row[c] is not None else 0.0 for c in cols])
-
-
 def _rank_repair(G, Xty, check_rank: bool, tol: float, *aligned):
     """Rank repair on the driver-side Gram (reference
     ``hdfe/multicollinearity.py:75-108``): with ``check_rank``, drop
@@ -286,28 +274,20 @@ def _cluster_meat(
     fully distributed (``hdfe/hdfe.py:159-173`` runs a Python loop per
     outcome over a driver-resident scores matrix): stage 1 is ONE
     grouped aggregation producing the per-cluster scores for every
-    outcome × regressor, stage 2 reduces their upper-triangle cross
-    products, so only k(k+1)/2 doubles per outcome reach the driver —
-    never an n_clusters-sized collect, which at 100 TB (billions of
-    clusters) would not fit. Returns {outcome: (k × k) ndarray}."""
-    k = len(x_cols)
+    outcome × regressor, stage 2 reduces them to one `_moment_sets`
+    Gram per outcome in one aggregation, so only k(k+1)/2 doubles per
+    outcome reach the driver — never an n_clusters-sized collect,
+    which at 100 TB (billions of clusters) would not fit. Returns
+    {outcome: (k × k) ndarray}."""
     u_exprs = []
     for rc in resid_cols:
         for xc in x_cols:
             u_exprs.append(F.sum(F.col(rc) * F.col(xc)).alias(f"__u_{rc}__{xc}"))
     grouped = df.groupBy(*[F.col(c) for c in keys]).agg(*u_exprs)
-    m_exprs = []
-    for rc in resid_cols:
-        for i in range(k):
-            for j in range(i, k):
-                m_exprs.append(
-                    F.sum(
-                        F.coalesce(F.col(f"__u_{rc}__{x_cols[i]}"), F.lit(0.0))
-                        * F.coalesce(F.col(f"__u_{rc}__{x_cols[j]}"), F.lit(0.0))
-                    ).alias(f"__m_{rc}_{i}_{j}")
-                )
-    row = grouped.agg(*m_exprs).collect()[0]
-    return {rc: _sym_from_row(row, k, f"__m_{rc}_") for rc in resid_cols}
+    moms = _moment_sets(
+        grouped, [([f"__u_{rc}__{xc}" for xc in x_cols], None) for rc in resid_cols]
+    )
+    return {rc: mom.M for rc, mom in zip(resid_cols, moms)}
 
 
 def _cluster_meat_multiway(
@@ -339,32 +319,6 @@ def _homoskedastic_V(
     return [G_inv * (float(es) / dof) for es in rss]
 
 
-def _hc1_meat(
-    df: DataFrame,
-    resid_cols: list[str],
-    x_cols: list[str],
-) -> dict[str, np.ndarray]:
-    """White/HC1 sandwich 'meat' ``Σᵢ eᵢ² xᵢxᵢ'`` for every outcome in
-    ONE fused aggregation — k(k+1)/2 upper-triangle sums per outcome,
-    map-side partials, a k²-sized driver result. The per-row version
-    of ``_cluster_meat`` (each row its own cluster) WITHOUT the
-    shuffle that grouping by a row id would imply. Returns
-    {outcome: (k × k) ndarray}."""
-    k = len(x_cols)
-    exprs = []
-    for rc in resid_cols:
-        e2 = F.col(rc) * F.col(rc)
-        for i in range(k):
-            for j in range(i, k):
-                exprs.append(
-                    F.sum(e2 * F.col(x_cols[i]) * F.col(x_cols[j])).alias(
-                        f"__m_{rc}_{i}_{j}"
-                    )
-                )
-    row = df.agg(*exprs).collect()[0]
-    return {rc: _sym_from_row(row, k, f"__m_{rc}_") for rc in resid_cols}
-
-
 def _exact_V(
     frame: DataFrame,
     resid_cols: list[str],
@@ -378,17 +332,23 @@ def _exact_V(
     """Variance from a residual scan over ``frame`` — the exact tail
     every plan shares: cluster-robust (one- or two-way meat of the
     ``score_cols`` scores), White/HC1 (``n/(n − k_total)`` factor),
-    or homoskedastic (``Σe²/(n − k_total)``). ``G_inv`` is the
-    (demeaned) Gram pseudo-inverse; ``k_total`` counts absorbed
-    parameters too. One V per residual column."""
+    or homoskedastic (``Σe²/(n − k_total)``), each ONE moment
+    aggregation for every outcome. ``G_inv`` is the (demeaned) Gram
+    pseudo-inverse; ``k_total`` counts absorbed parameters too. One V
+    per residual column."""
     if cluster is not None:
         meat = _cluster_meat_multiway(frame, cluster, resid_cols, score_cols)
         return [G_inv @ meat[rc] @ G_inv for rc in resid_cols]
     if robust:
-        meat = _hc1_meat(frame, resid_cols, score_cols)
+        # Σᵢ eᵢ² xᵢxᵢ' per outcome: the per-row form of the cluster
+        # meat (each row its own cluster) without a groupBy shuffle.
+        moms = _moment_sets(
+            frame, [(score_cols, F.col(rc) * F.col(rc)) for rc in resid_cols]
+        )
         hc1 = n / max(n - k_total, 1)
-        return [G_inv @ meat[rc] @ G_inv * hc1 for rc in resid_cols]
-    return _homoskedastic_V(G_inv, _sum_sq(frame, resid_cols), n, k_total)
+        return [G_inv @ mom.M @ G_inv * hc1 for mom in moms]
+    rss = _moments(frame, resid_cols, full=False).ss
+    return _homoskedastic_V(G_inv, rss, n, k_total)
 
 
 def estimate(
@@ -457,71 +417,6 @@ _CLUSTER_FAST_MAX_K = 4
 # The two-way one-pass keeps its pair table only when pairs/rows is at
 # most this: near row-identity keys the table reduces nothing.
 _CLUSTER2_PAIR_RATIO = 0.5
-
-
-def _tensor_agg_exprs(k: int, extra: list | None = None) -> list:
-    """Second-level aggregation over a cluster-moment table (columns
-    ``__w``, ``__xx_{j}_{l}`` upper triangle, ``__xy_{i}``): global
-    moments G/X'y/n plus the meat tensors A = ΣXy⊗Xy, B = ΣXy⊗XX,
-    C = ΣXX⊗XX as upper-triangle product sums. ``extra`` exprs (e.g.
-    NULL/NaN rider flags) are placed right after ``__n`` so the
-    one-way path's committed plan shape is unchanged."""
-    P = [(j, l) for j in range(k) for l in range(j, k)]
-    return [
-        F.sum("__w").alias("__n"),
-        *(extra or []),
-        *[F.sum(f"__xx_{j}_{l}").alias(f"__g_{j}_{l}") for j, l in P],
-        *[F.sum(f"__xy_{i}").alias(f"__t_{i}") for i in range(k)],
-        *[
-            F.sum(F.col(f"__xy_{i}") * F.col(f"__xy_{j}")).alias(f"__a_{i}_{j}")
-            for i in range(k)
-            for j in range(i, k)
-        ],
-        *[
-            F.sum(F.col(f"__xy_{i}") * F.col(f"__xx_{j}_{l}")).alias(
-                f"__b_{i}_{j}_{l}"
-            )
-            for i in range(k)
-            for j, l in P
-        ],
-        *[
-            F.sum(
-                F.col(f"__xx_{P[p][0]}_{P[p][1]}")
-                * F.col(f"__xx_{P[q][0]}_{P[q][1]}")
-            ).alias(f"__c_{p}_{q}")
-            for p in range(len(P))
-            for q in range(p, len(P))
-        ],
-    ]
-
-
-def _tensors_from_row(row, k: int):
-    """Unpack a ``_tensor_agg_exprs`` result row into
-    ``(n, G, Xty, A, B, C)`` dense symmetric ndarrays."""
-    P = [(j, l) for j in range(k) for l in range(j, k)]
-
-    def _f(name):
-        v = row[name]
-        return 0.0 if v is None else float(v)
-
-    n = int(row["__n"] or 0)
-    G = _sym_from_row(row, k, "__g_")
-    Xty = np.array([[_f(f"__t_{i}")] for i in range(k)])
-    A = _sym_from_row(row, k, "__a_")
-    B = np.zeros((k, k, k))  # B[i, j, l] = Σ_g Xy_i · XX_jl
-    for i in range(k):
-        for j, l in P:
-            B[i, j, l] = B[i, l, j] = _f(f"__b_{i}_{j}_{l}")
-    C = np.zeros((k, k, k, k))  # C[j, l, p, q] = Σ_g XX_jl · XX_pq
-    for pi in range(len(P)):
-        for qi in range(pi, len(P)):
-            (j, l), (p, q) = P[pi], P[qi]
-            v = _f(f"__c_{pi}_{qi}")
-            for (a1, b1) in ((j, l), (l, j)):
-                for (a2, b2) in ((p, q), (q, p)):
-                    C[a1, b1, a2, b2] = v
-                    C[a2, b2, a1, b1] = v
-    return n, G, Xty, A, B, C
 
 
 def _meat_from_tensors(A, B, C, bv):
@@ -603,11 +498,13 @@ def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
     P = [(j, l) for j in range(k) for l in range(j, k)]
     xv = [F.col(c).cast("double") for c in x_cols]
     yv = F.col(y_col).cast("double")
-    # Per-row moment products, named by the `_tensor_agg_exprs` contract.
+    # Per-row moment products: the cell columns the second level reduces.
     prods = {
         **{f"__xx_{j}_{l}": xv[j] * xv[l] for j, l in P},
         **{f"__xy_{i}": xv[i] * yv for i in range(k)},
     }
+    cell_cols = [f"__xy_{i}" for i in range(k)] + [f"__xx_{j}_{l}" for j, l in P]
+    n_sum = F.sum("__w").alias("__n")
     bad_flags = _null_nan_flags(df, list(x_cols) + [y_col])
     rolled_bad = [F.max(f"__bad_{i}").alias(f"__bad_{i}") for i in range(k + 1)]
 
@@ -629,10 +526,10 @@ def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
             F.lit(1.0).alias("__w"),
             *[e.alias(a) for a, e in prods.items()],
         )
-        rows = [per_row.agg(*_tensor_agg_exprs(k, extra=bad_flags)).collect()[0]]
+        moms = [_moments(per_row, cell_cols, extra=[n_sum, *bad_flags])]
     elif len(cluster) == 1:
         g1 = _blocks(df.groupBy(cluster[0]))
-        rows = [g1.agg(*_tensor_agg_exprs(k, extra=rolled_bad)).collect()[0]]
+        moms = [_moments(g1, cell_cols, extra=[n_sum, *rolled_bad])]
     else:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -651,35 +548,43 @@ def _pooled_sandwich_onepass(df, y_col, x_cols, cluster, check_rank, tol):
             _spread_by_keys(df.select(*need), cluster).groupBy(key_a, key_b)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            rows = [pair.agg(*_tensor_agg_exprs(k, extra=rolled_bad)).collect()[0]]
-            if not _has_bad(rows[0]):
+            moms = [_moments(pair, cell_cols, extra=[n_sum, *rolled_bad])]
+            if not _has_bad(moms[0].row):
                 roll = [F.sum(a).alias(a) for a in ("__w", *prods)]
-                dims = [
-                    pair.groupBy(key).agg(*roll).agg(*_tensor_agg_exprs(k))
-                    for key in cluster
-                ]
+                dims = [pair.groupBy(key).agg(*roll) for key in cluster]
                 # The two roll-ups are independent jobs over the
                 # materialized pair table — submit both at once so the
                 # second back-fills the first's task tail (guide §2.6).
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    rows += pool.map(lambda d: d.collect()[0], dims)
+                    moms += pool.map(
+                        lambda d: _moments(d, cell_cols, extra=[n_sum]), dims
+                    )
         finally:
             pair.unpersist(False)
 
-    if _has_bad(rows[0]):
+    if _has_bad(moms[0].row):
         return None
-    tensors = [_tensors_from_row(row, k) for row in rows]
-    n, G, Xty = tensors[0][:3]
+    # Each pass's s is (X'y, G) and its M is [[A, B], [Bᵀ, C]] with the
+    # meat tensors A = ΣXy⊗Xy, B = ΣXy⊗XX, C = ΣXX⊗XX; `pij[j, l]` is
+    # the cell column of the pair (j, l), either order.
+    pij = np.zeros((k, k), dtype=int)
+    pij[np.triu_indices(k)] = np.arange(k, k + len(P))
+    pij = np.maximum(pij, pij.T)
+    s0 = moms[0].s
+    n = int(moms[0].row["__n"] or 0)
     G, Xty, x_used, idx = _rank_repair(
-        G, Xty, check_rank, tol, list(x_cols), list(range(k))
+        s0[pij], s0[:k].reshape(k, 1).copy(), check_rank, tol,
+        list(x_cols), list(range(k)),
     )
     b = _solve(G, Xty)
+    q = pij[np.ix_(idx, idx)]
     meats = []
-    for _, _, _, A, B, C in tensors:
+    for mom in moms:
+        M = mom.M
         meat = _meat_from_tensors(
-            A[np.ix_(idx, idx)],
-            B[np.ix_(idx, idx, idx)],
-            C[np.ix_(idx, idx, idx, idx)],
+            M[np.ix_(idx, idx)],
+            M[np.array(idx)[:, None, None], q],
+            M[q[:, :, None, None], q],
             b[:, 0],
         )
         if meat is None:
@@ -1066,7 +971,7 @@ def _plan_within(
             else None
         )
         if rss is None:
-            rss = _sum_sq(netted, resid_cols)
+            rss = _moments(netted, resid_cols, full=False).ss
         V_inv = S_inv
         if n_levels <= 2000:
             sums = work.groupBy(fe1).agg(
@@ -1812,12 +1717,15 @@ def wls(
         wrss = _rss_from_moments(mom.ss[k:], Xty, G, b)
         if wrss is None:
             # Guard trip (e.g. y ≈ 1e8 + signal): one exact weighted
-            # residual scan over the same listwise mask.
-            wrss = _sum_sq(
-                _append_residuals(df.filter(valid), y_cols, x_cols, b),
-                [f"resid_{yc}" for yc in y_cols],
-                weight=weights,
+            # residual scan over the same listwise mask. Σ w·(e·e) is
+            # the weighted s of the squared residuals; ss would
+            # associate it as (w·e)·e.
+            rcols = [f"resid_{yc}" for yc in y_cols]
+            resid = _append_residuals(df.filter(valid), y_cols, x_cols, b)
+            e2 = resid.select(
+                weights, *[(F.col(c) * F.col(c)).alias(c) for c in rcols]
             )
+            wrss = _moments(e2, rcols, weight=weights, full=False).s
         res.V = _homoskedastic_V(np.linalg.pinv(G), wrss, n, k)
         res.v_coef_names = list(x_cols)
     return res
@@ -1903,10 +1811,11 @@ def iv_2sls(
         if rss is None:
             # Guard trip: one exact residual scan (against the original
             # X) over the same listwise mask.
-            rss = _sum_sq(
+            rss = _moments(
                 _append_residuals(df.filter(valid), y_cols, x_cols, b),
                 [f"resid_{yc}" for yc in y_cols],
-            )
+                full=False,
+            ).ss
         res.V = _homoskedastic_V(np.linalg.pinv(XPX), rss, n, k)
         res.v_coef_names = list(x_cols)
     return res

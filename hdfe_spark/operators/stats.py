@@ -50,6 +50,7 @@ from hdfe_spark.operators._guards import (
     no_output_collision,
     quote_ident,
 )
+from hdfe_spark.operators.collinearity import _fixed_point_moments
 
 
 def _dup_order_guard(op_name: str, key_col: str, result):
@@ -1128,6 +1129,21 @@ def welch_ttest(
     )
 
 
+def _centered_gram(mom, p: int):
+    """``(A, mx)``: the centered Gram ``A = M − n·mx·mx'`` of the first
+    ``p`` columns of a `_fixed_point_moments` pass (scaled units; each
+    entry ``Mᵢⱼ − (n·mxᵢ)·mxⱼ`` formed in the upper triangle and
+    mirrored) and their means ``mx``."""
+    import numpy as np
+
+    n = float(mom.n)
+    mx = mom.s[:p] / n
+    A = mom.M[:p, :p] - np.outer(n * mx, mx)
+    lower = np.tril_indices(p, -1)
+    A[lower] = A.T[lower]
+    return A, mx
+
+
 def ridge2(
     df: DataFrame,
     x_cols: Sequence[str],
@@ -1160,34 +1176,10 @@ def ridge2(
     if len(x_cols) != 2:
         return _ridge_general(df, x_cols, y_col, lam, scale)
     x1, x2, y = x_cols[0], x_cols[1], y_col
-
-    def u(c):
-        return F.round(F.col(c) * scale).cast("decimal(38,0)")
-
-    cond = (
-        F.col(x1).isNotNull()
-        & F.col(x2).isNotNull()
-        & F.col(y).isNotNull()
-    )
-    m = (
-        df.filter(cond)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(u(x1)).alias("s1"),
-            F.sum(u(x2)).alias("s2"),
-            F.sum(u(y)).alias("sy"),
-            F.sum(u(x1) * u(x1)).alias("s11"),
-            F.sum(u(x1) * u(x2)).alias("s12"),
-            F.sum(u(x2) * u(x2)).alias("s22"),
-            F.sum(u(x1) * u(y)).alias("s1y"),
-            F.sum(u(x2) * u(y)).alias("s2y"),
-        )
-        .collect()[0]
-    )
-    n = float(m["n"])
-    s1, s2, sy = float(m["s1"]), float(m["s2"]), float(m["sy"])
-    s11, s12, s22 = float(m["s11"]), float(m["s12"]), float(m["s22"])
-    s1y, s2y = float(m["s1y"]), float(m["s2y"])
+    mom = _fixed_point_moments(df, [x1, x2, y], scale, "ridge2")
+    n = float(mom.n)
+    (s1, s2, sy), M = mom.s.tolist(), mom.M.tolist()
+    s11, s12, s22, s1y, s2y = M[0][0], M[0][1], M[1][1], M[0][2], M[1][2]
     m1, m2, my = s1 / n, s2 / n, sy / n
     # centered Gram and cross-moments, still in scaled units
     a11 = s11 - n * m1 * m1
@@ -1205,7 +1197,7 @@ def ridge2(
     intercept = (my - b1 * m1 - b2 * m2) / scale
     spark = df.sparkSession
     return spark.createDataFrame(
-        [(int(m["n"]), b1, b2, intercept, lam)],
+        [(mom.n, b1, b2, intercept, lam)],
         f"n long, b_{x1} double, b_{x2} double, "
         "intercept double, lam double",
     )
@@ -1229,44 +1221,21 @@ def _ridge_general(
 
     if len(x_cols) < 1:
         raise ValueError("ridge2 needs >= 1 regressor")
-    y = y_col
-
-    def u(c):
-        return F.round(F.col(c) * scale).cast("decimal(38,0)")
-
-    cond = F.col(y).isNotNull()
-    for c in x_cols:
-        cond = cond & F.col(c).isNotNull()
     p = len(x_cols)
-    exprs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for i, c in enumerate(x_cols):
-        exprs.append(F.sum(u(c)).alias(f"s{i}"))
-    exprs.append(F.sum(u(y)).alias("sy"))
-    for i in range(p):
-        for j in range(i, p):
-            exprs.append(
-                F.sum(u(x_cols[i]) * u(x_cols[j])).alias(f"s{i}_{j}")
-            )
-        exprs.append(F.sum(u(x_cols[i]) * u(y)).alias(f"s{i}_y"))
-    m = df.filter(cond).agg(*exprs).collect()[0]
-    n = float(m["n"])
+    mom = _fixed_point_moments(df, [*x_cols, y_col], scale, "ridge2")
+    n = float(mom.n)
     if n == 0:
         raise ValueError("ridge2: no rows with all regressors and y")
-    mx = np.array([float(m[f"s{i}"]) / n for i in range(p)])
-    my = float(m["sy"]) / n
-    A = np.empty((p, p))
-    g = np.empty(p)
-    for i in range(p):
-        for j in range(i, p):
-            A[i, j] = A[j, i] = float(m[f"s{i}_{j}"]) - n * mx[i] * mx[j]
-        g[i] = float(m[f"s{i}_y"]) - n * mx[i] * my
+    A, mx = _centered_gram(mom, p)
+    my = float(mom.s[p]) / n
+    g = mom.M[:p, p] - n * mx * my
     ls = lam * scale * scale
     b = np.linalg.solve(A + ls * np.eye(p), g)
     intercept = (my - float(b @ mx)) / scale
     names = ", ".join(f"b_{c} double" for c in x_cols)
     spark = df.sparkSession
     return spark.createDataFrame(
-        [(int(m["n"]), *[float(v) for v in b], intercept, lam)],
+        [(mom.n, *[float(v) for v in b], intercept, lam)],
         f"n long, {names}, intercept double, lam double",
     )
 
@@ -2776,32 +2745,11 @@ def pca(
     if k < 2:
         raise ValueError("pca: needs >= 2 columns")
 
-    def u(c):
-        return F.round(F.col(c) * scale).cast("decimal(38,0)")
-
-    cond = F.lit(True)
-    for c in x_cols:
-        cond = cond & F.col(c).isNotNull()
-    exprs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for i, c in enumerate(x_cols):
-        exprs.append(F.sum(u(c)).alias(f"s{i}"))
-    for i in range(k):
-        for j in range(i, k):
-            exprs.append(
-                F.sum(u(x_cols[i]) * u(x_cols[j])).alias(f"s{i}_{j}")
-            )
-    m = df.filter(cond).agg(*exprs).collect()[0]
-    n = int(m["n"])
+    mom = _fixed_point_moments(df, x_cols, scale, "pca")
+    n = mom.n
     if n < 2:
         raise ValueError("pca: needs >= 2 complete rows")
-    nf = float(n)
-    mx = np.array([float(m[f"s{i}"]) / nf for i in range(k)])
-    C = np.empty((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            C[i, j] = C[j, i] = (
-                float(m[f"s{i}_{j}"]) - nf * mx[i] * mx[j]
-            ) / (nf - 1.0)
+    C = _centered_gram(mom, k)[0] / (float(n) - 1.0)
     evals, evecs = np.linalg.eigh(C)
     order = np.argsort(evals)[::-1]
     evals = np.maximum(evals[order], 0.0)
@@ -2853,26 +2801,13 @@ def pca2(
     determinism (cxy = 0 falls back to the dominant coordinate
     axis)."""
 
-    def u(c):
-        return F.round(F.col(c) * scale).cast("decimal(38,0)")
-
-    base = df.filter(
-        F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    )
-    m = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(u(x_col)).alias("sx"),
-        F.sum(u(y_col)).alias("sy"),
-        F.sum(u(x_col) * u(x_col)).alias("sxx"),
-        F.sum(u(x_col) * u(y_col)).alias("sxy"),
-        F.sum(u(y_col) * u(y_col)).alias("syy"),
-    ).collect()[0]
-    n = int(m["n"])
+    mom = _fixed_point_moments(df, [x_col, y_col], scale, "pca2")
+    n = mom.n
     if n < 2:
         raise ValueError("pca2: needs >= 2 rows")
     nf = float(n)
-    sx, sy = float(m["sx"]), float(m["sy"])
-    sxx, sxy, syy = float(m["sxx"]), float(m["sxy"]), float(m["syy"])
+    (sx, sy), M = mom.s.tolist(), mom.M.tolist()
+    sxx, sxy, syy = M[0][0], M[0][1], M[1][1]
     mx, my = sx / nf, sy / nf
     # sample covariance (/(n-1)) in scaled units
     cxx = (sxx - nf * mx * mx) / (nf - 1.0)

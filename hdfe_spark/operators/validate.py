@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfe_spark.operators._guards import quote_ident
+from hdfe_spark.operators.collinearity import _fixed_point_moments
 
 
 def _rule_exprs(rule: dict, streaming: bool = False):
@@ -414,28 +415,20 @@ def mahalanobis_outliers(
     if k < 2:
         raise ValueError("mahalanobis_outliers needs >= 2 columns")
 
-    def u_dec(c):
-        return F.round(F.col(c) * scale).cast("decimal(38,0)")
-
-    exprs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for i, c in enumerate(cols):
-        exprs.append(F.sum(u_dec(c)).alias(f"s{i}"))
-    for i in range(k):
-        for j in range(i, k):
-            exprs.append(
-                F.sum(u_dec(cols[i]) * u_dec(cols[j])).alias(f"s{i}_{j}")
-            )
-    m = df.agg(*exprs).collect()[0]
-    n = float(m["n"])
+    mom = _fixed_point_moments(
+        df, cols, scale, "mahalanobis_outliers", complete=False
+    )
+    n = float(mom.n)
     if n == 0:
         raise ValueError("mahalanobis_outliers: empty input")
-    means = [float(m[f"s{i}"]) / n for i in range(k)]
+    means = [float(v) / n for v in mom.s]
     if k == 2:
         # closed-form adjugate: the bit-portable certificate path
         mx, my = means
-        cxx = float(m["s0_0"]) / n - mx * mx
-        cxy = float(m["s0_1"]) / n - mx * my
-        cyy = float(m["s1_1"]) / n - my * my
+        M = mom.M.tolist()
+        cxx = M[0][0] / n - mx * mx
+        cxy = M[0][1] / n - mx * my
+        cyy = M[1][1] / n - my * my
         det = cxx * cyy - cxy * cxy
         if det == 0.0:
             raise ValueError(
@@ -446,11 +439,7 @@ def mahalanobis_outliers(
     else:
         import numpy as np
 
-        C = np.empty((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                cij = float(m[f"s{i}_{j}"]) / n - means[i] * means[j]
-                C[i, j] = C[j, i] = cij
+        C = mom.M / n - np.outer(means, means)
         if np.linalg.matrix_rank(C) < k:
             raise ValueError(
                 "mahalanobis_outliers: singular covariance "

@@ -61,6 +61,39 @@ def test_factorize_sorted_codes(small_str_df):
     assert list(got["cat_a_code"]) == [1, 0, 0]
 
 
+def test_factorize_codes_without_window(spark, count_jobs):
+    """``factorize`` numbers ``levels_of``'s one-task sort: codes follow
+    ``np.unique`` order (a NULL level sorts first and takes code 0 in
+    the code table, but NULL rows match nothing and keep a NULL
+    code), the plan holds no Window, and the collect runs 3 jobs (4
+    with the old ranking window)."""
+    nan = float("nan")
+    rows = [(2.0, "b"), (nan, None), (None, "a"), (-1.5, "B"), (0.0, "b"),
+            (nan, "a"), (None, ""), (2.0, "é"), (-0.0, "a")]
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "row_id long, x double, s string"
+    )
+    for j, c in enumerate(("x", "s")):
+        vals = [r[j] for r in rows]
+        present = [v for v in vals if v is not None]
+        uniq = list(np.unique(np.array(present, dtype=float if c == "x" else object)))
+        offset = 1 if len(present) < len(vals) else 0
+
+        def code(v):
+            if v is None:
+                return None
+            if v != v:
+                return offset + len(uniq) - 1
+            return offset + next(i for i, u in enumerate(uniq) if u == v)
+
+        out = factorize(df, c)
+        assert "Window" not in out._jdf.queryExecution().executedPlan().toString()
+        got = dict(out.select("row_id", f"{c}_code").collect())
+        assert [got[i] for i in range(len(rows))] == [code(v) for v in vals]
+        assert dict(out.dtypes)[f"{c}_code"] == "int"
+        assert count_jobs(lambda c=c: factorize(df, c).toPandas()) == 3
+
+
 def test_get_all_dummies_two_cols(spark):
     # Reference golden case rows [[0,0],[1,0],[0,1]]
     # (tests/test_hdfe_funcs.py:48-52): first col all levels, second

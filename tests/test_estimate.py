@@ -406,11 +406,19 @@ def moment_frame(spark):
     return df, pd.DataFrame(rows, columns=["g", "a", "b", "i", "w"])
 
 
-def test_moment_kernel_matches_numpy(moment_frame):
+def test_moment_kernel_matches_numpy(moment_frame, count_jobs):
+    from decimal import ROUND_HALF_UP, Decimal
+
     from pyspark.sql import functions as F
 
-    from hdfe_spark.operators.collinearity import _centered_ok, _moments
+    from hdfe_spark.operators.collinearity import (
+        _centered_ok,
+        _fixed_point_moments,
+        _moments,
+    )
     from hdfe_spark.operators.estimate import _and_complete
+    from hdfe_spark.operators.stats import pca, pca2, ridge2
+    from hdfe_spark.operators.validate import mahalanobis_outliers
 
     df, pdf = moment_frame
     cols = ["a", "b", "i"]
@@ -466,6 +474,49 @@ def test_moment_kernel_matches_numpy(moment_frame):
     shifted = df.filter(valid).withColumn("b", F.col("b") + 1e9)
     far = _moments(shifted, cols, by="g")
     assert _centered_ok(far.M, far.ss) is None
+
+    # fixed point: DECIMAL(38,0) sums of round(c·scale) (HALF_UP),
+    # exact against Python-int arithmetic — listwise (the complete
+    # rows) and pairwise (n counts every row)
+    fcols, scale = ["a", "i", "w"], 1e3
+
+    def fixed(v):
+        if pd.isna(v):
+            return None
+        return int(Decimal(float(v) * scale).to_integral_value(ROUND_HALF_UP))
+
+    U = [[fixed(r[c]) for c in fcols] for _, r in pdf.iterrows()]
+    for complete in (True, False):
+        rows = [u for u in U if not complete or None not in u]
+        fp = _fixed_point_moments(df, fcols, scale, "kernel", complete=complete)
+        assert fp.n == len(rows) == (59 if complete else 60)
+        for i in range(3):
+            S = sum(u[i] for u in rows if u[i] is not None)
+            assert int(fp.row[f"__s_{i}"]) == S and fp.s[i] == float(S)
+            for j in range(i, 3):
+                P = sum(u[i] * u[j] for u in rows if None not in (u[i], u[j]))
+                assert int(fp.row[f"__p_{i}_{j}"]) == P
+                assert fp.M[i, j] == fp.M[j, i] == float(P)
+
+    # ... in the jobs of one aggregation, the overflow guard included;
+    # an overflow of DECIMAL(38,0) (a product here) is a named
+    # ValueError at every fixed-point site
+    spark = df.sparkSession
+    big = spark.range(50).select(
+        (F.col("id").cast("double") * 1e16).alias("a"),
+        (F.col("id") % 7).cast("double").alias("b"),
+    )
+    one_agg = count_jobs(lambda: big.agg(F.sum("b")).collect())
+    assert count_jobs(lambda: _fixed_point_moments(big, ["b"], 1e6, "kernel")) == one_agg
+    for op in (
+        lambda: _fixed_point_moments(big, ["a", "b"], 1e6, "kernel"),
+        lambda: pca(big, ["a", "b"]),
+        lambda: pca2(big, "a", "b"),
+        lambda: ridge2(big, ["a", "b"], "b", 1.0),
+        lambda: mahalanobis_outliers(big, ["a", "b"]),
+    ):
+        with pytest.raises(ValueError, match="overflow DECIMAL.*lower `scale`"):
+            op()
 
 
 def test_moment_sites_job_counts(reg_df, count_jobs):
