@@ -5928,10 +5928,11 @@ def _q_kruskal(spark, sf_dir):
 def _q_auc_by(spark, sf_dir):
     """Per-group exact ROC AUC (`operators/stats.py::auc_by`): does
     value rank event-id parity, per event type — the per-query
-    ranking eval. The rank-sum identity over GROUP-PARTITIONED
-    window prefix sums makes each group's AUC one division of exact
-    integers: fully distributed, no collect, parallel across
-    groups."""
+    ranking eval. The rank-sum identity over the rank kernel's
+    (group, value) cells and one distributed prefix sum ordered by
+    (group, value) makes each group's AUC one division of exact
+    integers: fully distributed, range-partitioned so a hot group
+    spreads over many tasks."""
     from hdfe_spark.operators.stats import auc_by
 
     ev = _t(spark, sf_dir, "events")
@@ -6063,10 +6064,12 @@ def _q_streaming_gopher(spark, sf_dir):
 def _q_spearman_by(spark, sf_dir):
     """Per-group Spearman rho (`operators/stats.py::spearman_by`):
     quantity-vs-price rank correlation per return flag — the global
-    `spearman` stratified, with group-partitioned window rank
-    tables (parallel across groups, never a global sort) and six
-    exact DECIMAL(38,0) rank moments per group; rho is one fixed
-    IEEE expression the oracle spells verbatim."""
+    `spearman` stratified, with rank tables from the rank kernel's
+    distributed prefix sum ordered by (group, value) and each
+    group's start offset joined back (no single-task group, never
+    a global sort) and six exact DECIMAL(38,0) rank moments per
+    group; rho is one fixed IEEE expression the oracle spells
+    verbatim."""
     from hdfe_spark.operators.stats import spearman_by
 
     li = _t(spark, sf_dir, "lineitem")
@@ -6242,11 +6245,12 @@ def _q_cramers(spark, sf_dir):
 
 def _q_gini_by(spark, sf_dir):
     """Per-source Gini of document mass (`operators/stats.py::
-    gini_by`): the global `gini`'s doubled tie-block identity with
-    GROUP-PARTITIONED window prefix sums (the `auc_by` shape) —
-    every sum an exact DECIMAL(38,0) integer, the coefficient one
-    fixed IEEE expression per group; negative values raise
-    in-plan."""
+    gini_by`): the global `gini`'s doubled tie-block identity over
+    the rank kernel's distributed prefix sum ordered by (group,
+    value) (the `auc_by` plan; each group's start offset factors
+    out of its sum) — every sum an exact DECIMAL(38,0) integer, the
+    coefficient one fixed IEEE expression per group; negative
+    values raise in-plan."""
     from hdfe_spark.operators.stats import gini_by
 
     docs = _t(spark, sf_dir, "documents")
@@ -6465,9 +6469,10 @@ def _q_mann_whitney_by(spark, sf_dir):
     """Per-group Mann-Whitney U + tie-corrected z
     (`operators/stats.py::mann_whitney_by` — `mann_whitney_u`
     stratified, the nonparametric sibling of `welch_by`): arms from
-    event_id parity, per-event_type cells with group-partitioned
-    window prefix sums (the `auc_by` shape); 2*R_a and the tie sum
-    are exact integers, z one fixed IEEE expression."""
+    event_id parity, per-event_type cells with the rank kernel's
+    distributed prefix sum ordered by (group, value) (the `auc_by`
+    plan); 2*R_a and the tie sum are exact integers, z one fixed
+    IEEE expression."""
     from hdfe_spark.operators.stats import mann_whitney_by
 
     ev = _t(spark, sf_dir, "events")
@@ -6916,10 +6921,12 @@ def _q_ks_by(spark, sf_dir):
     """Per-segment two-sample KS (`operators/stats.py::ks_by` —
     `ks_2sample` stratified, `welch_by`'s distribution-shift
     companion): purchase-vs-error value distributions per
-    user-id-mod-10 segment. Fully distributed (no driver collect):
-    (segment, value) cells, GROUP-PARTITIONED window prefix sums,
-    exact cross-multiplied gap |cuma*nb - cumb*na|, one grouped max;
-    d_num cast to long on the wire (the ks_test convention)."""
+    user-id-mod-10 segment. Fully distributed (no data collect):
+    (segment, value) cells, the rank kernel's distributed prefix
+    sum ordered by (segment, value) with each segment's start
+    offset and arm totals joined back, exact cross-multiplied gap
+    |cuma*nb - cumb*na|, one grouped max; d_num cast to long on the
+    wire (the ks_test convention)."""
     from hdfe_spark.operators.stats import ks_by
 
     ev = _t(spark, sf_dir, "events")

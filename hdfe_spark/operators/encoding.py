@@ -63,12 +63,17 @@ def factorize(df: DataFrame, col: str, code_col: str | None = None) -> DataFrame
     one partition, where ``monotonically_increasing_id`` counts 0, 1,
     … — no window, so no unpartitioned window exchange — and is
     broadcast-joined back, so the fact table never shuffles. The
-    NULL level takes a code in the table, but a NULL key never
-    matches the join, so NULL rows get a NULL code.
+    NULL level is dropped before numbering, so the codes are dense
+    over the non-NULL levels; a NULL key never matches the join, so
+    NULL rows get a NULL code.
     """
     code_col = code_col or f"{col}_code"
-    codes = _sorted_levels(df, col).select(
-        col, F.monotonically_increasing_id().cast("int").alias(code_col)
+    codes = (
+        _sorted_levels(df, col)
+        .filter(F.col(col).isNotNull())
+        .select(
+            col, F.monotonically_increasing_id().cast("int").alias(code_col)
+        )
     )
     return df.join(F.broadcast(codes), on=col, how="left")
 

@@ -142,8 +142,7 @@ def adaboost_stumps(
             .cast(_D38)
             .alias("__wn"),
         )
-        cum = prefix_sum(cells, ["__v"], "__wp", out_col="__cp")
-        cum = prefix_sum(cum, ["__v"], "__wn", out_col="__cn")
+        cum = prefix_sum(cells, ["__v"], ["__wp", "__wn"], ["__cp", "__cn"])
         tot = cum.agg(
             F.sum("__wp").cast(_D38).alias("wp"),
             F.sum("__wn").cast(_D38).alias("wn"),

@@ -13,7 +13,10 @@ do, re-expressed on DataFrames):
    all partitions sorted and mutually ordered. The result is pinned
    with ``localCheckpoint`` so phases 2-3 see the SAME partitioning
    (range boundaries come from a nondeterministic sample job; an
-   unpinned plan could re-sample between jobs).
+   unpinned plan could re-sample between jobs). The checkpoint is
+   lazy: the sample and the shuffle run when it is built, and the
+   first job that reads it (phase 2's collect) stores its blocks, so
+   no job is spent on the checkpoint alone.
 2. **Per-partition counts → driver** — ``n_partitions`` longs, never
    data — cumulated into start offsets.
 3. **Narrow rank reconstruction**: within a pinned sorted partition,
@@ -32,6 +35,9 @@ DuckDB oracle hash-checks.
 the driver instead of counts, plus a partition-LOCAL window cumsum
 (PARTITION BY the range-partition id — parallel across partitions,
 never the one-task global frame ``SUM() OVER (ORDER BY ...)`` plans).
+Its offsets ride in the plan as one array literal indexed by the
+partition id, so no offset table is broadcast. It takes several
+value columns at once, all on one sort and one collect.
 
 The order columns must form a TOTAL order (include a unique tiebreak,
 e.g. a key column) — ties across a range-partition boundary would
@@ -40,6 +46,7 @@ otherwise make ranks depend on partition placement.
 
 from __future__ import annotations
 
+import decimal
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -69,7 +76,8 @@ def _pinned_sorted(
 ) -> DataFrame:
     """Phase 1: range-partition + local sort + scan-order ``__mid``,
     pinned so later jobs see one consistent partitioning (range
-    boundaries come from a nondeterministic sample job)."""
+    boundaries come from a nondeterministic sample job). Lazy: the
+    first job that reads the result stores it."""
     cols = [F.col(c) for c in order_by]
     if num_partitions is None:
         num_partitions = shuffle_partitions(df.sparkSession)
@@ -77,7 +85,7 @@ def _pinned_sorted(
         df.repartitionByRange(num_partitions, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("__mid", F.monotonically_increasing_id())
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
 
 
@@ -175,8 +183,8 @@ def exact_ntile(
 def prefix_sum(
     df: DataFrame,
     order_by: Sequence[str],
-    value_col: str,
-    out_col: str = "cumsum",
+    value_col: "str | Sequence[str]",
+    out_col: "str | Sequence[str]" = "cumsum",
     num_partitions: int | None = None,
     allow_float: bool = False,
 ) -> DataFrame:
@@ -185,11 +193,17 @@ def prefix_sum(
     ``SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`` without
     its single-partition WindowExec.
 
-    Phase 2 ships per-partition sums (``n_partitions`` scalars) to
-    the driver; phase 3 adds the broadcast per-partition start offset
-    to a partition-LOCAL cumulative sum (window PARTITION BY the
-    range-partition id, ORDER BY the scan-order ``__mid`` — parallel,
-    each task bounded by one range partition).
+    ``value_col`` may be a sequence of columns, with ``out_col`` the
+    matching sequence of output names: every running total then
+    rides the SAME range sort, ``localCheckpoint`` and collect of
+    per-partition sums, so k totals cost what one does.
+
+    Phase 2 ships per-partition sums (``n_partitions`` scalars per
+    value column) to the driver; phase 3 adds the per-partition start
+    offset (an array literal) to a partition-LOCAL cumulative sum
+    (window PARTITION BY the range-partition id, ORDER BY the
+    scan-order ``__mid`` — parallel, each task bounded by one range
+    partition).
 
     Use an integer (or DECIMAL) ``value_col`` when cross-engine
     hash-exactness matters: float addition is non-associative, so the
@@ -199,59 +213,66 @@ def prefix_sum(
     key-dtype guard): a silently-inexact running total is how
     hash-verified pipelines drift.
 
-    The broadcast offset table is typed as Spark's OWN sum result
+    The offsets are typed as Spark's OWN sum result
     type (long for any integral input, scale-preserving widened
     decimal for DecimalType), NOT ``value_col``'s type: cumulative
     offsets of an int32 column exceed int32 range once the corpus
     total passes 2^31 — exactly the overflow `pack_sequences` would
     inherit at 100 TB token counts."""
-    pinned = _pinned_sorted(df, order_by, num_partitions)
-    spark = df.sparkSession
-    vtype = pinned.schema[value_col].dataType
-    if isinstance(vtype, (T.FloatType, T.DoubleType)):
-        if not allow_float:
-            raise ValueError(
-                f"prefix_sum: value_col {value_col!r} is "
-                f"{vtype.simpleString()}; float addition is "
-                "non-associative so the distributed running total is "
-                "not bit-exact. Use an integer/decimal column (cents, "
-                "micros) or pass allow_float=True to accept last-bit "
-                "drift."
-            )
-        off_type = "double"
-    elif isinstance(vtype, T.DecimalType):
-        # Spark's sum() widens DECIMAL(p,s) -> DECIMAL(min(38,p+10),s).
-        off_type = f"decimal({min(38, vtype.precision + 10)},{vtype.scale})"
-    elif isinstance(
-        vtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        off_type = "long"
-    else:
+    values = [value_col] if isinstance(value_col, str) else list(value_col)
+    outs = [out_col] if isinstance(out_col, str) else list(out_col)
+    if len(outs) != len(values):
         raise ValueError(
-            f"prefix_sum: unsupported value_col type {vtype.simpleString()}"
+            f"prefix_sum: {len(values)} value columns but"
+            f" {len(outs)} output columns"
         )
-    sums = sorted(
-        (r["__pid"], r["s"])
-        for r in pinned.select(_pid().alias("__pid"), F.col(value_col))
+    off_types, acc = [], []
+    for v in values:
+        vtype = df.schema[v].dataType
+        if isinstance(vtype, (T.FloatType, T.DoubleType)):
+            if not allow_float:
+                raise ValueError(
+                    f"prefix_sum: value_col {v!r} is "
+                    f"{vtype.simpleString()}; float addition is "
+                    "non-associative so the distributed running total"
+                    " is not bit-exact. Use an integer/decimal column"
+                    " (cents, micros) or pass allow_float=True to"
+                    " accept last-bit drift."
+                )
+            off_types.append("double")
+            acc.append(0.0)
+        elif isinstance(vtype, T.DecimalType):
+            # Spark's sum() widens DECIMAL(p,s) -> DECIMAL(min(38,p+10),s).
+            off_types.append(
+                f"decimal({min(38, vtype.precision + 10)},{vtype.scale})"
+            )
+            acc.append(decimal.Decimal(0))
+        elif isinstance(
+            vtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        ):
+            off_types.append("long")
+            acc.append(0)
+        else:
+            raise ValueError(
+                f"prefix_sum: unsupported value_col type"
+                f" {vtype.simpleString()}"
+            )
+    pinned = _pinned_sorted(df, order_by, num_partitions)
+    sums = {
+        r[0]: r[1:]
+        for r in pinned.select(_pid().alias("__pid"), *values)
         .groupBy("__pid")
-        .agg(F.sum(value_col).alias("s"))
+        .agg(*[F.sum(v) for v in values])
         .collect()
-    )
-    if isinstance(vtype, T.DecimalType):
-        import decimal
-
-        acc = decimal.Decimal(0)
-    elif off_type == "double":
-        acc = 0.0
-    else:
-        acc = 0
+    }
+    # offsets[p] = the running totals before range partition p, as
+    # one array literal per value column (empty partitions, absent
+    # from `sums`, add nothing)
     offsets = []
-    for p, s in sums:
-        offsets.append((p, acc))
-        acc += s if s is not None else 0
-    off = F.broadcast(
-        spark.createDataFrame(offsets, f"__pid long, __off {off_type}")
-    )
+    for p in range(max(sums, default=-1) + 1):
+        offsets.append(acc)
+        part = sums.get(p, [None] * len(values))
+        acc = [a + (x if x is not None else 0) for a, x in zip(acc, part)]
     w = (
         Window.partitionBy("__pid")
         .orderBy("__mid")
@@ -259,9 +280,17 @@ def prefix_sum(
     )
     return (
         pinned.withColumn("__pid", _pid())
-        .join(off, "__pid")
-        .withColumn(out_col, F.col("__off") + F.sum(value_col).over(w))
-        .drop("__pid", "__off", "__mid")
+        .withColumns(
+            {
+                o: F.element_at(
+                    F.lit([off[i] for off in offsets]).cast(f"array<{t}>"),
+                    (F.col("__pid") + 1).cast("int"),
+                )
+                + F.sum(v).over(w)
+                for i, (o, v, t) in enumerate(zip(outs, values, off_types))
+            }
+        )
+        .drop("__pid", "__mid")
     )
 
 

@@ -33,6 +33,21 @@ Engine-portable exactness (the repo's Gram pattern,
   unlike a windowed float SUM, which DuckDB may evaluate in segment-
   tree order and Spark sequentially, diverging in the last ulp. No
   closed-form (1-a)^{-t} rescaling, so no overflow cap either.
+- The rank statistics — ``mann_whitney_u``, ``ks_2sample``,
+  ``spearman_corr``, ``auc_score``, ``gini`` and their ``_by``
+  forms — share ONE kernel, ``_rank_cells``: the (group, value)
+  cell table with per-side counts, and the counts ordered before
+  each cell from one distributed ``rank.prefix_sum`` over
+  (group, value) — range-partitioned, so a hot group spreads over
+  many tasks and no plan runs a group in one task. Each group's
+  start offset either factors out of a sum linear in the count
+  (AUC, Mann-Whitney, Gini: minus 2·start·n, no join) or is joined
+  back null-safe (KS, Spearman). A ``_by`` form is the kernel plus
+  its final Spark expression; its global is the same aggregation
+  over one literal group, collected, with its own guards and its
+  final driver-side IEEE expression. Average-tie ranks ride in
+  half-units (2·rank = 2B + c + 1), so every sum is an exact
+  DECIMAL(38,0) integer.
 """
 
 from __future__ import annotations
@@ -233,56 +248,6 @@ def _ordered_series(
 # guard for every realistic period; a hot key there should be
 # pre-aggregated (e.g. resample to the season grid) instead.
 # ---------------------------------------------------------------
-
-
-def _max_cells_guard(cells, op_name: str, max_cells, wrap_col: str):
-    """Route check for the per-group CELL-WINDOW family (`auc_by`,
-    `gini_by`, `spearman_by`, `ks_by` — VERDICT r11 item 8): their
-    group-partitioned window runs over the group's DISTINCT-value
-    cells, so a hot group is fine at 99% row skew (the cell table is
-    compressed — measured 3.6x worst, SCALE.md r11b) but a group
-    whose DISTINCT-value count exceeds the task envelope would
-    silently single-task a row-scale segment again. This guard
-    counts cells per group with a map-side-combined aggregation
-    (never a window; the cell subtree's exchange is reused by
-    Catalyst), joins the group-cardinality counts back, and raises
-    IN-PLAN through ``wrap_col`` BEFORE the offending group's window
-    segment materializes — route that group through the global
-    operator's distributed prefix-sum path (cross-checked EXACT in
-    the r11 skew stress) or raise the cap knowingly.
-    ``max_cells <= 0`` disables the check."""
-    if max_cells is None or int(max_cells) <= 0:
-        return cells
-    dtype = cells.schema[wrap_col].dataType.simpleString()
-    counts = cells.groupBy(F.col("__g").alias("__g9")).agg(
-        F.count(F.lit(1)).alias("__ncells")
-    )
-    wrapped = F.when(
-        F.col("__ncells") > F.lit(int(max_cells)),
-        F.raise_error(
-            F.concat(
-                F.lit(f"{op_name}: group "),
-                F.coalesce(F.col("__g").cast("string"), F.lit("NULL")),
-                F.lit(" has "),
-                F.col("__ncells").cast("string"),
-                F.lit(
-                    " distinct-value cells >"
-                    f" max_cells_per_group={int(max_cells)} — its"
-                    " window segment would single-task at row scale;"
-                    " route it through the global operator's"
-                    " distributed prefix-sum path or raise the cap"
-                    " knowingly"
-                ),
-            )
-        ).cast(dtype),
-    ).otherwise(F.col(wrap_col))
-    out_cols = [
-        wrapped.alias(wrap_col) if c == wrap_col else F.col(c)
-        for c in cells.columns
-    ]
-    return cells.join(
-        counts, F.col("__g").eqNullSafe(F.col("__g9"))
-    ).select(*out_cols)
 
 
 def _blocked_series(
@@ -1591,39 +1556,100 @@ def holt_winters(
     )
 
 
-# ---------------------------------------------------------------
-# Rank-based nonparametrics: built on the distinct-value table +
-# distributed exact prefix sums (`operators/rank.py::prefix_sum`),
-# so no global single-partition WindowExec ever appears: the
-# cumulative pass runs over DISTINCT values (|V| << N rows), range-
-# partitioned. Every statistic reduces to a handful of exact
-# integer/decimal scalars; the final z / D / rho is one
-# deterministic IEEE expression both engines share.
+# Rank statistics (Mann-Whitney, KS, Spearman, AUC, Gini and their
+# `_by` forms) on one cell kernel, `_rank_cells` (module docstring).
+# No plan holds a Window other than the prefix sum's partition-local
+# one, so no group runs in one task however hot it is.
+
+_D38 = "decimal(38,0)"
 
 
-def _side_cells(df, value_col, side_col, a_label, b_label):
-    """Distinct-value table with per-side counts and INCLUSIVE
-    cumulative counts under the value order."""
+def _rank_cells(df, group, value, counts, within=False):
+    """The (group, value) cell table of ``df``: ``__g``, ``__v`` and,
+    for each ``name -> predicate`` of ``counts``, the cell's count of
+    predicate rows ``name`` plus ``name_b``, the count of such rows in
+    the same group ordered BEFORE the cell.
+
+    The ``name_b`` come from ONE `rank.prefix_sum` over the total
+    order (group, value): range-partitioned, so a hot group spreads
+    over many tasks. That running count crosses group boundaries;
+    a group's start offset is its first cell's global ``name_b``
+    (the group's minimum). With ``within=False`` the global counts
+    are returned, for callers whose per-group sums are linear in B
+    and subtract the offset algebraically (Σ c(2(B - s) + k) =
+    Σ c(2B + k) - 2·s·Σc, no join; the factored sum's DECIMAL(38,0)
+    range then scales with the table's rows, not the group's). With
+    ``within=True`` the per-group offsets and totals ``name_t`` are
+    joined back null-safe (a NULL group is a group) and ``name_b`` is
+    within-group. Globals pass a literal ``group``: one group,
+    offset 0.
+
+    The prefix sum's jobs (range sample, range shuffle, partition
+    sums) run when this is called; everything after it is lazy."""
     from hdfe_spark.operators.rank import prefix_sum
 
-    cells = (
-        df.filter(
-            F.col(value_col).isNotNull()
-            & F.col(side_col).isin([a_label, b_label])
-        )
-        .groupBy(value_col)
-        .agg(
-            F.sum(
-                F.when(F.col(side_col) == a_label, 1).otherwise(0)
-            ).alias("ca"),
-            F.sum(
-                F.when(F.col(side_col) == b_label, 1).otherwise(0)
-            ).alias("cb"),
-        )
+    names = list(counts)
+    cells = df.groupBy(group.alias("__g"), value.alias("__v")).agg(
+        *[
+            F.sum(F.when(p, 1).otherwise(0)).cast("long").alias(n)
+            for n, p in counts.items()
+        ]
     )
-    cells = prefix_sum(cells, [value_col], "ca", out_col="cuma")
-    cells = prefix_sum(cells, [value_col], "cb", out_col="cumb")
-    return cells
+    cells = prefix_sum(
+        cells, ["__g", "__v"], names, [f"{n}_b" for n in names]
+    ).withColumns({f"{n}_b": F.col(f"{n}_b") - F.col(n) for n in names})
+    if not within:
+        return cells
+    per_group = cells.groupBy(F.col("__g").alias("__gs")).agg(
+        *[F.min(f"{n}_b").alias(f"{n}_s") for n in names],
+        *[F.sum(n).cast("long").alias(f"{n}_t") for n in names],
+    )
+    return cells.join(
+        per_group, F.col("__g").eqNullSafe(F.col("__gs"))
+    ).withColumns(
+        {f"{n}_b": F.col(f"{n}_b") - F.col(f"{n}_s") for n in names}
+    )
+
+
+def _two_arm_cells(df, group, side, value_col, a_label, b_label, op,
+                   within=False):
+    """`_rank_cells` of the rows whose ``side`` is ``a_label`` (counts
+    ``__ca``) or ``b_label`` (``__cb``), NULL values dropped."""
+    if a_label == b_label:
+        raise ValueError(
+            f"{op}: a_label and b_label are the same value"
+            f" ({a_label!r}) — one arm would be double-counted as"
+            " both"
+        )
+    rows = df.filter(
+        F.col(value_col).isNotNull() & side.isin(a_label, b_label)
+    )
+    counts = {"__ca": side == F.lit(a_label), "__cb": side == F.lit(b_label)}
+    return _rank_cells(rows, group, F.col(value_col), counts, within)
+
+
+def _rank_sums(df, group, side, value_col, a_label, b_label, op):
+    """Per-group rank-sum scalars of arm a against arm b (Mann-Whitney
+    and AUC): ``n_a``, ``n_b``, ``__r2a`` = 2·R_a and the tie sum
+    ``__t3`` = Σ(c³ - c), all exact. Ranks are average-tie and ride
+    in half-units: a cell of c pooled rows after B pooled rows holds
+    rank B + (c+1)/2, so 2·R_a = Σ ca·(2B + c + 1) is an integer
+    (DECIMAL(38,0): past ~3e9 rows the products leave int64)."""
+    cells = _two_arm_cells(df, group, side, value_col, a_label, b_label, op)
+    c = (F.col("__ca") + F.col("__cb")).cast(_D38)
+    b = (F.col("__ca_b") + F.col("__cb_b")).cast(_D38)
+    g = cells.groupBy("__g").agg(
+        F.sum("__ca").cast("long").alias("n_a"),
+        F.sum("__cb").cast("long").alias("n_b"),
+        F.sum(F.col("__ca").cast(_D38) * (F.lit(2) * b + c + F.lit(1)))
+        .alias("__r2g"),
+        F.sum(c * c * c - c).alias("__t3"),
+        F.min(b).alias("__b0"),
+    )
+    # B is the global count; the group's ranks start __b0 higher
+    return g.withColumn(
+        "__r2a", F.col("__r2g") - F.lit(2) * F.col("__b0") * F.col("n_a")
+    )
 
 
 def mann_whitney_u(
@@ -1643,29 +1669,21 @@ def mann_whitney_u(
     (DECIMAL(38,0): at 10^12 rows the products pass int64). The
     z-score is then driver-side IEEE arithmetic on 5 exact scalars.
 
-    One groupBy builds the distinct-value cells; two distributed
-    prefix sums give cumulative counts; one aggregation reduces to
-    scalars. Returns one row: n_a, n_b, u_a, u_b, tie_term, z.
+    `mann_whitney_by` over one group: the rank kernel's distinct-value
+    cells and one distributed prefix sum, one aggregation to scalars.
+    Equal labels and an empty side raise. Returns one row: n_a, n_b,
+    u_a, u_b, tie_term, z.
     """
-    cells = _side_cells(df, value_col, side_col, a_label, b_label)
-    c = (F.col("ca") + F.col("cb")).cast("decimal(38,0)")
-    before = (
-        F.col("cuma") + F.col("cumb") - F.col("ca") - F.col("cb")
-    ).cast("decimal(38,0)")
-    r2_term = F.col("ca").cast("decimal(38,0)") * (
-        F.lit(2).cast("decimal(38,0)") * before + c + F.lit(1)
-    )
-    m = cells.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-        F.sum(r2_term).alias("ra2"),
-        F.sum(c * c * c - c).alias("ties"),
-    ).collect()[0]
-    na, nb = int(m["na"]), int(m["nb"])
-    if na == 0 or nb == 0:
+    rows = _rank_sums(
+        df, F.lit(0), F.col(side_col), value_col, a_label, b_label,
+        "mann_whitney_u",
+    ).collect()
+    if not rows or not rows[0]["n_a"] or not rows[0]["n_b"]:
         raise ValueError("mann_whitney_u: empty side")
+    m = rows[0]
+    na, nb = int(m["n_a"]), int(m["n_b"])
     n = na + nb
-    ra2, ties = float(m["ra2"]), float(m["ties"])
+    ra2, ties = float(m["__r2a"]), float(m["__t3"])
     u_a = ra2 / 2.0 - na * (na + 1) / 2.0
     u_b = float(na) * nb - u_a
     mu = float(na) * nb / 2.0
@@ -1686,6 +1704,27 @@ def mann_whitney_u(
     )
 
 
+def _ks_gaps(df, group, side_col, value_col, a_label, b_label, op):
+    """Per-group KS scalars: ``n_a``, ``n_b`` and ``d_num``, the max
+    over the group's cells of |cuma·n_b - cumb·n_a| (inclusive
+    within-group ECDF counts, cross-multiplied: an exact integer, so
+    the max is order-free)."""
+    cells = _two_arm_cells(
+        df, group, F.col(side_col), value_col, a_label, b_label, op,
+        within=True,
+    )
+    cuma = (F.col("__ca_b") + F.col("__ca")).cast(_D38)
+    cumb = (F.col("__cb_b") + F.col("__cb")).cast(_D38)
+    gap = F.abs(
+        cuma * F.col("__cb_t").cast(_D38) - cumb * F.col("__ca_t").cast(_D38)
+    )
+    return cells.groupBy("__g").agg(
+        F.first("__ca_t").alias("n_a"),
+        F.first("__cb_t").alias("n_b"),
+        F.max(gap).alias("d_num"),
+    )
+
+
 def ks_2sample(
     df: DataFrame,
     side_col: str,
@@ -1697,25 +1736,20 @@ def ks_2sample(
     at every pooled distinct value, kept EXACT by cross-multiplying
     — |cuma*nb - cumb*na| is an integer (DECIMAL(38,0) at scale), so
     the argmax is order-free and engine-exact; D itself is one final
-    integer division in IEEE double.
+    integer division in IEEE double. `ks_by` over one group; equal
+    labels and an empty side raise.
 
     Returns one row: n_a, n_b, d_num (the integer numerator, as
     DECIMAL(38,0) — it is bounded by n_a*n_b, which overflows int64
     once both sides exceed ~3e9 rows, well inside the 1e12-row scale
     this module targets), d = d_num/(n_a*n_b)."""
-    cells = _side_cells(df, value_col, side_col, a_label, b_label)
-    tot = cells.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-    ).collect()[0]
-    na, nb = int(tot["na"]), int(tot["nb"])
-    if na == 0 or nb == 0:
+    rows = _ks_gaps(
+        df, F.lit(0), side_col, value_col, a_label, b_label, "ks_2sample"
+    ).collect()
+    if not rows or not rows[0]["n_a"] or not rows[0]["n_b"]:
         raise ValueError("ks_2sample: empty side")
-    gap = F.abs(
-        F.col("cuma").cast("decimal(38,0)") * F.lit(nb)
-        - F.col("cumb").cast("decimal(38,0)") * F.lit(na)
-    )
-    m = cells.agg(F.max(gap).alias("d_num")).collect()[0]
+    m = rows[0]
+    na, nb = int(m["n_a"]), int(m["n_b"])
     d_num = int(m["d_num"])  # exact arbitrary-precision Python int
     d = float(d_num) / (float(na) * nb)
     spark = df.sparkSession
@@ -1732,7 +1766,6 @@ def ks_by(
     value_col: str,
     a_label,
     b_label,
-    max_cells_per_group: int = 8_000_000,
 ) -> DataFrame:
     """Per-group two-sample Kolmogorov-Smirnov D — `ks_2sample`
     stratified (distribution shift per segment/experiment, the
@@ -1742,68 +1775,23 @@ def ks_by(
     (DECIMAL(38,0)), so the per-group max is order-free and
     engine-exact; D is one final IEEE division per group.
 
-    Unlike the global test (driver collect of two scalars), this is
-    FULLY distributed: (group, value) cell counts, GROUP-PARTITIONED
-    window prefix sums (parallel across groups, never a global sort
-    — the `auc_by` shape), one grouped max. Groups where either side
-    is empty return NULL d (the thin-arm `welch_by` convention);
-    NULL values are excluded; a NULL group is itself a group.
-    Returns one row per group: (group, n_a, n_b, d_num, d)."""
+    Plan: the rank kernel's (group, value) cells, one distributed
+    prefix sum over (group, value) — range-partitioned, so a hot
+    group spreads over many tasks — with each group's start offset
+    and arm totals joined back null-safe, then one grouped max. The
+    prefix sum's jobs run when this is called; the rest is lazy.
+    Groups where either side is empty return NULL d (the thin-arm
+    `welch_by` convention); NULL values are excluded; a NULL group
+    is itself a group. Returns one row per group: (group, n_a, n_b,
+    d_num, d)."""
     no_output_collision(
         "ks_by", "group_col", group_col, ("n_a", "n_b", "d_num", "d")
     )
-    if a_label == b_label:
-        raise ValueError(
-            "ks_by: a_label and b_label are the same value"
-            f" ({a_label!r}) — one arm would be double-counted as"
-            " both"
-        )
-    sv = F.col(side_col)
-    cells = (
-        df.filter(
-            F.col(value_col).isNotNull()
-            & ((sv == F.lit(a_label)) | (sv == F.lit(b_label)))
-        )
-        .groupBy(
-            F.col(group_col).alias("__g"),
-            F.col(value_col).alias("__v"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.when(sv == F.lit(a_label), F.lit(1))), F.lit(0)
-            ).cast("long").alias("__ca"),
-            F.coalesce(
-                F.sum(F.when(sv == F.lit(b_label), F.lit(1))), F.lit(0)
-            ).cast("long").alias("__cb"),
-        )
-    )
-    cells = _max_cells_guard(
-        cells, "ks_by", max_cells_per_group, "__ca"
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("__g")
-    cum = cells.select(
-        "__g",
-        F.sum("__ca").over(w).cast("decimal(38,0)").alias("__cuma"),
-        F.sum("__cb").over(w).cast("decimal(38,0)").alias("__cumb"),
-        F.sum("__ca").over(wall).cast("long").alias("__na"),
-        F.sum("__cb").over(wall).cast("long").alias("__nb"),
-    )
-    gap = F.abs(
-        F.col("__cuma") * F.col("__nb").cast("decimal(38,0)")
-        - F.col("__cumb") * F.col("__na").cast("decimal(38,0)")
-    )
-    agg = cum.groupBy("__g").agg(
-        F.first("__na").alias("n_a"),
-        F.first("__nb").alias("n_b"),
-        F.max(gap).alias("d_num"),
+    g = _ks_gaps(
+        df, F.col(group_col), side_col, value_col, a_label, b_label, "ks_by"
     )
     ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return agg.select(
+    return g.select(
         F.col("__g").alias(group_col),
         "n_a",
         "n_b",
@@ -1813,6 +1801,53 @@ def ks_by(
             F.col("d_num").cast("double")
             / (F.col("n_a").cast("double") * F.col("n_b").cast("double")),
         ).alias("d"),
+    )
+
+
+def _spearman_moments(df, group, x_col, y_col, within=True):
+    """Per-group exact rank moments of the doubled average-tie ranks
+    2·rank = 2B + c + 1: ``n``, ``__sx``, ``__sy``, ``__sxx``,
+    ``__sxy``, ``__syy``. Each column's within-group ranks come from
+    its own kernel cells, joined back to the rows null-safe
+    (``within=False``: one literal group, whose offset is 0)."""
+    base = df.filter(
+        F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
+    ).select(
+        group.alias("__g"),
+        F.col(x_col).alias("__x"),
+        F.col(y_col).alias("__y"),
+    )
+
+    def ranks(col):
+        # keys renamed (__gr/__vr): the rank table derives from
+        # `base`, so joining back by the same names would hit the
+        # self-join attribute ambiguity
+        cells = _rank_cells(
+            base, F.col("__g"), F.col(col), {"__c": F.lit(True)}, within
+        )
+        return cells.select(
+            F.col("__g").alias("__gr"),
+            F.col("__v").alias("__vr"),
+            (F.lit(2) * F.col("__c_b") + F.col("__c") + F.lit(1))
+            .cast(_D38)
+            .alias(f"__r2{col[-1]}"),
+        )
+
+    ranked = base
+    for col, table in (("__x", ranks("__x")), ("__y", ranks("__y"))):
+        ranked = ranked.join(
+            table,
+            F.col("__g").eqNullSafe(F.col("__gr"))
+            & (F.col(col) == F.col("__vr")),
+        ).drop("__gr", "__vr")
+    r2x, r2y = F.col("__r2x"), F.col("__r2y")
+    return ranked.groupBy("__g").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(r2x).alias("__sx"),
+        F.sum(r2y).alias("__sy"),
+        F.sum(r2x * r2x).alias("__sxx"),
+        F.sum(r2x * r2y).alias("__sxy"),
+        F.sum(r2y * r2y).alias("__syy"),
     )
 
 
@@ -1827,43 +1862,17 @@ def spearman_corr(
     formula then runs on five exact DECIMAL(38,0) sums; the final
     rho is deterministic IEEE double arithmetic.
 
-    Never sorts the full table: two small distinct-value prefix
-    sums + two joins back (broadcast when the value domain is
-    small) + one aggregation. Returns one row: n, rho."""
-    from hdfe_spark.operators.rank import prefix_sum
-
-    base = df.filter(
-        F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    ).select(x_col, y_col)
-
-    def rank_table(col, rcol):
-        cells = base.groupBy(col).agg(
-            F.count(F.lit(1)).cast("long").alias("c")
-        )
-        cells = prefix_sum(cells, [col], "c", out_col="cum")
-        return cells.select(
-            col,
-            (
-                F.lit(2) * (F.col("cum") - F.col("c"))
-                + F.col("c")
-                + F.lit(1)
-            ).cast("decimal(38,0)").alias(rcol),
-        )
-
-    rx = rank_table(x_col, "r2x")
-    ry = rank_table(y_col, "r2y")
-    ranked = base.join(rx, x_col).join(ry, y_col)
-    m = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("r2x").alias("sx"),
-        F.sum("r2y").alias("sy"),
-        F.sum(F.col("r2x") * F.col("r2x")).alias("sxx"),
-        F.sum(F.col("r2x") * F.col("r2y")).alias("sxy"),
-        F.sum(F.col("r2y") * F.col("r2y")).alias("syy"),
-    ).collect()[0]
+    `spearman_by`'s moments over one group: never sorts the full
+    table, two distinct-value prefix sums + two joins back + one
+    aggregation. An empty input or a constant column raises.
+    Returns one row: n, rho."""
+    rows = _spearman_moments(df, F.lit(0), x_col, y_col, False).collect()
+    if not rows:
+        raise ValueError("spearman_corr: no rows with both columns set")
+    m = rows[0]
     n = float(m["n"])
-    sx, sy = float(m["sx"]), float(m["sy"])
-    sxx, sxy, syy = float(m["sxx"]), float(m["sxy"]), float(m["syy"])
+    sx, sy = float(m["__sx"]), float(m["__sy"])
+    sxx, sxy, syy = (float(m[k]) for k in ("__sxx", "__sxy", "__syy"))
     num = n * sxy - sx * sy
     den = math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
     if den <= 0.0:
@@ -2273,8 +2282,8 @@ def auc_score(
     via the rank-sum identity AUC = U_pos / (n_pos * n_neg) with
     average-tie ranks (ties contribute 1/2, the standard trapezoid
     convention) — the classifier-eval companion of
-    ``mann_whitney_u``, sharing its distinct-value prefix-sum path:
-    never a global score sort, exact at any scale. Returns one row:
+    ``mann_whitney_u``, sharing its rank-kernel path: never a
+    global score sort, exact at any scale. Returns one row:
     n_pos, n_neg, auc.
 
     LABEL CONVENTION: BOOLEAN coercion — any nonzero label is
@@ -3082,6 +3091,34 @@ def isotonic_fit(
     )
 
 
+def _gini_sums(df, group, value_col, scale, negative):
+    """Per-group exact Gini sums over the quantized values
+    u = round(value * scale) (``negative`` replaces u where the RAW
+    value is negative, so none can round to 0 and slip through):
+    ``__umin``, ``n``, ``__s`` = S = Σu·c and ``__t2`` = T = 2·S1 =
+    Σ u·c·(2B + c + 1), a tie block's closed-form rank sum doubled so
+    every product stays an integer."""
+    raw = F.col(value_col)
+    u = F.when(raw < 0, negative).otherwise(F.round(raw * scale)).cast(_D38)
+    cells = _rank_cells(
+        df.filter(raw.isNotNull()), group, u, {"__c": F.lit(True)}
+    )
+    c = F.col("__c").cast(_D38)
+    b = F.col("__c_b").cast(_D38)
+    g = cells.groupBy("__g").agg(
+        F.min("__v").alias("__umin"),
+        F.sum(c).cast("long").alias("n"),
+        F.sum(F.col("__v") * c).alias("__s"),
+        F.sum(F.col("__v") * c * (F.lit(2) * b + c + F.lit(1)))
+        .alias("__t2g"),
+        F.min(b).alias("__b0"),
+    )
+    # B is the global count; the group's ranks start __b0 higher
+    return g.withColumn(
+        "__t2", F.col("__t2g") - F.lit(2) * F.col("__b0") * F.col("__s")
+    )
+
+
 def gini(
     df: DataFrame,
     value_col: str,
@@ -3098,43 +3135,26 @@ def gini(
     every within-block order equivalent (sum of ranks over a tie
     block is closed-form), so S1 reduces to the DISTINCT-value cell
     table with cumulative counts from the distributed prefix sum
-    (`mann_whitney`'s path): a cell (v, c) at cumulative-before B
+    (`gini_by` over one group): a cell (v, c) at cumulative-before B
     contributes v*c*(2B + c + 1) to T = 2*S1 — kept doubled so the
     aggregation is PURE integer multiplication in DECIMAL(38,0)
     (a /2 would widen the decimal scale). Exact until the two final
     IEEE divisions — bit-portable. Negative values raise (Gini is
-    undefined); zero total raises.
+    undefined; the RAW value is checked, so -1e-7 cannot quantize
+    to 0 and pass); empty input and zero total raise.
 
     Returns ONE row: n, gini."""
-    from hdfe_spark.operators.rank import prefix_sum
-
-    u = F.round(F.col(value_col) * scale).cast("decimal(38,0)")
-    cells = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(u.alias("__u"))
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
-    cum = prefix_sum(cells, ["__u"], "__c", out_col="__cum")
-    c = F.col("__c").cast("decimal(38,0)")
-    b = (F.col("__cum") - F.col("__c")).cast("decimal(38,0)")
-    uu = F.col("__u")
-    # T = 2*S1: v*c*(2B + c + 1) per tie block — integer-only
-    block2 = uu * c * (F.lit(2) * b + c + F.lit(1))
-    m = cum.agg(
-        F.min("__u").alias("umin"),
-        F.sum(c).alias("n"),
-        F.sum(uu * c).alias("s"),
-        F.sum(block2).alias("t2"),
-    ).collect()[0]
-    if m["umin"] is None:
+    rows = _gini_sums(df, F.lit(0), value_col, scale, F.lit(-1)).collect()
+    if not rows:
         raise ValueError("gini: empty input")
-    if m["umin"] < 0:
+    m = rows[0]
+    if m["__umin"] < 0:
         raise ValueError("gini: negative values — Gini is undefined")
     n = int(m["n"])
-    s = int(m["s"])
+    s = int(m["__s"])
     if s == 0:
         raise ValueError("gini: zero total — Gini is undefined")
-    t2 = int(m["t2"])
+    t2 = int(m["__t2"])
     g = float(t2) / (float(n) * float(s)) - float(n + 1) / float(n)
     return df.sparkSession.createDataFrame(
         [(n, g)], "n long, gini double"
@@ -3279,8 +3299,7 @@ def best_split(
         .cast("long")
         .alias("__p"),
     )
-    cum = prefix_sum(cells, ["__v"], "__c", out_col="__cc")
-    cum = prefix_sum(cum, ["__v"], "__p", out_col="__cp")
+    cum = prefix_sum(cells, ["__v"], ["__c", "__p"], ["__cc", "__cp"])
     tot = cum.agg(
         F.sum("__c").cast("long").alias("n"),
         F.sum("__p").cast("long").alias("p"),
@@ -4211,7 +4230,6 @@ def auc_by(
     group_col: str,
     label_col: str,
     score_col: str,
-    max_cells_per_group: int = 8_000_000,
 ) -> DataFrame:
     """Per-group exact ROC AUC — `auc_score` stratified (the
     per-query retrieval/ranking eval): within every group, AUC via
@@ -4220,12 +4238,13 @@ def auc_by(
         auc = (2*R_pos - n_pos*(n_pos+1)) / (2 * n_pos * n_neg)
 
     where 2*R_pos rides as an exact DECIMAL(38,0) integer (the
-    `mann_whitney_u` half-unit trick evaluated with GROUP-
-    PARTITIONED window prefix sums instead of the global
-    distributed prefix sum — parallel across groups, never a global
-    sort), so the whole statistic is ONE division of exact integers
-    per group: fully distributed, no driver collect, and a SQL
-    oracle spells it verbatim.
+    `mann_whitney_u` half-unit trick over the rank kernel's
+    (group, score) cells and ONE distributed prefix sum ordered by
+    (group, score) — range-partitioned, so a hot group spreads over
+    many tasks; each group's start offset factors out of its sum,
+    so no join), making the whole statistic ONE division of exact
+    integers per group: a SQL oracle spells it verbatim. The prefix
+    sum's jobs run when this is called; the rest is lazy.
 
     NULL labels/scores are excluded; a NULL group is itself a group
     (the `hll_by` convention). Groups with no positives or no
@@ -4243,45 +4262,12 @@ def auc_by(
     no_output_collision(
         "auc_by", "group_col", group_col, ("n_pos", "n_neg", "auc")
     )
-    base = df.filter(
-        F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        F.col(score_col).alias("__v"),
-        F.col(label_col).cast("boolean").cast("long").alias("__y"),
-    )
-    cells = base.groupBy("__g", "__v").agg(
-        F.sum("__y").cast("long").alias("__cp"),
-        F.sum(F.lit(1) - F.col("__y")).cast("long").alias("__cn"),
-    )
-    cells = _max_cells_guard(
-        cells, "auc_by", max_cells_per_group, "__cp"
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.select(
-        "__g", "__cp", "__cn",
-        F.sum("__cp").over(w).alias("__cump"),
-        F.sum("__cn").over(w).alias("__cumn"),
-    )
-    c = (F.col("__cp") + F.col("__cn")).cast("decimal(38,0)")
-    before = (
-        F.col("__cump") + F.col("__cumn")
-        - F.col("__cp") - F.col("__cn")
-    ).cast("decimal(38,0)")
-    r2term = F.col("__cp").cast("decimal(38,0)") * (
-        F.lit(2).cast("decimal(38,0)") * before + c + F.lit(1)
-    )
-    g = cum.groupBy("__g").agg(
-        F.sum("__cp").cast("long").alias("n_pos"),
-        F.sum("__cn").cast("long").alias("n_neg"),
-        F.sum(r2term).alias("__ra2"),
-    )
+    g = _rank_sums(
+        df, F.col(group_col), F.col(label_col).cast("boolean"), score_col,
+        True, False, "auc_by",
+    ).withColumnsRenamed({"n_a": "n_pos", "n_b": "n_neg"})
     npos = F.col("n_pos").cast("decimal(38,0)")
-    u2 = F.col("__ra2") - npos * (F.col("n_pos") + F.lit(1))
+    u2 = F.col("__r2a") - npos * (F.col("n_pos") + F.lit(1))
     den = (
         F.lit(2).cast("decimal(38,0)")
         * F.col("n_pos")
@@ -4303,17 +4289,19 @@ def spearman_by(
     group_col: str,
     x_col: str,
     y_col: str,
-    max_cells_per_group: int = 8_000_000,
 ) -> DataFrame:
     """Per-group Spearman rank correlation — `spearman_corr`
     stratified (monotone-association per segment/query/source), with
     the same average-tie exactness: each column's within-group ranks
-    come from (group, value) cell counts + a GROUP-PARTITIONED
-    window cumulative (parallel across groups, never a global sort),
-    doubled so 2*rank = 2B + c + 1 stays integral; the six rank
-    moments are exact DECIMAL(38,0) sums per group, and rho is one
-    fixed IEEE expression on their double casts that a SQL oracle
-    spells verbatim.
+    come from the rank kernel's (group, value) cells, one distributed
+    prefix sum ordered by (group, value) per column (range-
+    partitioned, so a hot group spreads over many tasks) with each
+    group's start offset joined back null-safe, doubled so
+    2*rank = 2B + c + 1 stays integral; the six rank moments are
+    exact DECIMAL(38,0) sums per group, and rho is one fixed IEEE
+    expression on their double casts that a SQL oracle spells
+    verbatim. The prefix sums' jobs run when this is called; the
+    rest is lazy.
 
     NULL x/y rows are excluded; a NULL group is itself a group (the
     `hll_by` convention). Groups where either column is constant
@@ -4323,64 +4311,7 @@ def spearman_by(
     no_output_collision(
         "spearman_by", "group_col", group_col, ("n", "rho")
     )
-    base = df.filter(
-        F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("__g"),
-        F.col(x_col).alias("__x"),
-        F.col(y_col).alias("__y"),
-    )
-
-    def rank_table(col, rcol, gname, vname):
-        # keys RENAMED (__gx/__xv): the rank table derives from
-        # `base`, so joining back by the original names would hit
-        # the self-join attribute ambiguity
-        cells = base.groupBy("__g", col).agg(
-            F.count(F.lit(1)).cast("long").alias("__c")
-        )
-        cells = _max_cells_guard(
-            cells, "spearman_by", max_cells_per_group, "__c"
-        )
-        w = (
-            Window.partitionBy("__g")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return cells.select(
-            F.col("__g").alias(gname),
-            F.col(col).alias(vname),
-            (
-                F.lit(2)
-                * (F.sum("__c").over(w) - F.col("__c"))
-                + F.col("__c")
-                + F.lit(1)
-            ).cast("decimal(38,0)").alias(rcol),
-        )
-
-    rx = rank_table("__x", "__r2x", "__gx", "__xv")
-    ry = rank_table("__y", "__r2y", "__gy", "__yv")
-    # NULL-SAFE group key: a bare ["__g", ...] equi-join would drop
-    # every NULL-group row, violating the NULL-group contract above
-    # (review r10b; auc_by/entropy_by get this for free from
-    # groupBy/Window partitioning)
-    ranked = base.join(
-        rx,
-        F.col("__g").eqNullSafe(F.col("__gx"))
-        & (F.col("__x") == F.col("__xv")),
-    ).drop("__gx", "__xv")
-    ranked = ranked.join(
-        ry,
-        F.col("__g").eqNullSafe(F.col("__gy"))
-        & (F.col("__y") == F.col("__yv")),
-    ).drop("__gy", "__yv")
-    m = ranked.groupBy("__g").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("__r2x").alias("__sx"),
-        F.sum("__r2y").alias("__sy"),
-        F.sum(F.col("__r2x") * F.col("__r2x")).alias("__sxx"),
-        F.sum(F.col("__r2x") * F.col("__r2y")).alias("__sxy"),
-        F.sum(F.col("__r2y") * F.col("__r2y")).alias("__syy"),
-    )
+    m = _spearman_moments(df, F.col(group_col), x_col, y_col)
     # The gate, num, AND den's radicands ALL run on the EXACT
     # decimal moments: past 2^53 the float n*sxx - sx*sx of a
     # (near-)constant column cancels catastrophically — to a NONZERO
@@ -4416,7 +4347,6 @@ def mann_whitney_by(
     value_col: str,
     a_label,
     b_label,
-    max_cells_per_group: int = 8_000_000,
 ) -> DataFrame:
     """Per-group Mann-Whitney U test — `mann_whitney_u` stratified
     (the nonparametric companion of `welch_by` for skewed/ordinal
@@ -4425,12 +4355,12 @@ def mann_whitney_by(
     identity with average-tie ranks, plus the tie-corrected
     normal-approximation z.
 
-    2*R_a rides as an exact DECIMAL(38,0) integer over (group,
-    value) cell counts with GROUP-PARTITIONED window prefix sums
-    (the `auc_by` shape — parallel across groups, never a global
-    sort, `max_cells_per_group`-guarded like the rest of the
-    cell-window family); the tie correction Σ(t³ - t) is likewise
-    an exact integer per group, so
+    2*R_a rides as an exact DECIMAL(38,0) integer over the rank
+    kernel's (group, value) cells with ONE distributed prefix sum
+    ordered by (group, value) (the `auc_by` plan — range-partitioned,
+    so a hot group spreads over many tasks; each group's start
+    offset factors out of its sum); the tie correction Σ(t³ - t) is
+    likewise an exact integer per group, so
 
         z = (2U_a - n_a*n_b) / (2 * sqrt(var)),
         var = n_a*n_b/12 * ((n+1) - Σ(t³-t)/(n*(n-1)))
@@ -4442,66 +4372,16 @@ def mann_whitney_by(
     Returns one row per group: (group, n_a, n_b, u2_a, z) with
     u2_a = 2*U_a exact.
 
-    Scale: one cells aggregation + one group-partitioned window +
-    one grouped sum, no driver collect; the default cell-cap guard
-    adds one map-side-combined count and one group-cardinality join
-    (pass max_cells_per_group=0 to opt out knowingly)."""
+    Scale: one cells aggregation, the prefix sum (its jobs run when
+    this is called) and one grouped sum; no driver collect of
+    data."""
     no_output_collision(
         "mann_whitney_by", "group_col", group_col,
         ("n_a", "n_b", "u2_a", "z"),
     )
-    if a_label == b_label:
-        raise ValueError(
-            "mann_whitney_by: a_label and b_label are the same value"
-            f" ({a_label!r}) — one arm would be double-counted as"
-            " both"
-        )
-    sv = F.col(side_col)
-    cells = (
-        df.filter(
-            F.col(value_col).isNotNull()
-            & ((sv == F.lit(a_label)) | (sv == F.lit(b_label)))
-        )
-        .groupBy(
-            F.col(group_col).alias("__g"),
-            F.col(value_col).alias("__v"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.when(sv == F.lit(a_label), F.lit(1))), F.lit(0)
-            ).cast("long").alias("__ca"),
-            F.coalesce(
-                F.sum(F.when(sv == F.lit(b_label), F.lit(1))), F.lit(0)
-            ).cast("long").alias("__cb"),
-        )
-    )
-    cells = _max_cells_guard(
-        cells, "mann_whitney_by", max_cells_per_group, "__ca"
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.select(
-        "__g", "__ca", "__cb",
-        F.sum("__ca").over(w).alias("__cuma"),
-        F.sum("__cb").over(w).alias("__cumb"),
-    )
-    cD = (F.col("__ca") + F.col("__cb")).cast("decimal(38,0)")
-    before = (
-        F.col("__cuma") + F.col("__cumb")
-        - F.col("__ca") - F.col("__cb")
-    ).cast("decimal(38,0)")
-    r2a = F.col("__ca").cast("decimal(38,0)") * (
-        F.lit(2).cast("decimal(38,0)") * before + cD + F.lit(1)
-    )
-    ties = cD * cD * cD - cD
-    g = cum.groupBy("__g").agg(
-        F.sum("__ca").cast("long").alias("n_a"),
-        F.sum("__cb").cast("long").alias("n_b"),
-        F.sum(r2a).alias("__r2a"),
-        F.sum(ties).alias("__t3"),
+    g = _rank_sums(
+        df, F.col(group_col), F.col(side_col), value_col, a_label,
+        b_label, "mann_whitney_by",
     )
     naD = F.col("n_a").cast("decimal(38,0)")
     u2 = F.col("__r2a") - naD * (F.col("n_a") + F.lit(1))
@@ -4942,62 +4822,34 @@ def gini_by(
     group_col: str,
     value_col: str,
     scale: float = 1e6,
-    max_cells_per_group: int = 8_000_000,
 ) -> DataFrame:
     """Per-group exact Gini coefficient — the global `gini`
     stratified (concentration of token/byte mass per source): the
     same doubled tie-block identity T = sum v*c*(2B + c + 1) with B
-    from GROUP-PARTITIONED window prefix sums (parallel across
-    groups, never a global sort — the `auc_by` shape), every sum an
-    exact DECIMAL(38,0) integer, and the coefficient
+    from the rank kernel's ONE distributed prefix sum ordered by
+    (group, value) (the `auc_by` plan — range-partitioned, so a hot
+    group spreads over many tasks; each group's start offset
+    factors out of T), every sum an exact DECIMAL(38,0) integer, and
+    the coefficient
 
         G = T / (n * S) - (n + 1) / n
 
     a fixed IEEE expression per group the oracle spells verbatim.
-    Negative values raise in-plan (Gini is undefined); groups with
-    zero total return NULL gini; a NULL group is itself a group.
-    Returns one row per group: (group, n, gini)."""
+    Negative RAW values raise in-plan (Gini is undefined), when the
+    prefix sum runs at the call; groups with zero total return NULL
+    gini; a NULL group is itself a group. Returns one row per
+    group: (group, n, gini)."""
     no_output_collision(
         "gini_by", "group_col", group_col, ("n", "gini")
     )
-    u = F.round(F.col(value_col) * scale).cast("decimal(38,0)")
+    negative = F.raise_error(
+        F.concat(
+            F.lit("gini_by: negative value: "),
+            F.col(value_col).cast("string"),
+        )
+    )
+    g = _gini_sums(df, F.col(group_col), value_col, scale, negative)
     zero = F.lit(0).cast("decimal(38,0)")
-    # guard the RAW value (review r10d): a quantized guard would let
-    # values in (-0.5/scale, 0) slip through as zero-mass rows
-    ug = F.when(
-        F.col(value_col) < 0,
-        F.raise_error(
-            F.concat(
-                F.lit("gini_by: negative value: "),
-                F.col(value_col).cast("string"),
-            )
-        ).cast("decimal(38,0)"),
-    ).otherwise(u)
-    cells = (
-        df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("__g"), ug.alias("__u"))
-        .groupBy("__g", "__u")
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-    )
-    cells = _max_cells_guard(
-        cells, "gini_by", max_cells_per_group, "__c"
-    )
-    w = (
-        Window.partitionBy("__g")
-        .orderBy("__u")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.select(
-        "__g", "__u", "__c", F.sum("__c").over(w).alias("__cum")
-    )
-    c = F.col("__c").cast("decimal(38,0)")
-    b = (F.col("__cum") - F.col("__c")).cast("decimal(38,0)")
-    block2 = F.col("__u") * c * (F.lit(2) * b + c + F.lit(1))
-    g = cum.groupBy("__g").agg(
-        F.sum(c).cast("long").alias("n"),
-        F.sum(F.col("__u") * c).alias("__s"),
-        F.sum(block2).alias("__t2"),
-    )
     nd = F.col("n").cast("double")
     gini_expr = (
         F.col("__t2").cast("double")

@@ -63,8 +63,8 @@ def test_factorize_sorted_codes(small_str_df):
 
 def test_factorize_codes_without_window(spark, count_jobs):
     """``factorize`` numbers ``levels_of``'s one-task sort: codes follow
-    ``np.unique`` order (a NULL level sorts first and takes code 0 in
-    the code table, but NULL rows match nothing and keep a NULL
+    ``np.unique`` order and are dense ``0..k-1`` over the non-NULL
+    levels (the NULL level is not numbered; NULL rows keep a NULL
     code), the plan holds no Window, and the collect runs 3 jobs (4
     with the old ranking window)."""
     nan = float("nan")
@@ -77,14 +77,13 @@ def test_factorize_codes_without_window(spark, count_jobs):
         vals = [r[j] for r in rows]
         present = [v for v in vals if v is not None]
         uniq = list(np.unique(np.array(present, dtype=float if c == "x" else object)))
-        offset = 1 if len(present) < len(vals) else 0
 
         def code(v):
             if v is None:
                 return None
             if v != v:
-                return offset + len(uniq) - 1
-            return offset + next(i for i, u in enumerate(uniq) if u == v)
+                return len(uniq) - 1
+            return next(i for i, u in enumerate(uniq) if u == v)
 
         out = factorize(df, c)
         assert "Window" not in out._jdf.queryExecution().executedPlan().toString()

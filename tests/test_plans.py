@@ -558,22 +558,29 @@ def test_target_encode_single_join_no_window(spark, sf_dir):
 
 
 def test_nonparametrics_no_global_single_partition_window(spark, sf_dir):
-    """Mann-Whitney/KS/Spearman: the cumulative pass must be the
-    rank.py distributed prefix sum — any Window in the plan must be
-    partitioned by the range-partition id, never a global
-    partition-less window (`Window [..] ORDER BY` with empty
-    PARTITION BY funnels the table through one task)."""
+    """The rank family's cell kernel (both count layouts: the globals'
+    literal group, and a real group with the within-group join): the
+    cumulative pass must be the rank.py distributed prefix sum — any
+    Window in the plan must be partitioned by the range-partition id,
+    never a global partition-less window (`Window [..] ORDER BY` with
+    empty PARTITION BY funnels the table through one task) nor a
+    group-partitioned one (a hot group in one task)."""
     import __spark_entry__ as em
-    from hdfe_spark.operators.stats import _side_cells
+    from hdfe_spark.operators.stats import _two_arm_cells
 
     ev = em.queries.__globals__["_t"](spark, sf_dir, "events")
-    cells = _side_cells(ev, "value", "event_type", "click", "view")
-    simple = explain_string(cells, "simple")
-    # rank.py's window partitions by __pid; a global window would
-    # show "Window [...], [v ASC" with no partition spec
-    for line in simple.splitlines():
-        if "Window" in line:
-            assert "__pid" in line, line
+    side = F.col("event_type")
+    for group, within in ((F.lit(0), False), (F.col("user_id") % 10, True)):
+        cells = _two_arm_cells(
+            ev, group, side, "value", "click", "view", "test", within
+        )
+        windows = [
+            ln for ln in explain_string(cells, "simple").splitlines()
+            if "Window" in ln
+        ]
+        # rank.py's window partitions by __pid; a global window would
+        # show "Window [...], [v ASC" with no partition spec
+        assert windows and all("__pid" in ln for ln in windows), windows
 
 
 def test_rolling_beta_single_window_pass(spark, sf_dir):
@@ -747,9 +754,11 @@ def test_confusion_stats_single_pass(spark, sf_dir):
 
 
 def test_auc_by_no_global_sort(spark, sf_dir):
-    """Per-group AUC ranks come from counts + group-partitioned
-    window prefix sums — no global (single-partition) sort and no
-    Python anywhere."""
+    """Per-group AUC ranks come from counts + the rank kernel's
+    distributed prefix sum — no global (single-partition) sort, no
+    Python anywhere, and the only Window is the prefix sum's
+    partition-local one (PARTITION BY __pid), never one partitioned
+    by the group."""
     from hdfe_spark.operators.stats import auc_by
     from hdfe_spark.plans.audit import explain_string
 
@@ -761,4 +770,9 @@ def test_auc_by_no_global_sort(spark, sf_dir):
     out = auc_by(ev, "event_type", "y", "s")
     plan = explain_string(out)
     assert "SinglePartition" not in plan
+    windows = [
+        ln for ln in explain_string(out, "simple").splitlines()
+        if "Window [" in ln
+    ]
+    assert windows and all("__pid" in ln for ln in windows), windows
     assert_plan(out, n_python_stages=0)

@@ -320,67 +320,78 @@ def test_hw_linear_maps_identity_consistency():
     assert got[2 * K + 3] == 1.0
 
 
-# ------- max_cells_per_group route guard (VERDICT r11 item 8) -------
+# ------- rank kernel: one bounded plan for every group (hot, NULL, small) -------
 
 
-def test_cell_window_family_guard_raises_on_hot_distinct_group(spark):
-    # adversarial fixture: one group whose DISTINCT-value count
-    # exceeds the cap — every family member must raise in-plan,
-    # never silently single-task
+def test_rank_by_family_matches_globals_on_hot_null_and_small_groups(spark):
+    # one hot group with thousands of distinct cells, a NULL group and
+    # two small groups: every `_by` form equals its global on each
+    # group's filter, and the only Window in any executed plan is the
+    # prefix sum's partition-local one (PARTITION BY __pid) — no
+    # group runs in one task
+    import random
+
     from hdfe_spark.operators.stats import (
         auc_by,
+        auc_score,
+        gini,
         gini_by,
+        ks_2sample,
         ks_by,
+        mann_whitney_by,
+        mann_whitney_u,
         spearman_by,
+        spearman_corr,
     )
 
-    n = 500
+    rng = random.Random(18)
+    rows = []
+    for g, n, card in (("hot", 6000, 4000), (None, 300, 40), ("s1", 40, 9),
+                       ("s2", 25, 25)):
+        for _ in range(n):
+            v = float(rng.randrange(card)) / 4
+            side = "A" if rng.random() < 0.5 else "B"
+            rows.append((g, v, int(side == "A"), side,
+                         v + rng.randrange(5) if rng.random() < 0.7 else -v))
     df = spark.createDataFrame(
-        [("hot", float(i), i % 2, float(i) * 0.5, "A" if i % 2 else "B")
-         for i in range(n)],
-        ["g", "v", "y", "v2", "side"],
-    )
-    cap = 100  # n distinct values > cap
-    with pytest.raises(Exception, match="max_cells_per_group"):
-        auc_by(df, "g", "y", "v", max_cells_per_group=cap).collect()
-    with pytest.raises(Exception, match="max_cells_per_group"):
-        gini_by(df, "g", "v", max_cells_per_group=cap).collect()
-    with pytest.raises(Exception, match="max_cells_per_group"):
-        spearman_by(df, "g", "v", "v2", max_cells_per_group=cap).collect()
-    with pytest.raises(Exception, match="max_cells_per_group"):
-        ks_by(df, "g", "side", "v", "A", "B",
-              max_cells_per_group=cap).collect()
+        rows, "g string, v double, y long, side string, w double"
+    ).cache()
+    keys = ["hot", None, "s1", "s2"]
 
+    def one(d, g):
+        return d.filter(F.col("g").isNull() if g is None else F.col("g") == g)
 
-def test_cell_window_family_guard_passes_under_cap(spark):
-    # same data under the cap: results must be identical to the
-    # unguarded (cap-disabled) path — the guard is pure routing
-    from hdfe_spark.operators.stats import auc_by, gini_by
+    def by_group(out):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+        assert windows and all("__pid" in ln for ln in windows), windows
+        got = {r["g"]: r for r in out.collect()}
+        assert set(got) == set(keys)
+        return got
 
-    df = spark.createDataFrame(
-        [("g%d" % (i % 3), float(i % 40), i % 2) for i in range(300)],
-        ["g", "v", "y"],
-    )
-    a1 = {r["g"]: r["auc"] for r in
-          auc_by(df, "g", "y", "v", max_cells_per_group=1000).collect()}
-    a0 = {r["g"]: r["auc"] for r in
-          auc_by(df, "g", "y", "v", max_cells_per_group=0).collect()}
-    assert a1 == a0 and len(a1) == 3
-    g1 = {r["g"]: r["gini"] for r in
-          gini_by(df, "g", "v", max_cells_per_group=1000).collect()}
-    g0 = {r["g"]: r["gini"] for r in
-          gini_by(df, "g", "v", max_cells_per_group=0).collect()}
-    assert g1 == g0 and len(g1) == 3
-
-
-def test_cell_guard_null_group_is_guarded_too(spark):
-    from hdfe_spark.operators.stats import gini_by
-
-    df = spark.createDataFrame(
-        [(None, float(i)) for i in range(200)], "g string, v double"
-    )
-    with pytest.raises(Exception, match="NULL"):
-        gini_by(df, "g", "v", max_cells_per_group=50).collect()
+    approx = lambda x: pytest.approx(x, rel=1e-12, abs=1e-15)  # noqa: E731
+    auc = by_group(auc_by(df, "g", "y", "v"))
+    mw = by_group(mann_whitney_by(df, "g", "side", "v", "A", "B"))
+    ks = by_group(ks_by(df, "g", "side", "v", "A", "B"))
+    rho = by_group(spearman_by(df, "g", "v", "w"))
+    gi = by_group(gini_by(df, "g", "v"))
+    for g in keys:
+        sub = one(df, g)
+        want = auc_score(sub, "y", "v").collect()[0]
+        assert (auc[g]["n_pos"], auc[g]["n_neg"]) == (want["n_pos"], want["n_neg"])
+        assert auc[g]["auc"] == approx(want["auc"]), g
+        want = mann_whitney_u(sub, "side", "v", "A", "B").collect()[0]
+        assert (mw[g]["n_a"], mw[g]["n_b"]) == (want["n_a"], want["n_b"])
+        assert mw[g]["u2_a"] == 2 * want["u_a"] and mw[g]["z"] == approx(want["z"]), g
+        want = ks_2sample(sub, "side", "v", "A", "B").collect()[0]
+        assert tuple(ks[g][k] for k in ("n_a", "n_b", "d_num", "d")) == tuple(
+            want[k] for k in ("n_a", "n_b", "d_num", "d")
+        ), g
+        want = spearman_corr(sub, "v", "w").collect()[0]
+        assert rho[g]["n"] == want["n"] and rho[g]["rho"] == approx(want["rho"]), g
+        want = gini(sub, "v").collect()[0]
+        assert gi[g]["n"] == want["n"] and gi[g]["gini"] == approx(want["gini"]), g
+    df.unpersist()
 
 
 # ---------------- /code-review round-12 findings, pinned ----------------
@@ -562,9 +573,6 @@ def test_mann_whitney_by_guards(spark):
     with pytest.raises(ValueError, match="collides with a fixed"):
         mann_whitney_by(df.withColumnRenamed("g", "z"),
                         "z", "side", "v", "A", "B")
-    with pytest.raises(Exception, match="max_cells_per_group"):
-        mann_whitney_by(df, "g", "side", "v", "A", "B",
-                        max_cells_per_group=10).collect()
 
 
 def _bh_reference(ps, q):

@@ -292,6 +292,49 @@ def test_auc_score_exact(spark):
     assert 0.45 < got < 0.55
 
 
+def test_gini_guards_the_raw_value(spark):
+    # -1e-7 quantizes to 0 at the default scale; the global once
+    # checked only the quantized minimum and returned n=3, gini=0.4,
+    # where gini_by (which guards the raw value) raises
+    from hdfe_spark.operators.stats import gini
+
+    df = spark.createDataFrame([(-1e-7,), (2.0,), (3.0,)], "v double")
+    with pytest.raises(ValueError, match="negative"):
+        gini(df, "v")
+
+
+def test_two_arm_globals_reject_equal_labels(spark):
+    # a_label == b_label counts one arm as both; the globals once
+    # returned z=0.0 / d=0.0 ("no effect"), the `_by` forms raise
+    from hdfe_spark.operators.stats import ks_2sample, mann_whitney_u
+
+    df = spark.createDataFrame(
+        [("a", float(i)) for i in range(6)]
+        + [("b", float(i) + 0.5) for i in range(6)],
+        "side string, v double",
+    )
+    for op in (mann_whitney_u, ks_2sample):
+        with pytest.raises(ValueError, match="same value"):
+            op(df, "side", "v", "a", "a")
+
+
+def test_rank_kernel_job_counts(spark, count_jobs):
+    """Each call runs ONE prefix sum (both cumulative columns share its
+    sort, checkpoint and collect; 19 jobs each for auc_score and
+    best_split with one prefix sum per column). auc_by pays the
+    prefix sum's jobs at the call, where a group-partitioned window
+    ran 6 jobs but put each group in one task."""
+    from hdfe_spark.operators.stats import auc_by, auc_score, best_split
+
+    df = spark.createDataFrame(
+        [(f"g{i % 3}", float(i % 17), (i * 7) % 3 % 2) for i in range(120)],
+        "g string, s double, y long",
+    )
+    assert count_jobs(lambda: auc_score(df, "y", "s").collect()) == 10
+    assert count_jobs(lambda: auc_by(df, "g", "y", "s").collect()) == 8
+    assert count_jobs(lambda: best_split(df, "s", "y").collect()) == 9
+
+
 def test_rolling_beta_matches_numpy(spark):
     from hdfe_spark.operators.stats import rolling_beta
 
